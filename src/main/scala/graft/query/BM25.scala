@@ -215,7 +215,8 @@ object BM25 {
     * `term IN (...)` pushed to the parquet scan), never a corpus
     * tokenize. Corpus stats come from the index's stats table (computed
     * over ALL docs at ingest, including zero-token docs the postings
-    * cannot carry). Same result contract as [[phraseTopK]]. */
+    * cannot carry). Same result contract as [[phraseTopK]]; eager and
+    * bounded like [[PhraseHandle.topK]], which serves it. */
   def phraseTopKIndexed(spark: SparkSession, indexDir: String,
                         phrases: Seq[(Int, String)],
                         cfg: EngineConfig = EngineConfig.default,
@@ -285,8 +286,13 @@ object BM25 {
     * marker, never from a caller config — a silent mismatch would drop
     * postings from the pruned read instead of failing. */
   def prunedPositionalPostings(spark: SparkSession, indexDir: String,
-                               terms: Seq[String]): DataFrame = {
-    val all = spark.read.parquet(s"$indexDir/postings")
+                               terms: Seq[String]): DataFrame =
+    prunePositional(spark.read.parquet(s"$indexDir/postings"), indexDir, terms)
+
+  /** [[prunedPositionalPostings]] over an already-opened postings frame
+    * (opening one infers its schema from the files — a Spark job). */
+  private def prunePositional(all: DataFrame, indexDir: String,
+                              terms: Seq[String]): DataFrame = {
     require(all.columns.contains("positions"),
       s"$indexDir/postings has no positions column (pre-v2 layout) — re-ingest")
     require(all.columns.contains("thash"),
@@ -339,17 +345,20 @@ object BM25 {
       val dfMap = posPost.filter(col("term").isInCollection(qterms))
         .groupBy("term").agg(count(lit(1)).as("df"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val ranked = phraseRankOver(posPost, n, avgdl, analyzed, cfg, slop, dfMap)
+      val ranked = rankTopK(phraseScoredOver(posPost, n, avgdl, analyzed, cfg, slop, dfMap),
+        cfg.topK)
       if (persistInput) ranked.localCheckpoint(eager = true) else ranked
     } finally { if (persistInput) { posPost.unpersist() }; () }
   }
 
   /** The one-aggregation phrase pass given resolved per-term df (see
-    * [[phraseTopKOver]] for the shape rationale). */
-  private[query] def phraseRankOver(posPost: DataFrame, n: Long, avgdl: Double,
-                                    analyzed: Seq[(Int, Seq[String])],
-                                    cfg: EngineConfig, slop: Int,
-                                    dfMap: Map[String, Long]): DataFrame = {
+    * [[phraseTopKOver]] for the shape rationale): the unranked
+    * (qid, doc_id, score) phrase matches, ranked lazily by the corpus
+    * path and eagerly by [[PhraseHandle]]. */
+  private def phraseScoredOver(posPost: DataFrame, n: Long, avgdl: Double,
+                               analyzed: Seq[(Int, Seq[String])],
+                               cfg: EngineConfig, slop: Int,
+                               dfMap: Map[String, Long]): DataFrame = {
     val spark = posPost.sparkSession
     import spark.implicits._
     // score_me marks the FIRST offset of each distinct term: scoring
@@ -361,7 +370,7 @@ object BM25 {
         (qid, t, off, ts.length, seen.add(t), dfMap.getOrElse(t, 0L))
       }
     }.toDF("qid", "term", "off", "m", "score_me", "df")
-    val scored = posPost.join(broadcast(q), "term")
+    posPost.join(broadcast(q), "term")
       .withColumn("w",
         weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
       .groupBy("qid", "doc_id")
@@ -373,16 +382,23 @@ object BM25 {
       .filter(col("got") === col("m"))
       .filter(OrderedSpanMatchExpr.matches(
         transform(col("lists"), x => x.getField("positions")), lit(slop)))
-    rankTopK(scored, cfg.topK)
   }
 
   /** Reusable phrase-serving handle — the match_phrase twin of
     * [[Wand.Handle]] (the documented serving measurement condition:
-    * corpus stats read once, per-term metadata cached across batches).
+    * corpus stats read and the postings store opened once, per-term
+    * metadata cached across batches).
     * df is computed from the LIVE positional postings the first time a
     * term is seen (one tiny pruned aggregation, <= query terms rows) and
-    * cached, so a warm batch over known terms is ONE aggregation job.
-    * Result contract identical to [[phraseTopKIndexed]].
+    * cached, so a warm batch over known terms is ONE scoring pass.
+    * Result contract identical to [[phraseTopK]].
+    *
+    * [[topK]] is EAGER: the scoring pass runs inside the call, and its
+    * matches rank through [[ServedTopK.rank]] — a heap of k per
+    * (task, qid), ONE collect of at most tasks x qids x k rows, the
+    * merge on the driver — so the call returns a local
+    * `(qid, rank, doc_id, score)` frame in (qid, rank) order instead of
+    * a plan that still owes a ranking shuffle and a range sort.
     *
     * Staleness contract (same as [[Wand.Handle]]): the handle reflects
     * the index state at construction — after [[graft.index.SegmentBuilder.appendDocs]]
@@ -393,24 +409,24 @@ object BM25 {
     import spark.implicits._
     private val (n, avgdl) = graft.index.SegmentBuilder.readStats(spark, indexDir)
     private val dfCache = scala.collection.concurrent.TrieMap[String, Long]()
+    /** The postings store, opened once per handle (not per batch). */
+    private lazy val postings = spark.read.parquet(s"$indexDir/postings")
 
     def topK(phrases: Seq[(Int, String)], slop: Int = 0): DataFrame = {
       val analyzed = phrases
         .map { case (qid, text) => (qid, CodeTokenizer.tokenize(text).toSeq) }
         .filter(_._2.nonEmpty)
-      if (analyzed.isEmpty)
-        return spark.emptyDataset[Wand.Hit].toDF().orderBy("qid", "rank")
+      if (analyzed.isEmpty) return spark.emptyDataset[Wand.Hit].toDF()
       val terms = analyzed.flatMap(_._2).distinct
       val missing = terms.filterNot(dfCache.contains)
       if (missing.nonEmpty) {
-        val got = prunedPositionalPostings(spark, indexDir, missing)
+        val got = prunePositional(postings, indexDir, missing)
           .groupBy("term").agg(count(lit(1)).as("df"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         missing.foreach(t => dfCache.put(t, got.getOrElse(t, 0L)))
       }
-      phraseRankOver(prunedPositionalPostings(spark, indexDir, terms),
-        n, avgdl, analyzed, cfg, slop,
-        terms.map(t => t -> dfCache(t)).toMap)
+      ServedTopK.rank(phraseScoredOver(prunePositional(postings, indexDir, terms),
+        n, avgdl, analyzed, cfg, slop, terms.map(t => t -> dfCache(t)).toMap), cfg.topK)
     }
   }
 

@@ -196,7 +196,7 @@ object QueryDsl {
       (qid, t, autoFuzziness(t))
     }
     val exp = h.expandFuzzyBatch(qt.map { case (_, t, d) => (t, d) }, maxExpansions)
-    h.topKTerms(qt.map { case (qid, t, _) => qid -> exp(t) })
+    h.topKTerms(qt.map { case (qid, t, d) => qid -> exp(t, d) })
   }
 
   /** Wildcard top-k served from the segment index: the pattern (`*` =
@@ -212,18 +212,10 @@ object QueryDsl {
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
     val h = Wand.handleFor(spark, indexDir, cfg)
     // one metadata job expands the whole batch: compile each wildcard
-    // to its anchored regex (exactly expandWildcard's translation) and
-    // ride the shared regex batch
-    val qp = queries.map { case (qid, p0) =>
-      val p = p0.trim.toLowerCase(java.util.Locale.ROOT)
-      val rx = "^" + p.flatMap {
-        case '*' => ".*"
-        case '?' => "."
-        case c if c.isLetterOrDigit => c.toString
-        case c => java.util.regex.Pattern.quote(c.toString)
-      } + "$"
-      (qid, rx)
-    }
+    // to its anchored regex (expandWildcard's translation) and ride the
+    // shared regex batch
+    val qp = queries.map { case (qid, p) =>
+      (qid, Wand.wildcardRegex(p.trim.toLowerCase(java.util.Locale.ROOT))) }
     val exp = h.expandRegexBatch(qp.map(_._2), maxExpansions)
     h.topKTerms(qp.map { case (qid, rx) => qid -> exp(rx) })
   }

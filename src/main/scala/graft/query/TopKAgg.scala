@@ -25,17 +25,7 @@ final case class ScoredDoc(score: Double, doc_id: Long)
 final class TopKByScore(k: Int)
     extends Aggregator[ScoredDoc, Seq[ScoredDoc], Seq[ScoredDoc]] {
 
-  /** a strictly better than b. IEEE `==` first (so -0.0 ties 0.0, like
-    * Spark's normalized sort and DuckDB), then Double.compare for a
-    * TOTAL order on the rest (NaN ranked above every double, like
-    * Spark's sort order and DuckDB's ORDER BY DESC; NaN ties NaN) — a
-    * non-total comparator would make results merge-order-dependent. */
-  @inline private def better(a: ScoredDoc, b: ScoredDoc): Boolean = {
-    val c =
-      if (a.score == b.score) 0
-      else java.lang.Double.compare(a.score, b.score)
-    c > 0 || (c == 0 && a.doc_id < b.doc_id)
-  }
+  import TopKByScore.better
 
   private def insert(buf: Seq[ScoredDoc], x: ScoredDoc): Seq[ScoredDoc] =
     if (buf.size >= k && !better(x, buf.last)) buf
@@ -52,6 +42,22 @@ final class TopKByScore(k: Int)
   override def finish(r: Seq[ScoredDoc]): Seq[ScoredDoc] = r
   override def bufferEncoder: Encoder[Seq[ScoredDoc]] = ExpressionEncoder()
   override def outputEncoder: Encoder[Seq[ScoredDoc]] = ExpressionEncoder()
+}
+
+object TopKByScore {
+  /** a strictly better than b. IEEE `==` first (so -0.0 ties 0.0, like
+    * Spark's normalized sort and DuckDB), then Double.compare for a
+    * TOTAL order on the rest (NaN ranked above every double, like
+    * Spark's sort order and DuckDB's ORDER BY DESC; NaN ties NaN) — a
+    * non-total comparator would make results merge-order-dependent.
+    * The one ranking comparator: the aggregation and the served
+    * per-partition heaps ([[ServedTopK]]) both rank with it. */
+  @inline def better(a: ScoredDoc, b: ScoredDoc): Boolean = {
+    val c =
+      if (a.score == b.score) 0
+      else java.lang.Double.compare(a.score, b.score)
+    c > 0 || (c == 0 && a.doc_id < b.doc_id)
+  }
 }
 
 object TopKAgg {

@@ -2,7 +2,7 @@ package graft.query
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
@@ -26,8 +26,16 @@ import graft.index.{BlockRow, SegmentBuilder}
   * the ES-shard design. Segment rows are assigned to the doc-ranges
   * their [first_doc, last_doc] span overlaps (metadata only, no decode),
   * each (qid, range) task runs exact WAND over its range with global
-  * corpus stats, and the <= ranges x k local hits merge through the same
-  * bounded [[TopKByScore]] aggregation the declarative path uses.
+  * corpus stats, and the local hits rank the way an ES coordinator
+  * merges shard results ([[ServedTopK.rank]]): each task keeps a heap of
+  * k per qid, the driver collects at most tasks x qids x k rows and
+  * merges them. Served calls are therefore EAGER — the scoring pass runs
+  * inside the call, which returns a small local frame — and the driver
+  * collect is bounded by construction. Term expansion (prefix,
+  * wildcard, regexp, fuzzy) follows the same shape over the cached
+  * (term, df) dictionary: a heap of `cap` per (task, pattern), one
+  * collect of at most tasks x patterns x cap rows, the final cap on the
+  * driver in Spark's string order.
   * Per-task memory is the query's COMPRESSED postings within one range —
   * never a whole hot term pinned in one task (round-1 scale-killer;
   * bounded-decode asserted in WandSpec via accumulator).
@@ -45,6 +53,30 @@ object Wand {
   final case class QHit(qid: Int, doc_id: Long, score: Double)
 
   private val BoundInflate = 1.0 + 1e-9
+
+  /** A fuzzy batch's expansions, keyed by the (term, maxDist) input. */
+  final class FuzzyExpansions(byInput: Map[(String, Int), Seq[String]]) {
+    def apply(term: String, maxDist: Int): Seq[String] = byInput((term, maxDist))
+
+    /** The expansion of a term the batch expanded at exactly ONE
+      * distance; fails loud when the term name alone is ambiguous. */
+    def apply(term: String): Seq[String] =
+      byInput.collect { case ((t, _), e) if t == term => e }.toSeq match {
+        case Seq(e) => e
+        case es => throw new NoSuchElementException(
+          s"fuzzy term <$term> was expanded at ${es.size} distances; look it up by (term, maxDist)")
+      }
+  }
+
+  /** The anchored regex of an ES wildcard pattern (`*` = any run incl.
+    * empty, `?` = exactly one char, everything else literal). */
+  def wildcardRegex(pattern: String): String =
+    "^" + pattern.flatMap {
+      case '*' => ".*"
+      case '?' => "."
+      case c if c.isLetterOrDigit => c.toString
+      case c => java.util.regex.Pattern.quote(c.toString)
+    } + "$"
 
   /** One (term, salt) run restricted to docs in [lo, hi): lazily-decoded
     * cursor over its blocks. */
@@ -247,10 +279,11 @@ object Wand {
   /** Spark entry: per-(query, doc-range) WAND tasks over the
     * broadcast-joined segment rows of the query's terms (posting lists
     * arrive compressed; block-max WAND decodes only the blocks it cannot
-    * skip), merged per query through a bounded top-k aggregation.
-    * Served through the process-level handle cache: handle init runs
-    * metadata jobs (df-table agg, doc-range quantiles) that must
-    * amortize across calls, not recur per query. */
+    * skip), merged per query by [[ServedTopK.rank]] — eager, one
+    * bounded collect (see [[Handle.topKTerms]]). Served through the
+    * process-level handle cache: handle init runs metadata jobs
+    * (df-table agg, doc-range quantiles) that must amortize across
+    * calls, not recur per query. */
   def topK(spark: SparkSession, indexDir: String, queries: Seq[(Int, String)],
            cfg: EngineConfig = EngineConfig.default): DataFrame =
     handleFor(spark, indexDir, cfg).topK(queries)
@@ -332,6 +365,7 @@ object Wand {
           .head().getSeq[Long](0).distinct.sorted.toArray
       }
 
+    /** Analyzed match queries served by [[topKTerms]] (eager, bounded). */
     def topK(queries: Seq[(Int, String)],
              taskPostingsAcc: CollectionAccumulator[java.lang.Long] = null): DataFrame =
       topKTerms(
@@ -341,37 +375,78 @@ object Wand {
     /** Lexicographically-first `maxExpansions` index terms starting with
       * `prefix` — the ES prefix-query expansion (Lucene walks the term
       * dict in order, which IS lexicographic; the cap is
-      * index.max_terms_count's role). Bounded collect (<= maxExpansions
-      * strings); the scan touches only the cached (term, df) metadata
-      * table — never posting payloads — and StartsWith pushes into its
-      * parquet lineage. ES prefix queries are NOT analyzed; the caller
-      * lowercases, nothing more. */
+      * index.max_terms_count's role). ES prefix queries are NOT
+      * analyzed; the caller lowercases, nothing more. */
     def expandPrefix(prefix: String, maxExpansions: Int): Seq[String] =
-      dfTable.filter(col("term").startsWith(prefix))
-        .orderBy("term").limit(maxExpansions)
-        .collect().map(_.getString(0)).toSeq
+      expandPrefixBatch(Seq(prefix), maxExpansions)(prefix)
 
-    /** Batch twin of [[expandPrefix]]: every prefix's expansion out of
-      * ONE metadata job (a batch of b prefixes formerly paid b
-      * scheduler round-trips of pure fixed cost — the per-query
-      * expansion collects were the serving latency, not the scan).
-      * The per-pattern cap applies DISTRIBUTED-side (a window per
-      * pattern), so the collect is bounded by patterns x maxExpansions
-      * no matter how hot a prefix is against the dictionary.
-      * Per-prefix results identical to [[expandPrefix]]. */
-    def expandPrefixBatch(prefixes: Seq[String], maxExpansions: Int): Map[String, Seq[String]] = {
-      import org.apache.spark.sql.expressions.Window
-      val ps = prefixes.distinct
-      if (ps.isEmpty) return Map.empty
-      val pdf = ps.toDF("prefix")
-      val rows = dfTable.join(broadcast(pdf), col("term").startsWith(col("prefix")))
-        .withColumn("r", row_number().over(
-          Window.partitionBy("prefix").orderBy("term")))
-        .filter(col("r") <= maxExpansions)
-        .select("prefix", "term", "r").collect()
-      val m = rows.groupBy(_.getString(0)).map { case (p, rs) =>
-        p -> rs.sortBy(_.getInt(2)).map(_.getString(1)).toSeq }
-      ps.map(p => p -> m.getOrElse(p, Nil)).toMap
+    /** Index terms matching an ES wildcard pattern (`*` = any sequence
+      * incl. empty, `?` = exactly one char), lexicographic-first capped
+      * at maxExpansions. ES wildcard queries are NOT analyzed (caller
+      * lowercases), and a leading wildcard costs a full term-dictionary
+      * scan in Lucene too — here that scan is the cached (term, df)
+      * metadata table, never posting payloads. */
+    def expandWildcard(pattern: String, maxExpansions: Int): Seq[String] =
+      expandRegexBatch(Seq(wildcardRegex(pattern)), maxExpansions).values.head
+
+    /** Index terms FULL-matching an anchored regexp (the Lucene regexp
+      * query contract: the pattern must consume the whole term),
+      * lexicographic-first capped at maxExpansions. Callers keep
+      * patterns inside the Java/RE2 common subset (literals, classes,
+      * ., *, +, |, grouping) so the DuckDB oracle's regexp_full_match
+      * agrees. */
+    def expandRegex(pattern: String, maxExpansions: Int): Seq[String] =
+      expandRegexBatch(Seq("^(?:" + pattern + ")$"), maxExpansions).values.head
+
+    /** Index terms within classic Levenshtein distance <= maxDist of
+      * `term`, highest-df first (ES fuzzy rewrite
+      * top_terms_blended_freqs keeps the highest-frequency expansions),
+      * ties broken term-asc, capped at maxExpansions. Distance is
+      * CLASSIC Levenshtein on both engine and oracle (Spark's
+      * levenshtein(); ES uses Damerau where a transposition costs 1 —
+      * documented deviation, SURVEY §12). */
+    def expandFuzzy(term: String, maxDist: Int, maxExpansions: Int): Seq[String] =
+      expandFuzzyBatch(Seq(term -> maxDist), maxExpansions)(term, maxDist)
+
+    /** Every prefix's expansion out of ONE metadata job (see
+      * [[expandCapped]]; at most tasks x prefixes x maxExpansions rows
+      * reach the driver). */
+    def expandPrefixBatch(prefixes: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
+      expandCapped[String](prefixes, col("term").startsWith(_), ServedTopK.byTerm, maxExpansions)
+
+    /** Every compiled (anchored) pattern's expansion out of ONE metadata
+      * job — the wildcard and regexp batches (see [[expandCapped]]; at
+      * most tasks x patterns x maxExpansions rows reach the driver). */
+    def expandRegexBatch(patterns: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
+      expandCapped[String](patterns, col("term").rlike(_), ServedTopK.byTerm, maxExpansions)
+
+    /** Every (term, maxDist) input's expansion out of ONE metadata job,
+      * capped and keyed per (term, maxDist) pair: one term expanded at
+      * two distances in one batch yields two independent expansions
+      * (see [[expandCapped]]; at most tasks x inputs x maxExpansions
+      * rows reach the driver). The length window is a cheap pre-filter
+      * (|len diff| > d can never be within d). */
+    def expandFuzzyBatch(inputs: Seq[(String, Int)], maxExpansions: Int): FuzzyExpansions =
+      new FuzzyExpansions(expandCapped[(String, Int)](inputs, { case (t, d) =>
+          abs(length(col("term")) - length(lit(t))) <= d && levenshtein(col("term"), lit(t)) <= d
+        }, ServedTopK.byDfThenTerm, maxExpansions))
+
+    /** The one expansion core: each distinct key's match predicate runs
+      * as a literal over the cached (term, df) metadata table — never
+      * posting payloads, no join — and [[ServedTopK.capPerKey]] keeps
+      * the first `cap` matches per key under `ord` in each task, then
+      * merges and caps again on the driver. The collect is bounded by
+      * tasks x keys x cap rows no matter how hot a pattern is against
+      * the dictionary. Keys with no match map to Nil. */
+    private def expandCapped[K](keys: Seq[K], matches: K => Column,
+                                ord: Ordering[(String, Long)], cap: Int): Map[K, Seq[String]] = {
+      val ks = keys.distinct
+      if (ks.isEmpty) return Map.empty
+      val key = explode(array(ks.indices.map(i => when(matches(ks(i)), lit(i))): _*))
+      val capped = ServedTopK.capPerKey(
+        dfTable.select(key.as("key"), col("term"), col("df")).filter(col("key").isNotNull)
+          .as[(Int, String, Long)], ord, cap)
+      ks.indices.map(i => ks(i) -> capped.getOrElse(i, Nil)).toMap
     }
 
     /** Per-term df for a bounded term list out of the CACHED (term, df)
@@ -388,106 +463,21 @@ object Wand {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
 
-    /** Batch twin of [[expandFuzzy]] — every (term, maxDist) input's
-      * expansion out of ONE metadata job, with the per-input cap
-      * applied distributed-side (window per input: df desc, term asc)
-      * so the collect is bounded by inputs x maxExpansions. Per-input
-      * results identical. */
-    def expandFuzzyBatch(inputs: Seq[(String, Int)], maxExpansions: Int)
-        : Map[String, Seq[String]] = {
-      import org.apache.spark.sql.expressions.Window
-      val ins = inputs.distinct
-      if (ins.isEmpty) return Map.empty
-      val idf = ins.toDF("input", "dist")
-      val rows = dfTable.join(broadcast(idf),
-          abs(length(col("term")) - length(col("input"))) <= col("dist") &&
-            levenshtein(col("term"), col("input")) <= col("dist"))
-        .withColumn("r", row_number().over(
-          Window.partitionBy("input").orderBy(col("df").desc, col("term"))))
-        .filter(col("r") <= maxExpansions)
-        .select("input", "term", "r").collect()
-      val m = rows.groupBy(_.getString(0)).map { case (t, rs) =>
-        t -> rs.sortBy(_.getInt(2)).map(_.getString(1)).toSeq }
-      ins.map { case (t, _) => t -> m.getOrElse(t, Nil) }.toMap
-    }
-
-    /** Batch twin of [[expandWildcard]]/[[expandRegex]] over compiled
-      * anchored patterns: one metadata job for the whole batch, with
-      * the per-pattern lexicographic cap applied distributed-side
-      * (bounded collect: patterns x maxExpansions). Per-pattern
-      * results identical. */
-    def expandRegexBatch(patterns: Seq[String], maxExpansions: Int)
-        : Map[String, Seq[String]] = {
-      import org.apache.spark.sql.expressions.Window
-      val ps = patterns.distinct
-      if (ps.isEmpty) return Map.empty
-      val pdf = ps.toDF("rx")
-      val rows = dfTable.join(broadcast(pdf), regexp_like(col("term"), col("rx")))
-        .withColumn("r", row_number().over(
-          Window.partitionBy("rx").orderBy("term")))
-        .filter(col("r") <= maxExpansions)
-        .select("rx", "term", "r").collect()
-      val m = rows.groupBy(_.getString(0)).map { case (p, rs) =>
-        p -> rs.sortBy(_.getInt(2)).map(_.getString(1)).toSeq }
-      ps.map(p => p -> m.getOrElse(p, Nil)).toMap
-    }
-
-    /** Index terms matching an ES wildcard pattern (`*` = any sequence
-      * incl. empty, `?` = exactly one char), lexicographic-first capped
-      * at maxExpansions — the same term-dict order and cap discipline as
-      * [[expandPrefix]]. ES wildcard queries are NOT analyzed (caller
-      * lowercases), and a leading wildcard costs a full term-dictionary
-      * scan in Lucene too — here that scan is the cached (term, df)
-      * metadata table, never posting payloads, so the cost class
-      * matches ES's own warning for leading wildcards. */
-    def expandWildcard(pattern: String, maxExpansions: Int): Seq[String] = {
-      val rx = "^" + pattern.flatMap {
-        case '*' => ".*"
-        case '?' => "."
-        case c if c.isLetterOrDigit => c.toString
-        case c => java.util.regex.Pattern.quote(c.toString)
-      } + "$"
-      dfTable.filter(col("term").rlike(rx))
-        .orderBy("term").limit(maxExpansions)
-        .collect().map(_.getString(0)).toSeq
-    }
-
-    /** Index terms FULL-matching an anchored regexp (the Lucene regexp
-      * query contract: the pattern must consume the whole term),
-      * lexicographic-first capped at maxExpansions — same expansion
-      * discipline as [[expandWildcard]], same metadata-only cost (a
-      * pattern with no literal prefix scans the whole term dictionary,
-      * never postings). Callers keep patterns inside the Java/RE2
-      * common subset (literals, classes, ., *, +, |, grouping) so the
-      * DuckDB oracle's regexp_full_match agrees. */
-    def expandRegex(pattern: String, maxExpansions: Int): Seq[String] =
-      dfTable.filter(col("term").rlike("^(?:" + pattern + ")$"))
-        .orderBy("term").limit(maxExpansions)
-        .collect().map(_.getString(0)).toSeq
-
-    /** Index terms within classic Levenshtein distance <= maxDist of
-      * `term`, highest-df first (ES fuzzy rewrite
-      * top_terms_blended_freqs keeps the highest-frequency expansions),
-      * ties broken term-asc, capped at maxExpansions. The length-window
-      * conjunct is a cheap pre-filter (|len diff| > d can never be
-      * within d). Distance is CLASSIC Levenshtein on both engine and
-      * oracle (Spark's levenshtein(); ES uses Damerau where a
-      * transposition costs 1 — documented deviation, SURVEY §12). */
-    def expandFuzzy(term: String, maxDist: Int, maxExpansions: Int): Seq[String] =
-      dfTable.filter(
-          abs(length(col("term")) - lit(term.length)) <= maxDist &&
-          levenshtein(col("term"), lit(term)) <= maxDist)
-        .orderBy(col("df").desc, col("term")).limit(maxExpansions)
-        .collect().map(_.getString(0)).toSeq
-
     /** As [[topK]], over pre-resolved per-query term lists (the prefix /
       * fuzzy serving path hands expanded terms straight to the same
-      * exact block-max WAND disjunction). */
+      * exact block-max WAND disjunction).
+      *
+      * EAGER: runs the (qid, doc-range) WAND pass before returning and
+      * returns a local `(qid, rank, doc_id, score)` frame in (qid, rank)
+      * order. The range tasks' local hits rank through
+      * [[ServedTopK.rank]]: a heap of k per (task, qid), ONE collect of
+      * at most tasks x qids x k rows, the merge on the driver — no
+      * ranking shuffle, no range sort. */
     def topKTerms(queries: Seq[(Int, Seq[String])],
                   taskPostingsAcc: CollectionAccumulator[java.lang.Long] = null): DataFrame = {
       val allTerms = queries.flatMap(_._2).distinct
       if (allTerms.isEmpty)
-        return spark.emptyDataset[Hit].toDF().orderBy("qid", "rank")
+        return spark.emptyDataset[Hit].toDF()
       val q2t = queries.flatMap { case (qid, ts) => ts.distinct.map(qid -> _) }
         .toDF("qid", "term")
       val k = cfg.topK; val k1 = cfg.k1; val b = cfg.b
@@ -525,13 +515,7 @@ object Wand {
           wandScores(rows, dfm, nL, avg, k, k1, b, lo, hi)
             .map { case (s, d) => QHit(qid, d, s) }.iterator
         }
-      localHits.toDF()
-        .groupBy("qid")
-        .agg(TopKAgg.topK(k)(col("score"), col("doc_id")).as("top"))
-        .select(col("qid"), posexplode(col("top")).as(Seq("pos", "sd")))
-        .select(col("qid"), (col("pos") + 1).cast("long").as("rank"),
-          col("sd.doc_id").as("doc_id"), col("sd.score").as("score"))
-        .orderBy("qid", "rank")
+      ServedTopK.rank(localHits.toDF(), k)
     }
 
     def close(): Unit = dfTable.unpersist()

@@ -172,4 +172,41 @@ class WandSpec extends SparkSuite {
       assert(ids === oracle)
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
+
+  test("range fan-out merges on the driver bit-identical to BM25.topK (absent qid, k-th tie)") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_wand_ranges_").toString
+    try {
+      // repeated texts make tie groups far larger than k; every 50th
+      // doc is a distinct strong 'beta delta' doc, so that query's
+      // top-k comes from many doc ranges
+      val variants = Seq("alpha beta gamma", "alpha delta", "gamma delta epsilon alpha",
+        "alpha alpha zeta", "beta gamma", "epsilon zeta eta", "alpha beta delta gamma eta")
+      val docs = (0L until 600L).map { i =>
+        val text =
+          if (i % 50 == 49) ("beta " * (2 + (i / 50 % 5).toInt)) + "delta" +
+            (" filler" * (i / 50).toInt)
+          else variants((i % variants.size).toInt)
+        (i, text)
+      }
+      val c = cfg.copy(shards = 2, blockSize = 8, saltTargetPostings = 64,
+        serveTargetPostings = 16)
+      val df = docs.toDF("doc_id", "text")
+      SegmentBuilder.ingest(spark, df, col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      assert(Wand.handleFor(spark, dir, c).serveRanges > 1, "the batch must fan out over ranges")
+      val queries = Seq(1 -> "alpha", 2 -> "beta delta", 3 -> "zzznope",
+        4 -> "gamma eta", 5 -> "zeta zzznope")
+      // the k-th 'alpha' hit ties with the (k+1)-th
+      val alpha = NaiveBM25.topK(docs, "alpha", c.topK + 1, c.k1, c.b)
+      assert(alpha(c.topK - 1).score == alpha(c.topK).score, "fixture must tie at the k-th score")
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq.map(r =>
+        (r.getInt(0), r.getLong(1), r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3))))
+      val served = rows(Wand.topK(spark, dir, queries, c))
+      val declarative = rows(BM25.topK(spark, df, col("doc_id"), col("text"), queries, c))
+      assert(served === declarative)
+      assert(!served.exists(_._1 == 3), "an absent-term qid yields no rows")
+      assert(served.count(_._1 == 1) === c.topK)
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
+  }
 }
