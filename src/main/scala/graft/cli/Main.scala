@@ -114,31 +114,43 @@ object Main {
     * engine's two "stores": the Spark session and an index directory.
     * Reports session liveness, ingest completeness, corpus stats
     * readability, and how many shards hold a checkpoint matching the
-    * CURRENT lineage (a stale checkpoint is not healthy). */
+    * CURRENT lineage (a stale checkpoint is not healthy). When reading
+    * the index fails, `error` carries the exception class and message
+    * (null otherwise), so an unhealthy index says why. */
   def pingInfo(spark: SparkSession, indexDir: String,
                cfg: EngineConfig = EngineConfig.default): (Boolean, String) = {
     val sessionOk = !spark.sparkContext.isStopped
     val ingested = graft.index.SegmentBuilder.ingestDone(indexDir, cfg)
-    val (n, avgdl, shardsBuilt, docmapN) =
-      if (!ingested) (0L, 0.0, 0, 0L)
+    val (n, avgdl, shardsBuilt, docmapN, error) =
+      if (!ingested) (0L, 0.0, 0, 0L, None)
       else try {
         val (n0, a0) = graft.index.SegmentBuilder.readStats(spark, indexDir)
         val built = (0 until cfg.shards).count(sh =>
           graft.index.SegmentBuilder.manifestDone(indexDir, sh,
             graft.index.SegmentBuilder.lineage(spark, indexDir, cfg, sh)))
-        (n0, a0, built, spark.read.parquet(s"$indexDir/docmap").count())
-      } catch { case _: Exception => (0L, 0.0, 0, 0L) }
-    val healthy = sessionOk && ingested && n > 0 && shardsBuilt == cfg.shards
+        (n0, a0, built, spark.read.parquet(s"$indexDir/docmap").count(), None)
+      } catch {
+        case e: Exception => (0L, 0.0, 0, 0L, Some(s"${e.getClass.getName}: ${e.getMessage}"))
+      }
+    val healthy = sessionOk && ingested && error.isEmpty && n > 0 && shardsBuilt == cfg.shards
     // appended_docs surfaces stats drift from incremental appends
     // (appendDocs deliberately leaves stats unrefreshed — see its doc):
     // an operator watching this number decide when to re-ingest.
     val json =
       s"""{"op":"ping","healthy":$healthy,"session_ok":$sessionOk,""" +
         s""""ingested":$ingested,"docs":$n,"appended_docs":${math.max(0L, docmapN - n)},""" +
-        s""""avgdl":$avgdl,""" +
-        s""""shards_built":$shardsBuilt,"shards_expected":${cfg.shards}}"""
+        s""""avgdl":${jsonNum(avgdl)},""" +
+        s""""shards_built":$shardsBuilt,"shards_expected":${cfg.shards},""" +
+        s""""error":${error.fold("null")(jsonStr)}}"""
     (healthy, json)
   }
+
+  /** A JSON number; null for NaN and infinities, which JSON cannot hold. */
+  private def jsonNum(d: Double): String = if (d.isNaN || d.isInfinite) "null" else d.toString
+
+  /** A quoted, escaped JSON string. */
+  private def jsonStr(s: String): String =
+    "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
 
   /** Dry-run analyzer (§3.3): sample, report token/skew stats and a
     * go/no-go validity gate (>=50% of sampled docs analyzable —
@@ -366,7 +378,7 @@ object Main {
           val (n, avgdl) = SegmentBuilder.restat(spark, indexDir, cfg)
           val rebuilt = SegmentBuilder.buildAll(spark, indexDir, cfg,
             concurrency = 4, cancel = Cancellation.probe)
-          println(s"""{"op":"restat","docs":$n,"avgdl":$avgdl,""" +
+          println(s"""{"op":"restat","docs":$n,"avgdl":${jsonNum(avgdl)},""" +
             s""""shardsRebuilt":${rebuilt.size},""" +
             s""""cancelled":${Cancellation.isRequested},""" +
             s""""secs":${(System.nanoTime() - t0) / 1e9},"metrics":${m.json}}""")

@@ -32,14 +32,8 @@ case class RangeSaltExpr(left: org.apache.spark.sql.catalyst.expressions.Express
     org.apache.spark.sql.types.IntegerType
 
   /** Primitive hot path, shared by eval and generated code. */
-  def saltOf(d: Long, ns: Int): Int = {
-    var lo = 0; var hi = boundaries.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (boundaries(mid) <= d) lo = mid + 1 else hi = mid
-    }
-    ((lo.toLong * ns) / (boundaries.length + 1)).toInt
-  }
+  def saltOf(d: Long, ns: Int): Int =
+    ((RangeSaltExpr.bucketOf(boundaries, d).toLong * ns) / (boundaries.length + 1)).toInt
 
   override def nullSafeEval(doc: Any, nsalts: Any): Any =
     saltOf(doc.asInstanceOf[Long], nsalts.asInstanceOf[Int])
@@ -59,6 +53,19 @@ case class RangeSaltExpr(left: org.apache.spark.sql.catalyst.expressions.Express
 }
 
 object RangeSaltExpr {
+  /** The bucket of `d` among ascending `boundaries`: the number of
+    * boundaries <= d, by binary search. Bucket i covers
+    * [boundaries(i-1), boundaries(i)). The one range-id function: the
+    * build's salts and serving's doc ranges both bucket with it. */
+  def bucketOf(boundaries: Array[Long], d: Long): Int = {
+    var lo = 0; var hi = boundaries.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (boundaries(mid) <= d) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
   def saltCol(doc: org.apache.spark.sql.Column, nsalts: org.apache.spark.sql.Column,
               boundaries: Array[Long]): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.GraftColumnBridge

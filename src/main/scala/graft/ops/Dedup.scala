@@ -290,11 +290,15 @@ object Dedup {
     // accumulated ascending — the same IEEE expression, bit-equal to
     // the fused CosineSimExpr (property-tested in SimilaritySpec).
     // Length-mismatched pairs are skipped (the expression form nulled
-    // them out of the filter identically).
+    // them out of the filter identically). A zero-norm vector gives
+    // cos = 0/0 = NaN, which Spark's and DuckDB's comparisons order
+    // above every number, so NaN pairs pass the threshold. A null id
+    // never pairs: in SQL, id_a < id_b is null for it, not true.
     val spark = embeddings.sparkSession
     import spark.implicits._
     val e = embeddings
       .select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
+      .filter(col("vec_id").isNotNull)
       .as[(Long, Array[Double])]
     val all = e.collect().filter(_._2 != null).sortBy(_._1)
     val bc = spark.sparkContext.broadcast(
@@ -311,7 +315,7 @@ object Dedup {
           while (j < ids.length) {
             if (ids(j) > idA && vecs(j).length == va.length) {
               val cos = dotAsc(va, vecs(j)) / (na * norms(j))
-              if (cos >= thr) out += ((idA, ids(j), cos))
+              if (java.lang.Double.isNaN(cos) || cos >= thr) out += ((idA, ids(j), cos))
             }
             j += 1
           }

@@ -174,8 +174,8 @@ object QueryDsl {
     // round-trip per query — pure fixed cost at serving time)
     val qp = queries.map { case (qid, p) =>
       qid -> p.trim.toLowerCase(java.util.Locale.ROOT) }
-    val exp = h.expandPrefixBatch(qp.map(_._2), maxExpansions)
-    h.topKTerms(qp.map { case (qid, p) => qid -> exp(p) })
+    val exp = h.prefixExpansions(qp.map(_._2), maxExpansions)
+    h.topKExpanded(qp.map { case (qid, p) => qid -> exp(p) })
   }
 
   /** Fuzzy top-k served from the segment index: the query term (single
@@ -196,7 +196,7 @@ object QueryDsl {
       (qid, t, autoFuzziness(t))
     }
     val exp = h.expandFuzzyBatch(qt.map { case (_, t, d) => (t, d) }, maxExpansions)
-    h.topKTerms(qt.map { case (qid, t, d) => qid -> exp(t, d) })
+    h.topKExpanded(qt.map { case (qid, t, d) => qid -> exp.withDf(t, d) })
   }
 
   /** Wildcard top-k served from the segment index: the pattern (`*` =
@@ -216,8 +216,8 @@ object QueryDsl {
     // shared regex batch
     val qp = queries.map { case (qid, p) =>
       (qid, Wand.wildcardRegex(p.trim.toLowerCase(java.util.Locale.ROOT))) }
-    val exp = h.expandRegexBatch(qp.map(_._2), maxExpansions)
-    h.topKTerms(qp.map { case (qid, rx) => qid -> exp(rx) })
+    val exp = h.regexExpansions(qp.map(_._2), maxExpansions)
+    h.topKExpanded(qp.map { case (qid, rx) => qid -> exp(rx) })
   }
 
   /** ES search_after — deep pagination without deep sorting. The cursor
@@ -1164,8 +1164,8 @@ object QueryDsl {
     // metadata job expands the whole batch (anchored exactly like
     // expandRegex)
     val qp = queries.map { case (qid, p) => (qid, "^(?:" + p.trim + ")$") }
-    val exp = h.expandRegexBatch(qp.map(_._2), maxExpansions)
-    h.topKTerms(qp.map { case (qid, rx) => qid -> exp(rx) })
+    val exp = h.regexExpansions(qp.map(_._2), maxExpansions)
+    h.topKExpanded(qp.map { case (qid, rx) => qid -> exp(rx) })
   }
 
   /** ES range aggregation over a query's matching docs: every SPECIFIED

@@ -1,9 +1,11 @@
 package graft.query
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The ranking tail of index-served requests — the ES shard/coordinator
   * shape: a bounded heap per (partition, key) on the executors, ONE
@@ -13,8 +15,10 @@ import org.apache.spark.sql.functions.col
   * adds a ranking shuffle and a range sort (or a window shuffle per
   * expansion batch).
   *
-  * Both entry points are EAGER: they run the scoring plan they are
-  * given before returning. Every driver collect is bounded by
+  * [[rank]] and [[capPerKey]] are EAGER: they run the scoring plan they
+  * are given before returning. [[bestPerQid]] and [[merge]] are the two
+  * halves of [[rank]], shared with the WAND scoring job's RDD tail
+  * ([[Wand.Handle.topKTerms]]). Every driver collect is bounded by
   * construction — at most tasks x keys x k rows — no matter how many
   * candidates the scoring pass produces; no partition ever buffers more
   * than k rows per key. The corpus-path operators keep the lazy
@@ -23,31 +27,47 @@ import org.apache.spark.sql.functions.col
 object ServedTopK {
 
   /** Rank a scored `(qid, doc_id, score)` frame eagerly: each task keeps
-    * the best k per qid under [[TopKByScore.better]] (score desc, doc_id
-    * asc), the driver collects those heaps — at most
-    * tasks x qids x k rows — and merges them with the same comparator.
+    * the best k per qid ([[bestPerQid]]), the driver collects those
+    * heaps — at most tasks x qids x k rows — and [[merge]]s them.
     * Returns a LOCAL `(qid, rank, doc_id, score)` frame in (qid, rank)
     * order, rank ties broken doc_id asc: row for row what the lazy
     * [[BM25.rankTopK]] returns for the same input. */
   def rank(scored: DataFrame, k: Int): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    val agg = new TopKByScore(k)
-    val heaps = scored.select(col("qid"), col("score"), col("doc_id"))
+    merge(spark, scored.select(col("qid"), col("score"), col("doc_id"))
       .as[(Int, Double, Long)]
-      .mapPartitions { it =>
-        val best = mutable.HashMap.empty[Int, Seq[ScoredDoc]]
-        it.foreach { case (q, s, d) =>
-          best(q) = agg.reduce(best.getOrElse(q, agg.zero), ScoredDoc(s, d)) }
-        best.iterator.flatMap { case (q, h) => h.map(x => (q, x.score, x.doc_id)) }
-      }
-      .collect()
+      .mapPartitions(bestPerQid(_, k))
+      .collect(), k)
+  }
+
+  /** One task's heaps: the best k `(qid, score, doc_id)` rows per qid
+    * under [[TopKByScore.better]] (score desc, doc_id asc). */
+  def bestPerQid(hits: Iterator[(Int, Double, Long)], k: Int): Iterator[(Int, Double, Long)] = {
+    val agg = new TopKByScore(k)
+    val best = mutable.HashMap.empty[Int, Seq[ScoredDoc]]
+    hits.foreach { case (q, s, d) =>
+      best(q) = agg.reduce(best.getOrElse(q, agg.zero), ScoredDoc(s, d)) }
+    best.iterator.flatMap { case (q, h) => h.map(x => (q, x.score, x.doc_id)) }
+  }
+
+  /** The driver merge of collected task heaps, with the same comparator:
+    * a LOCAL `(qid, rank, doc_id, score)` frame in (qid, rank) order. */
+  def merge(spark: SparkSession, heaps: Array[(Int, Double, Long)], k: Int): DataFrame = {
+    val agg = new TopKByScore(k)
     val hits = heaps.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, rs) =>
       rs.foldLeft(agg.zero) { case (b, (_, s, d)) => agg.reduce(b, ScoredDoc(s, d)) }
-        .zipWithIndex.map { case (x, i) => Wand.Hit(q, i + 1L, x.doc_id, x.score) }
+        .zipWithIndex.map { case (x, i) => Row(q, i + 1L, x.doc_id, x.score) }
     }
-    spark.createDataset(hits).toDF()
+    spark.createDataFrame(hits.asJava, HitSchema)
   }
+
+  /** The schema of a served hit frame: [[Wand.Hit]]'s. */
+  val HitSchema: StructType = Encoders.product[Wand.Hit].schema
+
+  /** A served request with nothing to score. */
+  def noHits(spark: SparkSession): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), HitSchema)
 
   /** Spark's StringType order — UTF-8 byte order, which is code-point
     * order — NOT `String.compareTo`: UTF-16 code units put U+E000..U+FFFF
@@ -78,11 +98,22 @@ object ServedTopK {
     Ordering.Tuple2(Ordering.Long.reverse, termOrder).on[(String, Long)](e => (e._2, e._1))
 
   /** The first `cap` terms per key of `(key, term, df)` rows under `ord`
-    * (terms distinct per key): each task keeps a bounded heap of `cap`
-    * per key, the driver collects them — at most tasks x keys x cap
-    * rows — then sorts and caps again. Keys with no rows are absent. */
+    * (terms distinct per key); see [[capPerKeyWithDf]]. */
   def capPerKey(matched: Dataset[(Int, String, Long)], ord: Ordering[(String, Long)],
-                cap: Int): Map[Int, Seq[String]] = {
+                cap: Int): Map[Int, Seq[String]] =
+    termsOf(capPerKeyWithDf(matched, ord, cap))
+
+  /** Expansions without their df. */
+  def termsOf[K](byKey: Map[K, Seq[(String, Long)]]): Map[K, Seq[String]] =
+    byKey.map { case (key, es) => key -> es.map(_._1) }
+
+  /** The first `cap` `(term, df)` entries per key of `(key, term, df)`
+    * rows under `ord` (terms distinct per key): each task keeps a
+    * bounded heap of `cap` per key, the driver collects them — at most
+    * tasks x keys x cap rows — then sorts and caps again. Keys with no
+    * rows are absent. */
+  def capPerKeyWithDf(matched: Dataset[(Int, String, Long)], ord: Ordering[(String, Long)],
+                      cap: Int): Map[Int, Seq[(String, Long)]] = {
     if (cap <= 0) return Map.empty
     val spark = matched.sparkSession
     import spark.implicits._
@@ -97,6 +128,6 @@ object ServedTopK {
       best.iterator.flatMap { case (key, h) => h.iterator.map(e => (key, e._1, e._2)) }
     }.collect()
     heads.groupBy(_._1).map { case (key, rs) =>
-      key -> rs.map(r => (r._2, r._3)).sorted(ord).take(cap).map(_._1).toSeq }
+      key -> rs.map(r => (r._2, r._3)).sorted(ord).take(cap).toSeq }
   }
 }

@@ -2,13 +2,14 @@ package graft.query
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.CollectionAccumulator
 
 import graft.analyze.CodeTokenizer
 import graft.config.EngineConfig
-import graft.index.{BlockRow, SegmentBuilder}
+import graft.index.{BlockRow, RangeSaltExpr, SegmentBuilder}
 
 /** Block-max WAND top-k over the compressed segment index — the
   * score-skipping serving path (north_rule). Exactness contract: results
@@ -23,19 +24,27 @@ import graft.index.{BlockRow, SegmentBuilder}
   *    the deterministic (score desc, docId asc) comparator.
   *
   * Distribution (100 TB rule): serving fans out per (query, doc-range) —
-  * the ES-shard design. Segment rows are assigned to the doc-ranges
-  * their [first_doc, last_doc] span overlaps (metadata only, no decode),
-  * each (qid, range) task runs exact WAND over its range with global
-  * corpus stats, and the local hits rank the way an ES coordinator
-  * merges shard results ([[ServedTopK.rank]]): each task keeps a heap of
-  * k per qid, the driver collects at most tasks x qids x k rows and
-  * merges them. Served calls are therefore EAGER — the scoring pass runs
-  * inside the call, which returns a small local frame — and the driver
-  * collect is bounded by construction. Term expansion (prefix,
-  * wildcard, regexp, fuzzy) follows the same shape over the cached
-  * (term, df) dictionary: a heap of `cap` per (task, pattern), one
-  * collect of at most tasks x patterns x cap rows, the final cap on the
-  * driver in Spark's string order.
+  * the ES-shard design. A served request is small, so its latency is
+  * the fixed cost of each Spark job it runs; it therefore runs ONE
+  * scoring job ([[Handle.scoreTerms]]). df is resolved first (one
+  * bounded lookup for analyzed terms; expansions carry the df their
+  * dictionary job read), and terms with no df drop out — a request
+  * with no present term never scans segments. The job is an RDD tail
+  * over the one Catalyst plan on the request path, the pruned segment
+  * scan ([[Handle.segmentScan]]): each segment row is keyed per (qid,
+  * doc-range) for every range its [first_doc, last_doc] span overlaps
+  * (metadata only, no decode), each group runs exact WAND over its
+  * range with global corpus stats and the request's df map, and the
+  * local hits rank the way an ES coordinator merges shard results:
+  * each task keeps a heap of k per qid, the driver collects at most
+  * tasks x qids x k rows and merges them ([[ServedTopK.merge]]).
+  * Served calls are therefore EAGER — the scoring pass runs inside the
+  * call, which returns a small local frame — and the driver collect is
+  * bounded by construction. Term expansion (prefix, wildcard, regexp,
+  * fuzzy) follows the same shape over the cached (term, df)
+  * dictionary: a heap of `cap` per (task, pattern), one collect of at
+  * most tasks x patterns x cap rows, the final cap on the driver in
+  * Spark's string order.
   * Per-task memory is the query's COMPRESSED postings within one range —
   * never a whole hot term pinned in one task (round-1 scale-killer;
   * bounded-decode asserted in WandSpec via accumulator).
@@ -48,24 +57,24 @@ object Wand {
 
   final case class Hit(qid: Int, rank: Long, doc_id: Long, score: Double)
 
-  /** One unranked local hit (per doc-range); ranks exist only after the
-    * per-qid merge. */
-  final case class QHit(qid: Int, doc_id: Long, score: Double)
-
   private val BoundInflate = 1.0 + 1e-9
 
   /** A fuzzy batch's expansions, keyed by the (term, maxDist) input. */
-  final class FuzzyExpansions(byInput: Map[(String, Int), Seq[String]]) {
-    def apply(term: String, maxDist: Int): Seq[String] = byInput((term, maxDist))
+  final class FuzzyExpansions private[query] (byInput: Map[(String, Int), Seq[(String, Long)]]) {
+    def apply(term: String, maxDist: Int): Seq[String] = withDf(term, maxDist).map(_._1)
 
     /** The expansion of a term the batch expanded at exactly ONE
       * distance; fails loud when the term name alone is ambiguous. */
     def apply(term: String): Seq[String] =
       byInput.collect { case ((t, _), e) if t == term => e }.toSeq match {
-        case Seq(e) => e
+        case Seq(e) => e.map(_._1)
         case es => throw new NoSuchElementException(
           s"fuzzy term <$term> was expanded at ${es.size} distances; look it up by (term, maxDist)")
       }
+
+    /** The (term, maxDist) input's expansion with each term's df. */
+    private[query] def withDf(term: String, maxDist: Int): Seq[(String, Long)] =
+      byInput((term, maxDist))
   }
 
   /** The anchored regex of an ES wildcard pattern (`*` = any run incl.
@@ -276,11 +285,11 @@ object Wand {
     wandScores(rows, dfMap, n, avgdl, k, k1, b)
       .zipWithIndex.map { case ((s, d), r) => Hit(qid, (r + 1).toLong, d, s) }
 
-  /** Spark entry: per-(query, doc-range) WAND tasks over the
-    * broadcast-joined segment rows of the query's terms (posting lists
-    * arrive compressed; block-max WAND decodes only the blocks it cannot
-    * skip), merged per query by [[ServedTopK.rank]] — eager, one
-    * bounded collect (see [[Handle.topKTerms]]). Served through the
+  /** Spark entry: per-(query, doc-range) WAND groups over the pruned
+    * segment rows of the query's terms (posting lists arrive
+    * compressed; block-max WAND decodes only the blocks it cannot
+    * skip), merged per query on the driver — eager, one scoring job,
+    * one bounded collect (see [[Handle.topKTerms]]). Served through the
     * process-level handle cache: handle init runs metadata jobs
     * (df-table agg, doc-range quantiles) that must amortize across
     * calls, not recur per query. */
@@ -412,13 +421,13 @@ object Wand {
       * [[expandCapped]]; at most tasks x prefixes x maxExpansions rows
       * reach the driver). */
     def expandPrefixBatch(prefixes: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
-      expandCapped[String](prefixes, col("term").startsWith(_), ServedTopK.byTerm, maxExpansions)
+      ServedTopK.termsOf(prefixExpansions(prefixes, maxExpansions))
 
     /** Every compiled (anchored) pattern's expansion out of ONE metadata
       * job — the wildcard and regexp batches (see [[expandCapped]]; at
       * most tasks x patterns x maxExpansions rows reach the driver). */
     def expandRegexBatch(patterns: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
-      expandCapped[String](patterns, col("term").rlike(_), ServedTopK.byTerm, maxExpansions)
+      ServedTopK.termsOf(regexExpansions(patterns, maxExpansions))
 
     /** Every (term, maxDist) input's expansion out of ONE metadata job,
       * capped and keyed per (term, maxDist) pair: one term expanded at
@@ -431,19 +440,31 @@ object Wand {
           abs(length(col("term")) - length(lit(t))) <= d && levenshtein(col("term"), lit(t)) <= d
         }, ServedTopK.byDfThenTerm, maxExpansions))
 
+    /** [[expandPrefixBatch]] with each expansion's df. */
+    private[query] def prefixExpansions(prefixes: Seq[String],
+                                        maxExpansions: Int): Map[String, Seq[(String, Long)]] =
+      expandCapped[String](prefixes, col("term").startsWith(_), ServedTopK.byTerm, maxExpansions)
+
+    /** [[expandRegexBatch]] with each expansion's df. */
+    private[query] def regexExpansions(patterns: Seq[String],
+                                       maxExpansions: Int): Map[String, Seq[(String, Long)]] =
+      expandCapped[String](patterns, col("term").rlike(_), ServedTopK.byTerm, maxExpansions)
+
     /** The one expansion core: each distinct key's match predicate runs
       * as a literal over the cached (term, df) metadata table — never
-      * posting payloads, no join — and [[ServedTopK.capPerKey]] keeps
-      * the first `cap` matches per key under `ord` in each task, then
-      * merges and caps again on the driver. The collect is bounded by
-      * tasks x keys x cap rows no matter how hot a pattern is against
-      * the dictionary. Keys with no match map to Nil. */
+      * posting payloads, no join — and [[ServedTopK.capPerKeyWithDf]]
+      * keeps the first `cap` matches per key under `ord` in each task,
+      * then merges and caps again on the driver. The collect is bounded
+      * by tasks x keys x cap rows no matter how hot a pattern is against
+      * the dictionary. Each expansion keeps its df, so serving it needs
+      * no df lookup. Keys with no match map to Nil. */
     private def expandCapped[K](keys: Seq[K], matches: K => Column,
-                                ord: Ordering[(String, Long)], cap: Int): Map[K, Seq[String]] = {
+                                ord: Ordering[(String, Long)],
+                                cap: Int): Map[K, Seq[(String, Long)]] = {
       val ks = keys.distinct
       if (ks.isEmpty) return Map.empty
       val key = explode(array(ks.indices.map(i => when(matches(ks(i)), lit(i))): _*))
-      val capped = ServedTopK.capPerKey(
+      val capped = ServedTopK.capPerKeyWithDf(
         dfTable.select(key.as("key"), col("term"), col("df")).filter(col("key").isNotNull)
           .as[(Int, String, Long)], ord, cap)
       ks.indices.map(i => ks(i) -> capped.getOrElse(i, Nil)).toMap
@@ -463,59 +484,78 @@ object Wand {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
 
-    /** As [[topK]], over pre-resolved per-query term lists (the prefix /
-      * fuzzy serving path hands expanded terms straight to the same
-      * exact block-max WAND disjunction).
-      *
-      * EAGER: runs the (qid, doc-range) WAND pass before returning and
-      * returns a local `(qid, rank, doc_id, score)` frame in (qid, rank)
-      * order. The range tasks' local hits rank through
-      * [[ServedTopK.rank]]: a heap of k per (task, qid), ONE collect of
-      * at most tasks x qids x k rows, the merge on the driver — no
-      * ranking shuffle, no range sort. */
+    /** As [[topK]], over pre-resolved per-query term lists; df comes
+      * from one bounded [[dfOf]] lookup, then [[scoreTerms]] serves the
+      * batch in ONE Spark job. EAGER: returns a local
+      * `(qid, rank, doc_id, score)` frame in (qid, rank) order. */
     def topKTerms(queries: Seq[(Int, Seq[String])],
-                  taskPostingsAcc: CollectionAccumulator[java.lang.Long] = null): DataFrame = {
-      val allTerms = queries.flatMap(_._2).distinct
-      if (allTerms.isEmpty)
-        return spark.emptyDataset[Hit].toDF()
-      val q2t = queries.flatMap { case (qid, ts) => ts.distinct.map(qid -> _) }
-        .toDF("qid", "term")
+                  taskPostingsAcc: CollectionAccumulator[java.lang.Long] = null): DataFrame =
+      scoreTerms(queries, dfOf(queries.flatMap(_._2)), taskPostingsAcc)
+
+    /** Serves term expansions (prefix, fuzzy, wildcard, regexp): each
+      * qid's expanded `(term, df)` list scores as an exact block-max WAND
+      * disjunction with the df the dictionary job already read — no df
+      * lookup, one scoring job. */
+    private[query] def topKExpanded(queries: Seq[(Int, Seq[(String, Long)])]): DataFrame =
+      scoreTerms(queries.map { case (qid, es) => qid -> es.map(_._1) },
+        queries.flatMap(_._2).toMap, null)
+
+    /** The served scan: the segment rows of `terms`, pruned to the
+      * columns WAND reads, with the term filter pushed to the parquet
+      * reader (row-group In(term, ...)). The only Catalyst plan a served
+      * term request runs: no join, no exchange. */
+    private[query] def segmentScan(terms: Seq[String]): DataFrame =
+      seg.filter(col("term").isin(terms: _*))
+        .select("term", "salt", "row_seq", "n_postings", "first_doc", "last_doc", "max_u", "blocks")
+
+    /** Exact block-max WAND over a batch in ONE Spark job: the pruned
+      * [[segmentScan]] of the present terms, keyed per (qid, doc-range)
+      * — once for each qid that asked for the row's term and once for
+      * each range its [first_doc, last_doc] span overlaps (metadata
+      * only, no decode) — grouped into min(#groups, defaultParallelism)
+      * partitions (derived, not a knob). Each task runs [[wandScores]]
+      * per group with the request's df map (bounded by the query terms)
+      * riding in the closure, keeps a heap of k per qid
+      * ([[ServedTopK.bestPerQid]]), and the driver collects at most
+      * tasks x qids x k rows and [[ServedTopK.merge]]s them. Terms with
+      * no df are absent; a batch with no present term scans nothing. */
+    private def scoreTerms(queries: Seq[(Int, Seq[String])], df: Map[String, Long],
+                           acc: CollectionAccumulator[java.lang.Long]): DataFrame = {
+      val qidsOf: Map[String, Array[Int]] = queries
+        .flatMap { case (qid, ts) => ts.filter(df.contains).map(_ -> qid) }
+        .groupMap(_._1)(_._2).map { case (t, qs) => t -> qs.distinct.toArray }
+      if (qidsOf.isEmpty) return ServedTopK.noHits(spark)
+      val dfm = qidsOf.map { case (t, _) => t -> df(t) }
+      val groups = qidsOf.values.flatten.toSet.size.toLong * serveRanges
+      val parts = math.min(groups, spark.sparkContext.defaultParallelism.toLong).toInt
       val k = cfg.topK; val k1 = cfg.k1; val b = cfg.b
       val nL = n; val avg = avgdl
       val bounds = rangeBounds
-      val acc = taskPostingsAcc
-      // range id of a doc = number of boundaries <= doc — binary search
-      // (RangeSaltExpr with nsalts = buckets), codegen-safe at ANY
-      // fan-out depth (a chained when()-fold would bloat generated code
-      // past a few dozen ranges)
-      def ridOf(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        if (bounds.isEmpty) lit(0)
-        else graft.index.RangeSaltExpr.saltCol(c, lit(bounds.length + 1), bounds)
-      // per-term df rides along via a broadcast join with the cached
-      // metadata table — no per-batch driver collect round-trip
-      val ranged = seg.filter(col("term").isin(allTerms: _*)) // pushed to parquet row groups
-        .join(broadcast(q2t), "term")
-        .join(broadcast(dfTable.filter(col("term").isin(allTerms: _*))), "term")
-        .withColumn("rid",
-          explode(sequence(ridOf(col("first_doc")), ridOf(col("last_doc")))))
-        .select(col("rid"), col("df"), struct(col("qid"), col("term"), col("salt"),
-          col("row_seq"), col("n_postings"), col("first_doc"), col("last_doc"),
-          col("max_u"), col("blocks")).as("row"))
-        .as[(Int, Long, QSegRow)]
-      val localHits = ranged
-        .groupByKey { case (rid, _, r) => (r.qid, rid) }
-        .flatMapGroups { (key, it) =>
-          val (qid, rid) = key
-          val withDf = it.toArray
-          val rows = withDf.map(_._3)
-          val dfm = withDf.map(t => t._3.term -> t._2).toMap
-          if (acc != null) acc.add(rows.map(_.n_postings).sum)
-          val lo = if (rid == 0) Long.MinValue else bounds(rid - 1)
-          val hi = if (rid >= bounds.length) Long.MaxValue else bounds(rid)
-          wandScores(rows, dfm, nL, avg, k, k1, b, lo, hi)
-            .map { case (s, d) => QHit(qid, d, s) }.iterator
+      val heaps = segmentScan(qidsOf.keys.toSeq).rdd
+        .flatMap { r =>
+          val term = r.getString(0)
+          val first = r.getLong(4); val last = r.getLong(5)
+          // struct fields in BlockRow order, as the segment writer stores them
+          val blocks = r.getSeq[Row](7).map(x => BlockRow(x.getLong(0), x.getInt(1),
+            x.getAs[Array[Byte]](2), x.getAs[Array[Byte]](3), x.getAs[Array[Byte]](4), x.getDouble(5)))
+          for {
+            qid <- qidsOf(term).iterator
+            rid <- (RangeSaltExpr.bucketOf(bounds, first) to RangeSaltExpr.bucketOf(bounds, last)).iterator
+          } yield (qid, rid) -> QSegRow(qid, term, r.getInt(1), r.getInt(2), r.getLong(3),
+            first, last, r.getDouble(6), blocks)
         }
-      ServedTopK.rank(localHits.toDF(), k)
+        .groupByKey(new HashPartitioner(parts))
+        .mapPartitions { groups =>
+          ServedTopK.bestPerQid(groups.flatMap { case ((qid, rid), it) =>
+            val rows = it.toArray
+            if (acc != null) acc.add(rows.map(_.n_postings).sum)
+            val lo = if (rid == 0) Long.MinValue else bounds(rid - 1)
+            val hi = if (rid >= bounds.length) Long.MaxValue else bounds(rid)
+            wandScores(rows, dfm, nL, avg, k, k1, b, lo, hi).iterator.map { case (s, d) => (qid, s, d) }
+          }, k)
+        }
+        .collect()
+      ServedTopK.merge(spark, heaps, k)
     }
 
     def close(): Unit = dfTable.unpersist()

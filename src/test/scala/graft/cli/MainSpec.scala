@@ -100,6 +100,40 @@ class MainSpec extends SparkSuite {
     } finally new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 
+  test("ping output is valid JSON and says why an index is unhealthy") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val cfg = graft.config.EngineConfig.default.copy(shards = 2, buildPartitions = 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ping_json_").toString
+    // a strict parser: NaN or an unescaped quote fails the parse
+    def ping(): com.fasterxml.jackson.databind.JsonNode =
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(Main.pingInfo(spark, dir, cfg)._2)
+    try {
+      val empty = ping()
+      assert(!empty.get("healthy").asBoolean && empty.get("error").isNull, empty.toString)
+      val docs = (0L until 30L).map(i => (i, s"ping probe doc w${i % 5}")).toDF("doc_id", "text")
+      graft.index.SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"), dir, cfg)
+      graft.index.SegmentBuilder.buildAll(spark, dir, cfg)
+      val healthy = ping()
+      assert(healthy.get("healthy").asBoolean && healthy.get("error").isNull, healthy.toString)
+      assert(healthy.get("docs").asLong === 30L && healthy.get("avgdl").isNumber)
+      // stats with no docs: avgdl 0/0 = NaN must not leak into the JSON
+      Seq((0L, Double.NaN)).toDF("n", "avgdl")
+        .write.mode("overwrite").parquet(s"$dir/stats")
+      val nan = ping()
+      assert(!nan.get("healthy").asBoolean && nan.get("avgdl").isNull, nan.toString)
+      // corrupt stats/: the probe reports the failure instead of zeros
+      val stats = new java.io.File(s"$dir/stats")
+      stats.listFiles().foreach(_.delete())
+      java.nio.file.Files.writeString(new java.io.File(stats, "part-00000.parquet").toPath,
+        "not \"parquet\"\n")
+      val corrupt = ping()
+      assert(!corrupt.get("healthy").asBoolean, corrupt.toString)
+      assert(corrupt.get("error").isTextual && corrupt.get("error").asText.contains("Exception"),
+        corrupt.toString)
+    } finally new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
   test("append/compact lifecycle keeps the probe healthy and the index searchable") {
     import org.apache.spark.sql.functions.col
     val cfg = graft.config.EngineConfig.default.copy(

@@ -197,6 +197,19 @@ class DedupSpec extends SparkSuite {
     assert(recall >= 0.9, s"recall $recall")
   }
 
+  test("exact embedding near-dup: a zero vector pairs at NaN cosine, a null id never pairs") {
+    // SQL orders NaN above every number (Spark and DuckDB alike), so the
+    // former `cos >= threshold` filter kept the 0/0 pairs of a zero vector
+    val vecs = Seq(
+      (Some(1L), Seq(1f, 0f)), (Some(2L), Seq(1f, 0f)), (Some(3L), Seq(0f, 0f)),
+      (None, Seq(1f, 0f)), (Some(4L), Seq(0f, 1f))).toDF("vec_id", "embedding")
+    val got = Dedup.embedNearDups(vecs, 0.9).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(got.keySet === Set((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)))
+    assert(got((1L, 2L)) == 1.0)
+    assert(Seq((1L, 3L), (2L, 3L), (3L, 4L)).forall(p => got(p).isNaN), got.toString)
+  }
+
   test("simhash: identical docs collide; near-dups are close; unrelated far") {
     val sim = Dedup.simhashDf(corpus, col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

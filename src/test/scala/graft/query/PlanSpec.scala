@@ -1,11 +1,11 @@
 package graft.query
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
@@ -16,13 +16,26 @@ import graft.{SparkEntry, SparkSuite}
   * the engine scale must survive refactors. */
 class PlanSpec extends SparkSuite {
 
+  /** What a call ran: the executed plan of every query, the number of
+    * Spark jobs, how many of those jobs had a shuffle-map stage, and the
+    * input bytes of the stages that scanned files. */
+  private final class Observed(val plans: Seq[String], val jobs: Int, val shuffleJobs: Int,
+                               val scanBytes: Long)
+
   /** Runs `f` and returns the executed plan of every query it ran, and
     * the number of Spark jobs it started. Served calls are eager and
     * return a local frame, so their guards inspect what the call
     * EXECUTED, not the plan of what it returned. */
   private def executed(f: => Any): (Seq[String], Int) = {
+    val o = observed(f)
+    (o.plans, o.jobs)
+  }
+
+  private def observed(f: => Any): Observed = {
     val plans = new ConcurrentLinkedQueue[String]()
     val jobs = new AtomicInteger()
+    val shuffleJobs = new AtomicInteger()
+    val scanBytes = new AtomicLong()
     val ql = new QueryExecutionListener {
       // an executed adaptive plan prints its initial plan after the
       // final one; keep the final plan, the one that ran
@@ -34,7 +47,17 @@ class PlanSpec extends SparkSuite {
       def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val jl = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        if (js.stageInfos.exists(TestBus.isShuffleMap)) shuffleJobs.incrementAndGet()
+        ()
+      }
+      // a cached-block read also counts as task input, so only stages
+      // whose RDDs include a file scan count as segment reads
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        if (sc.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) {
+          scanBytes.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.bytesRead); ()
+        }
     }
     // events of earlier work must not reach the fresh listeners
     TestBus.drain(spark.sparkContext)
@@ -43,23 +66,25 @@ class PlanSpec extends SparkSuite {
     try {
       f
       TestBus.drain(spark.sparkContext)
-      (plans.asScala.toSeq, jobs.get)
+      new Observed(plans.asScala.toSeq, jobs.get, shuffleJobs.get, scanBytes.get)
     } finally {
       spark.listenerManager.unregister(ql)
       spark.sparkContext.removeSparkListener(jl)
     }
   }
 
-  test("WAND segment scan pushes the term filter into parquet and broadcasts the query side") {
+  test("WAND segment scan pushes the term filter into parquet and plans no join or exchange") {
     val idx = SparkEntry.ensureIndex(spark, "/root/testdata/sf0.001")
-    val (plans, _) = executed(Wand.topK(spark, idx, SparkEntry.FtQuerySet, SparkEntry.IndexCfg))
-    val plan = plans.mkString("\n")
+    val terms = SparkEntry.FtQuerySet
+      .flatMap { case (_, t) => graft.analyze.CodeTokenizer.queryTerms(t) }.distinct
+    val plan = Wand.handleFor(spark, idx, SparkEntry.IndexCfg).segmentScan(terms)
+      .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [In(term"), s"term filter not pushed:\n$plan")
-    assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastHashJoin"),
-      "query-terms side must broadcast")
+    assert(!plan.contains("Join") && !plan.contains("Exchange"),
+      s"the served scan must not join or shuffle:\n$plan")
   }
 
-  test("served term request: no range-partitioning exchange, no window, at most 4 jobs") {
+  test("served term request: at most 2 jobs, scoring in one shuffle job; all-absent: at most 1 job, 0 segment bytes") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("plan_wand_").toString
     try {
@@ -70,16 +95,26 @@ class PlanSpec extends SparkSuite {
       graft.index.SegmentBuilder.buildAll(spark, dir, SparkEntry.IndexCfg)
       val handle = new Wand.Handle(spark, dir, SparkEntry.IndexCfg)
       val request = Seq(3 -> "spark fast query")
+      val absent = Seq(4 -> "zzznope qqqabsent")
       handle.topK(request) // compiles the request's plan shapes
-      val (plans, jobs) = executed(handle.topK(request))
+      handle.topK(absent)
+      var hits = 0
+      val present = observed { hits = handle.topK(request).collect().length }
+      val none = observed(assert(handle.topK(absent).collect().isEmpty))
       handle.close()
-      assert(plans.nonEmpty, "the served request must run its scoring pass inside the call")
-      plans.foreach { plan =>
+      assert(hits > 0)
+      assert(present.shuffleJobs >= 1,
+        "the served request must run its scoring pass inside the call")
+      assert(present.scanBytes > 0, "the scoring pass reads the request's segment rows")
+      present.plans.foreach { plan =>
         assert(!plan.toLowerCase.contains("rangepartitioning"),
           s"a served request must not range-sort its hits:\n$plan")
         assert(!plan.contains("Window"), s"a served request must not window-rank:\n$plan")
       }
-      assert(jobs <= 4, s"a served term request ran $jobs jobs:\n${plans.mkString("\n")}")
+      assert(present.jobs <= 2,
+        s"a served term request ran ${present.jobs} jobs:\n${present.plans.mkString("\n")}")
+      assert(none.jobs <= 1, s"an all-absent request ran ${none.jobs} jobs")
+      assert(none.scanBytes == 0, s"an all-absent request read ${none.scanBytes} segment bytes")
     } finally {
       new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(); ()
     }

@@ -209,4 +209,44 @@ class WandSpec extends SparkSuite {
       assert(served.count(_._1 == 1) === c.topK)
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
+
+  test("mixed batch over ranges: term lists and dictionary-df expansions bit-identical to BM25.topK") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_wand_mixed_").toString
+    try {
+      val variants = Seq("alpha beta gamma", "alpha delta", "gamma delta epsilon alpha",
+        "alpha alpha zeta", "beta gamma", "epsilon zeta eta", "alpha beta delta gamma eta")
+      val docs = (0L until 600L).map(i => (i, variants((i % variants.size).toInt) +
+        (if (i % 40 == 39) " eta" * (1 + (i / 40 % 4).toInt) else "")))
+      val c = cfg.copy(shards = 2, blockSize = 8, saltTargetPostings = 64,
+        serveTargetPostings = 16)
+      val df = docs.toDF("doc_id", "text")
+      SegmentBuilder.ingest(spark, df, col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      val h = Wand.handleFor(spark, dir, c)
+      assert(h.serveRanges > 1, "the batch must fan out over ranges")
+      val alpha = NaiveBM25.topK(docs, "alpha", c.topK + 1, c.k1, c.b)
+      assert(alpha(c.topK - 1).score == alpha(c.topK).score, "fixture must tie at the k-th score")
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq.map(r =>
+        (r.getInt(0), r.getLong(1), r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3))))
+      def declarative(qs: Seq[(Int, Seq[String])]) = rows(BM25.topK(spark, df, col("doc_id"),
+        col("text"), qs.collect { case (q, ts) if ts.nonEmpty => q -> ts.mkString(" ") }, c))
+      // one batch: a present term with a k-th tie, present + absent, a
+      // multi-term query, and a qid whose terms are all absent
+      val lists = Seq(1 -> Seq("alpha"), 2 -> Seq("zeta", "zzznope"),
+        3 -> Seq("gamma", "eta", "delta"), 4 -> Seq("zzznope", "qqqnope"))
+      val served = rows(h.topKTerms(lists))
+      assert(served === declarative(lists))
+      assert(!served.exists(_._1 == 4), "an all-absent qid yields no rows")
+      // expansions score with the df their dictionary job read
+      val prefixes = Seq(5 -> "e", 6 -> "nope", 7 -> "alp")
+      val byPrefix = h.expandPrefixBatch(prefixes.map(_._2), QueryDsl.MaxExpansions)
+      assert(byPrefix("e") === Seq("epsilon", "eta"))
+      assert(rows(QueryDsl.prefixTopK(spark, dir, prefixes, cfg = c)) ===
+        declarative(prefixes.map { case (q, p) => q -> byPrefix(p) }))
+      val fuzzy = Seq(8 -> "delts", 9 -> "qqqqqq")
+      assert(rows(QueryDsl.fuzzyTopK(spark, dir, fuzzy, cfg = c)) === declarative(fuzzy.map {
+        case (q, t) => q -> h.expandFuzzy(t, QueryDsl.autoFuzziness(t), QueryDsl.MaxExpansions) }))
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
+  }
 }
