@@ -131,16 +131,13 @@ object Bench {
     * range is the STREAMED side (32 partitions) with the small docs
     * table broadcast, so corpus generation itself is parallel — a
     * single-partition source file must never serialize the pipeline. */
-  private[graft] def benchDocs(spark: SparkSession, sfDir: String, replicas: Int,
-                               parts: Int = 0): DataFrame =
+  private[graft] def benchDocs(spark: SparkSession, sfDir: String, replicas: Int): DataFrame =
     // >=4 waves per core: the staged ingest runs its phases as BARRIERS
     // (tokenize -> derive), so a coarse 2-wave layout pays the full
     // straggler tail at each barrier on wide executors; finer tasks cut
     // the tail without a shuffle (range is generated, not read).
-    // `parts` > 0 pins the layout (ScaleProbe A/Bs granularity).
     spark.range(0, replicas, 1,
-        if (parts > 0) parts
-        else math.max(32, spark.sparkContext.defaultParallelism * 4)).toDF("rep")
+        math.max(32, spark.sparkContext.defaultParallelism * 4)).toDF("rep")
       .crossJoin(broadcast(spark.read.parquet(s"$sfDir/documents.parquet")))
       .select((col("doc_id") + col("rep") * 10000000L).as("doc_id"), col("text"))
 

@@ -1108,7 +1108,7 @@ object SparkEntry {
           .otherwise(timestamp_seconds(epoch))))
     // sort FIRST on the scan columns, parse ABOVE the sort: a global
     // orderBy range-samples its child, so an expensive projection under
-    // it evaluates twice (TsProbe: 1.65s with the battery under the
+    // it evaluates twice (measured: 1.65s with the battery under the
     // sort, 0.86 above it). Catalyst keeps projections above Sort, and
     // rows/order are unchanged — the battery just runs once.
     e.select(col("event_id"), col("ts")).orderBy("event_id")

@@ -141,16 +141,12 @@ object Main {
         s""""ingested":$ingested,"docs":$n,"appended_docs":${math.max(0L, docmapN - n)},""" +
         s""""avgdl":${jsonNum(avgdl)},""" +
         s""""shards_built":$shardsBuilt,"shards_expected":${cfg.shards},""" +
-        s""""error":${error.fold("null")(jsonStr)}}"""
+        s""""error":${error.fold("null")(graft.JsonUtil.q)}}"""
     (healthy, json)
   }
 
   /** A JSON number; null for NaN and infinities, which JSON cannot hold. */
   private def jsonNum(d: Double): String = if (d.isNaN || d.isInfinite) "null" else d.toString
-
-  /** A quoted, escaped JSON string. */
-  private def jsonStr(s: String): String =
-    "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
 
   /** Dry-run analyzer (§3.3): sample, report token/skew stats and a
     * go/no-go validity gate (>=50% of sampled docs analyzable —

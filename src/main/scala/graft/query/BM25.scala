@@ -15,6 +15,18 @@ import graft.index.Postings
   * Column form and the DuckDB oracle SQL, and per-document scores are
   * summed in ascending term order in all implementations, so equal
   * inputs produce bit-equal doubles everywhere.
+  *
+  * Every Column-path ranking in `graft.query` is built from four steps,
+  * each defined once in this object or in [[Wand]]:
+  *  - weigh: [[weigh]] joins a broadcast (qid, term, …, df) literal onto
+  *    a postings frame and adds the weight `w` ([[matchPipeline]] is
+  *    the corpus match preamble over it);
+  *  - fold: [[foldAscending]] sums per-doc weights in ascending key
+  *    order;
+  *  - span: [[phraseSpans]] decides phrase adjacency over joined
+  *    (keys…, doc_id, off, m, positions) rows;
+  *  - expansion cap: [[Wand.expandCapped]] caps term expansions over
+  *    any (term, df) frame.
   */
 object BM25 {
 
@@ -30,12 +42,59 @@ object BM25 {
              k1: Double = 1.2, b: Double = 0.75): Double =
     idf(df, n) * (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + (b * dl) / avgdl))
 
+  /** Column form of [[idf]]. */
+  private[query] def idfCol(df: Column, n: Long): Column =
+    log(lit(1.0) + (lit(n.toDouble) - df + lit(0.5)) / (df + lit(0.5)))
+
   /** Column form of [[weight]] given tf/dl/df columns and scalar stats. */
   def weightCol(tf: Column, dl: Column, df: Column, n: Long, avgdl: Double,
-                k1: Double, b: Double): Column = {
-    val idfC = log(lit(1.0) + (lit(n.toDouble) - df + lit(0.5)) / (df + lit(0.5)))
-    idfC * (tf * lit(k1 + 1.0)) /
+                k1: Double, b: Double): Column =
+    idfCol(df, n) * (tf * lit(k1 + 1.0)) /
       (tf + lit(k1) * (lit(1.0 - b) + (lit(b) * dl) / lit(avgdl)))
+
+  /** The weigh step: the driver-resolved query literal `q` — one row per
+    * (qid, term, …, df), absent terms already dropped — broadcast-joined
+    * onto a postings frame (term, doc_id, tf, doclen, …), with the
+    * per-(term, doc) weight `w` added. `restrict` narrows the joined
+    * rows before they are weighed (a window or candidate semi-join, a
+    * source-doc filter), so only surviving rows pay for a weight. */
+  private[query] def weigh(post: DataFrame, q: DataFrame, n: Long, avgdl: Double,
+                           cfg: EngineConfig,
+                           restrict: DataFrame => DataFrame = identity): DataFrame =
+    restrict(post.join(broadcast(q), "term"))
+      .withColumn("w", weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
+
+  /** The fold step: the sum of the second field of the group's `entry`
+    * structs, taken in ascending order of the first field (the term, for
+    * a score) — the deterministic association every score shares. Null
+    * entries (a `when` without `otherwise`) drop out of the fold. */
+  private[query] def foldAscending(entry: Column): Column =
+    SumStructFieldExpr.sumField(sort_array(collect_list(entry)), 1, 2)
+
+  /** The (qid, term, n_terms, df) literal of analyzed match queries;
+    * terms absent from `dfMap` drop, exactly like an inner join with a
+    * docFreq table. */
+  private[query] def termTable(spark: SparkSession, analyzed: Seq[(Int, Seq[String])],
+                               dfMap: Map[String, Long]): DataFrame = {
+    import spark.implicits._
+    analyzed.flatMap { case (qid, ts) =>
+      ts.flatMap(t => dfMap.get(t).map(df => (qid, t, ts.size, df)))
+    }.toDF("qid", "term", "n_terms", "df")
+  }
+
+  /** The corpus match preamble: ONE bounded stats job ([[statsAndDf]],
+    * skipped when `statsKnown` carries it) and the single corpus
+    * postings pass, weighed against the queries' [[termTable]]. Output:
+    * the weighted (term, doc_id, …, qid, n_terms, df, w) rows that
+    * [[scored]] folds. */
+  private[query] def matchPipeline(docs: DataFrame, idCol: Column, contentCol: Column,
+                                   analyzed: Seq[(Int, Seq[String])], cfg: EngineConfig,
+                                   statsKnown: Option[(Long, Double, Map[String, Long])] = None)
+      : DataFrame = {
+    val (n, avgdl, dfMap) = statsKnown.getOrElse(
+      statsAndDf(docs, idCol, contentCol, analyzed.flatMap(_._2).distinct))
+    weigh(Postings.build(docs, idCol, contentCol), termTable(docs.sparkSession, analyzed, dfMap),
+      n, avgdl, cfg)
   }
 
   /** Term-count threshold above which [[statsAndDf]] splits into two
@@ -131,19 +190,10 @@ object BM25 {
     }
   }
 
-  /** Empty ranked result with the [[Wand.Hit]] schema — shared early
-    * return for term-less query batches. */
-  private[query] def emptyHits(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[Wand.Hit].toDF().orderBy("qid", "rank")
-  }
-
   /** Top-k BM25 per query over the uncompressed postings — the
-    * declarative scoring path: one bounded stats job ([[statsAndDf]]),
+    * declarative scoring path: [[matchPipeline]] (one bounded stats job,
     * then ONE corpus pass joining the postings against the broadcast
-    * (qid, term, df) literal table and one shuffle for the per-doc sum
-    * (formerly three corpus tokenizes and a full-vocabulary docFreq
-    * shuffle per call — guide §1.2 step 1).
+    * (qid, term, df) literal table) and one shuffle for the per-doc sum.
     *
     * Output: (qid int, rank long, doc_id long, score double) where score
     * is summed in ascending term order (deterministic doubles) and rank
@@ -153,22 +203,10 @@ object BM25 {
            queries: Seq[(Int, String)], cfg: EngineConfig = EngineConfig.default,
            conjunctive: Boolean = false,
            statsKnown: Option[(Long, Double, Map[String, Long])] = None): DataFrame = {
-    import spark.implicits._
     val analyzed = queries.map { case (qid, text) => qid -> CodeTokenizer.queryTerms(text) }
-    val terms = analyzed.flatMap(_._2).distinct
-    if (terms.isEmpty) return emptyHits(spark)
-    val (n, avgdl, dfMap) = statsKnown.getOrElse(
-      statsAndDf(docs, idCol, contentCol, terms))
-    // (qid, term, n_terms, df): driver-resolved literal — broadcast side
-    // of the postings join (absent terms drop here, exactly like the
-    // former inner join with the docFreq table)
-    val qdf = analyzed.flatMap { case (qid, ts) =>
-      ts.flatMap(t => dfMap.get(t).map(df => (qid, t, ts.size, df)))
-    }.toDF("qid", "term", "n_terms", "df")
-    val post = Postings.build(docs, idCol, contentCol)
-    val weighted = post.join(broadcast(qdf), "term")
-      .withColumn("w", weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
-    scoreAndRank(weighted, cfg.topK, conjunctive)
+    if (analyzed.forall(_._2.isEmpty)) return ServedTopK.noHits(spark)
+    scoreAndRank(matchPipeline(docs, idCol, contentCol, analyzed, cfg, statsKnown),
+      cfg.topK, conjunctive)
   }
 
   /** Phrase top-k (ES match_phrase semantics at slop 0: the analyzed
@@ -188,22 +226,34 @@ object BM25 {
     * corpus rescan and never a source-text recheck of candidates (the
     * round-2 design rescanned candidate text once per distinct phrase
     * length; at 100 TB candidate text is the thing you cannot re-read).
-    * The <= queries x topK result materializes eagerly so the cache can
-    * be released before returning. */
+    *
+    * Shape (one aggregation, not a job chain): per-term df is collected
+    * to the driver first (bounded by the QUERY's distinct terms — tiny
+    * by construction), then [[phraseScoredOver]] computes the candidate
+    * decision and the BM25 score in ONE aggregation. The r3 design
+    * chained candidates agg -> df agg -> semi-join -> score agg ->
+    * checkpoint; those four extra fixed-cost jobs were the latency, not
+    * the corpus work. The <= queries x topK result materializes eagerly
+    * so the cache can be released before returning. */
   def phraseTopK(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                  phrases: Seq[(Int, String)],
                  cfg: EngineConfig = EngineConfig.default,
                  slop: Int = 0): DataFrame = {
-    import spark.implicits._
-    import graft.analyze.CodeTokenizer
     val analyzed = phrases
       .map { case (qid, text) => (qid, CodeTokenizer.tokenize(text).toSeq) }
       .filter(_._2.nonEmpty)
-    if (analyzed.isEmpty)
-      return spark.emptyDataset[Wand.Hit].toDF().orderBy("qid", "rank")
+    if (analyzed.isEmpty) return ServedTopK.noHits(spark)
     val (n, avgdl) = Postings.corpusStats(Postings.doclens(docs, idCol, contentCol))
-    phraseTopKOver(Postings.buildPositional(docs, idCol, contentCol),
-      n, avgdl, analyzed, cfg, slop, persistInput = true)
+    val posPost = Postings.buildPositional(docs, idCol, contentCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // df restricted to the QUERY's terms before the collect — an
+      // unfiltered groupBy-collect over the full build would pull the
+      // whole corpus vocabulary onto the driver
+      val dfMap = postingsDf(posPost.filter(col("term").isInCollection(analyzed.flatMap(_._2).distinct)))
+      rankTopK(phraseScoredOver(posPost, n, avgdl, analyzed, cfg, slop, dfMap), cfg.topK)
+        .localCheckpoint(eager = true)
+    } finally { posPost.unpersist(); () }
   }
 
   /** Phrase top-k served from a PERSISTED index ([[graft.index.SegmentBuilder]]
@@ -221,13 +271,12 @@ object BM25 {
                         phrases: Seq[(Int, String)],
                         cfg: EngineConfig = EngineConfig.default,
                         slop: Int = 0): DataFrame = {
-    import spark.implicits._
     // empty-input early return BEFORE touching the handle: an all-empty
     // batch (stopwords/punctuation only) must stay a zero-I/O no-op —
     // handle construction reads the stats table, which on a non-index
     // path would turn "nothing to do" into an exception
     if (phrases.forall { case (_, t) => CodeTokenizer.tokenize(t).isEmpty })
-      return spark.emptyDataset[Wand.Hit].toDF().orderBy("qid", "rank")
+      return ServedTopK.noHits(spark)
     // served through the process-level handle cache (the match_phrase
     // twin of Wand.handleFor): the one-shot path must not re-read stats
     // and re-derive per-term df on every call — warm calls over known
@@ -236,29 +285,16 @@ object BM25 {
     phraseHandleFor(spark, indexDir, cfg).topK(phrases, slop)
   }
 
-  /** Process-level [[PhraseHandle]] cache. Freshness is a driver-side
-    * file-listing signature over what phrase serving reads — postings +
-    * stats: an append/compaction/restat lands new files and swaps the
-    * handle (dropping its per-term df cache, which would otherwise go
-    * stale), an untouched index reuses it with zero metadata jobs.
-    * ONE handle per indexDir (config in the freshness check, not the
-    * key — same bounded-cache rule as [[Wand.handleFor]]). */
-  private val phraseHandleCache =
-    scala.collection.concurrent.TrieMap[String, (SparkSession, EngineConfig, String, PhraseHandle)]()
-
+  /** The process-level [[PhraseHandle]] of an index, from the handle
+    * memo [[Wand.memoHandle]], signed over what phrase serving reads —
+    * postings + stats: an append/compaction/restat lands new files and
+    * swaps the handle (dropping its per-term df cache, which would
+    * otherwise go stale), an untouched index reuses it with zero
+    * metadata jobs. */
   def phraseHandleFor(spark: SparkSession, indexDir: String,
-                      cfg: EngineConfig = EngineConfig.default): PhraseHandle = synchronized {
-    val sig = graft.index.SegmentBuilder.dirSig(s"$indexDir/postings") + "|" +
-      graft.index.SegmentBuilder.dirSig(s"$indexDir/stats")
-    phraseHandleCache.get(indexDir) match {
-      case Some((s, c, cachedSig, h))
-          if (s eq spark) && !s.sparkContext.isStopped && c == cfg && cachedSig == sig => h
-      case _ =>
-        val h = new PhraseHandle(spark, indexDir, cfg)
-        phraseHandleCache.put(indexDir, (spark, cfg, sig, h))
-        h
-    }
-  }
+                      cfg: EngineConfig = EngineConfig.default): PhraseHandle =
+    Wand.memoHandle(spark, indexDir, cfg, Seq("postings", "stats"))(
+      new PhraseHandle(spark, indexDir, cfg))
 
   /** The shard a term's postings land in — the DRIVER-SIDE twin of the
     * ingest writer's `pmod(xxhash64(term), shards)` (same XXH64 core,
@@ -310,51 +346,17 @@ object BM25 {
       .select("term", "doc_id", "doclen", "tf", "positions")
   }
 
-  /** Shared phrase core over a positional postings frame (full-corpus
-    * build in [[phraseTopK]], which persists it; pruned index read in
-    * [[phraseTopKIndexed]], which doesn't — rescanning a term-pruned
-    * parquet read is cheaper than block-manager churn per batch).
-    *
-    * Serving shape (one aggregation, not a job chain): per-term df is
-    * collected to the driver first (bounded by the QUERY's distinct
-    * terms — tiny by construction), then ONE pass joins the broadcast
-    * (qid, term, off, df) table against the positional postings and a
-    * single groupBy(qid, doc) computes the candidate decision (all
-    * offsets present + [[OrderedSpanMatchExpr]] over the gathered
-    * position lists) AND the BM25 score (per-distinct-term weights
-    * folded in ascending term order — bit-equal to the declarative
-    * path) together. The r3 design chained candidates agg -> df agg ->
-    * semi-join -> score agg -> checkpoint; at serving time those four
-    * extra fixed-cost jobs were the latency, not the corpus work. */
-  private def phraseTopKOver(posPostIn: DataFrame, n: Long, avgdl: Double,
-                             analyzed: Seq[(Int, Seq[String])],
-                             cfg: EngineConfig, slop: Int,
-                             persistInput: Boolean = false): DataFrame = {
-    val spark = posPostIn.sparkSession
-    import spark.implicits._
-    val posPost =
-      if (persistInput)
-        posPostIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else posPostIn
-    try {
-      // df restricted to the QUERY's terms before the collect — the
-      // full-corpus path ([[phraseTopK]]) passes unpruned positional
-      // postings, and an unfiltered groupBy-collect there would pull
-      // the whole corpus vocabulary onto the driver
-      val qterms = analyzed.flatMap(_._2).distinct
-      val dfMap = posPost.filter(col("term").isInCollection(qterms))
-        .groupBy("term").agg(count(lit(1)).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val ranked = rankTopK(phraseScoredOver(posPost, n, avgdl, analyzed, cfg, slop, dfMap),
-        cfg.topK)
-      if (persistInput) ranked.localCheckpoint(eager = true) else ranked
-    } finally { if (persistInput) { posPost.unpersist() }; () }
-  }
+  /** Per-term df of a term-pruned postings frame (one row per
+    * (term, doc)), collected: bounded by the terms it was pruned to. */
+  private def postingsDf(post: DataFrame): Map[String, Long] =
+    post.groupBy("term").agg(count(lit(1)).as("df"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** The one-aggregation phrase pass given resolved per-term df (see
-    * [[phraseTopKOver]] for the shape rationale): the unranked
+    * [[phraseTopK]] for the shape rationale): the unranked
     * (qid, doc_id, score) phrase matches, ranked lazily by the corpus
-    * path and eagerly by [[PhraseHandle]]. */
+    * path and eagerly by [[PhraseHandle]]. The score fold rides the
+    * span step's aggregation. */
   private def phraseScoredOver(posPost: DataFrame, n: Long, avgdl: Double,
                                analyzed: Seq[(Int, Seq[String])],
                                cfg: EngineConfig, slop: Int,
@@ -370,18 +372,8 @@ object BM25 {
         (qid, t, off, ts.length, seen.add(t), dfMap.getOrElse(t, 0L))
       }
     }.toDF("qid", "term", "off", "m", "score_me", "df")
-    posPost.join(broadcast(q), "term")
-      .withColumn("w",
-        weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
-      .groupBy("qid", "doc_id")
-      .agg(count(lit(1)).as("got"), first(col("m")).as("m"),
-        sort_array(collect_list(struct(col("off"), col("positions")))).as("lists"),
-        SumStructFieldExpr.sumField(
-          sort_array(collect_list(when(col("score_me"),
-            struct(col("term"), col("w"))))), 1, 2).as("score"))
-      .filter(col("got") === col("m"))
-      .filter(OrderedSpanMatchExpr.matches(
-        transform(col("lists"), x => x.getField("positions")), lit(slop)))
+    phraseSpans(weigh(posPost, q, n, avgdl, cfg), Seq("qid"), slop,
+      foldAscending(when(col("score_me"), struct(col("term"), col("w")))).as("score"))
   }
 
   /** Reusable phrase-serving handle — the match_phrase twin of
@@ -406,7 +398,6 @@ object BM25 {
     * otherwise lag the appended docs). */
   final class PhraseHandle(spark: SparkSession, indexDir: String,
                            cfg: EngineConfig = EngineConfig.default) {
-    import spark.implicits._
     private val (n, avgdl) = graft.index.SegmentBuilder.readStats(spark, indexDir)
     private val dfCache = scala.collection.concurrent.TrieMap[String, Long]()
     /** The postings store, opened once per handle (not per batch). */
@@ -416,13 +407,11 @@ object BM25 {
       val analyzed = phrases
         .map { case (qid, text) => (qid, CodeTokenizer.tokenize(text).toSeq) }
         .filter(_._2.nonEmpty)
-      if (analyzed.isEmpty) return spark.emptyDataset[Wand.Hit].toDF()
+      if (analyzed.isEmpty) return ServedTopK.noHits(spark)
       val terms = analyzed.flatMap(_._2).distinct
       val missing = terms.filterNot(dfCache.contains)
       if (missing.nonEmpty) {
-        val got = prunePositional(postings, indexDir, missing)
-          .groupBy("term").agg(count(lit(1)).as("df"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val got = postingsDf(prunePositional(postings, indexDir, missing))
         missing.foreach(t => dfCache.put(t, got.getOrElse(t, 0L)))
       }
       ServedTopK.rank(phraseScoredOver(prunePositional(postings, indexDir, terms),
@@ -444,27 +433,40 @@ object BM25 {
       analyzed, slop)
 
   /** As [[phraseCandidates]], over an already-built positional postings
-    * frame (lets [[phraseTopK]] share one persisted build between the
-    * candidate and scoring branches). */
+    * frame: the [[phraseOffsets]] literal broadcast onto it, then the
+    * span step. */
   def phraseCandidatesFrom(posPost: DataFrame,
                            analyzed: Seq[(Int, Seq[String])],
-                           slop: Int = 0): DataFrame = {
-    val spark = posPost.sparkSession
+                           slop: Int = 0): DataFrame =
+    phraseSpans(posPost.join(broadcast(phraseOffsets(posPost.sparkSession, analyzed)), "term"),
+      Seq("qid"), slop).select(col("qid"), col("doc_id"))
+
+  /** The (qid, term, off, m) literal of analyzed phrases: one row per
+    * phrase OFFSET (a repeated term gets one row per occurrence), m the
+    * phrase length. */
+  private[query] def phraseOffsets(spark: SparkSession,
+                                   analyzed: Seq[(Int, Seq[String])]): DataFrame = {
     import spark.implicits._
-    val q = analyzed.flatMap { case (qid, ts) =>
+    analyzed.flatMap { case (qid, ts) =>
       ts.zipWithIndex.map { case (t, off) => (qid, t, off, ts.length) }
     }.toDF("qid", "term", "off", "m")
-    posPost.join(broadcast(q), "term")
-      .groupBy("qid", "doc_id")
-      .agg(count(lit(1)).as("got"), first(col("m")).as("m"),
-        sort_array(collect_list(struct(col("off"), col("positions")))).as("lists"))
-      // every phrase offset must be present (a doc missing any term
-      // cannot match), then the ordered-span sweep decides
+  }
+
+  /** The span step — the one phrase decision: joined rows
+    * (keys…, doc_id, off, m, positions), one per (phrase offset, doc),
+    * group per (keys…, doc_id); a group matches when every offset is
+    * present (a doc missing any term cannot match) and
+    * [[OrderedSpanMatchExpr]] accepts the offset-ordered position lists
+    * at `slop`. `extra` aggregates (a score fold, a role) ride the same
+    * aggregation. */
+  private[query] def phraseSpans(joined: DataFrame, keys: Seq[String], slop: Int,
+                                 extra: Column*): DataFrame =
+    joined.groupBy((keys :+ "doc_id").map(col): _*)
+      .agg(count(lit(1)).as("got"), first(col("m")).as("m") +:
+        sort_array(collect_list(struct(col("off"), col("positions")))).as("lists") +: extra: _*)
       .filter(col("got") === col("m"))
       .filter(OrderedSpanMatchExpr.matches(
         transform(col("lists"), x => x.getField("positions")), lit(slop)))
-      .select(col("qid"), col("doc_id"))
-  }
 
   /** Sum per-(qid, doc) weights in ascending term order, rank, take k.
     * Input needs columns (qid, doc_id, term, w) and, when `conjunctive`,
@@ -485,8 +487,7 @@ object BM25 {
     val grouped = weighted
       .groupBy("qid", "doc_id")
       .agg(
-        SumStructFieldExpr.sumField(
-          sort_array(collect_list(struct(col("term"), col("w")))), 1, 2).as("score"),
+        foldAscending(struct(col("term"), col("w"))).as("score"),
         count(lit(1)).as("matched"),
         first(col("n_terms"), ignoreNulls = true).as("n_terms"))
     if (conjunctive) grouped.filter(col("matched") === col("n_terms"))

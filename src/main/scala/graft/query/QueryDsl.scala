@@ -16,11 +16,13 @@ import graft.index.Postings
   * serving path as match/match_phrase.
   *
   * Rank-identity discipline is inherited from [[BM25]]: every scoring
-  * path folds per-term weights in ascending term order, so engine and
-  * DuckDB oracle produce bit-equal doubles. Where a clause does not
-  * score (bool filter/must_not), the oracle adds +0.0 in place of the
-  * skipped weight — adding 0.0 to a finite double is exact, so the two
-  * fold shapes stay bit-equal.
+  * path here is composed from the shared steps — [[BM25.weigh]] (or its
+  * corpus preamble [[BM25.matchPipeline]]), [[BM25.foldAscending]],
+  * [[BM25.phraseSpans]] and [[Wand.expandCapped]] — and writes none of
+  * them itself, so engine and DuckDB oracle produce bit-equal doubles.
+  * Where a clause does not score (bool filter/must_not), the oracle adds
+  * +0.0 in place of the skipped weight — adding 0.0 to a finite double
+  * is exact, so the two fold shapes stay bit-equal.
   */
 object QueryDsl {
 
@@ -97,51 +99,49 @@ object QueryDsl {
     val q = queries.flatMap { bq =>
       bq.analyzed.map { case (t, role) => (bq.qid, t, role, bq.nMust, bq.nFilter, bq.msm) }
     }
-    BM25.rankTopK(boolScored(spark, docs, idCol, contentCol, q, cfg), cfg.topK)
+    BM25.rankTopK(boolScored(docs, idCol, contentCol, q, cfg), cfg.topK)
   }
 
   /** The bool role algebra WITHOUT the final ranking: one bounded stats
-    * job ([[BM25.statsAndDf]]) + one postings pass + one aggregation
-    * producing the qualifying (qid, doc_id, score) set. `roleRows`
-    * carries (qid, term, role, n_must, n_filter, n_msm) — driver rows,
-    * so callers (query_string) can feed data-dependent rows such as
-    * prefix expansions resolved from the term dictionary; df for
-    * expansions resolved elsewhere can be supplied via `dfKnown` to
-    * skip the stats job's term probing for them. */
-  private[query] def boolScored(spark: SparkSession, docs: DataFrame, idCol: Column,
+    * job ([[BM25.statsAndDf]]) + [[roleScored]] over the corpus
+    * postings. `roleRows` carries (qid, term, role, n_must, n_filter,
+    * n_msm) — driver rows, so callers (query_string) can feed
+    * data-dependent rows such as prefix expansions resolved from the
+    * term dictionary; df for expansions resolved elsewhere can be
+    * supplied via `statsKnown` to skip the stats job. */
+  private[query] def boolScored(docs: DataFrame, idCol: Column,
                                 contentCol: Column,
                                 roleRows: Seq[(Int, String, String, Int, Int, Int)],
                                 cfg: EngineConfig,
                                 statsKnown: Option[(Long, Double, Map[String, Long])] = None)
       : DataFrame = {
-    import spark.implicits._
     val (n, avgdl, dfMap) = statsKnown.getOrElse(
       BM25.statsAndDf(docs, idCol, contentCol, roleRows.map(_._2).distinct))
-    // absent terms drop here, exactly like the former inner join with
-    // the full docFreq table
+    roleScored(Postings.build(docs, idCol, contentCol), roleRows, n, avgdl, dfMap, cfg)
+  }
+
+  /** The single role-algebra aggregation: role rows (absent terms drop
+    * here, exactly like an inner join with the full docFreq table)
+    * weighed onto a postings frame — the corpus postings for bool and
+    * query_string, the pruned segment postings for indexed
+    * query_string — and ONE groupBy(qid, doc) computing the score fold
+    * and the per-role match counters the candidate decision needs. */
+  private def roleScored(post: DataFrame, roleRows: Seq[(Int, String, String, Int, Int, Int)],
+                         n: Long, avgdl: Double, dfMap: Map[String, Long],
+                         cfg: EngineConfig): DataFrame = {
+    val spark = post.sparkSession
+    import spark.implicits._
     val q = roleRows.flatMap { case (qid, t, role, nm, nf, msm) =>
       dfMap.get(t).map(df => (qid, t, role, nm, nf, msm, df))
     }.toDF("qid", "term", "role", "n_must", "n_filter", "n_msm", "df")
-    val post = Postings.build(docs, idCol, contentCol)
-    val weighted = post.join(broadcast(q), "term")
-      .withColumn("w",
-        BM25.weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
-    boolAggregate(weighted)
-  }
-
-  /** The single role-algebra aggregation over weighted role rows —
-    * shared by the corpus bool/query_string paths and the indexed
-    * query_string path (which feeds it pruned segment postings). */
-  private[query] def boolAggregate(weighted: DataFrame): DataFrame = {
-    val grouped = weighted
+    BM25.weigh(post, q, n, avgdl, cfg)
       .groupBy("qid", "doc_id")
       .agg(
         // collect_list drops the when()'s nulls: only must/should rows
         // enter the fold, ascending term order — the oracle's
         // CASE-zero form is bit-equal (+0.0 is exact)
-        SumStructFieldExpr.sumField(
-          sort_array(collect_list(when(col("role").isin("must", "should"),
-            struct(col("term"), col("w"))))), 1, 2).as("score"),
+        BM25.foldAscending(when(col("role").isin("must", "should"),
+          struct(col("term"), col("w")))).as("score"),
         count(when(col("role") === "must", 1)).as("must_got"),
         count(when(col("role") === "filter", 1)).as("filter_got"),
         count(when(col("role") === "must_not", 1)).as("not_got"),
@@ -153,7 +153,7 @@ object QueryDsl {
         col("filter_got") === col("n_filter") &&
         col("not_got") === 0 &&
         col("should_got") >= col("n_msm"))
-    grouped.select("qid", "doc_id", "score")
+      .select("qid", "doc_id", "score")
   }
 
   /** Prefix top-k served from the segment index: each query's prefix
@@ -238,8 +238,8 @@ object QueryDsl {
                       statsKnown: Option[(Long, Double, Map[String, Long])] = None)
       : DataFrame = {
     import spark.implicits._
-    val (weighted, _, _, _) =
-      matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg, statsKnown)
+    val weighted =
+      BM25.matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg, statsKnown)
     val cur = cursors.toDF("qid", "c_score", "c_doc")
     val after = BM25.scored(weighted).join(broadcast(cur), "qid")
       .filter(col("score") < col("c_score") ||
@@ -295,29 +295,12 @@ object QueryDsl {
     val stats = BM25.statsAndDfMulti(docs, idCol, fields,
       analyzed.flatMap(_._2).distinct)
     val perField = fields.zip(bs).zip(stats).map { case ((fcol, boost), st) =>
-      BM25.scored(weightedForField(docs, idCol, fcol, analyzed, st, cfg))
+      BM25.scored(BM25.matchPipeline(docs, idCol, fcol, analyzed, cfg, Some(st)))
         .select(col("qid"), col("doc_id"), (col("score") * lit(boost)).as("score"))
     }
     val best = perField.reduce(_ unionByName _)
       .groupBy("qid", "doc_id").agg(max(col("score")).as("score"))
     BM25.rankTopK(best, cfg.topK)
-  }
-
-  /** One field's weighted postings rows for [[multiMatchTopK]] /
-    * [[disMaxTopK]], given that field's pre-collected stats. */
-  private def weightedForField(docs: DataFrame, idCol: Column, fcol: Column,
-                               analyzed: Seq[(Int, Seq[String])],
-                               stats: (Long, Double, Map[String, Long]),
-                               cfg: EngineConfig): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val (n, avgdl, dfMap) = stats
-    val qdf = analyzed.flatMap { case (qid, ts) =>
-      ts.flatMap(t => dfMap.get(t).map(df => (qid, t, ts.size, df)))
-    }.toDF("qid", "term", "n_terms", "df")
-    Postings.build(docs, idCol, fcol).join(broadcast(qdf), "term")
-      .withColumn("w",
-        BM25.weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
   }
 
   /** ES histogram aggregation over a query's matching docs (match
@@ -442,8 +425,7 @@ object QueryDsl {
   def filteredTopK(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                    queries: Seq[(Int, String)], predicate: Column,
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val (weighted, _, _, _) =
-      matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg)
+    val weighted = BM25.matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg)
     // filter context never changes scores (BM25 stays corpus-wide), so
     // the predicate restricts candidates with a semi-join of the
     // column-pruned, filter-pushed docs scan onto the weighted rows
@@ -677,8 +659,7 @@ object QueryDsl {
       val exps = expMap(ts.last)
       if (exps.isEmpty) None else Some((qid, ts.init, exps))
     }
-    if (analyzed.isEmpty)
-      return spark.emptyDataset[Wand.Hit].toDF().orderBy("qid", "rank")
+    if (analyzed.isEmpty) return ServedTopK.noHits(spark)
     val (n, avgdl) = graft.index.SegmentBuilder.readStats(spark, indexDir)
     val allTerms = analyzed.flatMap { case (_, ex, es) => ex ++ es }.distinct
     val posPost = BM25.prunedPositionalPostings(spark, indexDir, allTerms)
@@ -691,18 +672,12 @@ object QueryDsl {
     }.toDF("qid", "term", "off", "m")
     // stage 1: merge position lists per (query, doc, offset) — several
     // expansion terms may occupy the last offset; exact offsets are
-    // single-term so the merge is the identity there
+    // single-term so the merge is the identity there — then the span step
     val stage1 = posPost.join(broadcast(q), "term")
       .groupBy("qid", "doc_id", "off")
-      .agg(sort_array(flatten(collect_list(col("positions")))).as("pos"),
+      .agg(sort_array(flatten(collect_list(col("positions")))).as("positions"),
         first(col("m")).as("m"))
-    val cand = stage1.groupBy("qid", "doc_id")
-      .agg(count(lit(1)).as("got"), first(col("m")).as("m"),
-        sort_array(collect_list(struct(col("off"), col("pos")))).as("lists"))
-      .filter(col("got") === col("m"))
-      .filter(OrderedSpanMatchExpr.matches(
-        transform(col("lists"), x => x.getField("pos")), lit(slop)))
-      .select("qid", "doc_id")
+    val cand = BM25.phraseSpans(stage1, Seq("qid"), slop).select("qid", "doc_id")
     val exactTerms = analyzed.flatMap(_._2).distinct
     // per-term df from the handle's CACHED (term, df) metadata table —
     // same values the pruned-read aggregation produced (sum of
@@ -712,43 +687,11 @@ object QueryDsl {
     val sq = analyzed.flatMap { case (qid, exact, _) =>
       exact.distinct.map(t => (qid, t, dfMap.getOrElse(t, 0L)))
     }.toDF("qid", "term", "df")
-    val weighted = posPost.join(broadcast(sq), "term")
-      .join(cand, Seq("qid", "doc_id"), "left_semi")
-      .withColumn("w",
-        BM25.weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
-    val grouped = weighted.groupBy("qid", "doc_id")
-      .agg(SumStructFieldExpr.sumField(
-        sort_array(collect_list(struct(col("term"), col("w")))), 1, 2).as("score"))
+    val grouped = BM25.weigh(posPost, sq, n, avgdl, cfg,
+        _.join(cand, Seq("qid", "doc_id"), "left_semi"))
+      .groupBy("qid", "doc_id")
+      .agg(BM25.foldAscending(struct(col("term"), col("w"))).as("score"))
     BM25.rankTopK(grouped, cfg.topK)
-  }
-
-  /** Shared match-scoring preamble: ONE bounded stats job
-    * ([[BM25.statsAndDf]] — n/avgdl plus the query terms' df, never a
-    * full-vocabulary aggregation), then the single corpus postings pass
-    * joined against the broadcast driver-resolved (qid, term, n_terms,
-    * df) table, weighted with the shared BM25 expression. Returns
-    * (weighted, post, n, avgdl) so a caller can reuse the postings plan
-    * and the already-collected stats without a second stats job.
-    * (Formerly three corpus tokenizes per call: a doclens pass for the
-    * stats plus the postings subtree evaluated under both the docFreq
-    * aggregation and the scoring join — guide §1.2 step 1.) */
-  private def matchPipeline(docs: DataFrame, idCol: Column, contentCol: Column,
-                            analyzed: Seq[(Int, Seq[String])], cfg: EngineConfig,
-                            statsKnown: Option[(Long, Double, Map[String, Long])] = None)
-      : (DataFrame, DataFrame, Long, Double) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val terms = analyzed.flatMap(_._2).distinct
-    val (n, avgdl, dfMap) = statsKnown.getOrElse(
-      BM25.statsAndDf(docs, idCol, contentCol, terms))
-    val qdf = analyzed.flatMap { case (qid, ts) =>
-      ts.flatMap(t => dfMap.get(t).map(df => (qid, t, ts.size, df)))
-    }.toDF("qid", "term", "n_terms", "df")
-    val post = Postings.build(docs, idCol, contentCol)
-    val weighted = post.join(broadcast(qdf), "term")
-      .withColumn("w",
-        BM25.weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
-    (weighted, post, n, avgdl)
   }
 
   /** Driver-side analysis shared by the match-family operators. */
@@ -875,53 +818,36 @@ object QueryDsl {
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     val statsF = Future(BM25.statsAndDf(docs, idCol, contentCol, literalTerms))
-    // prefix expansions: one term-pruned postings aggregation for ALL
-    // prefix clauses together (bounded collect of candidate terms +
-    // df — never a full-vocabulary shuffle), expanded per clause on the
-    // driver: lexicographic-first maxExpansions, exactly the former
-    // per-clause window
+    // prefix expansions: the shared expansion cap ([[Wand.expandCapped]]:
+    // lexicographic-first maxExpansions per prefix, collect bounded by
+    // tasks x prefixes x maxExpansions) over ONE term-pruned postings df
+    // aggregation for ALL prefix clauses together — never a
+    // full-vocabulary shuffle
     val expF = Future {
-      if (prefixClauses.isEmpty) (Nil, Map.empty[String, Long])
-      else {
-        val spark2 = docs.sparkSession
-        import spark2.implicits._
-        // per-prefix lexicographic cap applied DISTRIBUTED-side (window
-        // per prefix), so the collect is bounded by prefixes x
-        // maxExpansions however hot a prefix is against the vocabulary
-        val prefixes = prefixClauses.map(_._2).distinct
-        val pdf = prefixes.toDF("prefix")
-        val cond = prefixes.map(p => col("term").startsWith(p)).reduce(_ || _)
-        val capped = Postings.build(docs, idCol, contentCol)
-          .filter(cond) // term-pruned BEFORE the df aggregation
-          .groupBy("term").agg(count(lit(1)).as("df"))
-          .join(broadcast(pdf), col("term").startsWith(col("prefix")))
-          .withColumn("r", row_number().over(
-            Window.partitionBy("prefix").orderBy("term")))
-          .filter(col("r") <= maxExpansions)
-          .select("prefix", "term", "df").collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        val byPrefix = capped.groupBy(_._1)
-        val rows = prefixClauses.flatMap { case (qid, p, role) =>
-          byPrefix.getOrElse(p, Array.empty[(String, String, Long)])
-            .map(_._2).sorted.map(t => (qid, t, role))
-        }
-        (rows, capped.map { case (_, t, df) => t -> df }.toMap)
-      }
+      val prefixes = prefixClauses.map(_._2).distinct
+      if (prefixes.isEmpty) Map.empty[String, Seq[(String, Long)]]
+      else Wand.expandCapped[String](Postings.build(docs, idCol, contentCol)
+          .filter(prefixes.map(p => col("term").startsWith(p)).reduce(_ || _)) // pruned BEFORE the df agg
+          .groupBy("term").agg(count(lit(1)).as("df")),
+        prefixes, col("term").startsWith(_), ServedTopK.byTerm, maxExpansions)
     }
     val (n, avgdl, dfLit) = Await.result(statsF, Duration.Inf)
-    val (expRows, dfExp) = Await.result(expF, Duration.Inf)
+    val expMap = Await.result(expF, Duration.Inf)
+    val expRows = prefixClauses.flatMap { case (qid, p, role) =>
+      expMap(p).map { case (t, _) => (qid, t, role) } }
+    val dfExp = expMap.values.flatten.toMap
     val roleRows = qsRoleRows(parsed, expRows)
     // NOTE (measured, not kept): sharing ONE persisted pruned
     // positional frame between the scoring and constraint aggregations
     // (the phraseTopK discipline) was tried and is SLOWER here —
     // persist + eager materialization serialize what the two-subtree
     // action runs as concurrent stages; see OPTIMIZATION_r06.md.
-    val scored = boolScored(spark, docs, idCol, contentCol, roleRows, cfg,
+    val scored = boolScored(docs, idCol, contentCol, roleRows, cfg,
       statsKnown = Some((n, avgdl, dfLit ++ dfExp)))
     if (phrases.isEmpty) return BM25.rankTopK(scored, cfg.topK)
     val posPost = Postings.buildPositional(docs, idCol, contentCol)
       .select("term", "doc_id", "positions")
-    BM25.rankTopK(qsConstrain(spark, scored, posPost, phrases), cfg.topK)
+    BM25.rankTopK(qsConstrain(scored, posPost, phrases), cfg.topK)
   }
 
   /** query_string served from the SEGMENT INDEX — the operational
@@ -936,7 +862,6 @@ object QueryDsl {
                              queries: Seq[(Int, String)],
                              maxExpansions: Int = MaxExpansions,
                              cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    import spark.implicits._
     val h = Wand.handleFor(spark, indexDir, cfg)
     val parsed = queries.map { case (qid, s) => qid -> parseQueryString(s) }
     val prefixClauses = qsPrefixClauses(parsed)
@@ -948,24 +873,16 @@ object QueryDsl {
     val phrases = qsPhrases(parsed)
     val allTerms = (qsTermRows(parsed).map(_._2) ++ expRows.map(_._2) ++
       phrases.flatMap(_._3)).distinct
-    if (allTerms.isEmpty)
-      return spark.emptyDataset[Wand.Hit].toDF().orderBy("qid", "rank")
+    if (allTerms.isEmpty) return ServedTopK.noHits(spark)
     val (n, avgdl) = graft.index.SegmentBuilder.readStats(spark, indexDir)
     val posPost = BM25.prunedPositionalPostings(spark, indexDir, allTerms)
     // per-term df from the handle's cached metadata table (same values
     // the pruned-read aggregation produced; no extra postings branch in
     // the serving plan)
-    val dfMap = h.dfOf(roleRows.map(_._2).distinct)
-    val q = roleRows.flatMap { case (qid, t, role, nm, nf, msm) =>
-      dfMap.get(t).map(df => (qid, t, role, nm, nf, msm, df))
-    }.toDF("qid", "term", "role", "n_must", "n_filter", "n_msm", "df")
-    val weighted = posPost.join(broadcast(q), "term")
-      .withColumn("w",
-        BM25.weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
-    val scored = boolAggregate(weighted)
+    val scored = roleScored(posPost, roleRows, n, avgdl, h.dfOf(roleRows.map(_._2).distinct), cfg)
     val constrained =
       if (phrases.isEmpty) scored
-      else qsConstrain(spark, scored, posPost.select("term", "doc_id", "positions"), phrases)
+      else qsConstrain(scored, posPost.select("term", "doc_id", "positions"), phrases)
     BM25.rankTopK(constrained, cfg.topK)
   }
 
@@ -1025,20 +942,15 @@ object QueryDsl {
     * distinct matched pids == the query's required count), exclusion
     * phrases anti-join — shared verbatim by the corpus and indexed
     * query_string paths. */
-  private def qsConstrain(spark: SparkSession, scored: DataFrame, posPost: DataFrame,
+  private def qsConstrain(scored: DataFrame, posPost: DataFrame,
                           phrases: Seq[(Int, String, Seq[String])]): DataFrame = {
+    val spark = scored.sparkSession
     import spark.implicits._
     val pq = phrases.zipWithIndex.flatMap { case ((qid, role, ts), pid) =>
       ts.zipWithIndex.map { case (t, off) => (qid, pid, role, t, off, ts.size) }
     }.toDF("qid", "pid", "role", "term", "off", "m")
-    val phraseHit = posPost.join(broadcast(pq), "term")
-      .groupBy("qid", "pid", "doc_id")
-      .agg(count(lit(1)).as("got"), first(col("m")).as("m"),
-        first(col("role")).as("role"),
-        sort_array(collect_list(struct(col("off"), col("positions")))).as("lists"))
-      .filter(col("got") === col("m"))
-      .filter(OrderedSpanMatchExpr.matches(
-        transform(col("lists"), x => x.getField("positions")), lit(0)))
+    val phraseHit = BM25.phraseSpans(posPost.join(broadcast(pq), "term"), Seq("qid", "pid"), 0,
+        first(col("role")).as("role"))
       .select("qid", "pid", "role", "doc_id")
     val reqPerQid = phrases.zipWithIndex
       .filter(_._1._2 != "must_not")
@@ -1082,15 +994,14 @@ object QueryDsl {
     val stats = BM25.statsAndDfMulti(docs, idCol, fields,
       analyzed.flatMap(_._2).distinct)
     val perField = fields.zip(stats).zipWithIndex.map { case ((fcol, st), fi) =>
-      BM25.scored(weightedForField(docs, idCol, fcol, analyzed, st, cfg))
+      BM25.scored(BM25.matchPipeline(docs, idCol, fcol, analyzed, cfg, Some(st)))
         .select(col("qid"), col("doc_id"), col("score"))
         .withColumn("fld", lit(fi))
     }
     val comb = perField.reduce(_ unionByName _)
       .groupBy("qid", "doc_id")
       .agg(max(col("score")).as("best"),
-        SumStructFieldExpr.sumField(
-          sort_array(collect_list(struct(col("fld"), col("score")))), 1, 2).as("ssum"))
+        BM25.foldAscending(struct(col("fld"), col("score"))).as("ssum"))
       .withColumn("score",
         col("best") + lit(tieBreaker) * (col("ssum") - col("best")))
       .select("qid", "doc_id", "score")
@@ -1111,8 +1022,7 @@ object QueryDsl {
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
     import spark.implicits._
     val qpos = queries.map { case (qid, p, _) => qid -> CodeTokenizer.queryTerms(p) }
-    val (weighted, _, _, _) = matchPipeline(docs, idCol, contentCol, qpos, cfg)
-    val scored = BM25.scored(weighted)
+    val scored = BM25.scored(BM25.matchPipeline(docs, idCol, contentCol, qpos, cfg))
     // negative side: a direct per-doc token-set membership probe — one
     // corpus scan, no postings explode and no (qid, doc_id) distinct
     // shuffle (guide §2.4)
@@ -1214,9 +1124,8 @@ object QueryDsl {
                  queries: Seq[(Int, String)], bucketCol: Column,
                  hitsPerBucket: Int = 2,
                  cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val (weighted, _, _, _) =
-      matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg)
-    val scored = BM25.scored(weighted)
+    val scored =
+      BM25.scored(BM25.matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg))
     scored.join(docs.select(idCol.as("doc_id"), bucketCol.as("bucket")), "doc_id")
       .withColumn("hit_rank", row_number().over(
         Window.partitionBy("qid", "bucket")
@@ -1264,12 +1173,12 @@ object QueryDsl {
   def explainTop1(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                   queries: Seq[(Int, String)],
                   cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val (weighted, _, n, _) =
-      matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg)
+    val analyzed = analyzedQueries(queries)
+    val stats = BM25.statsAndDf(docs, idCol, contentCol, analyzed.flatMap(_._2).distinct)
+    val weighted = BM25.matchPipeline(docs, idCol, contentCol, analyzed, cfg, Some(stats))
     val top1 = BM25.rankTopK(BM25.scored(weighted), 1).select("qid", "doc_id")
     weighted.join(broadcast(top1), Seq("qid", "doc_id"))
-      .withColumn("idf",
-        log(lit(1.0) + (lit(n.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
+      .withColumn("idf", BM25.idfCol(col("df"), stats._1))
       .select("qid", "doc_id", "term", "tf", "df", "doclen", "idf", "w")
       .orderBy("qid", "term")
   }
@@ -1360,22 +1269,16 @@ object QueryDsl {
     // terms (df stays corpus-level — ES rescorers score with index
     // stats), so the secondary side never re-derives df
     val allTerms = (baseAnalyzed.flatMap(_._2) ++ phraseTerms).distinct
-    if (allTerms.isEmpty) return BM25.emptyHits(spark)
-    val (n, avgdl, dfMap) = BM25.statsAndDf(docs, idCol, contentCol, allTerms)
-    val qdf = baseAnalyzed.flatMap { case (qid, ts) =>
-      ts.flatMap(t => dfMap.get(t).map(df => (qid, t, ts.size, df)))
-    }.toDF("qid", "term", "n_terms", "df")
-    val post = Postings.build(docs, idCol, contentCol)
-    val weighted = post.join(broadcast(qdf), "term")
-      .withColumn("w",
-        BM25.weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
+    if (allTerms.isEmpty) return ServedTopK.noHits(spark)
+    val stats @ (n, avgdl, dfMap) = BM25.statsAndDf(docs, idCol, contentCol, allTerms)
+    val weighted = BM25.matchPipeline(docs, idCol, contentCol, baseAnalyzed, cfg, Some(stats))
     // the window is <= queries x windowSize rows — collect it once (the
     // search_after cursor discipline). The former shape kept it as a
     // plan subtree referenced from THREE broadcasts plus the final
     // join, re-running the whole base scoring pipeline per reference.
     val winRows = BM25.rankTopK(BM25.scored(weighted), windowSize)
       .select("qid", "doc_id", "score").collect()
-    if (winRows.isEmpty) return BM25.emptyHits(spark)
+    if (winRows.isEmpty) return ServedTopK.noHits(spark)
     val window = winRows.map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
       .toDF("qid", "doc_id", "score")
     val winPairs = winRows.map(r => (r.getInt(0), r.getLong(1))).toSeq
@@ -1390,27 +1293,13 @@ object QueryDsl {
     val winDocs = docs.filter(idCol.isInCollection(winIdList))
     val posPost = Postings.buildPositional(winDocs, idCol, contentCol)
       .select("term", "doc_id", "doclen", "tf", "positions")
-    val pq = phrases.flatMap { case (qid, ts) =>
-      ts.zipWithIndex.map { case (t, off) => (qid, t, off, ts.size) }
-    }.toDF("qid", "term", "off", "m")
-    val adj = posPost.join(broadcast(pq), "term")
-      .join(broadcast(winPairs), Seq("qid", "doc_id"), "left_semi")
-      .groupBy("qid", "doc_id")
-      .agg(count(lit(1)).as("got"), first(col("m")).as("m"),
-        sort_array(collect_list(struct(col("off"), col("positions")))).as("lists"))
-      .filter(col("got") === col("m"))
-      .filter(OrderedSpanMatchExpr.matches(
-        transform(col("lists"), x => x.getField("positions")), lit(0)))
+    // the window semi-join runs BEFORE the span step and the weights
+    val adj = BM25.phraseSpans(posPost.join(broadcast(BM25.phraseOffsets(spark, phrases)), "term")
+        .join(broadcast(winPairs), Seq("qid", "doc_id"), "left_semi"), Seq("qid"), 0)
       .select("qid", "doc_id")
-    val phraseQ = phrases.flatMap { case (qid, ts) =>
-      ts.distinct.flatMap(t =>
-        dfMap.get(t).map(df => (qid, t, ts.distinct.size, df)))
-    }.toDF("qid", "term", "n_terms", "df")
-    val w2 = posPost
-      .join(broadcast(phraseQ), "term")
-      .join(broadcast(winPairs), Seq("qid", "doc_id"), "left_semi")
-      .withColumn("w",
-        BM25.weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
+    val phraseQ = BM25.termTable(spark, phrases.map { case (qid, ts) => qid -> ts.distinct }, dfMap)
+    val w2 = BM25.weigh(posPost, phraseQ, n, avgdl, cfg,
+      _.join(broadcast(winPairs), Seq("qid", "doc_id"), "left_semi"))
     val sec = BM25.scored(w2)
       .join(adj, Seq("qid", "doc_id"), "left_semi")
       .withColumnRenamed("score", "sec_score")
@@ -1471,18 +1360,15 @@ object QueryDsl {
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
     import spark.implicits._
     require(Set("max", "sum", "avg")(scoreMode), s"unsupported score_mode <$scoreMode>")
-    val (weighted, _, _, _) =
-      matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg)
-    val scored = BM25.scored(weighted)
-      .join(docs.select(idCol.as("doc_id"), parentCol.as("parent")), "doc_id")
+    val scored =
+      BM25.scored(BM25.matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg))
+        .join(docs.select(idCol.as("doc_id"), parentCol.as("parent")), "doc_id")
+    val childSum = BM25.foldAscending(struct(col("doc_id"), col("score")))
     val rolled = scored.groupBy("qid", "parent").agg(
       (scoreMode match {
         case "max" => max(col("score"))
-        case "sum" => SumStructFieldExpr.sumField(
-          sort_array(collect_list(struct(col("doc_id"), col("score")))), 1, 2)
-        case "avg" => SumStructFieldExpr.sumField(
-            sort_array(collect_list(struct(col("doc_id"), col("score")))), 1, 2) /
-          count(lit(1)).cast("double")
+        case "sum" => childSum
+        case "avg" => childSum / count(lit(1)).cast("double")
       }).as("score"))
     rolled
       .withColumn("rank", row_number().over(
@@ -1503,9 +1389,8 @@ object QueryDsl {
                         contentCol: Column, queries: Seq[(Int, String)],
                         fieldCol: Column, factor: Double,
                         cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val (weighted, _, _, _) =
-      matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg)
-    val boosted = BM25.scored(weighted)
+    val boosted =
+      BM25.scored(BM25.matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg))
       .join(docs.select(idCol.as("doc_id"), fieldCol.cast("double").as("fv")), "doc_id")
       .select(col("qid"), col("doc_id"),
         (col("score") * log(lit(1.0) + lit(factor) * col("fv"))).as("score"))
@@ -1567,19 +1452,15 @@ object QueryDsl {
     val candTerms = srcVec.map(_._2).distinct.toSeq
     val (n, avgdl, dfMap) = BM25.statsAndDf(docs, idCol, contentCol, candTerms)
     // 3. driver-side per-query selection — top MltMaxTerms by
-    //    (interest desc, term asc), interest = tf * idf with the exact
-    //    Column arithmetic (StrictMath.log, same association), over the
+    //    (interest desc, term asc), interest = tf * the scalar
+    //    [[BM25.idf]] (StrictMath.log, bit-equal to the Column form), over the
     //    already-bounded candidate rows; replaces a per-qid window over
     //    a broadcast-joined frame with identical ordering
     val byDoc = srcVec.groupBy(_._1)
     val selected = queries.flatMap { case (qid, src) =>
       byDoc.getOrElse(src, Array.empty[(Long, String, Long)]).iterator
         .flatMap { case (_, t, tf) =>
-          dfMap.get(t).filter(_ >= MltMinDf).map { df =>
-            val interest =
-              tf * StrictMath.log(1.0 + (n.toDouble - df + 0.5) / (df + 0.5))
-            (t, df, interest)
-          }
+          dfMap.get(t).filter(_ >= MltMinDf).map(df => (t, df, tf * BM25.idf(df, n)))
         }.toSeq
         .sortBy { case (t, _, interest) => (interest, t) }(
           Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.String))
@@ -1587,16 +1468,10 @@ object QueryDsl {
         .map { case (t, df, _) => (qid, t, src, df) }
     }.toDF("qid", "term", "src_doc", "df")
     // 4. one corpus pass scores the selected disjunction
-    val weighted = Postings.build(docs, idCol, contentCol)
-      .join(broadcast(selected), "term")
-      .filter(col("doc_id") =!= col("src_doc"))
-      .withColumn("w",
-        BM25.weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
-    val grouped = weighted
+    val grouped = BM25.weigh(Postings.build(docs, idCol, contentCol), selected, n, avgdl, cfg,
+        _.filter(col("doc_id") =!= col("src_doc")))
       .groupBy("qid", "doc_id")
-      .agg(
-        SumStructFieldExpr.sumField(
-          sort_array(collect_list(struct(col("term"), col("w")))), 1, 2).as("score"))
+      .agg(BM25.foldAscending(struct(col("term"), col("w"))).as("score"))
     BM25.rankTopK(grouped, cfg.topK)
   }
 }

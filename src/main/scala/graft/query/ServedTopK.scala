@@ -65,7 +65,9 @@ object ServedTopK {
   /** The schema of a served hit frame: [[Wand.Hit]]'s. */
   val HitSchema: StructType = Encoders.product[Wand.Hit].schema
 
-  /** A served request with nothing to score. */
+  /** The one empty ranked `(qid, rank, doc_id, score)` frame: the
+    * result of every ranked entry point, corpus or served, with nothing
+    * to score. */
   def noHits(spark: SparkSession): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), HitSchema)
 

@@ -44,7 +44,10 @@ import graft.index.{BlockRow, RangeSaltExpr, SegmentBuilder}
   * fuzzy) follows the same shape over the cached (term, df)
   * dictionary: a heap of `cap` per (task, pattern), one collect of at
   * most tasks x patterns x cap rows, the final cap on the driver in
-  * Spark's string order.
+  * Spark's string order. That expansion cap is [[expandCapped]], over
+  * any (term, df) frame — the corpus query_string path caps its prefix
+  * clauses with it too. [[memoHandle]] is the one process-level memo of
+  * serving handles (this [[Handle]] and [[BM25.PhraseHandle]]).
   * Per-task memory is the query's COMPRESSED postings within one range —
   * never a whole hot term pinned in one task (round-1 scale-killer;
   * bounded-decode asserted in WandSpec via accumulator).
@@ -297,44 +300,79 @@ object Wand {
            cfg: EngineConfig = EngineConfig.default): DataFrame =
     handleFor(spark, indexDir, cfg).topK(queries)
 
-  /** Process-level [[Handle]] cache for the one-shot [[topK]] entry.
-    * Before it, EVERY indexed query paid the handle-init metadata jobs
-    * (a df-table aggregation plus an approx_percentile over docmap) —
+  /** The process-level [[Handle]] of an index, from [[memoHandle]],
+    * signed over the inputs the handle reads (segments + stats). Before
+    * the memo, EVERY indexed query paid the handle-init metadata jobs (a
+    * df-table aggregation plus an approx_percentile over docmap) —
     * roughly a dozen scheduler round-trips of pure fixed cost that
-    * amplified under host contention (VERDICT r4 "what's wrong" #1).
-    * Freshness is a driver-side file-listing signature over the inputs
-    * the handle actually reads (segments + stats): a rebuild/restat
-    * lands new part files and swaps the handle (the old one's cached
-    * df table is unpersisted); an untouched index hits the cache with
-    * zero Spark jobs. ONE handle per indexDir — the config rides in the
-    * freshness check rather than the key, so a per-query config
-    * override (CLI `query ... k`) swaps the handle instead of pinning
-    * another persisted df table per distinct config forever (an
-    * unbounded cache over caller-supplied configs would leak
+    * amplified under host contention (VERDICT r4 "what's wrong" #1). */
+  def handleFor(spark: SparkSession, indexDir: String,
+                cfg: EngineConfig = EngineConfig.default): Handle =
+    memoHandle(spark, indexDir, cfg, Seq("segments", "stats"))(new Handle(spark, indexDir, cfg))
+
+  /** The one process-level handle memo, for every handle kind (the WAND
+    * [[Handle]], [[BM25.PhraseHandle]]): one entry per (kind, indexDir).
+    * Freshness is a driver-side file-listing signature over the index
+    * `dirs` the kind reads: a rebuild/append/restat lands new files and
+    * swaps the handle, after refreshing Spark's cached plans over those
+    * dirs; an untouched index hits the memo with zero Spark jobs. The config rides in the freshness check rather than the key,
+    * so a per-query config override (CLI `query ... k`) swaps the handle
+    * instead of pinning another cached df table per distinct config
+    * forever (an unbounded memo over caller-supplied configs would leak
     * block-manager memory in a long-lived serving process). Guarded by
     * session identity, since a handle pins cached blocks in ITS
-    * session's block manager. */
-  private val handleCache =
-    scala.collection.concurrent.TrieMap[String, (SparkSession, EngineConfig, String, Handle)]()
+    * session's block manager.
+    *
+    * A stale handle is DROPPED, not closed: another thread may still be
+    * mid-query on it, and an eager unpersist of its cached df table —
+    * which its successor shares, since Spark matches cached plans by
+    * path — could fail or degrade those in-flight queries (ADVICE r05). */
+  private val handles =
+    scala.collection.concurrent.TrieMap[(Class[_], String), (SparkSession, EngineConfig, String, AnyRef)]()
 
-  def handleFor(spark: SparkSession, indexDir: String,
-                cfg: EngineConfig = EngineConfig.default): Handle = synchronized {
-    val sig = SegmentBuilder.dirSig(s"$indexDir/segments") + "|" +
-      SegmentBuilder.dirSig(s"$indexDir/stats")
-    handleCache.get(indexDir) match {
-      case Some((s, c, cachedSig, h))
-          if (s eq spark) && !s.sparkContext.isStopped && c == cfg && cachedSig == sig => h
-      case _ =>
-        // the stale handle is DROPPED, not closed: another thread may
-        // still be mid-query on it, and an eager unpersist of its df
-        // table could fail or degrade those in-flight queries (ADVICE
-        // r05). The orphaned cached table is one small metadata frame
-        // per swap; the block manager evicts it under memory pressure,
-        // and lineage recomputes if a stale reference ever needs it.
-        val h = new Handle(spark, indexDir, cfg)
-        handleCache.put(indexDir, (spark, cfg, sig, h))
-        h
+  private[query] def memoHandle[H <: AnyRef](spark: SparkSession, indexDir: String,
+                                             cfg: EngineConfig, dirs: Seq[String])(open: => H)
+                                            (implicit kind: scala.reflect.ClassTag[H]): H =
+    synchronized {
+      val key = (kind.runtimeClass, indexDir)
+      val sig = dirs.map(d => SegmentBuilder.dirSig(s"$indexDir/$d")).mkString("|")
+      handles.get(key) match {
+        case Some((s, c, cachedSig, h))
+            if (s eq spark) && !s.sparkContext.isStopped && c == cfg && cachedSig == sig =>
+          h.asInstanceOf[H]
+        case stale =>
+          // Spark's cache manager matches a cached plan by its parquet
+          // path, so without a refresh the successor would reuse the
+          // stale handle's cached tables (the WAND df table) as they were
+          if (stale.isDefined) dirs.foreach(d => spark.catalog.refreshByPath(s"$indexDir/$d"))
+          val h = open
+          handles.put(key, (spark, cfg, sig, h))
+          h
+      }
     }
+
+  /** The expansion-cap step, over any (term, df) dictionary frame (the
+    * served handle's cached term table, a corpus path's term-pruned df
+    * aggregation): each distinct key's match predicate runs as a literal
+    * over the dictionary — never posting payloads, no join — and
+    * [[ServedTopK.capPerKeyWithDf]] keeps the first `cap` matches per
+    * key under `ord` in each task, then merges and caps again on the
+    * driver. The collect is bounded by tasks x keys x cap rows no matter
+    * how hot a pattern is against the dictionary. Each expansion keeps
+    * its df, so serving it needs no df lookup. Keys with no match map to
+    * Nil. */
+  private[query] def expandCapped[K](dict: DataFrame, keys: Seq[K], matches: K => Column,
+                                     ord: Ordering[(String, Long)],
+                                     cap: Int): Map[K, Seq[(String, Long)]] = {
+    val ks = keys.distinct
+    if (ks.isEmpty) return Map.empty
+    val spark = dict.sparkSession
+    import spark.implicits._
+    val key = explode(array(ks.indices.map(i => when(matches(ks(i)), lit(i))): _*))
+    val capped = ServedTopK.capPerKeyWithDf(
+      dict.select(key.as("key"), col("term"), col("df")).filter(col("key").isNotNull)
+        .as[(Int, String, Long)], ord, cap)
+    ks.indices.map(i => ks(i) -> capped.getOrElse(i, Nil)).toMap
   }
 
   /** Serving handle: corpus stats, doc-range boundaries and the per-term
@@ -344,7 +382,6 @@ object Wand {
     * and fan out per doc-range, so no task ever pins a whole hot term. */
   final class Handle(spark: SparkSession, indexDir: String,
                      cfg: EngineConfig = EngineConfig.default) {
-    import spark.implicits._
     private val (n, avgdl) = SegmentBuilder.readStats(spark, indexDir)
     private val seg = spark.read.parquet(s"$indexDir/segments")
     /** (term, df) — metadata-only columns, cached. */
@@ -436,39 +473,19 @@ object Wand {
       * rows reach the driver). The length window is a cheap pre-filter
       * (|len diff| > d can never be within d). */
     def expandFuzzyBatch(inputs: Seq[(String, Int)], maxExpansions: Int): FuzzyExpansions =
-      new FuzzyExpansions(expandCapped[(String, Int)](inputs, { case (t, d) =>
+      new FuzzyExpansions(expandCapped[(String, Int)](dfTable, inputs, { case (t, d) =>
           abs(length(col("term")) - length(lit(t))) <= d && levenshtein(col("term"), lit(t)) <= d
         }, ServedTopK.byDfThenTerm, maxExpansions))
 
     /** [[expandPrefixBatch]] with each expansion's df. */
     private[query] def prefixExpansions(prefixes: Seq[String],
                                         maxExpansions: Int): Map[String, Seq[(String, Long)]] =
-      expandCapped[String](prefixes, col("term").startsWith(_), ServedTopK.byTerm, maxExpansions)
+      expandCapped[String](dfTable, prefixes, col("term").startsWith(_), ServedTopK.byTerm, maxExpansions)
 
     /** [[expandRegexBatch]] with each expansion's df. */
     private[query] def regexExpansions(patterns: Seq[String],
                                        maxExpansions: Int): Map[String, Seq[(String, Long)]] =
-      expandCapped[String](patterns, col("term").rlike(_), ServedTopK.byTerm, maxExpansions)
-
-    /** The one expansion core: each distinct key's match predicate runs
-      * as a literal over the cached (term, df) metadata table — never
-      * posting payloads, no join — and [[ServedTopK.capPerKeyWithDf]]
-      * keeps the first `cap` matches per key under `ord` in each task,
-      * then merges and caps again on the driver. The collect is bounded
-      * by tasks x keys x cap rows no matter how hot a pattern is against
-      * the dictionary. Each expansion keeps its df, so serving it needs
-      * no df lookup. Keys with no match map to Nil. */
-    private def expandCapped[K](keys: Seq[K], matches: K => Column,
-                                ord: Ordering[(String, Long)],
-                                cap: Int): Map[K, Seq[(String, Long)]] = {
-      val ks = keys.distinct
-      if (ks.isEmpty) return Map.empty
-      val key = explode(array(ks.indices.map(i => when(matches(ks(i)), lit(i))): _*))
-      val capped = ServedTopK.capPerKeyWithDf(
-        dfTable.select(key.as("key"), col("term"), col("df")).filter(col("key").isNotNull)
-          .as[(Int, String, Long)], ord, cap)
-      ks.indices.map(i => ks(i) -> capped.getOrElse(i, Nil)).toMap
-    }
+      expandCapped[String](dfTable, patterns, col("term").rlike(_), ServedTopK.byTerm, maxExpansions)
 
     /** Per-term df for a bounded term list out of the CACHED (term, df)
       * metadata table — no parquet read, no postings aggregation.

@@ -612,6 +612,27 @@ class QueryDslSpec extends SparkSuite {
       "prefix expansion + phrase exclusion compose (adjacent docs out, word docs in)")
   }
 
+  test("query_string expansion cap: maxExpansions = 2 keeps the lexicographic head on the corpus and served paths alike") {
+    // "ta" matches five index terms: table < tables < tablet < taco < tag
+    val docs = Seq(1L -> "table xray", 2L -> "tables yak", 3L -> "tablet zulu",
+      4L -> "taco yak", 5L -> "tag table")
+    val dir = indexOf(docs: _*)
+    val d = df(docs: _*)
+    val qs = Seq(
+      1 -> "ta*",
+      2 -> "-ta* zulu yak",
+      3 -> "ta* -\"tag table\"")
+    val corpus = hits(queryStringTopK(spark, d, col("doc_id"), col("text"), qs, maxExpansions = 2))
+    val indexed = hits(queryStringTopKIndexed(spark, dir, qs, maxExpansions = 2))
+    assert(corpus === indexed, "capped expansions: corpus == served, bit-equal")
+    assert(corpus(1).map(_._1).toSet === Set(1L, 2L, 5L), "only table and tables expand")
+    assert(corpus(2).map(_._1).toSet === Set(3L, 4L),
+      "exclusion covers the capped expansions only: tablet and taco docs stay")
+    assert(corpus(3).map(_._1).toSet === Set(1L, 2L), "the phrase exclusion drops doc 5")
+    val uncapped = hits(queryStringTopK(spark, d, col("doc_id"), col("text"), qs.take(1)))
+    assert(uncapped(1).map(_._1).toSet === Set(1L, 2L, 3L, 4L, 5L), "the default cap keeps all five")
+  }
+
   test("query_string must-only compiles bit-equal to the bool must algebra") {
     val d = df(qsDocs: _*)
     val viaQs = hits(queryStringTopK(spark, d, col("doc_id"), col("text"),

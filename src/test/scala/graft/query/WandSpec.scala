@@ -249,4 +249,56 @@ class WandSpec extends SparkSuite {
         case (q, t) => q -> h.expandFuzzy(t, QueryDsl.autoFuzziness(t), QueryDsl.MaxExpansions) }))
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
+
+  test("handle memo: one Wand and one phrase handle per untouched index; new ones after appendDocs + buildAll and after a cfg change; swapped handles serve the grown corpus") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_wand_memo_").toString
+    try {
+      val c = cfg.copy(shards = 2, blockSize = 8, saltTargetPostings = 64)
+      val variants = Seq("alpha beta gamma", "alpha delta", "gamma delta epsilon alpha",
+        "beta gamma", "epsilon zeta eta")
+      val base = (0L until 200L).map(i => (i, variants((i % variants.size).toInt)))
+      val more = (200L until 240L).map(i => (i, s"omega alpha psi ${variants((i % 3).toInt)}"))
+      SegmentBuilder.ingest(spark, base.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      def handles(k: EngineConfig) = (Wand.handleFor(spark, dir, k), BM25.phraseHandleFor(spark, dir, k))
+      def fresh(a: (Wand.Handle, BM25.PhraseHandle), b: (Wand.Handle, BM25.PhraseHandle)) =
+        !(a._1 eq b._1) && !(a._2 eq b._2)
+      val h1 = handles(c)
+      val again = handles(c)
+      assert((again._1 eq h1._1) && (again._2 eq h1._2), "an untouched index reuses both handles")
+      val ck = c.copy(topK = c.topK + 3)
+      val hk = handles(ck)
+      assert(fresh(hk, h1), "a cfg change swaps both handles")
+      assert(hk._1 eq Wand.handleFor(spark, dir, ck))
+      val h2 = handles(c)
+      assert(fresh(h2, hk), "changing the cfg back swaps again: one handle per index")
+      SegmentBuilder.appendDocs(spark, more.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      val h3 = handles(c)
+      assert(fresh(h3, h2), "appendDocs + buildAll swaps both handles")
+      // the swapped handles see the appended postings (stats stay as
+      // ingested until restat, so only membership is compared here)
+      val appended = more.map(_._1).toSet
+      val omega = Wand.topK(spark, dir, Seq(1 -> "omega"), c).collect().map(_.getLong(2)).toSet
+      assert(omega.nonEmpty && omega.subsetOf(appended))
+      val psi = BM25.phraseTopKIndexed(spark, dir, Seq(1 -> "omega alpha psi"), c)
+        .collect().map(_.getLong(2)).toSet
+      assert(psi.nonEmpty && psi.subsetOf(appended))
+      // restat refreshes N/avgdl: served == corpus scoring on the grown corpus
+      SegmentBuilder.restat(spark, dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      val h4 = handles(c)
+      assert(fresh(h4, h3), "a restat swaps both handles")
+      val grown = (base ++ more).toDF("doc_id", "text")
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq.map(r =>
+        (r.getInt(0), r.getLong(1), r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3))))
+      val terms = Seq(1 -> "alpha", 2 -> "omega gamma", 3 -> "psi zzznope")
+      assert(rows(Wand.topK(spark, dir, terms, c)) ===
+        rows(BM25.topK(spark, grown, col("doc_id"), col("text"), terms, c)))
+      val phrases = Seq(1 -> "alpha beta", 2 -> "omega alpha psi", 3 -> "gamma delta")
+      assert(rows(BM25.phraseTopKIndexed(spark, dir, phrases, c)) ===
+        rows(BM25.phraseTopK(spark, grown, col("doc_id"), col("text"), phrases, c)))
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
+  }
 }
