@@ -298,51 +298,25 @@ object Main {
           System.err.println(s"invalid index name '$name': ${bad.mkString("; ")}")
           sys.exit(2)
         }
-        val spark = session("graft-ingest")
-        Cancellation.install(spark, s"ingest $docs -> $indexDir")
-        val m = Metrics.attach(spark)
-        val t0 = System.nanoTime()
-        cancellable("ingest", t0) {
+        runVerb("ingest", s"ingest $docs -> $indexDir") { spark =>
           SegmentBuilder.ingest(spark, spark.read.parquet(docs),
             col("doc_id"), col("text"), indexDir, cfg)
-          println(s"""{"op":"ingest","secs":${(System.nanoTime() - t0) / 1e9},"metrics":${m.json}}""")
+          Nil
         }
-        spark.stop()
-        // a raised flag exits 130 even when the op body happened to
-        // finish (SIGINT during a driver-side tail) — the README's
-        // "Ctrl-C = exit 130" contract must hold for every long verb
-        if (Cancellation.isRequested) sys.exit(130)
       case "build" :: indexDir :: Nil =>
-        val spark = session("graft-build")
-        Cancellation.install(spark, s"build $indexDir")
-        val m = Metrics.attach(spark)
-        val t0 = System.nanoTime()
-        cancellable("build", t0) {
+        runVerb("build", s"build $indexDir") { spark =>
           val built = SegmentBuilder.buildAll(spark, indexDir, cfg,
             cancel = Cancellation.probe)
-          println(s"""{"op":"build","shardsBuilt":${built.size},""" +
-            s""""postings":${built.map(_.postings).sum},"bytes":${built.map(_.bytes).sum},""" +
-            s""""cancelled":${Cancellation.isRequested},""" +
-            s""""secs":${(System.nanoTime() - t0) / 1e9},"metrics":${m.json}}""")
+          Seq("shardsBuilt" -> built.size, "postings" -> built.map(_.postings).sum,
+            "bytes" -> built.map(_.bytes).sum)
         }
-        spark.stop()
-        if (Cancellation.isRequested) sys.exit(130)
       case "append" :: docs :: indexDir :: Nil =>
-        val spark = session("graft-append")
-        Cancellation.install(spark, s"append $docs -> $indexDir")
-        val m = Metrics.attach(spark)
-        val t0 = System.nanoTime()
-        cancellable("append", t0) {
+        runVerb("append", s"append $docs -> $indexDir") { spark =>
           SegmentBuilder.appendDocs(spark, spark.read.parquet(docs),
             col("doc_id"), col("text"), indexDir, cfg)
-          println(s"""{"op":"append","secs":${(System.nanoTime() - t0) / 1e9},"metrics":${m.json}}""")
+          Nil
         }
-        spark.stop()
-        if (Cancellation.isRequested) sys.exit(130)
       case "compact" :: indexDir :: rest =>
-        val spark = session("graft-compact")
-        Cancellation.install(spark, s"compact $indexDir")
-        val t0 = System.nanoTime()
         // `force` rewrites clean partitions too (serve-optimization of a
         // fresh bulk ingest — hash-clustered files); shard range from
         // the index's OWN marker, never the env config (a mismatched
@@ -352,45 +326,27 @@ object Main {
           case Nil => 0 until SegmentBuilder.indexShards(indexDir)
           case xs  => xs.map(_.toInt)
         }
-        cancellable("compact", t0) {
+        runVerb("compact", s"compact $indexDir") { spark =>
           val rewritten = SegmentBuilder.compactShards(spark, indexDir, shards,
             cfg, concurrency = 4, force = force, cancel = Cancellation.probe).size
-          println(s"""{"op":"compact","shards":${shards.size},"rewritten":$rewritten,""" +
-            s""""cancelled":${Cancellation.isRequested},""" +
-            s""""secs":${(System.nanoTime() - t0) / 1e9}}""")
+          Seq("shards" -> shards.size, "rewritten" -> rewritten)
         }
-        spark.stop()
-        if (Cancellation.isRequested) sys.exit(130)
       case "restat" :: indexDir :: Nil =>
         // the graduated repair for append-induced stats drift: refresh
         // N/avgdl/qsplits from docmap, then stage the full rebuild the
         // lineage invalidation implies — resumable per shard, so a
         // cancelled/crashed restat rebuild continues where it stopped
-        val spark = session("graft-restat")
-        Cancellation.install(spark, s"restat $indexDir")
-        val m = Metrics.attach(spark)
-        val t0 = System.nanoTime()
-        cancellable("restat", t0) {
+        runVerb("restat", s"restat $indexDir") { spark =>
           val (n, avgdl) = SegmentBuilder.restat(spark, indexDir, cfg)
           val rebuilt = SegmentBuilder.buildAll(spark, indexDir, cfg,
             concurrency = 4, cancel = Cancellation.probe)
-          println(s"""{"op":"restat","docs":$n,"avgdl":${jsonNum(avgdl)},""" +
-            s""""shardsRebuilt":${rebuilt.size},""" +
-            s""""cancelled":${Cancellation.isRequested},""" +
-            s""""secs":${(System.nanoTime() - t0) / 1e9},"metrics":${m.json}}""")
+          Seq("docs" -> n, "avgdl" -> avgdl, "shardsRebuilt" -> rebuilt.size)
         }
-        spark.stop()
-        if (Cancellation.isRequested) sys.exit(130)
       case "merge" :: indexDir :: outDir :: Nil =>
-        val spark = session("graft-merge")
-        Cancellation.install(spark, s"merge $indexDir -> $outDir")
-        val t0 = System.nanoTime()
-        cancellable("merge", t0) {
+        runVerb("merge", s"merge $indexDir -> $outDir") { spark =>
           graft.index.SegmentMerger.mergeAll(spark, indexDir, outDir, cfg)
-          println(s"""{"op":"merge","secs":${(System.nanoTime() - t0) / 1e9}}""")
+          Nil
         }
-        spark.stop()
-        if (Cancellation.isRequested) sys.exit(130)
       case "migrate" :: src :: out :: rest =>
         val fields = rest match {
           case Nil => Nil
@@ -404,17 +360,10 @@ object Main {
         if (fields.isEmpty)
           System.err.println("[migrate] no --fields given: schema inference adds a " +
             "full pre-pass over the source — pass the ES-mapping field list at scale")
-        val spark = session("graft-migrate")
-        Cancellation.install(spark, s"migrate $src -> $out")
-        val t0 = System.nanoTime()
-        cancellable("migrate", t0) {
+        runVerb("migrate", s"migrate $src -> $out") { spark =>
           val c = migrate(spark, src, out, fields)
-          println(s"""{"op":"migrate","total":${c("total")},"valid":${c("valid")},""" +
-            s""""invalid":${c("invalid")},"with_warnings":${c("with_warnings")},""" +
-            s""""secs":${(System.nanoTime() - t0) / 1e9}}""")
+          Seq("total", "valid", "invalid", "with_warnings").map(k => k -> c(k))
         }
-        spark.stop()
-        if (Cancellation.isRequested) sys.exit(130)
       case "query" :: indexDir :: rest if rest.nonEmpty =>
         val spark = session("graft-query")
         val a = parseQueryArgs(rest)
@@ -444,19 +393,46 @@ object Main {
     }
   }
 
-  /** Run a long op; if it dies BECAUSE the user cancelled (cancelJobGroup
-    * aborts in-flight stages with a SparkException), report an orderly
-    * cancellation instead of a stack trace and exit 130 — committed
-    * work (shard manifests, ingest markers) stays, and re-running the
-    * same command resumes it. A failure without a cancel request still
-    * propagates loudly. */
-  private def cancellable(op: String, t0: Long)(body: => Unit): Unit =
-    try body
-    catch {
-      case e: Throwable if Cancellation.isRequested =>
-        System.err.println(s"[cancel] $op interrupted: ${e.getClass.getSimpleName}")
-        println(s"""{"op":"$op","cancelled":true,""" +
-          s""""secs":${(System.nanoTime() - t0) / 1e9}}""")
-        sys.exit(130)
+  /** The one lifecycle of a maintenance verb: session, cancellable job
+    * group, metrics listener, `body`, the verb's JSON line, stop. `body`
+    * returns the verb's own fields. If it dies BECAUSE the user cancelled
+    * (cancelJobGroup aborts in-flight stages with a SparkException), the
+    * line reports an orderly cancellation (no verb fields) instead of a
+    * stack trace — committed work (shard manifests, ingest markers)
+    * stays, and re-running the same command resumes it. A failure
+    * without a cancel request still propagates loudly. A raised flag
+    * exits 130 even when the body happened to finish (SIGINT during a
+    * driver-side tail): the README's "Ctrl-C = exit 130" contract holds
+    * for every verb. */
+  private def runVerb(op: String, desc: String)(body: SparkSession => Seq[(String, Any)]): Unit = {
+    val spark = session(s"graft-$op")
+    Cancellation.install(spark, desc)
+    val m = Metrics.attach(spark)
+    val t0 = System.nanoTime()
+    val fields =
+      try body(spark)
+      catch {
+        case e: Throwable if Cancellation.isRequested =>
+          System.err.println(s"[cancel] $op interrupted: ${e.getClass.getSimpleName}")
+          Nil
+      }
+    println(verbLine(op, fields, Cancellation.isRequested, (System.nanoTime() - t0) / 1e9, m.json))
+    spark.stop()
+    if (Cancellation.isRequested) sys.exit(130)
+  }
+
+  /** A maintenance verb's JSON line: `op`, the verb's fields in order,
+    * then `cancelled`, `secs` and `metrics` (a JSON object, inlined).
+    * Field values are numbers; doubles that JSON cannot hold (NaN,
+    * infinities) print as null. */
+  def verbLine(op: String, fields: Seq[(String, Any)], cancelled: Boolean, secs: Double,
+               metricsJson: String): String = {
+    def value(v: Any): String = v match {
+      case d: Double => jsonNum(d)
+      case x => x.toString
     }
+    val kvs = ("op" -> graft.JsonUtil.q(op)) +: fields.map { case (k, v) => k -> value(v) } :+
+      ("cancelled" -> cancelled.toString) :+ ("secs" -> jsonNum(secs)) :+ ("metrics" -> metricsJson)
+    kvs.map { case (k, v) => s"${graft.JsonUtil.q(k)}:$v" }.mkString("{", ",", "}")
+  }
 }

@@ -1,8 +1,6 @@
 package graft.index
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.security.MessageDigest
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -127,6 +125,20 @@ final case class ShardManifest(shard: Int, status: String, postings: Long,
   * only (the encoder streams, memory stays bounded, serve pruning
   * works on row spans). [[Codec.mergeRuns]] k-way merges runs back
   * when consolidating.
+  *
+  * Where each write-path protocol lives (one definition each):
+  *  - staged rows `(doc_id, sha, doclen, pairs)`: [[stagedRows]];
+  *  - postings rows (explode, thash, shard; unsorted): [[postingsRows]];
+  *  - stats + qsplits from docmap: [[writeStats]];
+  *  - per-process stats/qsplits memo: [[memoized]];
+  *  - atomic file commit (ingest marker, manifests, clean marker):
+  *    [[IndexIo.commitFile]];
+  *  - crash-safe directory swap (compaction, restat) and its crash
+  *    contract: [[IndexIo.Swap]];
+  *  - concurrent, cancellable shard loop (build, compact):
+  *    [[IndexIo.forShards]];
+  *  - parquet `name:length` listing + SHA-256 lineage: [[IndexIo.listing]],
+  *    [[IndexIo.sha256Hex]].
   */
 object SegmentBuilder {
 
@@ -140,15 +152,8 @@ object SegmentBuilder {
     // a RE-ingest over an existing index must invalidate the old
     // completion marker FIRST: a crash mid-overwrite would otherwise
     // leave mixed old/new data that ingestDone() reports as complete
-    Files.deleteIfExists(Paths.get(indexDir, "_ingested"))
-    // Defensive partitioning: tokenization is the dominant compute and
-    // must never be bottlenecked by a coarse input layout (e.g. one fat
-    // parquet file => one task). Cheap relative to the analyze/explode
-    // work it unlocks; a no-op when the source is already wide enough.
-    val spread =
-      if (docs.rdd.getNumPartitions >= cfg.buildPartitions) docs
-      else docs.repartition(cfg.buildPartitions)
-
+    val marker = Paths.get(indexDir, "_ingested")
+    Files.deleteIfExists(marker)
     // ONE tokenize pass over the corpus: the fused analyzer expression
     // emits (sha, doclen, term-tf pairs) per doc into a columnar
     // staging table; everything downstream (docmap, stats, qsplits,
@@ -160,19 +165,7 @@ object SegmentBuilder {
     // tokenize work. Derived outputs still run concurrently.
     val staging = s"$indexDir/_staging"
     val tStage0 = System.nanoTime()
-    // Positional staging (layout v2): term positions ride along with tf
-    // — ES indexes positions for text fields by default (match_phrase
-    // works out of the box), so the Spark index stores them too, and
-    // phrase/proximity queries become index reads instead of corpus
-    // re-tokenizes (the same build-once-probe-many rule the ANN
-    // artifacts follow). Segment/codec layers are position-free; they
-    // column-prune positions away at their scan.
-    val tok = if (cfg.storePositions) graft.analyze.CodeTokenizer.tokenPosCol(contentCol)
-              else graft.analyze.CodeTokenizer.tokenTfCol(contentCol)
-    spread.select(idCol.cast("long").as("doc_id"),
-        sha2(contentCol.cast("string"), 256).as("sha"), tok.as("t"))
-      .select(col("doc_id"), col("sha"),
-        col("t.doclen").as("doclen"), col("t.pairs").as("pairs"))
+    stagedRows(docs, idCol.cast("long"), contentCol, cfg)
       .write.mode(SaveMode.Overwrite).parquet(staging)
     // Operational phase metrics (north_rule: builds report rows/bytes/
     // timing); also the input to the derive-read split sizing below.
@@ -208,37 +201,20 @@ object SegmentBuilder {
     val pass1 = Future {
       derive.read.parquet(staging).select("doc_id", "sha", "doclen")
         .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/docmap")
-      derive.read.parquet(s"$indexDir/docmap")
-        .agg(count(lit(1)).as("n"), avg(col("doclen")).as("avgdl"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/stats")
-      derive.read.parquet(s"$indexDir/docmap")
-        .select(expr(s"approx_percentile(doc_id, array(${
-          (1 until QuantileBuckets).map(i => i.toDouble / QuantileBuckets).mkString(",")}))")
-          .as("splits"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/qsplits")
+      writeStats(derive, indexDir, indexDir)
     }
-    // postings: explode the staged pairs (shuffle-free — tf came from
-    // the tokenizer), hash-partitioned by term shard for stage-1 pruning.
+    // postings, hash-partitioned by term shard for stage-1 pruning. Files
+    // are NOT sorted here — an ingest-time cluster sort measured +40% on
+    // the derive pass (row movement through the sorter, string or hash
+    // keys alike) and clustering belongs to MAINTENANCE, exactly like
+    // ES: a fresh bulk ingest serves correctly but coarsely (shard-dir
+    // pruning only); [[compactShard]] rewrites files hash-clustered so
+    // row groups carry tight thash ranges and a phrase query's
+    // `thash IN (...)` pushdown skips everything but its terms' rows —
+    // without that, a served phrase query at 100 TB decodes its shards'
+    // entire partitions.
     val pass2 = Future {
-      val postCols = Seq(col("p.term").as("term"), col("doc_id"), col("doclen"),
-        col("p.tf").as("tf")) ++
-        (if (cfg.storePositions) Seq(col("p.positions").as("positions")) else Nil)
-      derive.read.parquet(staging)
-        .select(col("doc_id"), col("doclen"), explode(col("pairs")).as("p"))
-        .select(postCols: _*)
-        // thash rides along (layout v3): the serving layer prunes row
-        // groups on this fixed-width key. Files are NOT sorted here —
-        // an ingest-time cluster sort measured +40% on the derive pass
-        // (row movement through the sorter, string or hash keys alike)
-        // and clustering belongs to MAINTENANCE, exactly like ES: a
-        // fresh bulk ingest serves correctly but coarsely (shard-dir
-        // pruning only); [[compactShard]] rewrites files hash-clustered
-        // so row groups carry tight thash ranges and a phrase query's
-        // `thash IN (...)` pushdown skips everything but its terms'
-        // rows — without that, a served phrase query at 100 TB decodes
-        // its shards' entire partitions.
-        .withColumn("thash", xxhash64(col("term")))
-        .withColumn("shard", pmod(col("thash"), lit(cfg.shards)).cast("int"))
+      postingsRows(derive.read.parquet(staging), cfg)
         .write.mode(SaveMode.Overwrite).partitionBy("shard")
         .parquet(s"$indexDir/postings")
     }
@@ -246,20 +222,71 @@ object SegmentBuilder {
     Await.result(Future.sequence(Seq(pass1, pass2)), Duration.Inf)
     System.err.println(f"[ingest] derive passes: ${(System.nanoTime() - tDerive) / 1e9}%.1fs")
     graft.metrics.Progress.emit("ingest", "phase", 2, 2, tStage0)
-    new scala.reflect.io.Directory(new java.io.File(staging)).deleteRecursively()
+    IndexIo.rmTree(Paths.get(staging))
     // Atomic ingest-complete marker, written only after BOTH passes
     // land: a crash between stats and postings must not let a resume
     // treat the partial postings dir as a finished ingest (resume gates
     // on this marker, never on stats existence alone).
-    val dir = Paths.get(indexDir)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve("_ingested.tmp")
-    Files.writeString(tmp,
+    IndexIo.commitFile(marker,
       s"v$LayoutVersion pos=${cfg.storePositions} shards=${cfg.shards}\n" +
         lineage(spark, indexDir, cfg))
-    Files.move(tmp, dir.resolve("_ingested"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    ()
+  }
+
+  /** The staged table `(doc_id, sha, doclen, pairs)` of [[ingest]] and
+    * [[appendDocs]]: ONE fused tokenize pass per doc, `id` already cast
+    * to long. Defensive partitioning first: tokenization is the
+    * dominant compute and must never be bottlenecked by a coarse input
+    * layout (e.g. one fat parquet file => one task) — cheap relative to
+    * the analyze/explode work it unlocks, a no-op when the source is
+    * already wide enough. Positional staging (layout v2): term positions
+    * ride along with tf — ES indexes positions for text fields by
+    * default (match_phrase works out of the box), so the Spark index
+    * stores them too, and phrase/proximity queries become index reads
+    * instead of corpus re-tokenizes. Segment/codec layers are
+    * position-free; they column-prune positions away at their scan. */
+  private def stagedRows(docs: DataFrame, id: Column, contentCol: Column,
+                         cfg: EngineConfig): DataFrame = {
+    val spread =
+      if (docs.rdd.getNumPartitions >= cfg.buildPartitions) docs
+      else docs.repartition(cfg.buildPartitions)
+    val tok = if (cfg.storePositions) graft.analyze.CodeTokenizer.tokenPosCol(contentCol)
+              else graft.analyze.CodeTokenizer.tokenTfCol(contentCol)
+    spread.select(id.as("doc_id"),
+        sha2(contentCol.cast("string"), 256).as("sha"), tok.as("t"))
+      .select(col("doc_id"), col("sha"),
+        col("t.doclen").as("doclen"), col("t.pairs").as("pairs"))
+  }
+
+  /** Postings rows `(term, doc_id, doclen, tf[, positions], thash, shard)`
+    * exploded from staged rows — shuffle-free, tf came from the
+    * tokenizer. thash rides along (layout v3): the serving layer prunes
+    * row groups on this fixed-width key, and `shard = pmod(thash,
+    * shards)` partitions the table. UNSORTED: whether to cluster is the
+    * caller's decision ([[ingest]] does not, [[appendDocs]] does). */
+  private def postingsRows(staged: DataFrame, cfg: EngineConfig): DataFrame = {
+    val postCols = Seq(col("p.term").as("term"), col("doc_id"), col("doclen"),
+      col("p.tf").as("tf")) ++
+      (if (cfg.storePositions) Seq(col("p.positions").as("positions")) else Nil)
+    staged.select(col("doc_id"), col("doclen"), explode(col("pairs")).as("p"))
+      .select(postCols: _*)
+      .withColumn("thash", xxhash64(col("term")))
+      .withColumn("shard", pmod(col("thash"), lit(cfg.shards)).cast("int"))
+  }
+
+  /** Corpus stats `(n, avgdl)` and the doc-space quantile splits, derived
+    * from `indexDir`'s docmap and written as `outDir/stats` and
+    * `outDir/qsplits` in `session` — the one derivation [[ingest]] (its
+    * cloned derive session, into the index) and [[restat]] (into its
+    * swap tmp) share, so a restat'd index is indistinguishable from a
+    * fresh ingest of the same docmap. */
+  private def writeStats(session: SparkSession, indexDir: String, outDir: String): Unit = {
+    val dm = session.read.parquet(s"$indexDir/docmap")
+    dm.agg(count(lit(1)).as("n"), avg(col("doclen")).as("avgdl"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/stats")
+    dm.select(expr(s"approx_percentile(doc_id, array(${
+        (1 until QuantileBuckets).map(i => i.toDouble / QuantileBuckets).mkString(",")}))")
+        .as("splits"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/qsplits")
   }
 
   /** On-disk layout version, written into the ingest marker: v2 added
@@ -315,30 +342,16 @@ object SegmentBuilder {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       if (fresh.isEmpty) return // empty batch or full replay: no-op
-      // same defensive spread as ingest: tokenization is the dominant
-      // compute and must never be serialized by a one-fat-file input
-      val spread =
-        if (fresh.rdd.getNumPartitions >= cfg.buildPartitions) fresh
-        else fresh.repartition(cfg.buildPartitions)
-      val tok = if (cfg.storePositions) graft.analyze.CodeTokenizer.tokenPosCol(contentCol)
-                else graft.analyze.CodeTokenizer.tokenTfCol(contentCol)
       // try_cast: rows here all passed freshBatch's castability filter,
       // but ANSI cast must not be able to throw on evaluation-order
       // technicalities either
-      val staged = spread.select(idCol.try_cast("long").as("doc_id"),
-          sha2(contentCol.cast("string"), 256).as("sha"), tok.as("t"))
-        .select(col("doc_id"), col("sha"),
-          col("t.doclen").as("doclen"), col("t.pairs").as("pairs"))
+      val staged = stagedRows(fresh, idCol.try_cast("long"), contentCol, cfg)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val postCols = Seq(col("p.term").as("term"), col("doc_id"), col("doclen"),
-          col("p.tf").as("tf")) ++
-          (if (cfg.storePositions) Seq(col("p.positions").as("positions")) else Nil)
-        staged.select(col("doc_id"), col("doclen"), explode(col("pairs")).as("p"))
-          .select(postCols: _*)
-          .withColumn("thash", xxhash64(col("term")))
-          .withColumn("shard", pmod(col("thash"), lit(cfg.shards)).cast("int"))
-          .sortWithinPartitions("shard", "thash", "doc_id") // hash-clustered, like ingest
+        postingsRows(staged, cfg)
+          // hash-clustered within each append file (unlike ingest, which
+          // leaves clustering to compactShard)
+          .sortWithinPartitions("shard", "thash", "doc_id")
           .write.mode(SaveMode.Append).partitionBy("shard")
           .parquet(s"$indexDir/postings")
         staged.select("doc_id", "sha", "doclen")
@@ -407,33 +420,20 @@ object SegmentBuilder {
     * A shard with no partition (no term hashed there) is a no-op, so
     * compact-all loops pass over small corpora safely.
     *
-    * Crash safety (single-writer, like the build): the rewrite lands
-    * COMPLETELY in `_compact_tmp` first; only then the live dir moves
-    * to `_compact_trash`, tmp moves to live, trash is deleted. On
-    * entry every crash point recovers: trash with no live (died
-    * between the moves) restores trash; trash WITH live (died before
-    * the trash delete) discards the trash — live already holds the
-    * compacted data; a leftover tmp is discarded. */
+    * The rewrite replaces the partition through an [[IndexIo.Swap]]
+    * (`_compact_tmp_shard=S`, `_compact_trash_shard=S`), single-writer
+    * like the build. */
   def compactShard(spark: SparkSession, indexDir: String, shard: Int,
                    cfg: EngineConfig = EngineConfig.default,
                    targetBytes: Long = CompactTargetBytes,
                    force: Boolean = false): Boolean = {
     val live = Paths.get(s"$indexDir/postings/shard=$shard")
-    val tmp = Paths.get(s"$indexDir/_compact_tmp_shard=$shard")
-    val trash = Paths.get(s"$indexDir/_compact_trash_shard=$shard")
-    def rmTree(p: Path): Unit = {
-      new scala.reflect.io.Directory(p.toFile).deleteRecursively(); ()
-    }
-    // crash recovery — see scaladoc
-    if (Files.exists(trash) && !Files.exists(live)) Files.move(trash, live)
-    else if (Files.exists(trash)) rmTree(trash)
-    if (Files.exists(tmp)) rmTree(tmp)
+    val swap = IndexIo.Swap(live, Paths.get(s"$indexDir/_compact_tmp_shard=$shard"),
+      Paths.get(s"$indexDir/_compact_trash_shard=$shard"))
+    swap.recover()
     if (!Files.exists(live)) return false // no term hashed to this shard
-    def listFiles(): Array[java.io.File] = Option(live.toFile.listFiles())
-      .map(_.filter(_.getName.endsWith(".parquet"))).getOrElse(Array.empty[java.io.File])
-    def listing(fs: Array[java.io.File]): String =
-      fs.map(f => s"${f.getName}:${f.length}").sorted.mkString(",")
-    val dataFiles = listFiles()
+    val dataFiles = IndexIo.parquetFiles(live.toFile)
+    val listing = IndexIo.listing(dataFiles)
     val bytes = dataFiles.map(_.length()).sum
     val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val marker = Paths.get(indexDir, "manifest", s"compact_clean_shard_$shard.txt")
@@ -454,7 +454,7 @@ object SegmentBuilder {
       // an untouched partition is then a driver-side listing compare,
       // no scan. Any append/rewrite lands new files, so a stale marker
       // cannot match.
-      if (Files.exists(marker) && Files.readString(marker) == listing(dataFiles))
+      if (Files.exists(marker) && Files.readString(marker) == listing)
         return false
       // countDistinct over a STRUCT, not the bare columns: multi-column
       // countDistinct skips rows with any NULL field, so a null-id
@@ -466,7 +466,7 @@ object SegmentBuilder {
         .agg(count(lit(1)),
           countDistinct(struct(col("term"), col("doc_id")))).head()
       if (r.getLong(0) == r.getLong(1)) {
-        writeCleanMarker(marker, listing(dataFiles)) // scan once, then compare listings
+        IndexIo.commitFile(marker, listing) // scan once, then compare listings
         return false // clean: don't churn lineage
       }
     }
@@ -487,53 +487,27 @@ object SegmentBuilder {
         if (force) nFiles else math.min(nFiles, dataFiles.length),
         col("thash"), col("doc_id"))
       .sortWithinPartitions("thash", "doc_id") // row groups inherit tight spans
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    Files.move(live, trash)
-    Files.move(tmp, live)
-    rmTree(trash)
-    writeCleanMarker(marker, listing(listFiles()))
+      .write.mode(SaveMode.Overwrite).parquet(swap.tmp.toString)
+    swap.commit()
+    // a crash before the marker commit just re-scans later
+    IndexIo.commitFile(marker, IndexIo.listing(IndexIo.parquetFiles(live.toFile)))
     true
   }
 
-  /** Atomic clean-marker commit (crash before it just re-scans later). */
-  private def writeCleanMarker(marker: Path, content: String): Unit = {
-    Files.createDirectories(marker.getParent)
-    val tmp = marker.resolveSibling(marker.getFileName.toString + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, marker,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Compact several shards, optionally concurrently — each shard's
-    * rewrite touches only its own partition directory and tmp/trash
-    * siblings, so shard compactions are independent (Spark schedules
-    * the rewrite jobs FIFO across the same executors, exactly like
-    * [[buildAll]]'s concurrent shard builds). Returns the shards that
-    * were rewritten. */
+  /** Compact several shards through [[IndexIo.forShards]] (the loop and
+    * cancellation contract [[buildAll]] uses) — each shard's rewrite
+    * touches only its own partition directory and tmp/trash siblings,
+    * so shard compactions are independent. Returns the shards that were
+    * rewritten. */
   def compactShards(spark: SparkSession, indexDir: String, shards: Seq[Int],
                     cfg: EngineConfig = EngineConfig.default,
                     concurrency: Int = 1,
                     targetBytes: Long = CompactTargetBytes,
                     force: Boolean = false,
-                    cancel: () => Boolean = () => false): Seq[Int] = {
-    def one(sh: Int): Option[Int] =
-      // orderly cancellation: finished shards stay committed; once the
-      // flag is up no NEW shard rewrite starts (same contract as
-      // buildAll — the reference's CancellationToken checked per batch)
-      if (cancel()) None
-      else if (compactShard(spark, indexDir, sh, cfg, targetBytes, force)) Some(sh) else None
-    if (concurrency <= 1 || shards.size <= 1) shards.flatMap(one)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(concurrency, shards.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(shards.map(sh => Future(one(sh)))), Duration.Inf)
-        .flatten
-      finally pool.shutdown()
+                    cancel: () => Boolean = () => false): Seq[Int] =
+    IndexIo.forShards(shards, concurrency, cancel) { sh =>
+      if (compactShard(spark, indexDir, sh, cfg, targetBytes, force)) Some(sh) else None
     }
-  }
 
   /** True iff a previous [[ingest]] ran to completion (both passes plus
     * the quantile-split table), UNDER THE CURRENT LAYOUT VERSION and
@@ -589,33 +563,30 @@ object SegmentBuilder {
     }.mkString(";")
   }
 
-  private val statsMemo =
-    scala.collection.concurrent.TrieMap[String, (String, (Long, Double))]()
-  private val qsplitsMemo =
-    scala.collection.concurrent.TrieMap[String, (String, Array[Long])]()
+  /** One entry per (indexDir, table): the table's signature and value. */
+  private val memo = scala.collection.concurrent.TrieMap[(String, String), (String, Any)]()
 
-  def readQsplits(spark: SparkSession, indexDir: String): Array[Long] = {
-    val sig = dirSig(s"$indexDir/qsplits")
-    qsplitsMemo.get(indexDir) match {
-      case Some((s, v)) if s == sig => v
+  private def memoized[A](indexDir: String, table: String)(read: => A): A = {
+    val sig = dirSig(s"$indexDir/$table")
+    memo.get((indexDir, table)) match {
+      case Some((s, v)) if s == sig => v.asInstanceOf[A]
       case _ =>
-        val v = spark.read.parquet(s"$indexDir/qsplits").head().getSeq[Long](0).toArray
-        qsplitsMemo.put(indexDir, (sig, v))
+        val v = read
+        memo.put((indexDir, table), (sig, v))
         v
     }
   }
 
-  def readStats(spark: SparkSession, indexDir: String): (Long, Double) = {
-    val sig = dirSig(s"$indexDir/stats")
-    statsMemo.get(indexDir) match {
-      case Some((s, v)) if s == sig => v
-      case _ =>
-        val r = spark.read.parquet(s"$indexDir/stats").head()
-        val v = (r.getLong(0), r.getDouble(1))
-        statsMemo.put(indexDir, (sig, v))
-        v
+  def readQsplits(spark: SparkSession, indexDir: String): Array[Long] =
+    memoized(indexDir, "qsplits") {
+      spark.read.parquet(s"$indexDir/qsplits").head().getSeq[Long](0).toArray
     }
-  }
+
+  def readStats(spark: SparkSession, indexDir: String): (Long, Double) =
+    memoized(indexDir, "stats") {
+      val r = spark.read.parquet(s"$indexDir/stats").head()
+      (r.getLong(0), r.getDouble(1))
+    }
 
   // --- stage 1: per-shard segment build ----------------------------------------
 
@@ -753,32 +724,20 @@ object SegmentBuilder {
     val (n, avgdl) = readStats(spark, indexDir)
     val files =
       if (shard < 0) ""
-      else {
-        val dir = new java.io.File(s"$indexDir/postings/shard=$shard")
-        Option(dir.listFiles()).map(_.filter(_.getName.endsWith(".parquet"))
-          .map(f => s"${f.getName}:${f.length}").sorted.mkString(",")).getOrElse("")
-      }
-    val md = MessageDigest.getInstance("SHA-256")
-    val s = s"$indexDir|n=$n|avgdl=$avgdl|k1=${cfg.k1}|b=${cfg.b}|bs=${cfg.blockSize}|" +
-      s"shards=${cfg.shards}|salt=${cfg.saltTargetPostings}|files=$files"
-    md.digest(s.getBytes(StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
+      else IndexIo.listing(IndexIo.parquetFiles(new java.io.File(s"$indexDir/postings/shard=$shard")))
+    IndexIo.sha256Hex(s"$indexDir|n=$n|avgdl=$avgdl|k1=${cfg.k1}|b=${cfg.b}|bs=${cfg.blockSize}|" +
+      s"shards=${cfg.shards}|salt=${cfg.saltTargetPostings}|files=$files")
   }
 
   private def manifestPath(indexDir: String, shard: Int): Path =
     Paths.get(indexDir, "manifest", s"shard_$shard.json")
 
-  def writeManifest(indexDir: String, m: ShardManifest): Unit = {
-    val dir = Paths.get(indexDir, "manifest")
-    Files.createDirectories(dir)
-    val json =
+  /** The atomic checkpoint commit of one shard. */
+  def writeManifest(indexDir: String, m: ShardManifest): Unit =
+    IndexIo.commitFile(manifestPath(indexDir, m.shard),
       s"""{"shard":${m.shard},"status":"${m.status}","postings":${m.postings},""" +
         s""""segRows":${m.segRows},"bytes":${m.bytes},"seconds":${m.seconds},""" +
-        s""""lineage":"${m.lineage}"}"""
-    val tmp = dir.resolve(s"shard_${m.shard}.json.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifestPath(indexDir, m.shard), // atomic checkpoint commit
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+        s""""lineage":"${m.lineage}"}""")
 
   def manifestDone(indexDir: String, shard: Int, expectedLineage: String): Boolean = {
     val p = manifestPath(indexDir, shard)
@@ -792,18 +751,14 @@ object SegmentBuilder {
     * matching lineage. Returns the manifests of the shards built NOW
     * (resume evidence: an up-to-date index returns Nil).
     *
-    * `concurrency` > 1 submits shard jobs concurrently (Spark schedules
-    * them FIFO across the same executors) — checkpoint granularity is
+    * The shards run through [[IndexIo.forShards]]: `concurrency` > 1
+    * submits shard jobs concurrently — checkpoint granularity is
     * unchanged since each shard still commits its own manifest the
     * moment it finishes; it only removes the serial job-submission gaps
-    * that otherwise cap scaling.
-    *
-    * `cancel` is the orderly-cancellation probe (the reference's
-    * CancellationToken checked per batch,
-    * /root/reference/ViewModels/MainViewModel.cs:292-311): once it
-    * returns true no NEW shard starts; shards already committed keep
-    * their manifests, so a re-run resumes with exactly the unfinished
-    * shards through the ordinary checkpoint path. */
+    * that otherwise cap scaling. `cancel` is the orderly-cancellation
+    * probe: once it returns true no NEW shard starts; shards already
+    * committed keep their manifests, so a re-run resumes with exactly
+    * the unfinished shards through the ordinary checkpoint path. */
   def buildAll(spark: SparkSession, indexDir: String,
                cfg: EngineConfig = EngineConfig.default,
                concurrency: Int = 1,
@@ -814,25 +769,12 @@ object SegmentBuilder {
     // per-batch events), emitted at each manifest commit
     val t0 = System.nanoTime()
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
-    def runOne(shard: Int): Option[ShardManifest] =
-      if (cancel()) None
-      else {
-        val m = buildShard(spark, indexDir, shard, cfg)
-        writeManifest(indexDir, m)
-        graft.metrics.Progress.emit("build", "shard",
-          done.incrementAndGet(), todo.size, t0)
-        Some(m)
-      }
-    if (concurrency <= 1 || todo.size <= 1) todo.flatMap(runOne)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(concurrency, todo.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(todo.map(s => Future(runOne(s)))), Duration.Inf)
-        .flatten
-      finally pool.shutdown()
+    IndexIo.forShards(todo, concurrency, cancel) { shard =>
+      val m = buildShard(spark, indexDir, shard, cfg)
+      writeManifest(indexDir, m)
+      graft.metrics.Progress.emit("build", "shard",
+        done.incrementAndGet(), todo.size, t0)
+      Some(m)
     }
   }
 
@@ -849,46 +791,23 @@ object SegmentBuilder {
     * re-tokenizing anything (postings and docmap are already on disk —
     * the cure stops being a full re-ingest).
     *
-    * Crash contract (same pattern as [[compactShard]]): both tables
-    * land COMPLETELY under `_restat_tmp` first, then swap through a
-    * trash dir per table; on entry every crash point recovers (trash
-    * without live restores it, trash with live is discarded, leftover
-    * tmp is discarded and recomputed). Returns the new (n, avgdl). */
+    * Both tables land COMPLETELY under `_restat_tmp` (the derivation
+    * ingest uses, [[writeStats]]), then each replaces its live table
+    * through an [[IndexIo.Swap]] with trash `_restat_trash_<table>`.
+    * Recovery runs before the ingest check: a crash mid-swap of
+    * `qsplits` leaves no `qsplits`, which [[ingestDone]] requires.
+    * Returns the new (n, avgdl). */
   def restat(spark: SparkSession, indexDir: String,
              cfg: EngineConfig = EngineConfig.default): (Long, Double) = {
+    val tmp = Paths.get(indexDir, "_restat_tmp")
+    val swaps = Seq("stats", "qsplits").map(t =>
+      IndexIo.Swap(Paths.get(indexDir, t), tmp.resolve(t), Paths.get(indexDir, s"_restat_trash_$t")))
+    swaps.foreach(_.recover())
     require(ingestDone(indexDir, cfg),
       s"$indexDir is not a completed ingest under this layout/config")
-    def rmTree(p: Path): Unit = {
-      new scala.reflect.io.Directory(p.toFile).deleteRecursively(); ()
-    }
-    val tables = Seq("stats", "qsplits")
-    // crash recovery — see scaladoc
-    for (t <- tables) {
-      val live = Paths.get(indexDir, t)
-      val trash = Paths.get(indexDir, s"_restat_trash_$t")
-      if (Files.exists(trash) && !Files.exists(live)) Files.move(trash, live)
-      else if (Files.exists(trash)) rmTree(trash)
-    }
-    val tmp = Paths.get(indexDir, "_restat_tmp")
-    if (Files.exists(tmp)) rmTree(tmp)
-    // same derivations ingest uses (docmap -> n/avgdl, docmap -> CDF
-    // splits), so a restat'd index is indistinguishable from a fresh
-    // ingest of the same docmap. ONE docmap definition feeds both.
-    val dm = spark.read.parquet(s"$indexDir/docmap")
-    dm.agg(count(lit(1)).as("n"), avg(col("doclen")).as("avgdl"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/stats")
-    dm.select(expr(s"approx_percentile(doc_id, array(${
-        (1 until QuantileBuckets).map(i => i.toDouble / QuantileBuckets).mkString(",")}))")
-        .as("splits"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/qsplits")
-    for (t <- tables) {
-      val live = Paths.get(indexDir, t)
-      val trash = Paths.get(indexDir, s"_restat_trash_$t")
-      Files.move(live, trash)
-      Files.move(tmp.resolve(t), live)
-      rmTree(trash)
-    }
-    rmTree(tmp)
+    writeStats(spark, indexDir, tmp.toString)
+    swaps.foreach(_.commit())
+    IndexIo.rmTree(tmp)
     readStats(spark, indexDir) // fresh listing -> memo refreshes too
   }
 }

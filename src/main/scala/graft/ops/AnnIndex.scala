@@ -1,11 +1,11 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.security.MessageDigest
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.index.IndexIo
 
 /** Persisted ANN indexes: the build/serve split the text index already
   * has (indexes are built ONCE at DDL time, not per query — the
@@ -32,7 +32,7 @@ object AnnIndex {
   final case class IvfConfig(nlist: Int = 16, nprobe: Int = 4, kmeansIters: Int = 3)
   final case class LshConfig(nPlanes: Int = 8, probeRadius: Int = 2)
 
-  // --- lineage + marker (SegmentBuilder-style checkpointing) -------------------
+  // --- lineage + marker (the index write path's protocols, IndexIo) ------------
 
   /** Algorithm version, part of every lineage string: BUMP THIS whenever
     * the hashing/bucketing/centroid math changes (planeComponent mix
@@ -49,14 +49,8 @@ object AnnIndex {
     * no-op. */
   def lineageOf(srcPath: String, params: String): String = {
     val f = new java.io.File(srcPath)
-    val listing =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.filter(_.getName.endsWith(".parquet"))
-          .map(x => s"${x.getName}:${x.length}").sorted.mkString(",")).getOrElse("")
-      else s"${f.getName}:${f.length}"
-    val md = MessageDigest.getInstance("SHA-256")
-    md.digest(s"v$AlgoVersion|$params|files=$listing".getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
+    val files = if (f.isDirectory) IndexIo.parquetFiles(f) else Array(f)
+    IndexIo.sha256Hex(s"v$AlgoVersion|$params|files=${IndexIo.listing(files)}")
   }
 
   def builtDone(dir: String, lineage: String): Boolean = {
@@ -64,17 +58,20 @@ object AnnIndex {
     Files.exists(p) && Files.readString(p) == lineage
   }
 
-  private def commitMarker(dir: String, lineage: String): Unit = {
-    val d = Paths.get(dir)
-    Files.createDirectories(d)
-    val tmp = d.resolve("_built.tmp")
-    Files.writeString(tmp, lineage)
-    Files.move(tmp, d.resolve("_built"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** Resume: build (with the lineage) unless `dir` already holds a
+    * completed build of exactly this lineage. Returns true iff a build
+    * ran NOW — resume evidence. */
+  private def ensure(dir: String, lineage: String)(build: String => Unit): Boolean =
+    if (builtDone(dir, lineage)) false else { build(lineage); true }
 
-  private def invalidateMarker(dir: String): Unit = {
-    Files.deleteIfExists(Paths.get(dir, "_built")); ()
+  /** The marker protocol of both builds: invalidate `_built` first (a
+    * crash mid-overwrite must not look complete), write the artifact,
+    * then commit the lineage atomically. */
+  private def markedBuild(dir: String, lineage: String)(write: => Unit): Unit = {
+    val marker = Paths.get(dir, "_built")
+    Files.deleteIfExists(marker)
+    write
+    IndexIo.commitFile(marker, lineage)
   }
 
   private def normalized(embeddings: DataFrame): DataFrame =
@@ -90,29 +87,26 @@ object AnnIndex {
   def buildIvf(spark: SparkSession, embeddings: DataFrame, dir: String,
                cfg: IvfConfig = IvfConfig(), lineage: String = ""): Unit = {
     import spark.implicits._
-    invalidateMarker(dir) // a crash mid-overwrite must not look complete
-    val e = normalized(embeddings)
-    val centroids = Similarity.kmeansCentroids(e, cfg.nlist, cfg.kmeansIters)
-    centroids.toSeq.map { case (l, c) => (l, c.toSeq) }
-      .toDF("list", "centroid")
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
-    val bc = centroids
-    e.as[(Long, Int, Array[Double])]
-      .map { case (id, label, v) => (id, label, v, bc.maxBy(c => Similarity.cos(c._2, v))._1) }
-      .toDF("vec_id", "label", "v", "list")
-      .write.mode(SaveMode.Overwrite).partitionBy("list").parquet(s"$dir/assign")
-    commitMarker(dir, lineage)
+    markedBuild(dir, lineage) {
+      val e = normalized(embeddings)
+      val centroids = Similarity.kmeansCentroids(e, cfg.nlist, cfg.kmeansIters)
+      centroids.toSeq.map { case (l, c) => (l, c.toSeq) }
+        .toDF("list", "centroid")
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/centroids")
+      val bc = centroids
+      e.as[(Long, Int, Array[Double])]
+        .map { case (id, label, v) => (id, label, v, bc.maxBy(c => Similarity.cos(c._2, v))._1) }
+        .toDF("vec_id", "label", "v", "list")
+        .write.mode(SaveMode.Overwrite).partitionBy("list").parquet(s"$dir/assign")
+    }
   }
 
-  /** Build unless an identical build already completed (atomic marker +
-    * lineage match). Returns true iff a build ran NOW — resume evidence. */
+  /** Build unless an identical build already completed (see [[ensure]]). */
   def ensureIvf(spark: SparkSession, embeddings: => DataFrame, dir: String,
-                srcPath: String, cfg: IvfConfig = IvfConfig()): Boolean = {
-    val lin = lineageOf(srcPath, s"ivf|nlist=${cfg.nlist}|iters=${cfg.kmeansIters}")
-    if (builtDone(dir, lin)) false
-    else { buildIvf(spark, embeddings, dir, cfg, lin); true }
-  }
+                srcPath: String, cfg: IvfConfig = IvfConfig()): Boolean =
+    ensure(dir, lineageOf(srcPath, s"ivf|nlist=${cfg.nlist}|iters=${cfg.kmeansIters}"))(
+      buildIvf(spark, embeddings, dir, cfg, _))
 
   /** Probe-only IVF query: rank the persisted centroids against the
     * query vector (nlist rows, driver-side), then read ONLY the nprobe
@@ -143,19 +137,16 @@ object AnnIndex {
   /** Persist the sign-pattern bucket table partitioned by `bucket` —
     * one narrow map over the corpus at BUILD time. */
   def buildLsh(spark: SparkSession, embeddings: DataFrame, dir: String,
-               cfg: LshConfig = LshConfig(), lineage: String = ""): Unit = {
-    invalidateMarker(dir)
-    Similarity.bucketed(embeddings, cfg.nPlanes) // normalizes internally
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(s"$dir/buckets")
-    commitMarker(dir, lineage)
-  }
+               cfg: LshConfig = LshConfig(), lineage: String = ""): Unit =
+    markedBuild(dir, lineage) {
+      Similarity.bucketed(embeddings, cfg.nPlanes) // normalizes internally
+        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(s"$dir/buckets")
+    }
 
   def ensureLsh(spark: SparkSession, embeddings: => DataFrame, dir: String,
-                srcPath: String, cfg: LshConfig = LshConfig()): Boolean = {
-    val lin = lineageOf(srcPath, s"lsh|planes=${cfg.nPlanes}")
-    if (builtDone(dir, lin)) false
-    else { buildLsh(spark, embeddings, dir, cfg, lin); true }
-  }
+                srcPath: String, cfg: LshConfig = LshConfig()): Boolean =
+    ensure(dir, lineageOf(srcPath, s"lsh|planes=${cfg.nPlanes}"))(
+      buildLsh(spark, embeddings, dir, cfg, _))
 
   /** Probe-only multi-probe LSH query: the query's bucket and its
     * Hamming ball are pure driver-side arithmetic; candidates come from

@@ -159,7 +159,7 @@ object QueryDsl {
   /** Prefix top-k served from the segment index: each query's prefix
     * (lowercased — ES prefix queries are not analyzed) expands to the
     * lexicographically-first `maxExpansions` matching index terms via
-    * the handle's cached term dictionary ([[Wand.Handle.expandPrefix]]
+    * the handle's cached term dictionary ([[Wand.Handle.prefixExpansions]]
     * — a metadata-column scan, never posting payloads), and the
     * expanded disjunction serves through the SAME exact block-max WAND
     * path as a match query (ES rewrite=scoring_boolean: each expanded
@@ -183,7 +183,7 @@ object QueryDsl {
     * index terms within AUTO Levenshtein distance
     * ([[autoFuzziness]]; classic distance on both engine and oracle),
     * highest-df-first capped at `maxExpansions`
-    * ([[Wand.Handle.expandFuzzy]]), served through exact WAND with each
+    * ([[Wand.Handle.expandFuzzyBatch]]), served through exact WAND with each
     * expansion's own df. */
   def fuzzyTopK(spark: SparkSession, indexDir: String,
                 queries: Seq[(Int, String)],
@@ -202,7 +202,7 @@ object QueryDsl {
   /** Wildcard top-k served from the segment index: the pattern (`*` =
     * any sequence, `?` = one char; lowercased — ES wildcard queries are
     * not analyzed) expands against the cached term dictionary
-    * ([[Wand.Handle.expandWildcard]], lexicographic-first
+    * ([[Wand.wildcardRegex]] into [[Wand.Handle.regexExpansions]], lexicographic-first
     * `maxExpansions`) and the expansion serves through the same exact
     * block-max WAND as match/prefix (rewrite=scoring_boolean: each term
     * scores with its own df). */
@@ -212,8 +212,7 @@ object QueryDsl {
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
     val h = Wand.handleFor(spark, indexDir, cfg)
     // one metadata job expands the whole batch: compile each wildcard
-    // to its anchored regex (expandWildcard's translation) and ride the
-    // shared regex batch
+    // to its anchored regex and ride the shared regex batch
     val qp = queries.map { case (qid, p) =>
       (qid, Wand.wildcardRegex(p.trim.toLowerCase(java.util.Locale.ROOT))) }
     val exp = h.regexExpansions(qp.map(_._2), maxExpansions)
@@ -1055,7 +1054,7 @@ object QueryDsl {
   /** ES regexp query served from the segment index: the pattern is
     * anchored full-term (the Lucene contract — `ta.le` matches `table`,
     * not `stables`), expands against the cached term dictionary
-    * ([[Wand.Handle.expandRegex]], lexicographic-first `maxExpansions`)
+    * ([[Wand.Handle.regexExpansions]], lexicographic-first `maxExpansions`)
     * and serves through the same exact WAND as prefix/wildcard. The
     * expansion scans the (term, df) metadata table, never postings — a
     * regexp with no literal prefix costs a full term-dict scan, the
@@ -1071,8 +1070,7 @@ object QueryDsl {
     // patterns match VERBATIM against the (lowercase) term dictionary —
     // lowercasing a regex is not semantics-preserving (\D would become
     // \d), so unlike prefix/wildcard the pattern is the caller's; one
-    // metadata job expands the whole batch (anchored exactly like
-    // expandRegex)
+    // metadata job expands the whole batch (anchored full-term)
     val qp = queries.map { case (qid, p) => (qid, "^(?:" + p.trim + ")$") }
     val exp = h.regexExpansions(qp.map(_._2), maxExpansions)
     h.topKExpanded(qp.map { case (qid, rx) => qid -> exp(rx) })

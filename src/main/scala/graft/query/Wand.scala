@@ -282,12 +282,6 @@ object Wand {
   private def finishScores(heap: mutable.TreeSet[(Double, Long)], k: Int): Seq[(Double, Long)] =
     heap.toSeq.sortBy { case (s, d) => (-s, d) }.take(k)
 
-  /** Single-task exact WAND with ranks (spec/direct use). */
-  def wandQuery(qid: Int, rows: Array[QSegRow], dfMap: Map[String, Long],
-                n: Long, avgdl: Double, k: Int, k1: Double, b: Double): Seq[Hit] =
-    wandScores(rows, dfMap, n, avgdl, k, k1, b)
-      .zipWithIndex.map { case ((s, d), r) => Hit(qid, (r + 1).toLong, d, s) }
-
   /** Spark entry: per-(query, doc-range) WAND groups over the pruned
     * segment rows of the query's terms (posting lists arrive
     * compressed; block-max WAND decodes only the blocks it cannot
@@ -418,56 +412,31 @@ object Wand {
         queries.map { case (qid, t) => qid -> CodeTokenizer.queryTerms(t) },
         taskPostingsAcc)
 
-    /** Lexicographically-first `maxExpansions` index terms starting with
-      * `prefix` — the ES prefix-query expansion (Lucene walks the term
-      * dict in order, which IS lexicographic; the cap is
-      * index.max_terms_count's role). ES prefix queries are NOT
-      * analyzed; the caller lowercases, nothing more. */
-    def expandPrefix(prefix: String, maxExpansions: Int): Seq[String] =
-      expandPrefixBatch(Seq(prefix), maxExpansions)(prefix)
-
-    /** Index terms matching an ES wildcard pattern (`*` = any sequence
-      * incl. empty, `?` = exactly one char), lexicographic-first capped
-      * at maxExpansions. ES wildcard queries are NOT analyzed (caller
-      * lowercases), and a leading wildcard costs a full term-dictionary
-      * scan in Lucene too — here that scan is the cached (term, df)
-      * metadata table, never posting payloads. */
-    def expandWildcard(pattern: String, maxExpansions: Int): Seq[String] =
-      expandRegexBatch(Seq(wildcardRegex(pattern)), maxExpansions).values.head
-
-    /** Index terms FULL-matching an anchored regexp (the Lucene regexp
-      * query contract: the pattern must consume the whole term),
-      * lexicographic-first capped at maxExpansions. Callers keep
-      * patterns inside the Java/RE2 common subset (literals, classes,
-      * ., *, +, |, grouping) so the DuckDB oracle's regexp_full_match
-      * agrees. */
-    def expandRegex(pattern: String, maxExpansions: Int): Seq[String] =
-      expandRegexBatch(Seq("^(?:" + pattern + ")$"), maxExpansions).values.head
-
-    /** Index terms within classic Levenshtein distance <= maxDist of
-      * `term`, highest-df first (ES fuzzy rewrite
-      * top_terms_blended_freqs keeps the highest-frequency expansions),
-      * ties broken term-asc, capped at maxExpansions. Distance is
-      * CLASSIC Levenshtein on both engine and oracle (Spark's
-      * levenshtein(); ES uses Damerau where a transposition costs 1 —
-      * documented deviation, SURVEY §12). */
-    def expandFuzzy(term: String, maxDist: Int, maxExpansions: Int): Seq[String] =
-      expandFuzzyBatch(Seq(term -> maxDist), maxExpansions)(term, maxDist)
-
-    /** Every prefix's expansion out of ONE metadata job (see
+    /** Every prefix's expansion out of ONE metadata job: the
+      * lexicographically-first `maxExpansions` index terms starting with
+      * it — the ES prefix-query expansion (Lucene walks the term dict in
+      * order; prefixes are not analyzed, the caller lowercases). See
       * [[expandCapped]]; at most tasks x prefixes x maxExpansions rows
-      * reach the driver). */
+      * reach the driver. */
     def expandPrefixBatch(prefixes: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
       ServedTopK.termsOf(prefixExpansions(prefixes, maxExpansions))
 
     /** Every compiled (anchored) pattern's expansion out of ONE metadata
-      * job — the wildcard and regexp batches (see [[expandCapped]]; at
-      * most tasks x patterns x maxExpansions rows reach the driver). */
+      * job — the wildcard ([[wildcardRegex]]) and regexp batches: index
+      * terms FULL-matching the pattern, lexicographic-first. Callers keep
+      * patterns inside the Java/RE2 common subset (literals, classes,
+      * ., *, +, |, grouping) so the DuckDB oracle's regexp_full_match
+      * agrees. See [[expandCapped]]; at most tasks x patterns x
+      * maxExpansions rows reach the driver. */
     def expandRegexBatch(patterns: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
       ServedTopK.termsOf(regexExpansions(patterns, maxExpansions))
 
-    /** Every (term, maxDist) input's expansion out of ONE metadata job,
-      * capped and keyed per (term, maxDist) pair: one term expanded at
+    /** Every (term, maxDist) input's expansion out of ONE metadata job:
+      * index terms within CLASSIC Levenshtein distance <= maxDist,
+      * highest-df first, ties term-asc (ES fuzzy's
+      * top_terms_blended_freqs; ES counts a transposition as 1 —
+      * documented deviation, SURVEY §12), capped and keyed per
+      * (term, maxDist) pair: one term expanded at
       * two distances in one batch yields two independent expansions
       * (see [[expandCapped]]; at most tasks x inputs x maxExpansions
       * rows reach the driver). The length window is a cheap pre-filter

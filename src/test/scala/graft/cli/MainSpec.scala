@@ -332,6 +332,41 @@ class MainSpec extends SparkSuite {
     }
   }
 
+  test("every maintenance verb's JSON line parses strictly: normal, cancelled, NaN avgdl") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val metrics = new graft.metrics.Metrics().json
+    // each verb's own fields, in the order its line carries them
+    val verbs = Seq(
+      "ingest" -> Nil,
+      "build" -> Seq("shardsBuilt" -> 3, "postings" -> 1200L, "bytes" -> 4096L),
+      "append" -> Nil,
+      "compact" -> Seq("shards" -> 4, "rewritten" -> 2),
+      "restat" -> Seq("docs" -> 540L, "avgdl" -> 7.25, "shardsRebuilt" -> 4),
+      "merge" -> Nil,
+      "migrate" -> Seq("total" -> 10L, "valid" -> 8L, "invalid" -> 2L, "with_warnings" -> 1L))
+    def keys(n: com.fasterxml.jackson.databind.JsonNode): Seq[String] = {
+      val b = Seq.newBuilder[String]
+      n.fieldNames().forEachRemaining(k => { b += k; () })
+      b.result()
+    }
+    for ((op, fields) <- verbs) {
+      val line = mapper.readTree(Main.verbLine(op, fields, cancelled = false, 1.5, metrics))
+      assert(keys(line) === ("op" +: fields.map(_._1)) ++ Seq("cancelled", "secs", "metrics"), op)
+      assert(line.get("op").asText === op && !line.get("cancelled").asBoolean)
+      assert(line.get("secs").asDouble === 1.5 && line.get("metrics").isObject, op)
+      for ((k, v) <- fields)
+        assert(line.get(k).isNumber && line.get(k).asText === v.toString, s"$op.$k")
+      // cancelled mid-body: no verb fields, the rest of the line stays
+      val cancelled = mapper.readTree(Main.verbLine(op, Nil, cancelled = true, 0.25, metrics))
+      assert(keys(cancelled) === Seq("op", "cancelled", "secs", "metrics"), op)
+      assert(cancelled.get("cancelled").asBoolean)
+    }
+    // restat over an empty docmap: avgdl is 0/0 = NaN, which JSON cannot hold
+    val nan = mapper.readTree(Main.verbLine("restat",
+      Seq("docs" -> 0L, "avgdl" -> Double.NaN, "shardsRebuilt" -> 0), cancelled = false, 0.1, metrics))
+    assert(nan.get("avgdl").isNull && nan.get("docs").asLong === 0L, nan.toString)
+  }
+
   test("cancellation flag mechanics (CancellationTokenSource semantics)") {
     Cancellation.reset()
     assert(!Cancellation.isRequested)

@@ -72,6 +72,32 @@ class MaintenanceSpec extends SparkSuite {
     } finally { rm(dirA); rm(dirB) }
   }
 
+  test("restat entered mid-swap (stats in trash, partial tmp) recovers and matches a clean restat") {
+    val dir = freshDir()
+    try {
+      val base = spark.range(0L, 200L, 1L, 2).toDF("id")
+        .selectExpr("id AS doc_id", "concat('mid swap doc ', id % 11, ' body', repeat(' w', id % 5)) AS text")
+      SegmentBuilder.ingest(spark, base, col("doc_id"), col("text"), dir, cfg)
+      SegmentBuilder.appendDocs(spark, extraDocs, col("doc_id"), col("text"), dir, cfg)
+      val clean = SegmentBuilder.restat(spark, dir, cfg)
+      val cleanSplits = SegmentBuilder.readQsplits(spark, dir).toSeq
+      assert(clean._1 === 240L)
+      // died inside the stats swap: live moved to trash, tmp still there
+      val d = java.nio.file.Paths.get(dir)
+      Files.move(d.resolve("stats"), d.resolve("_restat_trash_stats"))
+      Files.createDirectories(d.resolve("_restat_tmp").resolve("stats").resolve("_temporary"))
+      assert(SegmentBuilder.restat(spark, dir, cfg) === clean)
+      assert(SegmentBuilder.readQsplits(spark, dir).toSeq === cleanSplits)
+      for (leftover <- Seq("_restat_trash_stats", "_restat_trash_qsplits", "_restat_tmp"))
+        assert(!Files.exists(d.resolve(leftover)), leftover)
+      // died inside the qsplits swap: the ingest check must not refuse the repair
+      Files.move(d.resolve("qsplits"), d.resolve("_restat_trash_qsplits"))
+      assert(!SegmentBuilder.ingestDone(dir, cfg))
+      assert(SegmentBuilder.restat(spark, dir, cfg) === clean)
+      assert(SegmentBuilder.readQsplits(spark, dir).toSeq === cleanSplits)
+    } finally rm(dir)
+  }
+
   test("orderly cancellation: buildAll stops launching shards; resume builds exactly the rest") {
     val dir = freshDir()
     try {

@@ -5,9 +5,10 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlanInfo}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.{SparkEntry, SparkSuite}
@@ -134,6 +135,54 @@ class PlanSpec extends SparkSuite {
     val plan = graft.index.Postings.build(docs, col("doc_id"), col("text"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"postings must be shuffle-free:\n$plan")
+  }
+
+  /** The `Sort` nodes planned by each write into a `postings` table that
+    * `f` runs, from EVERY session: ingest derives its outputs in a
+    * cloned session, which a QueryExecutionListener on this one never
+    * hears, so this listens for the SQL execution starts on the bus. */
+  private def postingsWriteSorts(f: => Any): Seq[Seq[String]] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlanInfo]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo); ()
+        case _ => ()
+      }
+    }
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    plans.asScala.toSeq.map(nodes)
+      .filter(_.exists(n => n.nodeName.contains("InsertIntoHadoopFsRelationCommand") &&
+        n.simpleString.contains("/postings,")))
+      .map(_.filter(_.nodeName == "Sort").map(_.simpleString))
+  }
+
+  test("postings writes: ingest plans no clustering sort, appendDocs sorts by shard, thash, doc_id") {
+    val cfg = graft.config.EngineConfig.default.copy(shards = 2, buildPartitions = 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_postings_").toString
+    def docs(from: Long, to: Long) = spark.range(from, to, 1L, 2).toDF("id")
+      .selectExpr("id AS doc_id", "concat('sort guard doc ', id % 13, ' text') AS text")
+    try {
+      val ingest = postingsWriteSorts(graft.index.SegmentBuilder.ingest(
+        spark, docs(0L, 300L), col("doc_id"), col("text"), dir, cfg))
+      assert(ingest.size === 1, s"one postings write per ingest: $ingest")
+      // the file writer's own partition-column sort (shard alone) is the
+      // only one; a clustering key (thash, doc_id) measured +40% here
+      assert(ingest.head.forall(_.matches("Sort \\[shard#\\d+ ASC NULLS FIRST\\], false, 0")),
+        s"ingest's postings write must stay unclustered: ${ingest.head}")
+      val append = postingsWriteSorts(graft.index.SegmentBuilder.appendDocs(
+        spark, docs(300L, 340L), col("doc_id"), col("text"), dir, cfg))
+      assert(append.size === 1, s"one postings write per append: $append")
+      val clustered = ("Sort \\[shard#\\d+ ASC NULLS FIRST, thash#\\d+L ASC NULLS FIRST, " +
+        "doc_id#\\d+L ASC NULLS FIRST\\]").r
+      assert(append.head.exists(clustered.findFirstIn(_).isDefined),
+        s"appendDocs's postings write must cluster by shard, thash, doc_id: ${append.head}")
+    } finally new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 
   // Round-2 guards: no global-window top-k anywhere. A Window.orderBy

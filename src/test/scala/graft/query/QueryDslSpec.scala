@@ -100,15 +100,15 @@ class QueryDslSpec extends SparkSuite {
     // sparkle (d=2) and span (d=2) stay out
     assert(r(1).map(_._1).toSet === Set(1L, 2L, 3L))
     val h = Wand.handleFor(spark, fuzzyIdx, cfg)
-    assert(h.expandFuzzy("spark", 1, 50).toSet === Set("spark", "spork", "stark"))
+    assert(h.expandFuzzyBatch(Seq("spark" -> 1), 50)("spark", 1).toSet === Set("spark", "spork", "stark"))
     // highest-df first: 'engine' (df 5) leads any d=2 expansion set
-    assert(h.expandFuzzy("engine", 2, 50).head === "engine")
+    assert(h.expandFuzzyBatch(Seq("engine" -> 2), 50)("engine", 2).head === "engine")
   }
 
   test("prefix: lexicographic-first expansion, cap respected, served exactly") {
     val h = Wand.handleFor(spark, fuzzyIdx, cfg)
-    assert(h.expandPrefix("sp", 50) === Seq("span", "spark", "sparkle", "spork"))
-    assert(h.expandPrefix("sp", 2) === Seq("span", "spark"), "cap keeps the lexicographic head")
+    assert(h.expandPrefixBatch(Seq("sp"), 50)("sp") === Seq("span", "spark", "sparkle", "spork"))
+    assert(h.expandPrefixBatch(Seq("sp"), 2)("sp") === Seq("span", "spark"), "cap keeps the lexicographic head")
     val r = hits(prefixTopK(spark, fuzzyIdx, Seq(1 -> "SPAR", 2 -> "qqq"), cfg = cfg))
     // 'SPAR' lowercases (prefix queries are unanalyzed but case-folded):
     // spark + sparkle -> docs 1 and 4; absent prefix -> no rows
@@ -120,7 +120,7 @@ class QueryDslSpec extends SparkSuite {
     val docs = df(fuzzyIdx2Docs: _*)
     val idx = indexOf(fuzzyIdx2Docs: _*)
     val h = Wand.handleFor(spark, idx, cfg)
-    val exp = h.expandPrefix("ga", 50)
+    val exp = h.expandPrefixBatch(Seq("ga"), 50)("ga")
     val served = hits(prefixTopK(spark, idx, Seq(1 -> "ga"), cfg = cfg))
     val declarative = hits(BM25.topK(spark, docs, col("doc_id"), col("text"),
       Seq(1 -> exp.mkString(" ")), cfg))

@@ -66,7 +66,7 @@ class ServedTopKSpec extends SparkSuite {
       assert(d2 === Seq("park", "spark", "span"))
       for ((d, got) <- Seq(1 -> d1, 2 -> d2)) {
         assert(got === terms(fuzzyMatches(dictDf, "spark", d).limit(cap)), s"dist $d")
-        assert(got === h.expandFuzzy("spark", d, cap), s"dist $d alone")
+        assert(got === h.expandFuzzyBatch(Seq("spark" -> d), cap)("spark", d), s"dist $d alone")
       }
       assertThrows[NoSuchElementException](exp("spark"))
     }

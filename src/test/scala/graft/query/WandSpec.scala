@@ -246,7 +246,9 @@ class WandSpec extends SparkSuite {
         declarative(prefixes.map { case (q, p) => q -> byPrefix(p) }))
       val fuzzy = Seq(8 -> "delts", 9 -> "qqqqqq")
       assert(rows(QueryDsl.fuzzyTopK(spark, dir, fuzzy, cfg = c)) === declarative(fuzzy.map {
-        case (q, t) => q -> h.expandFuzzy(t, QueryDsl.autoFuzziness(t), QueryDsl.MaxExpansions) }))
+        case (q, t) =>
+          val d = QueryDsl.autoFuzziness(t)
+          q -> h.expandFuzzyBatch(Seq(t -> d), QueryDsl.MaxExpansions)(t, d) }))
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
 
