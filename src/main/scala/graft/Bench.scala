@@ -321,8 +321,8 @@ object Bench {
         val s2 = session(s"local[$cpus]", cpus.toInt)
         try {
           val idx = SparkEntry.ensureIndex(s2, sfDir)
-          val wandHandle = new graft.query.Wand.Handle(s2, idx, SparkEntry.IndexCfg)
-          val phraseHandle = new graft.query.BM25.PhraseHandle(s2, idx, SparkEntry.IndexCfg)
+          val wandHandle = graft.query.Wand.handleFor(s2, idx, SparkEntry.IndexCfg)
+          val phraseHandle = graft.query.BM25.phraseHandleFor(s2, idx, SparkEntry.IndexCfg)
           def timeReps(reps: Int, n: Int)(once: => Unit): Double = {
             once // warmup
             val t0 = System.nanoTime()

@@ -162,8 +162,10 @@ object SegmentBuilder {
     // full-core utilization but ~2x the analyzer CPU, and the analyzer
     // IS the dominant ingest cost; staging trades one extra
     // columnar write+read (cheap, especially on tmpfs) for half the
-    // tokenize work. Derived outputs still run concurrently.
-    val staging = s"$indexDir/_staging"
+    // tokenize work. Derived outputs still run concurrently. The name
+    // must not start with `_` or `.`: Spark treats such a root path as
+    // hidden (it warns, and leans on not dropping it).
+    val staging = s"$indexDir/staging"
     val tStage0 = System.nanoTime()
     stagedRows(docs, idCol.cast("long"), contentCol, cfg)
       .write.mode(SaveMode.Overwrite).parquet(staging)

@@ -26,7 +26,7 @@ import graft.index.Postings
   *  - span: [[phraseSpans]] decides phrase adjacency over joined
   *    (keys…, doc_id, off, m, positions) rows;
   *  - expansion cap: [[Wand.expandCapped]] caps term expansions over
-  *    any (term, df) frame.
+  *    any (term, df) RDD.
   */
 object BM25 {
 
@@ -393,11 +393,12 @@ object BM25 {
     * a plan that still owes a ranking shuffle and a range sort.
     *
     * Staleness contract (same as [[Wand.Handle]]): the handle reflects
-    * the index state at construction — after [[graft.index.SegmentBuilder.appendDocs]]
-    * / a rebuild, construct a new handle (stats and cached df would
-    * otherwise lag the appended docs). */
-  final class PhraseHandle(spark: SparkSession, indexDir: String,
-                           cfg: EngineConfig = EngineConfig.default) {
+    * the index state at construction; [[phraseHandleFor]] swaps it after
+    * [[graft.index.SegmentBuilder.appendDocs]] / a rebuild (stats and
+    * cached df would otherwise lag the appended docs). */
+  final class PhraseHandle private[query] (spark: SparkSession, indexDir: String,
+                                           cfg: EngineConfig = EngineConfig.default)
+      extends AutoCloseable {
     private val (n, avgdl) = graft.index.SegmentBuilder.readStats(spark, indexDir)
     private val dfCache = scala.collection.concurrent.TrieMap[String, Long]()
     /** The postings store, opened once per handle (not per batch). */
@@ -417,6 +418,9 @@ object BM25 {
       ServedTopK.rank(phraseScoredOver(prunePositional(postings, indexDir, terms),
         n, avgdl, analyzed, cfg, slop, terms.map(t => t -> dfCache(t)).toMap), cfg.topK)
     }
+
+    /** Nothing to release: the handle caches nothing on the executors. */
+    def close(): Unit = ()
   }
 
   /** Phrase candidate sets from positional postings, ALL phrases in one

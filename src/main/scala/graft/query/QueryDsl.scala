@@ -159,8 +159,8 @@ object QueryDsl {
   /** Prefix top-k served from the segment index: each query's prefix
     * (lowercased — ES prefix queries are not analyzed) expands to the
     * lexicographically-first `maxExpansions` matching index terms via
-    * the handle's cached term dictionary ([[Wand.Handle.prefixExpansions]]
-    * — a metadata-column scan, never posting payloads), and the
+    * the handle's serving cache ([[Wand.Handle.expandPrefixBatch]]
+    * — a dictionary walk, never posting payloads), and the
     * expanded disjunction serves through the SAME exact block-max WAND
     * path as a match query (ES rewrite=scoring_boolean: each expanded
     * term scores with its own df). An empty expansion yields zero hits
@@ -174,8 +174,8 @@ object QueryDsl {
     // round-trip per query — pure fixed cost at serving time)
     val qp = queries.map { case (qid, p) =>
       qid -> p.trim.toLowerCase(java.util.Locale.ROOT) }
-    val exp = h.prefixExpansions(qp.map(_._2), maxExpansions)
-    h.topKExpanded(qp.map { case (qid, p) => qid -> exp(p) })
+    val exp = h.expandPrefixBatch(qp.map(_._2), maxExpansions)
+    h.topKTerms(qp.map { case (qid, p) => qid -> exp(p) })
   }
 
   /** Fuzzy top-k served from the segment index: the query term (single
@@ -196,13 +196,13 @@ object QueryDsl {
       (qid, t, autoFuzziness(t))
     }
     val exp = h.expandFuzzyBatch(qt.map { case (_, t, d) => (t, d) }, maxExpansions)
-    h.topKExpanded(qt.map { case (qid, t, d) => qid -> exp.withDf(t, d) })
+    h.topKTerms(qt.map { case (qid, t, d) => qid -> exp(t, d) })
   }
 
   /** Wildcard top-k served from the segment index: the pattern (`*` =
     * any sequence, `?` = one char; lowercased — ES wildcard queries are
     * not analyzed) expands against the cached term dictionary
-    * ([[Wand.wildcardRegex]] into [[Wand.Handle.regexExpansions]], lexicographic-first
+    * ([[Wand.wildcardRegex]] into [[Wand.Handle.expandRegexBatch]], lexicographic-first
     * `maxExpansions`) and the expansion serves through the same exact
     * block-max WAND as match/prefix (rewrite=scoring_boolean: each term
     * scores with its own df). */
@@ -215,8 +215,8 @@ object QueryDsl {
     // to its anchored regex and ride the shared regex batch
     val qp = queries.map { case (qid, p) =>
       (qid, Wand.wildcardRegex(p.trim.toLowerCase(java.util.Locale.ROOT))) }
-    val exp = h.regexExpansions(qp.map(_._2), maxExpansions)
-    h.topKExpanded(qp.map { case (qid, rx) => qid -> exp(rx) })
+    val exp = h.expandRegexBatch(qp.map(_._2), maxExpansions)
+    h.topKTerms(qp.map { case (qid, rx) => qid -> exp(rx) })
   }
 
   /** ES search_after — deep pagination without deep sorting. The cursor
@@ -678,7 +678,7 @@ object QueryDsl {
         first(col("m")).as("m"))
     val cand = BM25.phraseSpans(stage1, Seq("qid"), slop).select("qid", "doc_id")
     val exactTerms = analyzed.flatMap(_._2).distinct
-    // per-term df from the handle's CACHED (term, df) metadata table —
+    // per-term df from the handle's serving cache —
     // same values the pruned-read aggregation produced (sum of
     // n_postings over a term's runs == its postings-row count), without
     // re-reading postings parquet for a metadata quantity
@@ -825,10 +825,11 @@ object QueryDsl {
     val expF = Future {
       val prefixes = prefixClauses.map(_._2).distinct
       if (prefixes.isEmpty) Map.empty[String, Seq[(String, Long)]]
-      else Wand.expandCapped[String](Postings.build(docs, idCol, contentCol)
+      else Wand.expandCapped(Postings.build(docs, idCol, contentCol)
           .filter(prefixes.map(p => col("term").startsWith(p)).reduce(_ || _)) // pruned BEFORE the df agg
-          .groupBy("term").agg(count(lit(1)).as("df")),
-        prefixes, col("term").startsWith(_), ServedTopK.byTerm, maxExpansions)
+          .groupBy("term").agg(count(lit(1)).as("df"))
+          .rdd.map(r => (r.getString(0), r.getLong(1))),
+        prefixes, Wand.startsWith, ServedTopK.byTerm, maxExpansions)
     }
     val (n, avgdl, dfLit) = Await.result(statsF, Duration.Inf)
     val expMap = Await.result(expF, Duration.Inf)
@@ -875,7 +876,7 @@ object QueryDsl {
     if (allTerms.isEmpty) return ServedTopK.noHits(spark)
     val (n, avgdl) = graft.index.SegmentBuilder.readStats(spark, indexDir)
     val posPost = BM25.prunedPositionalPostings(spark, indexDir, allTerms)
-    // per-term df from the handle's cached metadata table (same values
+    // per-term df from the handle's serving cache (same values
     // the pruned-read aggregation produced; no extra postings branch in
     // the serving plan)
     val scored = roleScored(posPost, roleRows, n, avgdl, h.dfOf(roleRows.map(_._2).distinct), cfg)
@@ -1054,9 +1055,9 @@ object QueryDsl {
   /** ES regexp query served from the segment index: the pattern is
     * anchored full-term (the Lucene contract — `ta.le` matches `table`,
     * not `stables`), expands against the cached term dictionary
-    * ([[Wand.Handle.regexExpansions]], lexicographic-first `maxExpansions`)
+    * ([[Wand.Handle.expandRegexBatch]], lexicographic-first `maxExpansions`)
     * and serves through the same exact WAND as prefix/wildcard. The
-    * expansion scans the (term, df) metadata table, never postings — a
+    * expansion walks the serving cache's term dictionary, never postings — a
     * regexp with no literal prefix costs a full term-dict scan, the
     * same cost class Lucene documents for leading-wildcard patterns.
     * Oracle parity holds on the regex subset both Java and RE2 agree on
@@ -1072,8 +1073,8 @@ object QueryDsl {
     // \d), so unlike prefix/wildcard the pattern is the caller's; one
     // metadata job expands the whole batch (anchored full-term)
     val qp = queries.map { case (qid, p) => (qid, "^(?:" + p.trim + ")$") }
-    val exp = h.regexExpansions(qp.map(_._2), maxExpansions)
-    h.topKExpanded(qp.map { case (qid, rx) => qid -> exp(rx) })
+    val exp = h.expandRegexBatch(qp.map(_._2), maxExpansions)
+    h.topKTerms(qp.map { case (qid, rx) => qid -> exp(rx) })
   }
 
   /** ES range aggregation over a query's matching docs: every SPECIFIED

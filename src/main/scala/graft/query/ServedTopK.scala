@@ -3,6 +3,7 @@ package graft.query
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -17,7 +18,7 @@ import org.apache.spark.sql.types.StructType
   *
   * [[rank]] and [[capPerKey]] are EAGER: they run the scoring plan they
   * are given before returning. [[bestPerQid]] and [[merge]] are the two
-  * halves of [[rank]], shared with the WAND scoring job's RDD tail
+  * halves of [[rank]], shared with the WAND scoring job
   * ([[Wand.Handle.topKTerms]]). Every driver collect is bounded by
   * construction — at most tasks x keys x k rows — no matter how many
   * candidates the scoring pass produces; no partition ever buffers more
@@ -103,7 +104,7 @@ object ServedTopK {
     * (terms distinct per key); see [[capPerKeyWithDf]]. */
   def capPerKey(matched: Dataset[(Int, String, Long)], ord: Ordering[(String, Long)],
                 cap: Int): Map[Int, Seq[String]] =
-    termsOf(capPerKeyWithDf(matched, ord, cap))
+    termsOf(capPerKeyWithDf(matched.rdd, ord, cap))
 
   /** Expansions without their df. */
   def termsOf[K](byKey: Map[K, Seq[(String, Long)]]): Map[K, Seq[String]] =
@@ -114,11 +115,9 @@ object ServedTopK {
     * bounded heap of `cap` per key, the driver collects them — at most
     * tasks x keys x cap rows — then sorts and caps again. Keys with no
     * rows are absent. */
-  def capPerKeyWithDf(matched: Dataset[(Int, String, Long)], ord: Ordering[(String, Long)],
+  def capPerKeyWithDf(matched: RDD[(Int, String, Long)], ord: Ordering[(String, Long)],
                       cap: Int): Map[Int, Seq[(String, Long)]] = {
     if (cap <= 0) return Map.empty
-    val spark = matched.sparkSession
-    import spark.implicits._
     val heads = matched.mapPartitions { it =>
       // max-heap under ord: its head is the worst kept entry
       val best = mutable.HashMap.empty[Int, mutable.PriorityQueue[(String, Long)]]

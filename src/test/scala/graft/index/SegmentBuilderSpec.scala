@@ -178,6 +178,8 @@ class SegmentBuilderSpec extends SparkSuite {
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
       assert(docmap2 === docmap1)
       assert(spark.read.parquet(s"$dir/postings").count() === post1)
+      val left = new java.io.File(dir).list().filter(_.endsWith("staging"))
+      assert(left.isEmpty, s"ingest left its staging dir behind: ${left.mkString(", ")}")
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
 

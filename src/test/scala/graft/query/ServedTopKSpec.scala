@@ -6,6 +6,7 @@ import scala.reflect.io.Directory
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
+import graft.index.SegmentRow
 
 /** The served ranking tail ([[ServedTopK]]): per-task heaps plus the
   * driver merge must return exactly what Spark's own ordering returns —
@@ -14,16 +15,17 @@ import graft.SparkSuite
   * disagree. */
 class ServedTopKSpec extends SparkSuite {
 
-  /** A serving handle over a bare term dictionary: `segments` holds only
-    * the (term, salt, n_postings) rows expansion reads, with each df > 1
-    * split over two salted runs, and `stats` the corpus constants. */
+  /** A serving handle over a bare term dictionary: `segments` holds
+    * segment rows with no blocks, each df > 1 split over two salted
+    * runs, and `stats` the corpus constants. */
   private def withDictHandle(dict: Seq[(String, Long)])(f: Wand.Handle => Unit): Unit = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_dict_").toString
     try {
       dict.flatMap { case (t, df) =>
         if (df > 1) Seq((t, 0, 1L), (t, 1, df - 1)) else Seq((t, 0, df)) }
-        .toDF("term", "salt", "n_postings").repartition(3).write.parquet(s"$dir/segments")
+        .map { case (t, salt, n) => SegmentRow(t, salt, 0, n, 0L, 0L, 0.0, Nil) }
+        .toDF().repartition(3).write.parquet(s"$dir/segments")
       Seq((1000L, 10.0)).toDF("n", "avgdl").write.parquet(s"$dir/stats")
       val h = new Wand.Handle(spark, dir)
       try f(h) finally h.close()

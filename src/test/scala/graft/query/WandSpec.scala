@@ -303,4 +303,26 @@ class WandSpec extends SparkSuite {
         rows(BM25.phraseTopK(spark, grown, col("doc_id"), col("text"), phrases, c)))
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
+
+  test("a replaced handle releases its serving cache: after appendDocs + buildAll one cache per index, serving the grown corpus") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_wand_swap_").toString
+    try {
+      val c = cfg.copy(shards = 2, blockSize = 8, saltTargetPostings = 64)
+      val base = (0L until 120L).map(i => (i, if (i % 2 == 0) "alpha beta" else "gamma delta"))
+      val more = (120L until 150L).map(i => (i, "omega alpha"))
+      SegmentBuilder.ingest(spark, base.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      def caches = spark.sparkContext.getPersistentRDDs.values.count(_.name == Wand.cacheName(dir))
+      val h1 = Wand.handleFor(spark, dir, c)
+      assert(caches === 1)
+      SegmentBuilder.appendDocs(spark, more.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      val h2 = Wand.handleFor(spark, dir, c)
+      assert(!(h2 eq h1), "appendDocs + buildAll swaps the handle")
+      assert(caches === 1, "the replaced handle's serving cache must be released")
+      val omega = h2.topK(Seq(1 -> "omega")).collect().map(_.getLong(2)).toSet
+      assert(omega.nonEmpty && omega.subsetOf(more.map(_._1).toSet))
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
+  }
 }
