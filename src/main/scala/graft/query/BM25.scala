@@ -1,10 +1,17 @@
 package graft.query
 
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import graft.analyze.CodeTokenizer
 import graft.config.EngineConfig
-import graft.index.Postings
+import graft.index.{Postings, SegmentBuilder}
 
 /** Okapi BM25 (k1=1.2, b=0.75 — the ES 7.x default similarity the
   * reference's index would use; public knowledge) with Lucene-style
@@ -22,7 +29,7 @@ import graft.index.Postings
   *    a postings frame and adds the weight `w` ([[matchPipeline]] is
   *    the corpus match preamble over it);
   *  - fold: [[foldAscending]] sums per-doc weights in ascending key
-  *    order;
+  *    order ([[foldTerms]] is its scalar twin on the served paths);
   *  - span: [[phraseSpans]] decides phrase adjacency over joined
   *    (keys…, doc_id, off, m, positions) rows;
   *  - expansion cap: [[Wand.expandCapped]] caps term expansions over
@@ -70,6 +77,14 @@ object BM25 {
     * entries (a `when` without `otherwise`) drop out of the fold. */
   private[query] def foldAscending(entry: Column): Column =
     SumStructFieldExpr.sumField(sort_array(collect_list(entry)), 1, 2)
+
+  /** The scalar fold step: the sum from 0.0 of `(term, weight)`
+    * contributions in ascending [[ServedTopK.termOrder]] — Spark's string
+    * order, the order [[foldAscending]] sums in — so a served score is
+    * bit-equal to its corpus-path twin. WAND's per-doc sum and the
+    * served phrase score both fold through it. */
+  private[query] def foldTerms(contribs: scala.collection.Seq[(String, Double)]): Double =
+    contribs.sortBy(_._1)(ServedTopK.termOrder).foldLeft(0.0)(_ + _._2)
 
   /** The (qid, term, n_terms, df) literal of analyzed match queries;
     * terms absent from `dfMap` drop, exactly like an inner join with a
@@ -257,16 +272,18 @@ object BM25 {
   }
 
   /** Phrase top-k served from a PERSISTED index ([[graft.index.SegmentBuilder]]
-    * layout v2): positions live in the shard-partitioned postings store
+    * layout v2+): positions live in the shard-partitioned postings store
     * — built ONCE at ingest, exactly like ES indexes positions for text
-    * fields by default (match_phrase never re-reads source text) — so a
-    * phrase query is a partition- and row-group-pruned read of the
-    * phrase terms' postings (shard dirs from the terms' own hash,
-    * `term IN (...)` pushed to the parquet scan), never a corpus
-    * tokenize. Corpus stats come from the index's stats table (computed
-    * over ALL docs at ingest, including zero-token docs the postings
-    * cannot carry). Same result contract as [[phraseTopK]]; eager and
-    * bounded like [[PhraseHandle.topK]], which serves it. */
+    * fields by default (match_phrase never re-reads source text) — and
+    * the index's [[PhraseHandle]] (from [[phraseHandleFor]]) holds them
+    * in its executor-resident positional cache, so a phrase batch is ONE
+    * Spark job over that cache, never a corpus tokenize and never a
+    * parquet read. Corpus stats come from the index's stats table
+    * (computed over ALL docs at ingest, including zero-token docs the
+    * postings cannot carry). Same result contract as [[phraseTopK]];
+    * eager and bounded like [[PhraseHandle.topK]], which serves it. The
+    * first call on an index (or after it changed) pays the cache build,
+    * a read of the whole postings store. */
   def phraseTopKIndexed(spark: SparkSession, indexDir: String,
                         phrases: Seq[(Int, String)],
                         cfg: EngineConfig = EngineConfig.default,
@@ -277,19 +294,17 @@ object BM25 {
     // path would turn "nothing to do" into an exception
     if (phrases.forall { case (_, t) => CodeTokenizer.tokenize(t).isEmpty })
       return ServedTopK.noHits(spark)
-    // served through the process-level handle cache (the match_phrase
-    // twin of Wand.handleFor): the one-shot path must not re-read stats
-    // and re-derive per-term df on every call — warm calls over known
-    // terms are ONE aggregation job. Result contract unchanged (the
-    // handle computes df from the same pruned read this method used to).
+    // served through the process-level handle memo (the match_phrase
+    // twin of Wand.handleFor): the positional cache must amortize across
+    // calls, not recur per query
     phraseHandleFor(spark, indexDir, cfg).topK(phrases, slop)
   }
 
   /** The process-level [[PhraseHandle]] of an index, from the handle
     * memo [[Wand.memoHandle]], signed over what phrase serving reads —
     * postings + stats: an append/compaction/restat lands new files and
-    * swaps the handle (dropping its per-term df cache, which would
-    * otherwise go stale), an untouched index reuses it with zero
+    * swaps the handle (closing the old one, which releases its
+    * positional cache), an untouched index reuses it with zero
     * metadata jobs. */
   def phraseHandleFor(spark: SparkSession, indexDir: String,
                       cfg: EngineConfig = EngineConfig.default): PhraseHandle =
@@ -317,33 +332,36 @@ object BM25 {
     * directories from the terms' own hash (partition pruning, computed
     * driver-side via [[termShard]] — zero Spark jobs) and
     * `term IN (...)` pushed into the parquet reader (row-group stats +
-    * dictionary pruning). This is the ONLY corpus touch a served phrase
-    * query makes. The shard count comes from the index's OWN ingest
-    * marker, never from a caller config — a silent mismatch would drop
-    * postings from the pruned read instead of failing. */
+    * dictionary pruning). The indexed phrase_prefix and query_string
+    * paths read phrase postings this way. The shard count comes from
+    * the index's OWN ingest marker, never from a caller config — a
+    * silent mismatch would drop postings from the pruned read instead
+    * of failing. */
   def prunedPositionalPostings(spark: SparkSession, indexDir: String,
-                               terms: Seq[String]): DataFrame =
-    prunePositional(spark.read.parquet(s"$indexDir/postings"), indexDir, terms)
-
-  /** [[prunedPositionalPostings]] over an already-opened postings frame
-    * (opening one infers its schema from the files — a Spark job). */
-  private def prunePositional(all: DataFrame, indexDir: String,
-                              terms: Seq[String]): DataFrame = {
-    require(all.columns.contains("positions"),
-      s"$indexDir/postings has no positions column (pre-v2 layout) — re-ingest")
-    require(all.columns.contains("thash"),
-      s"$indexDir/postings has no thash column (pre-v3 layout) — re-ingest")
-    val diskShards = graft.index.SegmentBuilder.indexShards(indexDir)
+                               terms: Seq[String]): DataFrame = {
+    val diskShards = SegmentBuilder.indexShards(indexDir)
     val termShards = terms.map(termShard(_, diskShards)).distinct
     // three pruning levels, driver-computed (zero Spark jobs): shard
     // DIRECTORY pruning, thash ROW-GROUP pruning (files are
     // hash-clustered — layout v3 — so long-stats ranges are tight),
     // and the exact term filter (thash collisions are harmless)
     val hashes = terms.map(termHash)
-    all.filter(col("shard").isInCollection(termShards))
+    positionalPostings(spark, indexDir).filter(col("shard").isInCollection(termShards))
       .filter(col("thash").isInCollection(hashes))
       .filter(col("term").isInCollection(terms))
       .select("term", "doc_id", "doclen", "tf", "positions")
+  }
+
+  /** The index's postings store, opened (which infers its schema from
+    * the files — a Spark job); fails loud on a layout without positions
+    * or thash. */
+  private def positionalPostings(spark: SparkSession, indexDir: String): DataFrame = {
+    val all = spark.read.parquet(s"$indexDir/postings")
+    require(all.columns.contains("positions"),
+      s"$indexDir/postings has no positions column (pre-v2 layout) — re-ingest")
+    require(all.columns.contains("thash"),
+      s"$indexDir/postings has no thash column (pre-v3 layout) — re-ingest")
+    all
   }
 
   /** Per-term df of a term-pruned postings frame (one row per
@@ -354,9 +372,8 @@ object BM25 {
 
   /** The one-aggregation phrase pass given resolved per-term df (see
     * [[phraseTopK]] for the shape rationale): the unranked
-    * (qid, doc_id, score) phrase matches, ranked lazily by the corpus
-    * path and eagerly by [[PhraseHandle]]. The score fold rides the
-    * span step's aggregation. */
+    * (qid, doc_id, score) phrase matches, which [[phraseTopK]] ranks.
+    * The score fold rides the span step's aggregation. */
   private def phraseScoredOver(posPost: DataFrame, n: Long, avgdl: Double,
                                analyzed: Seq[(Int, Seq[String])],
                                cfg: EngineConfig, slop: Int,
@@ -376,51 +393,230 @@ object BM25 {
       foldAscending(when(col("score_me"), struct(col("term"), col("w")))).as("score"))
   }
 
+  /** One term's positional postings as the positional cache holds
+    * them: flat primitive arrays sorted by doc — `docs(i)` has doclen
+    * `doclens(i)`, tf `tfs(i)` and positions
+    * `positions(posOff(i) until posOff(i + 1))` — plus the term's df,
+    * its postings-row count in the whole store (what [[postingsDf]]
+    * counts), which a doc-range slice keeps. */
+  final case class PosEntry(df: Long, docs: Array[Long], doclens: Array[Int], tfs: Array[Int],
+                            posOff: Array[Int], positions: Array[Int]) {
+    /** Docs `from until until`, their positions rebased. */
+    def slice(from: Int, until: Int): PosEntry =
+      if (from == 0 && until == docs.length) this
+      else {
+        val p0 = posOff(from)
+        PosEntry(df, docs.slice(from, until), doclens.slice(from, until), tfs.slice(from, until),
+          posOff.slice(from, until + 1).map(_ - p0), positions.slice(p0, posOff(until)))
+      }
+
+    /** The same postings in the order of `sorted`, the entry's docs
+      * sorted (and distinct): row i moves to the slot of its doc. */
+    def permuted(sorted: Array[Long]): PosEntry = {
+      val to = docs.map(java.util.Arrays.binarySearch(sorted, _))
+      val dl, tf, len = new Array[Int](docs.length)
+      for (i <- docs.indices) {
+        dl(to(i)) = doclens(i); tf(to(i)) = tfs(i); len(to(i)) = posOff(i + 1) - posOff(i)
+      }
+      val off = len.scanLeft(0)(_ + _)
+      val pos = new Array[Int](positions.length)
+      for (i <- docs.indices) System.arraycopy(positions, posOff(i), pos, off(to(i)), len(to(i)))
+      PosEntry(df, sorted, dl, tf, off, pos)
+    }
+
+    /** The entry cut at the doc-range `bounds` of [[Wand.docRanges]]:
+      * one (range, slice) per range that holds any of its docs. */
+    def byRange(bounds: Array[Long]): Iterator[(Int, PosEntry)] = {
+      // cut(r) = the first doc at or past range r's lower bound
+      val cut = 0 +: bounds.map { b =>
+        val i = java.util.Arrays.binarySearch(docs, b)
+        if (i >= 0) i else -i - 1
+      } :+ docs.length
+      Iterator.range(0, bounds.length + 1).filter(r => cut(r) < cut(r + 1))
+        .map(r => r -> slice(cut(r), cut(r + 1)))
+    }
+  }
+
+  /** The name of an index's positional cache RDD. */
+  private[query] def positionalCacheName(indexDir: String): String =
+    s"graft positional cache $indexDir"
+
+  /** One positional cache partition: postings rows
+    * `(term, doc_id, doclen, tf, positions)` in any order, gathered per
+    * term into one [[PosEntry]] per term, sorted by doc. A repeated
+    * (term, doc) row — a replayed append's postings that no compaction
+    * has deduplicated yet — fails loud: served df and matches would
+    * silently differ from the deduplicated store's. */
+  private def positionalEntries(rows: Iterator[InternalRow], where: String): Map[String, PosEntry] = {
+    final class TermRows {
+      val docs = new mutable.ArrayBuilder.ofLong
+      val doclens, tfs, posOff, positions = new mutable.ArrayBuilder.ofInt
+      posOff += 0
+    }
+    val byTerm = new java.util.HashMap[UTF8String, TermRows]()
+    rows.foreach { r =>
+      val t = r.getUTF8String(0)
+      var b = byTerm.get(t)
+      if (b == null) { b = new TermRows; byTerm.put(t.clone(), b) }
+      b.docs += r.getLong(1)
+      b.doclens += Math.toIntExact(r.getLong(2))
+      b.tfs += Math.toIntExact(r.getLong(3))
+      val ps = r.getArray(4)
+      var i = 0
+      while (i < ps.numElements()) { b.positions += ps.getInt(i); i += 1 }
+      b.posOff += b.positions.length
+    }
+    val out = Map.newBuilder[String, PosEntry]
+    byTerm.forEach { (t, b) =>
+      val docs = b.docs.result()
+      val sorted = docs.clone()
+      java.util.Arrays.sort(sorted)
+      var i = 1
+      while (i < sorted.length) {
+        if (sorted(i - 1) == sorted(i))
+          throw new IllegalStateException(s"$where holds duplicate postings rows for " +
+            s"(term <$t>, doc ${sorted(i)}), a replayed append: compactShards removes them")
+        i += 1
+      }
+      val e = PosEntry(docs.length, docs, b.doclens.result(), b.tfs.result(), b.posOff.result(),
+        b.positions.result())
+      out += t.toString -> (if (java.util.Arrays.equals(docs, sorted)) e else e.permuted(sorted))
+    }
+    out.result()
+  }
+
   /** Reusable phrase-serving handle — the match_phrase twin of
-    * [[Wand.Handle]] (the documented serving measurement condition:
-    * corpus stats read and the postings store opened once, per-term
-    * metadata cached across batches).
-    * df is computed from the LIVE positional postings the first time a
-    * term is seen (one tiny pruned aggregation, <= query terms rows) and
-    * cached, so a warm batch over known terms is ONE scoring pass.
+    * [[Wand.Handle]]: corpus stats, doc-range boundaries and the
+    * positional cache are read once, at init, and serve every batch.
     * Result contract identical to [[phraseTopK]].
     *
-    * [[topK]] is EAGER: the scoring pass runs inside the call, and its
-    * matches rank through [[ServedTopK.rank]] — a heap of k per
-    * (task, qid), ONE collect of at most tasks x qids x k rows, the
-    * merge on the driver — so the call returns a local
-    * `(qid, rank, doc_id, score)` frame in (qid, rank) order instead of
-    * a plan that still owes a ranking shuffle and a range sort.
+    * The positional cache holds the index's positional postings in a
+    * `MEMORY_AND_DISK` RDD named [[positionalCacheName]], built without
+    * a shuffle or a join: partition s reads `postings/shard=s` —
+    * shard = pmod(xxhash64(term), shards), so all of a term's rows land
+    * in one partition, which the driver finds with [[termShard]],
+    * running no job — through one scan coalesced to one task, its rows
+    * gathered per term and sorted by doc in the task. Each partition is one
+    * `term -> [[PosEntry]]` map: one object per term, never one per
+    * posting. Memory contract: the store's postings and positions as
+    * flat arrays plus per-term overhead (Spark sizes the cache of the
+    * perfbench `serve` index — 30k docs, 1.69M postings, 13 MB of
+    * parquet — at 63.7 MB) in executor storage memory; a partition
+    * that does not fit spills to local disk. [[close]] releases it;
+    * [[Wand.memoHandle]] closes a handle it replaces.
+    *
+    * [[topK]] is ONE Spark job over that cache, EAGER: a lookup stage
+    * over only the partitions that hold the batch's terms slices each
+    * term's entry by doc-range and keys the slices by (qid, range), so
+    * no task ever holds a whole hot term; each scoring task intersects
+    * its groups' docs, runs the span check per phrase offset
+    * ([[OrderedSpanMatchExpr.spans]]), scores with the shared
+    * [[weight]] and [[foldTerms]], and keeps a heap of k per qid
+    * ([[ServedTopK.bestPerQid]]); the driver collects at most
+    * tasks x qids x k rows and [[ServedTopK.merge]]s them into a local
+    * `(qid, rank, doc_id, score)` frame in (qid, rank) order.
     *
     * Staleness contract (same as [[Wand.Handle]]): the handle reflects
     * the index state at construction; [[phraseHandleFor]] swaps it after
-    * [[graft.index.SegmentBuilder.appendDocs]] / a rebuild (stats and
-    * cached df would otherwise lag the appended docs). */
+    * [[graft.index.SegmentBuilder.appendDocs]] / a rebuild. */
   final class PhraseHandle private[query] (spark: SparkSession, indexDir: String,
                                            cfg: EngineConfig = EngineConfig.default)
       extends AutoCloseable {
-    private val (n, avgdl) = graft.index.SegmentBuilder.readStats(spark, indexDir)
-    private val dfCache = scala.collection.concurrent.TrieMap[String, Long]()
-    /** The postings store, opened once per handle (not per batch). */
-    private lazy val postings = spark.read.parquet(s"$indexDir/postings")
+    private val (n, avgdl) = SegmentBuilder.readStats(spark, indexDir)
+    private val shards = SegmentBuilder.indexShards(indexDir)
+    private val cache: RDD[Map[String, PosEntry]] = {
+      val all = positionalPostings(spark, indexDir)
+      val dir = indexDir
+      spark.sparkContext.union((0 until shards).map { s =>
+          all.filter(col("shard") === s).select("term", "doc_id", "doclen", "tf", "positions")
+            .coalesce(1).queryExecution.toRdd
+        })
+        .mapPartitionsWithIndex((s, rows) => Iterator(positionalEntries(rows, s"$dir/postings/shard=$s")))
+        .setName(positionalCacheName(indexDir))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
+    /** The doc-range fan-out ([[Wand.docRanges]]) from the cache's max
+      * df — the first job over the cache, so it also fills it (and a
+      * handle that fails to open releases what it cached). */
+    private val (ranges, rangeBounds) =
+      try Wand.docRanges(spark, indexDir, cfg,
+        cache.map(_.valuesIterator.map(_.df).foldLeft(0L)(math.max)).fold(0L)(math.max))
+      catch { case e: Throwable => cache.unpersist(blocking = false); throw e }
+    val serveRanges: Int = ranges
 
     def topK(phrases: Seq[(Int, String)], slop: Int = 0): DataFrame = {
-      val analyzed = phrases
-        .map { case (qid, text) => (qid, CodeTokenizer.tokenize(text).toSeq) }
-        .filter(_._2.nonEmpty)
-      if (analyzed.isEmpty) return ServedTopK.noHits(spark)
-      val terms = analyzed.flatMap(_._2).distinct
-      val missing = terms.filterNot(dfCache.contains)
-      if (missing.nonEmpty) {
-        val got = postingsDf(prunePositional(postings, indexDir, missing))
-        missing.foreach(t => dfCache.put(t, got.getOrElse(t, 0L)))
-      }
-      ServedTopK.rank(phraseScoredOver(prunePositional(postings, indexDir, terms),
-        n, avgdl, analyzed, cfg, slop, terms.map(t => t -> dfCache(t)).toMap), cfg.topK)
+      val phraseOf = phrases
+        .map { case (qid, text) => (qid, CodeTokenizer.tokenize(text)) }
+        .filter(_._2.nonEmpty).toMap
+      if (phraseOf.isEmpty) return ServedTopK.noHits(spark)
+      val qidsOf: Map[String, Array[Int]] = phraseOf.toSeq
+        .flatMap { case (qid, ts) => ts.distinct.map(_ -> qid) }
+        .groupMap(_._1)(_._2).map { case (t, qs) => t -> qs.toArray }
+      val parts = math.min(phraseOf.size.toLong * serveRanges,
+        spark.sparkContext.defaultParallelism.toLong).toInt
+      val k = cfg.topK; val k1 = cfg.k1; val b = cfg.b
+      val nL = n; val avg = avgdl
+      val bounds = rangeBounds
+      val heaps = PartitionPruningRDD.create(cache, qidsOf.keySet.map(termShard(_, shards)))
+        .flatMap(m => qidsOf.iterator.flatMap { case (t, qids) =>
+          m.get(t).iterator.flatMap(_.byRange(bounds)).flatMap { case (rid, slice) =>
+            qids.iterator.map(qid => (qid, rid) -> (t, slice)) }
+        })
+        .groupByKey(new HashPartitioner(parts))
+        .mapPartitions { groups =>
+          ServedTopK.bestPerQid(groups.flatMap { case ((qid, _), slices) =>
+            phraseHits(phraseOf(qid), slices.toMap, slop, nL, avg, k1, b)
+              .map { case (d, score) => (qid, score, d) }
+          }, k)
+        }
+        .collect()
+      ServedTopK.merge(spark, heaps, k)
     }
 
-    /** Nothing to release: the handle caches nothing on the executors. */
-    def close(): Unit = ()
+    /** Releases the positional cache without blocking (see
+      * [[Wand.memoHandle]]). */
+    def close(): Unit =
+      if (!spark.sparkContext.isStopped) { cache.unpersist(blocking = false); () }
+  }
+
+  /** One (qid, doc-range) group of a served phrase batch: `ts` the
+    * phrase's terms by offset, `byTerm` the group's slice of each term
+    * present. The docs holding every term pass the span check over
+    * their per-offset positions ([[OrderedSpanMatchExpr.spans]]) and
+    * score as the sum of [[weight]] over the phrase's distinct terms
+    * ([[foldTerms]]) — what [[phraseScoredOver]] computes for the same
+    * docs. Returns (doc_id, score). */
+  private def phraseHits(ts: Array[String], byTerm: Map[String, PosEntry], slop: Int,
+                         n: Long, avgdl: Double, k1: Double, b: Double): Iterator[(Long, Double)] = {
+    val terms = ts.distinct
+    if (!terms.forall(byTerm.contains)) return Iterator.empty
+    val es = terms.map(byTerm)
+    val at = new Array[Int](es.length) // per-term cursors, only ever forward
+    val termAt = ts.map(terms.indexOf(_))
+    val pos = termAt.map(es(_).positions)
+    val from, until = new Array[Int](ts.length)
+    es.minBy(_.docs.length).docs.iterator.filter { d =>
+      var all = true
+      var j = 0
+      while (all && j < es.length) {
+        val ds = es(j).docs
+        while (at(j) < ds.length && ds(at(j)) < d) at(j) += 1
+        all = at(j) < ds.length && ds(at(j)) == d
+        j += 1
+      }
+      all && {
+        var o = 0
+        while (o < ts.length) {
+          val e = es(termAt(o)); val i = at(termAt(o))
+          from(o) = e.posOff(i); until(o) = e.posOff(i + 1)
+          o += 1
+        }
+        OrderedSpanMatchExpr.spans(pos, from, until, slop)
+      }
+    }.map(d => d -> foldTerms(terms.indices.map { j =>
+      val e = es(j); val i = at(j)
+      terms(j) -> weight(e.tfs(i), e.doclens(i), e.df, n, avgdl, k1, b)
+    }))
   }
 
   /** Phrase candidate sets from positional postings, ALL phrases in one

@@ -33,31 +33,44 @@ case class OrderedSpanMatchExpr(left: Expression, right: Expression)
 
   override def nullSafeEval(listsAny: Any, slopAny: Any): Any = {
     val lists = listsAny.asInstanceOf[ArrayData]
-    val slop = slopAny.asInstanceOf[Int]
-    val m = lists.numElements()
+    val pos = Array.tabulate(lists.numElements())(j => lists.getArray(j).toIntArray())
+    OrderedSpanMatchExpr.spans(pos, new Array[Int](pos.length), pos.map(_.length),
+      slopAny.asInstanceOf[Int])
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): OrderedSpanMatchExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+object OrderedSpanMatchExpr {
+  /** The span decision, written once: list j is
+    * `pos(j)(from(j) until until(j))`, ascending, in phrase-offset
+    * order; true iff strictly increasing picks p_0 < ... < p_{m-1}, one
+    * from each list, have slack (p_{m-1} - p_0) - (m - 1) <= slop (see
+    * the class doc for the sweep). The expression and the served
+    * phrase path ([[BM25.PhraseHandle]]) both decide through it. */
+  def spans(pos: Array[Array[Int]], from: Array[Int], until: Array[Int], slop: Int): Boolean = {
+    val m = pos.length
     if (m == 0) return false
-    val pos = new Array[ArrayData](m)
     var j = 0
     while (j < m) {
-      pos(j) = lists.getArray(j)
-      if (pos(j).numElements() == 0) return false
+      if (from(j) >= until(j)) return false
       j += 1
     }
     if (m == 1) return true // any single occurrence spans 0 <= slop
-    val idx = new Array[Int](m) // monotone per-list cursors
-    val starts = pos(0)
-    var s = 0
-    while (s < starts.numElements()) {
-      var prev = starts.getInt(s)
+    val idx = from.clone() // monotone per-list cursors
+    var s = from(0)
+    while (s < until(0)) {
+      var prev = pos(0)(s)
       val p0 = prev
       var ok = true
       j = 1
       while (ok && j < m) {
         val pj = pos(j)
-        val n = pj.numElements()
-        while (idx(j) < n && pj.getInt(idx(j)) <= prev) idx(j) += 1
-        if (idx(j) == n) ok = false
-        else prev = pj.getInt(idx(j))
+        while (idx(j) < until(j) && pj(idx(j)) <= prev) idx(j) += 1
+        if (idx(j) == until(j)) ok = false
+        else prev = pj(idx(j))
         j += 1
       }
       if (!ok) return false // larger starts only exhaust sooner
@@ -67,12 +80,6 @@ case class OrderedSpanMatchExpr(left: Expression, right: Expression)
     false
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): OrderedSpanMatchExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object OrderedSpanMatchExpr {
   /** lists: array&lt;array&lt;int&gt;&gt; in phrase order; slop: int. */
   def matches(lists: Column, slop: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge

@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** The ranking tail of index-served requests — the ES shard/coordinator
@@ -16,31 +15,16 @@ import org.apache.spark.sql.types.StructType
   * adds a ranking shuffle and a range sort (or a window shuffle per
   * expansion batch).
   *
-  * [[rank]] and [[capPerKey]] are EAGER: they run the scoring plan they
-  * are given before returning. [[bestPerQid]] and [[merge]] are the two
-  * halves of [[rank]], shared with the WAND scoring job
-  * ([[Wand.Handle.topKTerms]]). Every driver collect is bounded by
+  * [[bestPerQid]] and [[merge]] are the two halves of the hit ranking
+  * that the served scoring jobs ([[Wand.Handle.topKTerms]],
+  * [[BM25.PhraseHandle.topK]]) end in; [[capPerKey]] is EAGER: it runs
+  * the plan it is given before returning. Every driver collect is bounded by
   * construction — at most tasks x keys x k rows — no matter how many
   * candidates the scoring pass produces; no partition ever buffers more
   * than k rows per key. The corpus-path operators keep the lazy
   * [[BM25.rankTopK]] aggregation.
   */
 object ServedTopK {
-
-  /** Rank a scored `(qid, doc_id, score)` frame eagerly: each task keeps
-    * the best k per qid ([[bestPerQid]]), the driver collects those
-    * heaps — at most tasks x qids x k rows — and [[merge]]s them.
-    * Returns a LOCAL `(qid, rank, doc_id, score)` frame in (qid, rank)
-    * order, rank ties broken doc_id asc: row for row what the lazy
-    * [[BM25.rankTopK]] returns for the same input. */
-  def rank(scored: DataFrame, k: Int): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    merge(spark, scored.select(col("qid"), col("score"), col("doc_id"))
-      .as[(Int, Double, Long)]
-      .mapPartitions(bestPerQid(_, k))
-      .collect(), k)
-  }
 
   /** One task's heaps: the best k `(qid, score, doc_id)` rows per qid
     * under [[TopKByScore.better]] (score desc, doc_id asc). */
@@ -53,7 +37,9 @@ object ServedTopK {
   }
 
   /** The driver merge of collected task heaps, with the same comparator:
-    * a LOCAL `(qid, rank, doc_id, score)` frame in (qid, rank) order. */
+    * a LOCAL `(qid, rank, doc_id, score)` frame in (qid, rank) order,
+    * rank ties broken doc_id asc — row for row what the lazy
+    * [[BM25.rankTopK]] returns for the same hits. */
   def merge(spark: SparkSession, heaps: Array[(Int, Double, Long)], k: Int): DataFrame = {
     val agg = new TopKByScore(k)
     val hits = heaps.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, rs) =>

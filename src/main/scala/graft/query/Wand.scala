@@ -268,9 +268,7 @@ object Wand {
               contribs += ((c.term, BM25.weight(c.curTf, c.curDl, c.df, n, avgdl, k1, b)))
             j += 1
           }
-          var score = 0.0
-          contribs.sortBy(_._1).foreach(score += _._2)
-          offer(score, pivot)
+          offer(BM25.foldTerms(contribs), pivot)
           j = 0
           while (j <= endIdx) {
             if (!sorted(j).exhausted && sorted(j).curDoc == pivot) sorted(j).advance()
@@ -322,12 +320,16 @@ object Wand {
     * session identity, since a handle pins cached blocks in ITS
     * session's block manager.
     *
-    * A replaced handle is CLOSED: without that, every rebuild would leak
-    * a full in-memory copy of the index in a long-lived process. Its
+    * A replaced handle is CLOSED, before its successor opens: without
+    * that, every rebuild would leak a full in-memory copy of the index
+    * in a long-lived process, and one that fails to open (a damaged
+    * index) would leave the stale copy pinned. Its
     * serving cache is its own RDD — no successor shares it — and the
     * unpersist does not block: a query still in flight on the old
-    * handle recomputes any partition it misses from the cache build's
-    * shuffle output instead of failing. */
+    * handle recomputes any partition it misses from the cache's source
+    * — the WAND cache build's shuffle output, or the postings files of
+    * the positional cache (a compaction that swapped those files away
+    * fails that one query). */
   private val handles =
     scala.collection.concurrent.TrieMap[(Class[_], String), (SparkSession, EngineConfig, String, AutoCloseable)]()
 
@@ -342,12 +344,38 @@ object Wand {
             if (s eq spark) && !s.sparkContext.isStopped && c == cfg && cachedSig == sig =>
           h.asInstanceOf[H]
         case stale =>
+          // the stale handle goes first, so its cache is released before
+          // (and even if not) a new one is built
+          stale.foreach { e => handles.remove(key); e._4.close() }
           val h = open
           handles.put(key, (spark, cfg, sig, h))
-          stale.foreach(_._4.close())
           h
       }
     }
+
+  /** A serving handle's doc-range fan-out, DERIVED from index stats,
+    * not a knob: `ranges` is enough ranges that even the hottest term's
+    * (df `maxDf`) per-task share stays near cfg.serveTargetPostings, so
+    * the per-task bound is an invariant under corpus growth — a bigger
+    * corpus gets MORE range tasks, never bigger ones (WandSpec asserts
+    * the same bound at two corpus sizes with the same target).
+    * `bounds` are the (ranges-1)-quantiles of docmap doc_id, read once
+    * (tiny); range i covers [bounds(i-1), bounds(i)). Both handles
+    * ([[Handle]], [[BM25.PhraseHandle]]) derive their ranges here. */
+  private[query] def docRanges(spark: SparkSession, indexDir: String, cfg: EngineConfig,
+                               maxDf: Long): (Int, Array[Long]) = {
+    val ranges = math.min(cfg.serveMaxRanges.toLong, math.max(1L,
+      (maxDf + cfg.serveTargetPostings - 1) / cfg.serveTargetPostings)).toInt
+    val bounds =
+      if (ranges <= 1) Array.empty[Long]
+      else {
+        val qs = (1 until ranges).map(i => i.toDouble / ranges)
+        spark.read.parquet(s"$indexDir/docmap")
+          .selectExpr(s"approx_percentile(doc_id, array(${qs.mkString(",")}))")
+          .head().getSeq[Long](0).distinct.sorted.toArray
+      }
+    (ranges, bounds)
+  }
 
   /** The name of an index's serving cache RDD. */
   private[query] def cacheName(indexDir: String): String = s"graft serving cache $indexDir"
@@ -447,28 +475,11 @@ object Wand {
     /** The cache's (term, df) dictionary, walked in place. */
     private val dictionary: RDD[(String, Long)] =
       cache.flatMap(_.iterator.map { case (t, rows) => t -> rows(0).df })
-    /** Fan-out DERIVED from index stats, not a knob: enough ranges that
-      * even the hottest term's per-task share stays near
-      * cfg.serveTargetPostings. The per-task decode bound is thereby an
-      * invariant under corpus growth — a bigger corpus gets MORE range
-      * tasks, never bigger ones (WandSpec asserts the same bound at two
-      * corpus sizes with the same target). Its max-df walk is the first
-      * job over the cache, so it also fills the cache at init. */
-    val serveRanges: Int = {
-      val maxDf = dictionary.map(_._2).fold(0L)(math.max)
-      math.min(cfg.serveMaxRanges.toLong, math.max(1L,
-        (maxDf + cfg.serveTargetPostings - 1) / cfg.serveTargetPostings)).toInt
-    }
-    /** Doc-range boundaries: (R-1)-quantiles of docmap doc_id, read once
-      * (tiny); range i covers [bounds(i-1), bounds(i)). */
-    private val rangeBounds: Array[Long] =
-      if (serveRanges <= 1) Array.empty
-      else {
-        val qs = (1 until serveRanges).map(i => i.toDouble / serveRanges)
-        spark.read.parquet(s"$indexDir/docmap")
-          .selectExpr(s"approx_percentile(doc_id, array(${qs.mkString(",")}))")
-          .head().getSeq[Long](0).distinct.sorted.toArray
-      }
+    /** The doc-range fan-out ([[docRanges]]). Its max-df walk is the
+      * first job over the cache, so it also fills the cache at init. */
+    private val (ranges, rangeBounds) = docRanges(spark, indexDir, cfg,
+      dictionary.map(_._2).fold(0L)(math.max))
+    val serveRanges: Int = ranges
 
     /** Analyzed match queries served by [[topKTerms]] (eager, bounded). */
     def topK(queries: Seq[(Int, String)],

@@ -48,7 +48,9 @@ class ServedTopKSpec extends SparkSuite {
       (q, rnd.nextInt(1000).toLong, rnd.nextInt(6) / 2.0)
     }.distinct.toDF("qid", "doc_id", "score").repartition(5)
     for (k <- Seq(1, 3, 10)) {
-      val served = ServedTopK.rank(scored, k).collect().toSeq
+      val heaps = scored.select("qid", "score", "doc_id").as[(Int, Double, Long)]
+        .mapPartitions(ServedTopK.bestPerQid(_, k)).collect()
+      val served = ServedTopK.merge(spark, heaps, k).collect().toSeq
       val lazyRanked = BM25.rankTopK(scored, k).collect().toSeq
       assert(served === lazyRanked, s"k=$k")
     }

@@ -313,16 +313,24 @@ class WandSpec extends SparkSuite {
       val more = (120L until 150L).map(i => (i, "omega alpha"))
       SegmentBuilder.ingest(spark, base.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
       SegmentBuilder.buildAll(spark, dir, c)
-      def caches = spark.sparkContext.getPersistentRDDs.values.count(_.name == Wand.cacheName(dir))
+      def named(name: String) = spark.sparkContext.getPersistentRDDs.values.count(_.name == name)
+      def caches = named(Wand.cacheName(dir))
+      def positional = named(BM25.positionalCacheName(dir))
       val h1 = Wand.handleFor(spark, dir, c)
+      val p1 = BM25.phraseHandleFor(spark, dir, c)
       assert(caches === 1)
+      assert(positional === 1)
       SegmentBuilder.appendDocs(spark, more.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
       SegmentBuilder.buildAll(spark, dir, c)
       val h2 = Wand.handleFor(spark, dir, c)
-      assert(!(h2 eq h1), "appendDocs + buildAll swaps the handle")
+      val p2 = BM25.phraseHandleFor(spark, dir, c)
+      assert(!(h2 eq h1) && !(p2 eq p1), "appendDocs + buildAll swaps the handles")
       assert(caches === 1, "the replaced handle's serving cache must be released")
+      assert(positional === 1, "the replaced phrase handle's positional cache must be released")
       val omega = h2.topK(Seq(1 -> "omega")).collect().map(_.getLong(2)).toSet
       assert(omega.nonEmpty && omega.subsetOf(more.map(_._1).toSet))
+      val omegaAlpha = p2.topK(Seq(1 -> "omega alpha")).collect().map(_.getLong(2)).toSet
+      assert(omegaAlpha.size == c.topK && omegaAlpha.subsetOf(more.map(_._1).toSet))
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
 }
