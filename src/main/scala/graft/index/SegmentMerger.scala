@@ -1,5 +1,7 @@
 package graft.index
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,11 +61,18 @@ object SegmentMerger {
   }
 
   /** Merge every shard into `outDir` (stats/docmap are shared via copy
-    * of the tiny tables so the merged index is self-contained). */
+    * of the tiny tables so the merged index is self-contained). The
+    * shards are the source index's own ([[SegmentBuilder.indexShards]]),
+    * and the header line of its ingest marker (layout, positions,
+    * shard count) is committed last, so the merged index is servable:
+    * serving prunes by the marker's shard count. */
   def mergeAll(spark: SparkSession, indexDir: String, outDir: String,
                cfg: EngineConfig = EngineConfig.default,
                maxRunPostings: Long = -1L): Unit = {
-    (0 until cfg.shards).foreach(s => mergeShard(spark, indexDir, s, cfg, outDir, maxRunPostings))
+    val marker = Paths.get(outDir, "_ingested")
+    Files.deleteIfExists(marker)
+    (0 until SegmentBuilder.indexShards(indexDir))
+      .foreach(s => mergeShard(spark, indexDir, s, cfg, outDir, maxRunPostings))
     spark.read.parquet(s"$indexDir/stats")
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/stats")
     // docmap travels with the index: serving derives its doc-range
@@ -71,5 +80,7 @@ object SegmentMerger {
     // survive consolidation
     spark.read.parquet(s"$indexDir/docmap")
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docmap")
+    IndexIo.commitFile(marker,
+      Files.readString(Paths.get(indexDir, "_ingested")).linesIterator.next() + "\n")
   }
 }

@@ -2,12 +2,9 @@ package graft.query
 
 import scala.collection.mutable
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import graft.analyze.CodeTokenizer
 import graft.config.EngineConfig
@@ -490,31 +487,24 @@ object BM25 {
     * positional cache are read once, at init, and serve every batch.
     * Result contract identical to [[phraseTopK]].
     *
-    * The positional cache holds the index's positional postings in a
-    * `MEMORY_AND_DISK` RDD named [[positionalCacheName]], built without
-    * a shuffle or a join: partition s reads `postings/shard=s` —
-    * shard = pmod(xxhash64(term), shards), so all of a term's rows land
-    * in one partition, which the driver finds with [[termShard]],
-    * running no job — through one scan coalesced to one task, its rows
-    * gathered per term and sorted by doc in the task. Each partition is one
+    * The positional cache is a [[ShardCache]] named
+    * [[positionalCacheName]] over the index's positional postings: one
+    * partition per `postings/shard=S` directory, its rows gathered per
+    * term and sorted by doc in the task, each partition one
     * `term -> [[PosEntry]]` map: one object per term, never one per
     * posting. Memory contract: the store's postings and positions as
     * flat arrays plus per-term overhead (Spark sizes the cache of the
     * perfbench `serve` index — 30k docs, 1.69M postings, 13 MB of
-    * parquet — at 63.7 MB) in executor storage memory; a partition
-    * that does not fit spills to local disk. [[close]] releases it;
-    * [[Wand.memoHandle]] closes a handle it replaces.
+    * parquet — at 63.7 MB) in executor storage memory.
     *
-    * [[topK]] is ONE Spark job over that cache, EAGER: a lookup stage
-    * over only the partitions that hold the batch's terms slices each
-    * term's entry by doc-range and keys the slices by (qid, range), so
-    * no task ever holds a whole hot term; each scoring task intersects
-    * its groups' docs, runs the span check per phrase offset
-    * ([[OrderedSpanMatchExpr.spans]]), scores with the shared
-    * [[weight]] and [[foldTerms]], and keeps a heap of k per qid
-    * ([[ServedTopK.bestPerQid]]); the driver collects at most
-    * tasks x qids x k rows and [[ServedTopK.merge]]s them into a local
-    * `(qid, rank, doc_id, score)` frame in (qid, rank) order.
+    * [[topK]] is ONE Spark job over that cache ([[ShardCache.topK]]),
+    * EAGER: the lookup stage slices each batch term's entry by
+    * doc-range, so no task ever holds a whole hot term; each
+    * (qid, range) group intersects its docs, runs the span check per phrase offset
+    * ([[OrderedSpanMatchExpr.spans]]) and scores with the shared
+    * [[weight]] and [[foldTerms]] ([[phraseHits]]), and the hits rank
+    * into a local `(qid, rank, doc_id, score)` frame in (qid, rank)
+    * order.
     *
     * Staleness contract (same as [[Wand.Handle]]): the handle reflects
     * the index state at construction; [[phraseHandleFor]] swaps it after
@@ -522,61 +512,31 @@ object BM25 {
   final class PhraseHandle private[query] (spark: SparkSession, indexDir: String,
                                            cfg: EngineConfig = EngineConfig.default)
       extends AutoCloseable {
-    private val (n, avgdl) = SegmentBuilder.readStats(spark, indexDir)
-    private val shards = SegmentBuilder.indexShards(indexDir)
-    private val cache: RDD[Map[String, PosEntry]] = {
-      val all = positionalPostings(spark, indexDir)
+    private val cache = {
       val dir = indexDir
-      spark.sparkContext.union((0 until shards).map { s =>
-          all.filter(col("shard") === s).select("term", "doc_id", "doclen", "tf", "positions")
-            .coalesce(1).queryExecution.toRdd
-        })
-        .mapPartitionsWithIndex((s, rows) => Iterator(positionalEntries(rows, s"$dir/postings/shard=$s")))
-        .setName(positionalCacheName(indexDir))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      new ShardCache[InternalRow, PosEntry](spark, indexDir, cfg, positionalCacheName(indexDir),
+        positionalPostings(spark, indexDir),
+        _.select("term", "doc_id", "doclen", "tf", "positions").queryExecution.toRdd)(
+        (rows, s) => positionalEntries(rows, s"$dir/postings/shard=$s"), _.df)
     }
-    /** The doc-range fan-out ([[Wand.docRanges]]) from the cache's max
-      * df — the first job over the cache, so it also fills it (and a
-      * handle that fails to open releases what it cached). */
-    private val (ranges, rangeBounds) =
-      try Wand.docRanges(spark, indexDir, cfg,
-        cache.map(_.valuesIterator.map(_.df).foldLeft(0L)(math.max)).fold(0L)(math.max))
-      catch { case e: Throwable => cache.unpersist(blocking = false); throw e }
-    val serveRanges: Int = ranges
+    val serveRanges: Int = cache.ranges
 
     def topK(phrases: Seq[(Int, String)], slop: Int = 0): DataFrame = {
       val phraseOf = phrases
         .map { case (qid, text) => (qid, CodeTokenizer.tokenize(text)) }
         .filter(_._2.nonEmpty).toMap
-      if (phraseOf.isEmpty) return ServedTopK.noHits(spark)
-      val qidsOf: Map[String, Array[Int]] = phraseOf.toSeq
-        .flatMap { case (qid, ts) => ts.distinct.map(_ -> qid) }
-        .groupMap(_._1)(_._2).map { case (t, qs) => t -> qs.toArray }
-      val parts = math.min(phraseOf.size.toLong * serveRanges,
-        spark.sparkContext.defaultParallelism.toLong).toInt
-      val k = cfg.topK; val k1 = cfg.k1; val b = cfg.b
-      val nL = n; val avg = avgdl
-      val bounds = rangeBounds
-      val heaps = PartitionPruningRDD.create(cache, qidsOf.keySet.map(termShard(_, shards)))
-        .flatMap(m => qidsOf.iterator.flatMap { case (t, qids) =>
-          m.get(t).iterator.flatMap(_.byRange(bounds)).flatMap { case (rid, slice) =>
-            qids.iterator.map(qid => (qid, rid) -> (t, slice)) }
-        })
-        .groupByKey(new HashPartitioner(parts))
-        .mapPartitions { groups =>
-          ServedTopK.bestPerQid(groups.flatMap { case ((qid, _), slices) =>
-            phraseHits(phraseOf(qid), slices.toMap, slop, nL, avg, k1, b)
-              .map { case (d, score) => (qid, score, d) }
-          }, k)
-        }
-        .collect()
-      ServedTopK.merge(spark, heaps, k)
+      val k1 = cfg.k1; val b = cfg.b
+      val n = cache.n; val avgdl = cache.avgdl
+      val bounds = cache.bounds
+      cache.topK(phraseOf.toSeq.map { case (qid, ts) => qid -> ts.toSeq })((t, e) =>
+        e.byRange(bounds).map { case (rid, slice) => rid -> (t, slice) }) { (qid, _, slices) =>
+        phraseHits(phraseOf(qid), slices.toMap, slop, n, avgdl, k1, b)
+      }
     }
 
     /** Releases the positional cache without blocking (see
       * [[Wand.memoHandle]]). */
-    def close(): Unit =
-      if (!spark.sparkContext.isStopped) { cache.unpersist(blocking = false); () }
+    def close(): Unit = cache.close()
   }
 
   /** One (qid, doc-range) group of a served phrase batch: `ts` the
@@ -585,9 +545,9 @@ object BM25 {
     * their per-offset positions ([[OrderedSpanMatchExpr.spans]]) and
     * score as the sum of [[weight]] over the phrase's distinct terms
     * ([[foldTerms]]) — what [[phraseScoredOver]] computes for the same
-    * docs. Returns (doc_id, score). */
+    * docs. Returns (score, doc_id). */
   private def phraseHits(ts: Array[String], byTerm: Map[String, PosEntry], slop: Int,
-                         n: Long, avgdl: Double, k1: Double, b: Double): Iterator[(Long, Double)] = {
+                         n: Long, avgdl: Double, k1: Double, b: Double): Iterator[(Double, Long)] = {
     val terms = ts.distinct
     if (!terms.forall(byTerm.contains)) return Iterator.empty
     val es = terms.map(byTerm)
@@ -613,10 +573,10 @@ object BM25 {
         }
         OrderedSpanMatchExpr.spans(pos, from, until, slop)
       }
-    }.map(d => d -> foldTerms(terms.indices.map { j =>
+    }.map(d => foldTerms(terms.indices.map { j =>
       val e = es(j); val i = at(j)
       terms(j) -> weight(e.tfs(i), e.doclens(i), e.df, n, avgdl, k1, b)
-    }))
+    }) -> d)
   }
 
   /** Phrase candidate sets from positional postings, ALL phrases in one

@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** The ranking tail of index-served requests — the ES shard/coordinator
@@ -16,10 +16,9 @@ import org.apache.spark.sql.types.StructType
   * expansion batch).
   *
   * [[bestPerQid]] and [[merge]] are the two halves of the hit ranking
-  * that the served scoring jobs ([[Wand.Handle.topKTerms]],
-  * [[BM25.PhraseHandle.topK]]) end in; [[capPerKey]] is EAGER: it runs
-  * the plan it is given before returning. Every driver collect is bounded by
-  * construction — at most tasks x keys x k rows — no matter how many
+  * that every served scoring job ends in ([[ShardCache.topK]]);
+  * [[capPerKeyWithDf]] is EAGER: it runs the RDD it is given before
+  * returning. Every driver collect is bounded by construction — at most tasks x keys x k rows — no matter how many
   * candidates the scoring pass produces; no partition ever buffers more
   * than k rows per key. The corpus-path operators keep the lazy
   * [[BM25.rankTopK]] aggregation.
@@ -85,12 +84,6 @@ object ServedTopK {
   /** Fuzzy expansion order: `orderBy(col("df").desc, col("term"))`. */
   val byDfThenTerm: Ordering[(String, Long)] =
     Ordering.Tuple2(Ordering.Long.reverse, termOrder).on[(String, Long)](e => (e._2, e._1))
-
-  /** The first `cap` terms per key of `(key, term, df)` rows under `ord`
-    * (terms distinct per key); see [[capPerKeyWithDf]]. */
-  def capPerKey(matched: Dataset[(Int, String, Long)], ord: Ordering[(String, Long)],
-                cap: Int): Map[Int, Seq[String]] =
-    termsOf(capPerKeyWithDf(matched.rdd, ord, cap))
 
   /** Expansions without their df. */
   def termsOf[K](byKey: Map[K, Seq[(String, Long)]]): Map[K, Seq[String]] =

@@ -4,10 +4,8 @@ import scala.collection.mutable
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.CollectionAccumulator
 
@@ -28,29 +26,25 @@ import graft.index.{BlockRow, RangeSaltExpr, SegmentBuilder, SegmentRow}
   *    the deterministic (score desc, docId asc) comparator.
   *
   * Distribution (100 TB rule): serving fans out per (query, doc-range) —
-  * the ES-shard design. A served request is small, so its latency is
-  * the fixed cost of each Spark job it runs; the index therefore stays
-  * RESIDENT, the way ES keeps its term dictionary and postings loaded
-  * on its data nodes. A [[Handle]] reads the segment rows once, at
-  * init, into its serving cache: an executor-resident RDD
-  * hash-partitioned by term, each partition one `term -> rows` map
-  * whose rows carry their term's df. A request reads only that cache —
-  * no parquet scan, no Catalyst plan, no df lookup job. A term request
-  * is ONE Spark job ([[Handle.topKTerms]]): its lookup stage reads the
-  * batch's terms out of the partitions that hold them and keys each
-  * segment row per (qid, doc-range) for every range its
-  * [first_doc, last_doc] span overlaps (metadata only, no decode); its
-  * scoring stage runs exact WAND per group over its range with global
-  * corpus stats and the df the rows carry, and the local hits rank the
-  * way an ES coordinator merges shard results: each task keeps a heap
-  * of k per qid, the driver collects at most tasks x qids x k rows and
-  * merges them ([[ServedTopK.merge]]). Terms absent from the index
-  * drop out in the lookup stage. Served calls are therefore EAGER —
-  * the scoring pass runs inside the call, which returns a small local
-  * frame — and the driver collect is bounded by construction. Term
-  * expansion (prefix, wildcard, regexp, fuzzy) is a single-stage walk
-  * over the same cache's (term, df) dictionary: a heap of `cap` per
-  * (task, pattern), one collect of at most tasks x patterns x cap
+  * the ES-shard design. A [[Handle]] reads the segment rows once, at
+  * init, into its serving cache, a [[ShardCache]]: one partition per
+  * `segments/shard=S` directory (the shard every row of a term lives
+  * in), each one `term -> rows` map whose rows carry their term's df.
+  * A request reads only that cache — no parquet scan, no Catalyst plan,
+  * no df lookup job. A term request is ONE Spark job
+  * ([[Handle.topKTerms]]): its lookup stage reads the batch's terms out
+  * of only the partitions that hold them and keys each segment row per
+  * (qid, doc-range) for every range its [first_doc, last_doc] span
+  * overlaps (metadata only, no decode); its scoring stage runs exact
+  * WAND per group over its range with global corpus stats and the df
+  * the rows carry, and the local hits rank the way an ES coordinator
+  * merges shard results ([[ShardCache.topK]]). Terms absent from the
+  * index drop out in the lookup stage. Served calls are therefore
+  * EAGER — the scoring pass runs inside the call, which returns a small
+  * local frame — and the driver collect is bounded by construction.
+  * Term expansion (prefix, wildcard, regexp, fuzzy) is a single-stage
+  * walk over the same cache's (term, df) dictionary: a heap of `cap`
+  * per (task, pattern), one collect of at most tasks x patterns x cap
   * rows, the final cap on the driver in Spark's string order. That
   * expansion cap is [[expandCapped]], over any (term, df) RDD — the
   * corpus query_string path caps its prefix clauses with it too.
@@ -326,10 +320,8 @@ object Wand {
     * index) would leave the stale copy pinned. Its
     * serving cache is its own RDD — no successor shares it — and the
     * unpersist does not block: a query still in flight on the old
-    * handle recomputes any partition it misses from the cache's source
-    * — the WAND cache build's shuffle output, or the postings files of
-    * the positional cache (a compaction that swapped those files away
-    * fails that one query). */
+    * handle fails loudly if it misses a released block (the cache keeps
+    * no lineage, see [[ShardCache]]). */
   private val handles =
     scala.collection.concurrent.TrieMap[(Class[_], String), (SparkSession, EngineConfig, String, AutoCloseable)]()
 
@@ -361,7 +353,8 @@ object Wand {
     * the same bound at two corpus sizes with the same target).
     * `bounds` are the (ranges-1)-quantiles of docmap doc_id, read once
     * (tiny); range i covers [bounds(i-1), bounds(i)). Both handles
-    * ([[Handle]], [[BM25.PhraseHandle]]) derive their ranges here. */
+    * ([[Handle]], [[BM25.PhraseHandle]]) derive their ranges here, when
+    * their [[ShardCache]] opens. */
   private[query] def docRanges(spark: SparkSession, indexDir: String, cfg: EngineConfig,
                                maxDf: Long): (Int, Array[Long]) = {
     val ranges = math.min(cfg.serveMaxRanges.toLong, math.max(1L,
@@ -433,53 +426,27 @@ object Wand {
   /** Serving handle: corpus stats, doc-range boundaries and the serving
     * cache are read once, at init, and serve every query batch.
     *
-    * The serving cache holds the index's segment rows — compressed
-    * blocks plus their per-row metadata — in a `MEMORY_AND_DISK` RDD
-    * named [[cacheName]]. It is hash-partitioned by term into as many
-    * partitions as the segment scan has file splits (derived, not a
-    * knob); each partition is one `term -> rows` map. Every (term, salt)
-    * run of a term lands in the same partition, so a term's df (the sum
-    * of its rows' n_postings) is summed there and rides on each row.
-    * Memory contract: the cache holds the store's blocks still
-    * compressed, plus object overhead per row — the bulk of it on a
-    * vocabulary of mostly rare terms (Spark sizes the 104k-term,
-    * 7.0 MB perfbench `serve` store at 38.8 MB) — in executor storage
-    * memory, and a partition that does not fit spills to local disk.
-    * [[close]] releases it; [[memoHandle]] closes a handle it
-    * replaces.
+    * The serving cache is a [[ShardCache]] named [[cacheName]] over the
+    * index's segment rows — compressed blocks plus their per-row
+    * metadata: one partition per shard directory, each one
+    * `term -> rows` map. Every (term, salt) run of a term lives in its
+    * shard, so a term's df (the sum of its rows' n_postings) is summed
+    * in the partition and rides on each row. Memory contract: the cache
+    * holds the store's blocks still compressed, plus object overhead
+    * per row — the bulk of it on a vocabulary of mostly rare terms
+    * (Spark sizes the 104k-term, 7.0 MB perfbench `serve` store at
+    * 38.8 MB) — in executor storage memory.
     *
     * Requests touch only the cache: term and expansion scoring is one
     * Spark job ([[topKTerms]]), and the dictionary walks ([[dfOf]],
-    * the expansion batches, the max df behind [[serveRanges]]) are
-    * single-stage jobs. Scoring fans out per doc-range, so no task ever
-    * pins a whole hot term. */
+    * the expansion batches) are single-stage jobs. Scoring fans out per
+    * doc-range, so no task ever pins a whole hot term. */
   final class Handle private[query] (spark: SparkSession, indexDir: String,
                                      cfg: EngineConfig = EngineConfig.default) extends AutoCloseable {
-    private val (n, avgdl) = SegmentBuilder.readStats(spark, indexDir)
-    private val (cache, byTerm): (RDD[Map[String, Array[SegRow]]], HashPartitioner) = {
-      import spark.implicits._
-      val scan = spark.read.parquet(s"$indexDir/segments").as[SegmentRow].rdd
-      val part = new HashPartitioner(math.max(1, scan.getNumPartitions))
-      val rdd = scan
-        .map(r => r.term -> SegRow(r.term, 0L, r.salt, r.row_seq, r.n_postings,
-          r.first_doc, r.last_doc, r.max_u, r.blocks.toArray))
-        .partitionBy(part)
-        .mapPartitions(rows => Iterator(rows.toArray.groupMap(_._1)(_._2).map { case (t, rs) =>
-          val df = rs.map(_.n_postings).sum
-          t -> rs.map(_.copy(df = df))
-        }), preservesPartitioning = true)
-        .setName(cacheName(indexDir))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      (rdd, part)
-    }
-    /** The cache's (term, df) dictionary, walked in place. */
-    private val dictionary: RDD[(String, Long)] =
-      cache.flatMap(_.iterator.map { case (t, rows) => t -> rows(0).df })
-    /** The doc-range fan-out ([[docRanges]]). Its max-df walk is the
-      * first job over the cache, so it also fills the cache at init. */
-    private val (ranges, rangeBounds) = docRanges(spark, indexDir, cfg,
-      dictionary.map(_._2).fold(0L)(math.max))
-    val serveRanges: Int = ranges
+    private val cache = new ShardCache[SegmentRow, Array[SegRow]](spark, indexDir, cfg, cacheName(indexDir),
+      spark.read.parquet(s"$indexDir/segments"), _.as(Encoders.product[SegmentRow]).rdd)(
+      (rows, _) => segRows(rows), _(0).df)
+    val serveRanges: Int = cache.ranges
 
     /** Analyzed match queries served by [[topKTerms]] (eager, bounded). */
     def topK(queries: Seq[(Int, String)],
@@ -495,7 +462,7 @@ object Wand {
       * [[expandCapped]]; at most tasks x prefixes x maxExpansions rows
       * reach the driver. */
     def expandPrefixBatch(prefixes: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
-      ServedTopK.termsOf(expandCapped(dictionary, prefixes, startsWith, ServedTopK.byTerm, maxExpansions))
+      ServedTopK.termsOf(expandCapped(cache.dictionary, prefixes, startsWith, ServedTopK.byTerm, maxExpansions))
 
     /** Every compiled (anchored) pattern's expansion out of ONE
       * dictionary walk — the wildcard ([[wildcardRegex]]) and regexp
@@ -505,7 +472,7 @@ object Wand {
       * DuckDB oracle's regexp_full_match agrees. See [[expandCapped]];
       * at most tasks x patterns x maxExpansions rows reach the driver. */
     def expandRegexBatch(patterns: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
-      ServedTopK.termsOf(expandCapped(dictionary, patterns, rlike, ServedTopK.byTerm, maxExpansions))
+      ServedTopK.termsOf(expandCapped(cache.dictionary, patterns, rlike, ServedTopK.byTerm, maxExpansions))
 
     /** Every (term, maxDist) input's expansion out of ONE dictionary
       * walk: index terms within CLASSIC Levenshtein distance <= maxDist
@@ -517,13 +484,7 @@ object Wand {
       * at most tasks x inputs x maxExpansions rows reach the driver). */
     def expandFuzzyBatch(inputs: Seq[(String, Int)], maxExpansions: Int): FuzzyExpansions =
       new FuzzyExpansions(ServedTopK.termsOf(
-        expandCapped(dictionary, inputs, withinDistance, ServedTopK.byDfThenTerm, maxExpansions)))
-
-    /** The cached rows of `terms`, read out of only the cache partitions
-      * that hold them. */
-    private def lookup[T: ClassTag](terms: Set[String])(f: (String, Array[SegRow]) => Iterator[T]): RDD[T] =
-      PartitionPruningRDD.create(cache, terms.map(byTerm.getPartition))
-        .flatMap(m => terms.iterator.flatMap(t => m.get(t).iterator.flatMap(f(t, _))))
+        expandCapped(cache.dictionary, inputs, withinDistance, ServedTopK.byDfThenTerm, maxExpansions)))
 
     /** Per-term df for a bounded term list, out of the serving cache — no
       * parquet read, no postings aggregation. df here is sum(n_postings)
@@ -533,56 +494,41 @@ object Wand {
       * served score uses. Absent terms are absent from the map. */
     def dfOf(terms: Seq[String]): Map[String, Long] =
       if (terms.isEmpty) Map.empty
-      else lookup(terms.toSet)((t, rows) => Iterator(t -> rows(0).df)).collect().toMap
+      else cache.lookup(terms.toSet)((t, rows) => Iterator(t -> rows(0).df)).collect().toMap
 
     /** Exact block-max WAND over per-query term lists (analyzed terms or
-      * expansions) in ONE Spark job over the serving cache. The lookup
-      * stage keys each cached row of a batch term per (qid, doc-range) —
-      * once for each qid that asked for the row's term and once for each
-      * range its [first_doc, last_doc] span overlaps (metadata only, no
-      * decode); absent terms yield no rows. The groups land in
-      * min(#groups, defaultParallelism) partitions (derived, not a
-      * knob); each scoring task runs [[wandScores]] per group with the
-      * df its rows carry, keeps a heap of k per qid
-      * ([[ServedTopK.bestPerQid]]), and the driver collects at most
-      * tasks x qids x k rows and [[ServedTopK.merge]]s them. EAGER:
-      * returns a local `(qid, rank, doc_id, score)` frame in
-      * (qid, rank) order. */
+      * expansions) in ONE Spark job over the serving cache
+      * ([[ShardCache.topK]]): each cached row of a batch term goes to
+      * every doc-range its [first_doc, last_doc] span overlaps (metadata
+      * only, no decode), and each (qid, range) group runs [[wandScores]]
+      * over its range with the df its rows carry. EAGER: returns a local
+      * `(qid, rank, doc_id, score)` frame in (qid, rank) order. */
     def topKTerms(queries: Seq[(Int, Seq[String])],
                   taskPostingsAcc: CollectionAccumulator[java.lang.Long] = null): DataFrame = {
-      val qidsOf: Map[String, Array[Int]] = queries
-        .flatMap { case (qid, ts) => ts.map(_ -> qid) }
-        .groupMap(_._1)(_._2).map { case (t, qs) => t -> qs.distinct.toArray }
-      if (qidsOf.isEmpty) return ServedTopK.noHits(spark)
-      val groups = qidsOf.values.flatten.toSet.size.toLong * serveRanges
-      val parts = math.min(groups, spark.sparkContext.defaultParallelism.toLong).toInt
       val k = cfg.topK; val k1 = cfg.k1; val b = cfg.b
-      val nL = n; val avg = avgdl
-      val bounds = rangeBounds
-      val acc = taskPostingsAcc
-      val heaps = lookup(qidsOf.keySet) { (term, rows) =>
-          for {
-            qid <- qidsOf(term).iterator
-            r <- rows.iterator
-            rid <- (RangeSaltExpr.bucketOf(bounds, r.first_doc) to RangeSaltExpr.bucketOf(bounds, r.last_doc)).iterator
-          } yield (qid, rid) -> r
-        }
-        .groupByKey(new HashPartitioner(parts))
-        .mapPartitions { groups =>
-          ServedTopK.bestPerQid(groups.flatMap { case ((qid, rid), it) =>
-            val rows = it.toArray
-            if (acc != null) acc.add(rows.map(_.n_postings).sum)
-            val lo = if (rid == 0) Long.MinValue else bounds(rid - 1)
-            val hi = if (rid >= bounds.length) Long.MaxValue else bounds(rid)
-            wandScores(rows, nL, avg, k, k1, b, lo, hi).iterator.map { case (s, d) => (qid, s, d) }
-          }, k)
-        }
-        .collect()
-      ServedTopK.merge(spark, heaps, k)
+      val n = cache.n; val avgdl = cache.avgdl
+      val bounds = cache.bounds
+      cache.topK(queries)((_, rows) => rows.iterator.flatMap(r =>
+        (RangeSaltExpr.bucketOf(bounds, r.first_doc) to RangeSaltExpr.bucketOf(bounds, r.last_doc))
+          .iterator.map(_ -> r))) { (_, rid, group) =>
+        val rows = group.toArray
+        if (taskPostingsAcc != null) taskPostingsAcc.add(rows.map(_.n_postings).sum)
+        val lo = if (rid == 0) Long.MinValue else bounds(rid - 1)
+        val hi = if (rid >= bounds.length) Long.MaxValue else bounds(rid)
+        wandScores(rows, n, avgdl, k, k1, b, lo, hi).iterator
+      }
     }
 
     /** Releases the serving cache without blocking (see [[memoHandle]]). */
-    def close(): Unit =
-      if (!spark.sparkContext.isStopped) { cache.unpersist(blocking = false); () }
+    def close(): Unit = cache.close()
   }
+
+  /** One serving-cache partition: a shard's segment rows gathered per
+    * term, each row carrying its term's df. */
+  private def segRows(rows: Iterator[SegmentRow]): Map[String, Array[SegRow]] =
+    rows.toArray.groupBy(_.term).map { case (t, rs) =>
+      val df = rs.map(_.n_postings).sum
+      t -> rs.map(r => SegRow(t, df, r.salt, r.row_seq, r.n_postings, r.first_doc, r.last_doc, r.max_u,
+        r.blocks.toArray))
+    }
 }

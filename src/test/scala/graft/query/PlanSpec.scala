@@ -1,11 +1,12 @@
 package graft.query
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlanInfo}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -18,8 +19,10 @@ import graft.{SparkEntry, SparkSuite}
 class PlanSpec extends SparkSuite {
 
   /** What a call ran: the executed plan of every query, the number of
-    * Spark jobs, and the bytes it read from files. */
-  private final class Observed(val plans: Seq[String], val jobs: Int, val fileBytes: Long)
+    * Spark jobs, the bytes it read from files and the shuffle bytes its
+    * tasks wrote. */
+  private final class Observed(val plans: Seq[String], val jobs: Int, val fileBytes: Long,
+                               val shuffleBytes: Long)
 
   /** The bytes read through Hadoop file systems so far, by every thread
     * of this JVM (local-mode executors included). A cached-block read
@@ -30,12 +33,14 @@ class PlanSpec extends SparkSuite {
     org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala.map(_.getBytesRead).sum
 
   /** Runs `f` and returns the executed plan of every query it ran, the
-    * number of Spark jobs it started and the file bytes it read. Served
+    * number of Spark jobs it started, the file bytes it read and the
+    * shuffle bytes its tasks wrote. Served
     * calls are eager and return a local frame, so their guards inspect
     * what the call EXECUTED, not the plan of what it returned. */
   private def observed(f: => Any): Observed = {
     val plans = new ConcurrentLinkedQueue[String]()
     val jobs = new AtomicInteger()
+    val shuffleBytes = new AtomicLong()
     val ql = new QueryExecutionListener {
       // an executed adaptive plan prints its initial plan after the
       // final one; keep the final plan, the one that ran
@@ -48,6 +53,8 @@ class PlanSpec extends SparkSuite {
     }
     val jl = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
     // events of earlier work must not reach the fresh listeners
     TestBus.drain(spark.sparkContext)
@@ -57,7 +64,7 @@ class PlanSpec extends SparkSuite {
       val bytes0 = fsBytesRead()
       f
       TestBus.drain(spark.sparkContext)
-      new Observed(plans.asScala.toSeq, jobs.get, fsBytesRead() - bytes0)
+      new Observed(plans.asScala.toSeq, jobs.get, fsBytesRead() - bytes0, shuffleBytes.get)
     } finally {
       spark.listenerManager.unregister(ql)
       spark.sparkContext.removeSparkListener(jl)
@@ -92,6 +99,24 @@ class PlanSpec extends SparkSuite {
       assert(present.fileBytes == 0, s"a warm served term request read ${present.fileBytes} file bytes")
       assert(none.jobs <= 1, s"an all-absent request ran ${none.jobs} jobs")
       assert(none.fileBytes == 0, s"an all-absent request read ${none.fileBytes} file bytes")
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(); ()
+    }
+  }
+
+  test("serving handle init writes no shuffle bytes: both caches build from the shard directories") {
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("plan_init_").toString
+    try {
+      graft.index.SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"),
+        dir, SparkEntry.IndexCfg)
+      graft.index.SegmentBuilder.buildAll(spark, dir, SparkEntry.IndexCfg)
+      var handles = Seq.empty[AutoCloseable]
+      val wand = observed { handles :+= Wand.handleFor(spark, dir, SparkEntry.IndexCfg) }
+      val phrase = observed { handles :+= BM25.phraseHandleFor(spark, dir, SparkEntry.IndexCfg) }
+      handles.foreach(_.close())
+      assert(wand.shuffleBytes == 0, s"WAND handle init wrote ${wand.shuffleBytes} shuffle bytes")
+      assert(phrase.shuffleBytes == 0, s"phrase handle init wrote ${phrase.shuffleBytes} shuffle bytes")
     } finally {
       new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(); ()
     }

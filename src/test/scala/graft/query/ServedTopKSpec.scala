@@ -1,12 +1,12 @@
 package graft.query
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import scala.reflect.io.Directory
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
-import graft.index.SegmentRow
+import graft.index.{IndexIo, SegmentBuilder, SegmentRow}
 
 /** The served ranking tail ([[ServedTopK]]): per-task heaps plus the
   * driver merge must return exactly what Spark's own ordering returns —
@@ -15,17 +15,23 @@ import graft.index.SegmentRow
   * disagree. */
 class ServedTopKSpec extends SparkSuite {
 
-  /** A serving handle over a bare term dictionary: `segments` holds
-    * segment rows with no blocks, each df > 1 split over two salted
-    * runs, and `stats` the corpus constants. */
+  /** A serving handle over a bare term dictionary, in the layout a
+    * build writes: `segments/shard=S` holds the segment rows (no blocks)
+    * of the terms [[BM25.termShard]] puts in shard S, each df > 1 split
+    * over two salted runs; the ingest marker carries the shard count,
+    * and `stats` the corpus constants. */
   private def withDictHandle(dict: Seq[(String, Long)])(f: Wand.Handle => Unit): Unit = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_dict_").toString
+    val shards = 3
     try {
       dict.flatMap { case (t, df) =>
         if (df > 1) Seq((t, 0, 1L), (t, 1, df - 1)) else Seq((t, 0, df)) }
-        .map { case (t, salt, n) => SegmentRow(t, salt, 0, n, 0L, 0L, 0.0, Nil) }
-        .toDF().repartition(3).write.parquet(s"$dir/segments")
+        .map { case (t, salt, n) => (SegmentRow(t, salt, 0, n, 0L, 0L, 0.0, Nil), BM25.termShard(t, shards)) }
+        .groupMap(_._2)(_._1)
+        .foreach { case (s, rows) => rows.toDF().write.parquet(s"$dir/segments/shard=$s") }
+      IndexIo.commitFile(Paths.get(dir, "_ingested"),
+        s"v${SegmentBuilder.LayoutVersion} pos=true shards=$shards\n")
       Seq((1000L, 10.0)).toDF("n", "avgdl").write.parquet(s"$dir/stats")
       val h = new Wand.Handle(spark, dir)
       try f(h) finally h.close()
@@ -112,8 +118,9 @@ class ServedTopKSpec extends SparkSuite {
       // the per-task cap and the driver merge across several partitions
       val keyed = dict.flatMap { case (t, df) => Seq((0, t, df), (1, t, df)) }
         .toDS().repartition(5)
-      assert(ServedTopK.capPerKey(keyed, ServedTopK.byTerm, cap)(0) === sparkOrder.take(cap))
-      assert(ServedTopK.capPerKey(keyed, ServedTopK.byDfThenTerm, cap)(1) ===
+      assert(ServedTopK.termsOf(ServedTopK.capPerKeyWithDf(keyed.rdd, ServedTopK.byTerm, cap))(0) ===
+        sparkOrder.take(cap))
+      assert(ServedTopK.termsOf(ServedTopK.capPerKeyWithDf(keyed.rdd, ServedTopK.byDfThenTerm, cap))(1) ===
         terms(dictDf.orderBy(col("df").desc, col("term")).limit(cap)))
     }
   }

@@ -333,4 +333,21 @@ class WandSpec extends SparkSuite {
       assert(omegaAlpha.size == c.topK && omegaAlpha.subsetOf(more.map(_._1).toSet))
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
+
+  test("a handle that fails to open releases its serving cache: docmap gone with ranges > 1") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_wand_fail_").toString
+    try {
+      val c = cfg.copy(shards = 2, blockSize = 8, saltTargetPostings = 64, serveTargetPostings = 16)
+      val docs = (0L until 200L).map(i => (i, if (i % 2 == 0) "alpha beta" else "alpha gamma"))
+      SegmentBuilder.ingest(spark, docs.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      new Directory(new java.io.File(s"$dir/docmap")).deleteRecursively()
+      // the max-df walk fills the cache; reading docmap for the range
+      // bounds then fails
+      assertThrows[Exception](Wand.handleFor(spark, dir, c))
+      assert(!spark.sparkContext.getPersistentRDDs.values.exists(_.name == Wand.cacheName(dir)),
+        "a handle that failed to open must not leave its serving cache pinned")
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
+  }
 }

@@ -12,10 +12,15 @@ sides alike. Each run uses its own checkout's benchmark code and build.
 Prints one JSON line: for each end-to-end metric that BENCHMARK.json (in
 <changeDir>) declares, each side's median, q1 and q3 over the pairs, and
 how many pairs the change side won (ties count for neither side), plus
-the seeds and the raw per-pair values. Under "layers" it also gives each
-side's median of the report line's per-layer timings (REPORT_KEYS, those
-the workload prints), so a speed claim can name the layer it moved.
-Progress goes to stderr.
+the seeds and the raw per-pair values. Each metric also gets its
+no-regression gate against the BENCHMARK.json bound, a share of the
+parent's median: "unresolved" when the parent's quartile spread (q3 - q1)
+is wider than the bound, unless every change run reads better than every
+parent run; else "within" when the change median is worse than the
+parent's by at most the bound, and "worse" when by more. Under "layers" it
+also gives each side's median of the report line's per-layer timings
+(REPORT_KEYS, those the workload prints), so a speed claim can name the
+layer it moved. Progress goes to stderr, and so do the gates, as one line.
 """
 import argparse
 import json
@@ -53,6 +58,19 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def gate(direction, bound, p, c):
+    """The no-regression gate of one metric over the parent runs `p` and
+    the change runs `c`: "within", "worse" or "unresolved" (see the
+    module docstring)."""
+    q1, med, q3 = quartiles(p)
+    sign = 1 if direction == "higher" else -1
+    every_change_run_better = min(sign * x for x in c) > max(sign * x for x in p)
+    if q3 - q1 > bound * abs(med) and not every_change_run_better:
+        return "unresolved"
+    worse_by = sign * (med - quartiles(c)[1]) / abs(med)
+    return "within" if worse_by <= bound else "worse"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent")
@@ -63,6 +81,7 @@ def main():
     args = ap.parse_args()
     spec = json.loads((Path(args.change) / "BENCHMARK.json").read_text())
     better = {m["name"]: m["better"] for m in spec["end_to_end"]}
+    bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
 
     seeds = [1 + 3 * i for i in range(args.pairs)]
     runs = {"parent": [], "change": []}
@@ -81,7 +100,8 @@ def main():
         p = [r[name] for r in runs["parent"]]
         c = [r[name] for r in runs["change"]]
         wins = sum(1 for a, b in zip(p, c) if (b > a if direction == "higher" else b < a))
-        m = {"better": direction, "change_wins": wins, "parent": p, "change": c}
+        m = {"better": direction, "change_wins": wins, "bound": bounds[name],
+             "gate": gate(direction, bounds[name], p, c), "parent": p, "change": c}
         for side, xs in (("parent", p), ("change", c)):
             q1, med, q3 = quartiles(xs)
             m[side + "_median"], m[side + "_q1"], m[side + "_q3"] = med, q1, q3
@@ -92,6 +112,8 @@ def main():
         if all(sides.values()):
             out["layers"][key] = {side + "_median": statistics.median(xs)
                                   for side, xs in sides.items()}
+    print("ab_pairs: gates: " + ", ".join(f"{name} {m['gate']}" for name, m in out["metrics"].items()),
+          file=sys.stderr)
     print(json.dumps(out))
 
 
