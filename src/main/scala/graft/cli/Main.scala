@@ -1,5 +1,7 @@
 package graft.cli
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -365,10 +367,16 @@ object Main {
           Seq("total", "valid", "invalid", "with_warnings").map(k => k -> c(k))
         }
       case "query" :: indexDir :: rest if rest.nonEmpty =>
-        val spark = session("graft-query")
         val a = parseQueryArgs(rest)
-        runQuery(spark, indexDir, a, cfg).show(a.k.getOrElse(cfg.topK), false)
-        spark.stop()
+        runVerb("query", s"query $indexDir") { spark =>
+          val hits = runQuery(spark, indexDir, a, cfg)
+          // shown from the collected rows: a lazy frame would run its
+          // query again
+          val rows = hits.collect()
+          spark.createDataFrame(java.util.Arrays.asList(rows: _*), hits.schema)
+            .show(a.k.getOrElse(cfg.topK), false)
+          Seq("hits" -> rows.length, "caches" -> cachesField(Wand.openCaches(spark, indexDir)))
+        }
       case "analyze" :: docs :: Nil =>
         val spark = session("graft-analyze")
         analyze(spark, docs).show(false)
@@ -393,8 +401,8 @@ object Main {
     }
   }
 
-  /** The one lifecycle of a maintenance verb: session, cancellable job
-    * group, metrics listener, `body`, the verb's JSON line, stop. `body`
+  /** The one lifecycle of a verb: session, cancellable job group,
+    * metrics listener, `body`, the verb's JSON line, stop. `body`
     * returns the verb's own fields. If it dies BECAUSE the user cancelled
     * (cancelJobGroup aborts in-flight stages with a SparkException), the
     * line reports an orderly cancellation (no verb fields) instead of a
@@ -421,18 +429,25 @@ object Main {
     if (Cancellation.isRequested) sys.exit(130)
   }
 
-  /** A maintenance verb's JSON line: `op`, the verb's fields in order,
-    * then `cancelled`, `secs` and `metrics` (a JSON object, inlined).
-    * Field values are numbers; doubles that JSON cannot hold (NaN,
-    * infinities) print as null. */
+  /** A verb's JSON line: `op`, the verb's fields in order, then
+    * `cancelled`, `secs` and `metrics` (a JSON object, inlined). Field
+    * values are numbers, or objects given as a `ListMap` of fields;
+    * doubles that JSON cannot hold (NaN, infinities) print as null. */
   def verbLine(op: String, fields: Seq[(String, Any)], cancelled: Boolean, secs: Double,
                metricsJson: String): String = {
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => s"${graft.JsonUtil.q(k)}:$v" }.mkString("{", ",", "}")
     def value(v: Any): String = v match {
       case d: Double => jsonNum(d)
+      case m: ListMap[String @unchecked, Any @unchecked] => obj(m.toSeq.map { case (k, x) => k -> value(x) })
       case x => x.toString
     }
-    val kvs = ("op" -> graft.JsonUtil.q(op)) +: fields.map { case (k, v) => k -> value(v) } :+
-      ("cancelled" -> cancelled.toString) :+ ("secs" -> jsonNum(secs)) :+ ("metrics" -> metricsJson)
-    kvs.map { case (k, v) => s"${graft.JsonUtil.q(k)}:$v" }.mkString("{", ",", "}")
+    obj(("op" -> graft.JsonUtil.q(op)) +: fields.map { case (k, v) => k -> value(v) } :+
+      ("cancelled" -> cancelled.toString) :+ ("secs" -> jsonNum(secs)) :+ ("metrics" -> metricsJson))
   }
+
+  /** The `query` line's `caches` field: each open serving cache of the
+    * index by name, with its resident `bytes` and `fill_s`. */
+  def cachesField(caches: Seq[Wand.CacheStat]): ListMap[String, Any] =
+    ListMap(caches.map(c => c.name -> ListMap("bytes" -> c.bytes, "fill_s" -> c.fillS)): _*)
 }

@@ -30,7 +30,7 @@ import graft.index.{Postings, SegmentBuilder}
   *  - span: [[phraseSpans]] decides phrase adjacency over joined
   *    (keys…, doc_id, off, m, positions) rows;
   *  - expansion cap: [[Wand.expandCapped]] caps term expansions over
-  *    any (term, df) RDD.
+  *    any sorted (term, df) dictionary.
   */
 object BM25 {
 
@@ -390,47 +390,42 @@ object BM25 {
       foldAscending(when(col("score_me"), struct(col("term"), col("w")))).as("score"))
   }
 
-  /** One term's positional postings as the positional cache holds
-    * them: flat primitive arrays sorted by doc — `docs(i)` has doclen
-    * `doclens(i)`, tf `tfs(i)` and positions
-    * `positions(posOff(i) until posOff(i + 1))` — plus the term's df,
-    * its postings-row count in the whole store (what [[postingsDf]]
-    * counts), which a doc-range slice keeps. */
-  final case class PosEntry(df: Long, docs: Array[Long], doclens: Array[Int], tfs: Array[Int],
+  /** One term's positional postings in one doc partition, as the
+    * positional cache holds them: flat primitive arrays sorted by doc —
+    * `docs(i)` has doclen `doclens(i)` and positions
+    * `positions(posOff(i) until posOff(i + 1))`, as many as its tf
+    * ([[tf]]) — plus the term's df, its postings-row count in the whole
+    * store (what [[postingsDf]] counts), which a cut keeps. */
+  final case class PosEntry(df: Long, docs: Array[Long], doclens: Array[Int],
                             posOff: Array[Int], positions: Array[Int]) {
-    /** Docs `from until until`, their positions rebased. */
-    def slice(from: Int, until: Int): PosEntry =
-      if (from == 0 && until == docs.length) this
+    /** The tf of `docs(i)`: its position count. */
+    def tf(i: Int): Int = posOff(i + 1) - posOff(i)
+
+    /** The postings of docs [lo, hi), positions rebased; None when the
+      * range holds none of the entry's docs. */
+    def within(lo: Long, hi: Long): Option[PosEntry] = {
+      def cut(b: Long) = { val i = java.util.Arrays.binarySearch(docs, b); if (i >= 0) i else -i - 1 }
+      val from = if (lo == Long.MinValue) 0 else cut(lo)
+      val until = if (hi == Long.MaxValue) docs.length else cut(hi)
+      if (from >= until) None
+      else if (from == 0 && until == docs.length) Some(this)
       else {
         val p0 = posOff(from)
-        PosEntry(df, docs.slice(from, until), doclens.slice(from, until), tfs.slice(from, until),
-          posOff.slice(from, until + 1).map(_ - p0), positions.slice(p0, posOff(until)))
+        Some(PosEntry(df, docs.slice(from, until), doclens.slice(from, until),
+          posOff.slice(from, until + 1).map(_ - p0), positions.slice(p0, posOff(until))))
       }
+    }
 
     /** The same postings in the order of `sorted`, the entry's docs
       * sorted (and distinct): row i moves to the slot of its doc. */
     def permuted(sorted: Array[Long]): PosEntry = {
       val to = docs.map(java.util.Arrays.binarySearch(sorted, _))
-      val dl, tf, len = new Array[Int](docs.length)
-      for (i <- docs.indices) {
-        dl(to(i)) = doclens(i); tf(to(i)) = tfs(i); len(to(i)) = posOff(i + 1) - posOff(i)
-      }
+      val dl, len = new Array[Int](docs.length)
+      for (i <- docs.indices) { dl(to(i)) = doclens(i); len(to(i)) = tf(i) }
       val off = len.scanLeft(0)(_ + _)
       val pos = new Array[Int](positions.length)
       for (i <- docs.indices) System.arraycopy(positions, posOff(i), pos, off(to(i)), len(to(i)))
-      PosEntry(df, sorted, dl, tf, off, pos)
-    }
-
-    /** The entry cut at the doc-range `bounds` of [[Wand.docRanges]]:
-      * one (range, slice) per range that holds any of its docs. */
-    def byRange(bounds: Array[Long]): Iterator[(Int, PosEntry)] = {
-      // cut(r) = the first doc at or past range r's lower bound
-      val cut = 0 +: bounds.map { b =>
-        val i = java.util.Arrays.binarySearch(docs, b)
-        if (i >= 0) i else -i - 1
-      } :+ docs.length
-      Iterator.range(0, bounds.length + 1).filter(r => cut(r) < cut(r + 1))
-        .map(r => r -> slice(cut(r), cut(r + 1)))
+      PosEntry(df, sorted, dl, off, pos)
     }
   }
 
@@ -438,16 +433,18 @@ object BM25 {
   private[query] def positionalCacheName(indexDir: String): String =
     s"graft positional cache $indexDir"
 
-  /** One positional cache partition: postings rows
+  /** One shard's positional entries: postings rows
     * `(term, doc_id, doclen, tf, positions)` in any order, gathered per
-    * term into one [[PosEntry]] per term, sorted by doc. A repeated
-    * (term, doc) row — a replayed append's postings that no compaction
-    * has deduplicated yet — fails loud: served df and matches would
-    * silently differ from the deduplicated store's. */
+    * term into one [[PosEntry]] per term, sorted by doc, its df the
+    * term's row count. A repeated (term, doc) row — a replayed append's
+    * postings that no compaction has deduplicated yet — fails loud:
+    * served df and matches would silently differ from the deduplicated
+    * store's. So does a row whose tf is not its position count, which
+    * the entry would not keep. */
   private def positionalEntries(rows: Iterator[InternalRow], where: String): Map[String, PosEntry] = {
     final class TermRows {
       val docs = new mutable.ArrayBuilder.ofLong
-      val doclens, tfs, posOff, positions = new mutable.ArrayBuilder.ofInt
+      val doclens, posOff, positions = new mutable.ArrayBuilder.ofInt
       posOff += 0
     }
     val byTerm = new java.util.HashMap[UTF8String, TermRows]()
@@ -457,8 +454,10 @@ object BM25 {
       if (b == null) { b = new TermRows; byTerm.put(t.clone(), b) }
       b.docs += r.getLong(1)
       b.doclens += Math.toIntExact(r.getLong(2))
-      b.tfs += Math.toIntExact(r.getLong(3))
       val ps = r.getArray(4)
+      if (r.getLong(3) != ps.numElements())
+        throw new IllegalStateException(s"$where holds a postings row for (term <$t>, doc ${r.getLong(1)}) " +
+          s"with tf ${r.getLong(3)} but ${ps.numElements()} positions")
       var i = 0
       while (i < ps.numElements()) { b.positions += ps.getInt(i); i += 1 }
       b.posOff += b.positions.length
@@ -475,8 +474,7 @@ object BM25 {
             s"(term <$t>, doc ${sorted(i)}), a replayed append: compactShards removes them")
         i += 1
       }
-      val e = PosEntry(docs.length, docs, b.doclens.result(), b.tfs.result(), b.posOff.result(),
-        b.positions.result())
+      val e = PosEntry(docs.length, docs, b.doclens.result(), b.posOff.result(), b.positions.result())
       out += t.toString -> (if (java.util.Arrays.equals(docs, sorted)) e else e.permuted(sorted))
     }
     out.result()
@@ -488,36 +486,41 @@ object BM25 {
     * Result contract identical to [[phraseTopK]].
     *
     * The positional cache is a [[ShardCache]] named
-    * [[positionalCacheName]] over the index's positional postings: one
-    * partition per `postings/shard=S` directory, its rows gathered per
-    * term and sorted by doc in the task, each partition one
-    * `term -> [[PosEntry]]` map: one object per term, never one per
-    * posting. Memory contract: the store's postings and positions as
-    * flat arrays plus per-term overhead (Spark sizes the cache of the
-    * perfbench `serve` index — 30k docs, 1.69M postings, 13 MB of
-    * parquet — at 63.7 MB) in executor storage memory.
+    * [[positionalCacheName]] over the index's positional postings. Its
+    * doc partitions, one per doc range, each hold the postings of their
+    * docs, gathered per term and sorted by doc: per shard, one
+    * `term -> [[PosEntry]]` map, one object per term, never one per
+    * posting. Each entry's df is its term's postings-row count in the
+    * whole store — appends no `buildAll` has encoded included — counted
+    * where the init gather sees all of the term's rows, in its shard.
+    * Memory contract: the store's postings and positions as flat arrays
+    * plus per-term overhead, each posting held once, in executor storage
+    * memory. It keeps no dictionary: a phrase expands nothing, and
+    * the max df that sizes the doc ranges comes off the gather. [[caches]]
+    * reports the sizes.
     *
-    * [[topK]] is ONE Spark job over that cache ([[ShardCache.topK]]),
-    * EAGER: the lookup stage slices each batch term's entry by
-    * doc-range, so no task ever holds a whole hot term; each
-    * (qid, range) group intersects its docs, runs the span check per phrase offset
-    * ([[OrderedSpanMatchExpr.spans]]) and scores with the shared
-    * [[weight]] and [[foldTerms]] ([[phraseHits]]), and the hits rank
-    * into a local `(qid, rank, doc_id, score)` frame in (qid, rank)
-    * order.
+    * [[topK]] is ONE Spark job of ONE stage over the doc partitions
+    * ([[ShardCache.topK]]), EAGER: each partition intersects the docs
+    * of each phrase's terms in its range, runs the span check per
+    * phrase offset ([[OrderedSpanMatchExpr.spans]]) and scores with the
+    * shared [[weight]] and [[foldTerms]] ([[phraseHits]]), and the hits
+    * rank into a local `(qid, rank, doc_id, score)` frame in
+    * (qid, rank) order. A doc range holds at most about
+    * `serveTargetPostings` postings of the hottest term, so no request
+    * task ever holds a whole hot term.
     *
     * Staleness contract (same as [[Wand.Handle]]): the handle reflects
     * the index state at construction; [[phraseHandleFor]] swaps it after
     * [[graft.index.SegmentBuilder.appendDocs]] / a rebuild. */
   final class PhraseHandle private[query] (spark: SparkSession, indexDir: String,
                                            cfg: EngineConfig = EngineConfig.default)
-      extends AutoCloseable {
+      extends Wand.ServingHandle {
     private val cache = {
       val dir = indexDir
-      new ShardCache[InternalRow, PosEntry](spark, indexDir, cfg, positionalCacheName(indexDir),
+      new ShardCache[InternalRow, PosEntry](spark, indexDir, cfg, positionalCacheName(indexDir), "positional",
         positionalPostings(spark, indexDir),
-        _.select("term", "doc_id", "doclen", "tf", "positions").queryExecution.toRdd)(
-        (rows, s) => positionalEntries(rows, s"$dir/postings/shard=$s"), _.df)
+        _.select("term", "doc_id", "doclen", "tf", "positions").queryExecution.toRdd, withDictionary = false)(
+        (rows, s) => positionalEntries(rows, s"$dir/postings/shard=$s"), _.df, _.within(_, _))
     }
     val serveRanges: Int = cache.ranges
 
@@ -527,21 +530,21 @@ object BM25 {
         .filter(_._2.nonEmpty).toMap
       val k1 = cfg.k1; val b = cfg.b
       val n = cache.n; val avgdl = cache.avgdl
-      val bounds = cache.bounds
-      cache.topK(phraseOf.toSeq.map { case (qid, ts) => qid -> ts.toSeq })((t, e) =>
-        e.byRange(bounds).map { case (rid, slice) => rid -> (t, slice) }) { (qid, _, slices) =>
-        phraseHits(phraseOf(qid), slices.toMap, slop, n, avgdl, k1, b)
+      cache.topK(phraseOf.toSeq.map { case (qid, ts) => qid -> ts.toSeq }) { (qid, _, _, entries) =>
+        phraseHits(phraseOf(qid), entries.toMap, slop, n, avgdl, k1, b)
       }
     }
+
+    def caches: Seq[Wand.CacheStat] = cache.caches
 
     /** Releases the positional cache without blocking (see
       * [[Wand.memoHandle]]). */
     def close(): Unit = cache.close()
   }
 
-  /** One (qid, doc-range) group of a served phrase batch: `ts` the
-    * phrase's terms by offset, `byTerm` the group's slice of each term
-    * present. The docs holding every term pass the span check over
+  /** One (qid, doc partition) of a served phrase batch: `ts` the
+    * phrase's terms by offset, `byTerm` the partition's entry of each
+    * term present. The docs holding every term pass the span check over
     * their per-offset positions ([[OrderedSpanMatchExpr.spans]]) and
     * score as the sum of [[weight]] over the phrase's distinct terms
     * ([[foldTerms]]) — what [[phraseScoredOver]] computes for the same
@@ -575,7 +578,7 @@ object BM25 {
       }
     }.map(d => foldTerms(terms.indices.map { j =>
       val e = es(j); val i = at(j)
-      terms(j) -> weight(e.tfs(i), e.doclens(i), e.df, n, avgdl, k1, b)
+      terms(j) -> weight(e.tf(i), e.doclens(i), e.df, n, avgdl, k1, b)
     }) -> d)
   }
 

@@ -202,7 +202,7 @@ object QueryDsl {
   /** Wildcard top-k served from the segment index: the pattern (`*` =
     * any sequence, `?` = one char; lowercased — ES wildcard queries are
     * not analyzed) expands against the cached term dictionary
-    * ([[Wand.wildcardRegex]] into [[Wand.Handle.expandRegexBatch]], lexicographic-first
+    * ([[Wand.Handle.expandWildcardBatch]], lexicographic-first
     * `maxExpansions`) and the expansion serves through the same exact
     * block-max WAND as match/prefix (rewrite=scoring_boolean: each term
     * scores with its own df). */
@@ -211,12 +211,10 @@ object QueryDsl {
                    maxExpansions: Int = MaxExpansions,
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
     val h = Wand.handleFor(spark, indexDir, cfg)
-    // one metadata job expands the whole batch: compile each wildcard
-    // to its anchored regex and ride the shared regex batch
-    val qp = queries.map { case (qid, p) =>
-      (qid, Wand.wildcardRegex(p.trim.toLowerCase(java.util.Locale.ROOT))) }
-    val exp = h.expandRegexBatch(qp.map(_._2), maxExpansions)
-    h.topKTerms(qp.map { case (qid, rx) => qid -> exp(rx) })
+    // one metadata job expands the whole batch
+    val qp = queries.map { case (qid, p) => (qid, p.trim.toLowerCase(java.util.Locale.ROOT)) }
+    val exp = h.expandWildcardBatch(qp.map(_._2), maxExpansions)
+    h.topKTerms(qp.map { case (qid, p) => qid -> exp(p) })
   }
 
   /** ES search_after — deep pagination without deep sorting. The cursor
@@ -828,8 +826,8 @@ object QueryDsl {
       else Wand.expandCapped(Postings.build(docs, idCol, contentCol)
           .filter(prefixes.map(p => col("term").startsWith(p)).reduce(_ || _)) // pruned BEFORE the df agg
           .groupBy("term").agg(count(lit(1)).as("df"))
-          .rdd.map(r => (r.getString(0), r.getLong(1))),
-        prefixes, Wand.startsWith, ServedTopK.byTerm, maxExpansions)
+          .rdd.mapPartitions(rs => Iterator(ServedTopK.TermDict(rs.map(r => (r.getString(0), r.getLong(1)))))),
+        prefixes, maxExpansions)(p => _.startingWith(p))
     }
     val (n, avgdl, dfLit) = Await.result(statsF, Duration.Inf)
     val expMap = Await.result(expF, Duration.Inf)
@@ -1057,9 +1055,9 @@ object QueryDsl {
     * not `stables`), expands against the cached term dictionary
     * ([[Wand.Handle.expandRegexBatch]], lexicographic-first `maxExpansions`)
     * and serves through the same exact WAND as prefix/wildcard. The
-    * expansion walks the serving cache's term dictionary, never postings — a
-    * regexp with no literal prefix costs a full term-dict scan, the
-    * same cost class Lucene documents for leading-wildcard patterns.
+    * expansion scans the handle's whole sorted term dictionary (terms
+    * and df, never postings), the same cost class Lucene documents for
+    * leading-wildcard patterns.
     * Oracle parity holds on the regex subset both Java and RE2 agree on
     * (literals, classes, ., *, +, |, grouping — no backrefs or
     * lookaround). */
@@ -1252,7 +1250,11 @@ object QueryDsl {
     * rescore cost is bounded by the window at any corpus size — the ES
     * contract that makes expensive queries affordable as rescorers.
     *
-    * Output contract identical to [[BM25.topK]]. */
+    * Output contract identical to [[BM25.topK]], with one documented
+    * deviation from ES: the result holds the window only, so with
+    * `windowSize < topK` a query returns at most `windowSize` hits,
+    * where ES returns the rest of its top k below the window in base
+    * order. */
   def rescoreTopK(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                   queries: Seq[(Int, String, String)], windowSize: Int,
                   queryWeight: Double = 1.0, rescoreWeight: Double = 1.0,

@@ -77,6 +77,38 @@ object ServedTopK {
     private def lift(c: Char): Int = if (c >= 0xE000) c - 0x800 else c + 0x2000
   }
 
+  /** One partition of a term dictionary: its distinct terms in
+    * [[termOrder]] with a parallel df array. Under [[termOrder]] the
+    * terms that start with a string form one contiguous run (it is a
+    * lexicographic order over a total order of UTF-16 units), so a
+    * prefix is a binary-searched range. */
+  final class TermDict(val terms: Array[String], val dfs: Array[Long]) extends Serializable {
+    /** `term`'s df, when the partition holds it. */
+    def df(term: String): Option[Long] = {
+      val i = java.util.Arrays.binarySearch(terms, term, termOrder)
+      if (i >= 0) Some(dfs(i)) else None
+    }
+
+    /** The indices of the terms starting with `prefix`, in order. */
+    def startingWith(prefix: String): Iterator[Int] = {
+      val i = java.util.Arrays.binarySearch(terms, prefix, termOrder)
+      Iterator.range(if (i >= 0) i else -i - 1, terms.length).takeWhile(terms(_).startsWith(prefix))
+    }
+
+    /** The indices of the terms starting with `literal` that `matches`,
+      * in order: "" walks the whole partition. */
+    def matching(literal: String, matches: String => Boolean): Iterator[Int] =
+      startingWith(literal).filter(j => matches(terms(j)))
+  }
+
+  object TermDict {
+    /** The dictionary of distinct (term, df) entries. */
+    def apply(entries: Iterator[(String, Long)]): TermDict = {
+      val sorted = entries.toArray.sortBy(_._1)(termOrder)
+      new TermDict(sorted.map(_._1), sorted.map(_._2))
+    }
+  }
+
   /** Lexicographic expansion order (prefix, wildcard, regexp):
     * `orderBy("term")`. */
   val byTerm: Ordering[(String, Long)] = Ordering.by[(String, Long), String](_._1)(termOrder)

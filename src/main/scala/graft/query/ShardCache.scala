@@ -1,119 +1,196 @@
 package graft.query
 
+import scala.collection.mutable
 import scala.reflect.ClassTag
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.GraftRddBridge
+import org.apache.spark.GraftRddBridge.Sized
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SizeEstimator
 
 import graft.config.EngineConfig
 import graft.index.SegmentBuilder
+import graft.query.ServedTopK.TermDict
 
-/** The executor-resident serving cache behind both serving handles
+/** The executor-resident serving caches behind both serving handles
   * ([[Wand.Handle]] over the segment store, [[BM25.PhraseHandle]] over
-  * the positional postings) — REPOSE's local index per data partition,
-  * pruned by partition at query time and never re-partitioned. A served
-  * request is small, so its latency is the fixed cost of each Spark job
-  * it runs; the index therefore stays RESIDENT, the way ES keeps its
-  * term dictionary and postings loaded on its data nodes.
+  * the positional postings) — the ES shard layout, REPOSE's local index
+  * per data partition: the index is partitioned by DOCUMENT, and every
+  * request goes to every partition. A served request is small, so its
+  * latency is the fixed cost of each Spark job and stage it runs; the
+  * index therefore stays RESIDENT, the way ES keeps its term dictionary
+  * and postings loaded on its data nodes.
   *
-  * Build, with no shuffle and no join: partition s reads `table`'s
-  * `shard=s` directory — shard = pmod(xxhash64(term), shards), so all
-  * of a term's rows land in one partition, which the driver finds with
-  * [[BM25.termShard]], running no job — through one narrow scan
-  * coalesced to one task (an absent shard directory gives an empty
-  * partition), and `gather` turns its rows into one `term -> entry`
-  * map. The shard count comes from the index's OWN ingest marker
+  * Persisted (`MEMORY_AND_DISK`) RDDs, built with no shuffle, no
+  * join and no driver collect from one transient term-partitioned
+  * gather: partition s reads `table`'s `shard=S` directory
+  * (shard = pmod(xxhash64(term), shards), so ALL of a term's rows land
+  * in one partition) through one narrow scan coalesced to one task,
+  * and `gather` turns its rows into one `term -> entry` map — every
+  * entry sees all of its term's rows, so its df is the store's. The
+  * shard count comes from the index's OWN ingest marker
   * ([[SegmentBuilder.indexShards]]), never from a caller config: a
   * count that disagreed with the writer's would silently prune to the
-  * wrong partition. The maps are persisted `MEMORY_AND_DISK` under
-  * `name`; a partition that does not fit spills to local disk.
-  * [[close]] releases them; [[Wand.memoHandle]] closes a handle it
-  * replaces.
+  * wrong partition. From that gather:
+  *  - the DICTIONARY, kept `withDictionary` (the WAND handle: the phrase
+  *    handle expands nothing), one partition per shard: a [[TermDict]]
+  *    of the shard's terms, sorted in [[ServedTopK.termOrder]], and
+  *    their store-wide df. It serves [[dfOf]] (the driver finds a
+  *    term's partition with [[BM25.termShard]], running no job), the
+  *    max df that sizes the doc ranges, and the expansion walks
+  *    ([[Wand.expandCapped]]); filling it is the first job. Without it,
+  *    the first job reads the max df straight off the gather;
+  *  - the DOC PARTITIONS, one per doc range of [[Wand.docRanges]] (from
+  *    that max df — derived, not a knob): range r's task reads every
+  *    gathered shard map (a narrow coalesce) and keeps each entry `cut`
+  *    to its docs, so a partition holds, per shard, one `term -> entry`
+  *    map of every term with docs in the range, each entry carrying its
+  *    term's store-wide df; a request finds a term's map by its shard.
+  *    With one range nothing is cut: the shard maps serve as gathered.
+  * The gather is released once the caches are filled.
   *
-  * Once filled, the cache is locally checkpointed: its lineage — one
-  * SQL scan plan per shard — is cut, so every request's tasks ship a
-  * few kB instead of every shard's scan plan (measured on a 4-shard
-  * index: a lookup task 111 kB -> 4.6 kB, a [[Wand.Handle.dfOf]] job
-  * 32 -> 21 ms). The price: a block that is gone — a closed handle's
-  * in-flight request, a lost executor — fails the request loudly
-  * instead of re-reading its shard.
+  * Init cost: each shard task sizes its map as it gathers it (Spark's
+  * `SizeEstimator`, the walk the block store would make) and caches it
+  * [[Sized]], so the block store takes the figure. With one range, the
+  * one doc partition holds the maps as gathered and adds up their
+  * sizes: its fill walks nothing, where walking the whole store in one
+  * task cost 0.5–0.9 s per handle on the perfbench `serve` index. With
+  * more ranges, each range's task reads the whole gather, keeps its cut
+  * and sizes it, the ranges' tasks in parallel. More doc partitions
+  * than ranges would repeat every entry cut at a partition bound (a
+  * WAND row's blocks cannot be split): four doc partitions on the
+  * `serve` index held 87.0 MB of WAND rows against one's 38.0 MB.
   *
-  * Init reads the corpus stats, then the doc-range fan-out
-  * ([[Wand.docRanges]]) from the max df over the dictionary — the first
-  * job over the cache, so it also fills it. A cache that fails to open
-  * releases what it cached: no memo entry exists yet to close it.
+  * Memory contract: the doc partitions hold the store once when there
+  * is one range (the serve index), plus what entries cut at range
+  * bounds repeat; the dictionary holds each term and its df once.
+  * [[caches]] reports their sizes (Spark's `getRDDStorageInfo`) and the
+  * seconds each took to fill.
   *
-  * A request touches only the cache: [[lookup]] reads its terms' entries
-  * out of only the partitions that hold them, and [[topK]] serves a
-  * ranked batch in ONE Spark job with no Catalyst plan and no file
-  * read. */
+  * Once filled, both are locally checkpointed: their lineage — scan
+  * plans — is cut, so a request's tasks ship a few kB. The price: a
+  * block that is gone — a closed handle's in-flight request, a lost
+  * executor — fails the request loudly instead of re-reading the
+  * store. A cache that fails to open releases what it pinned: no memo
+  * entry exists yet to close it.
+  *
+  * A ranked request ([[topK]]) is ONE Spark job of ONE stage with no
+  * Catalyst plan and no file read; a dictionary walk is another. */
 private[query] final class ShardCache[R: ClassTag, E](
-    spark: SparkSession, indexDir: String, cfg: EngineConfig,
-    name: String, table: DataFrame, scan: DataFrame => RDD[R])
-    (gather: (Iterator[R], Int) => Map[String, E], df: E => Long) extends AutoCloseable {
+    spark: SparkSession, indexDir: String, cfg: EngineConfig, name: String, label: String,
+    table: DataFrame, scan: DataFrame => RDD[R], withDictionary: Boolean)
+    (gather: (Iterator[R], Int) => Map[String, E], df: E => Long, cut: (E, Long, Long) => Option[E])
+    extends AutoCloseable {
   val (n, avgdl) = SegmentBuilder.readStats(spark, indexDir)
   private val shards = SegmentBuilder.indexShards(indexDir)
-  private val cache: RDD[Map[String, E]] = {
-    val g = gather
-    spark.sparkContext.union((0 until shards).map(s => scan(table.filter(table("shard") === s).coalesce(1))))
-      .mapPartitionsWithIndex((s, rows) => Iterator(g(rows, s)))
-      .setName(name)
+  // (label, cache, fill seconds) of every RDD this cache pinned
+  private val pinned = mutable.ArrayBuffer.empty[(String, RDD[_], Double)]
+
+  /** `rdd` persisted under `as`, then filled (and locally checkpointed)
+    * by the timed job `fill`; pinned BEFORE the job runs, so [[close]]
+    * releases a half-filled cache too. */
+  private def pin[T, A](as: String, rdd: RDD[T])(fill: RDD[T] => A): (RDD[T], A) = {
+    rdd.setName(if (as == label) name else s"$name $as").persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
+    val i = pinned.size
+    pinned += ((as, rdd, 0.0))
+    val t0 = System.nanoTime()
+    val a = fill(rdd)
+    pinned(i) = (as, rdd, (System.nanoTime() - t0) / 1e9)
+    (rdd, a)
+  }
+
+  private def open(): (Option[RDD[TermDict]], Int, Array[Long], RDD[Sized[Array[Map[String, E]]]]) = {
+    val sc = spark.sparkContext
+    val g = gather; val d = df; val c = cut
+    // each shard map sized where it is gathered, so the shard tasks size
+    // the store in parallel and a doc partition that holds the maps as
+    // gathered adds their sizes up instead of walking them again
+    val byTerm = sc.union((0 until shards).map(s => scan(table.filter(table("shard") === s).coalesce(1))))
+      .mapPartitionsWithIndex { (s, rows) => val m = g(rows, s); Iterator(new Sized(s -> m, SizeEstimator.estimate(m))) }
       .persist(StorageLevel.MEMORY_AND_DISK)
-      .localCheckpoint()
-  }
-  /** The cache's (term, df) dictionary, walked in place. */
-  val dictionary: RDD[(String, Long)] = {
-    val d = df
-    cache.flatMap(_.iterator.map { case (t, e) => t -> d(e) })
-  }
-  /** The doc-range fan-out: `ranges` ranges, range i covering
-    * [bounds(i-1), bounds(i)). */
-  val (ranges, bounds) =
-    try Wand.docRanges(spark, indexDir, cfg, dictionary.values.fold(0L)(math.max))
-    catch { case e: Throwable => close(); throw e }
-
-  /** `f` over the cached entry of each of `terms`, read out of only the
-    * partitions that hold them; absent terms yield nothing. */
-  def lookup[T: ClassTag](terms: Set[String])(f: (String, E) => Iterator[T]): RDD[T] =
-    PartitionPruningRDD.create(cache, terms.map(BM25.termShard(_, shards)))
-      .flatMap(m => terms.iterator.flatMap(t => m.get(t).iterator.flatMap(f(t, _))))
-
-  /** A served batch of per-query term lists, ranked, in ONE Spark job.
-    * The lookup stage reads each batch term's entry out of the
-    * partitions that hold it, cuts it into (range, value) pieces with
-    * `ranged`, and keys each piece once per (qid, range) for every qid
-    * that asked for the term; absent terms yield nothing. The groups
-    * land in min(#groups, defaultParallelism) partitions (derived, not
-    * a knob); each task scores its groups with `hits` (qid, range,
-    * values) => (score, doc_id) and keeps a heap of k per qid
-    * ([[ServedTopK.bestPerQid]]); the driver collects at most
-    * tasks x qids x k rows and [[ServedTopK.merge]]s them. EAGER:
-    * returns a local `(qid, rank, doc_id, score)` frame in (qid, rank)
-    * order; a batch with no terms runs no job. */
-  def topK[V: ClassTag](queries: Seq[(Int, Seq[String])])(ranged: (String, E) => Iterator[(Int, V)])
-                       (hits: (Int, Int, Iterable[V]) => Iterator[(Double, Long)]): DataFrame = {
-    val qidsOf: Map[String, Array[Int]] = queries
-      .flatMap { case (qid, ts) => ts.map(_ -> qid) }
-      .groupMap(_._1)(_._2).map { case (t, qs) => t -> qs.distinct.toArray }
-    if (qidsOf.isEmpty) return ServedTopK.noHits(spark)
-    val parts = math.min(qidsOf.values.flatten.toSet.size.toLong * ranges,
-      spark.sparkContext.defaultParallelism.toLong).toInt
-    val k = cfg.topK
-    val heaps = lookup(qidsOf.keySet)((t, e) =>
-        ranged(t, e).flatMap { case (rid, v) => qidsOf(t).iterator.map(qid => (qid, rid) -> v) })
-      .groupByKey(new HashPartitioner(parts))
-      .mapPartitions { groups =>
-        ServedTopK.bestPerQid(groups.flatMap { case ((qid, rid), vs) =>
-          hits(qid, rid, vs).map { case (s, d) => (qid, s, d) }
-        }, k)
+    try {
+      // the first job fills the gather, and the dictionary when kept
+      val dict = Option.when(withDictionary)(
+        byTerm.map(x => TermDict(x.value._2.iterator.map { case (t, e) => t -> d(e) })))
+      val maxDf = dict match {
+        case Some(ds) => pin(s"${label}_dictionary", ds)(_.map(_.dfs.fold(0L)(math.max)).fold(0L)(math.max))._2
+        case None => byTerm.map(_.value._2.valuesIterator.map(d).foldLeft(0L)(math.max)).fold(0L)(math.max)
       }
-      .collect()
+      val (ranges, bounds) = Wand.docRanges(spark, indexDir, cfg, maxDf)
+      val (docs, _) = pin(label, sc.union((0 to bounds.length).map { r =>
+        val (lo, hi) = ShardCache.span(bounds, r)
+        val whole = bounds.isEmpty
+        byTerm.coalesce(1).mapPartitions { ms =>
+          val byShard = ms.toArray.sortBy(_.value._1)
+          // one range holds every doc: the shard maps serve as gathered
+          Iterator(if (whole) new Sized(byShard.map(_.value._2), byShard.map(_.estimatedSize).sum)
+          else {
+            val cuts = byShard.map(_.value._2.flatMap { case (t, e) => c(e, lo, hi).map(t -> _) })
+            new Sized(cuts, SizeEstimator.estimate(cuts))
+          })
+        }
+      }))(_.count())
+      (dict, ranges, bounds, docs)
+    } finally GraftRddBridge.release(byTerm)
+  }
+
+  /** The dictionary, when kept; the doc-range fan-out, `ranges` ranges,
+    * range r covering [bounds(r-1), bounds(r)); the doc partitions. */
+  val (dictionary, ranges, bounds, docs) = try open() catch { case e: Throwable => close(); throw e }
+
+  /** df of each of `terms` the store holds, out of only the dictionary
+    * partitions that hold them: one single-stage job. */
+  def dfOf(terms: Seq[String]): Map[String, Long] =
+    if (terms.isEmpty) Map.empty
+    else {
+      val ts = terms.toSet
+      val dict = dictionary.getOrElse(throw new UnsupportedOperationException(s"$name keeps no dictionary"))
+      PartitionPruningRDD.create(dict, ts.map(BM25.termShard(_, shards)))
+        .flatMap(d => ts.iterator.flatMap(t => d.df(t).map(t -> _))).collect().toMap
+    }
+
+  /** A served batch of per-query term lists, ranked, in ONE Spark job of
+    * ONE stage. Every doc partition runs `hits` (qid, lo, hi, entries)
+    * => (score, doc_id) once per qid that has any of its terms in the
+    * partition, over the partition's entries of those terms (absent
+    * terms yield nothing) and its range [lo, hi), and keeps a heap of k
+    * per qid ([[ServedTopK.bestPerQid]]); the driver collects at most
+    * partitions x qids x k rows and [[ServedTopK.merge]]s them. EAGER:
+    * returns a local `(qid, rank, doc_id, score)` frame in (qid, rank)
+    * order; a batch with no terms runs no job. Qids are distinct. */
+  def topK(queries: Seq[(Int, Seq[String])])
+          (hits: (Int, Long, Long, Array[(String, E)]) => Iterator[(Double, Long)]): DataFrame = {
+    val qs = queries.collect { case (qid, ts) if ts.nonEmpty => qid -> ts.distinct.toArray }
+    if (qs.isEmpty) return ServedTopK.noHits(spark)
+    val k = cfg.topK; val bs = bounds; val h = hits
+    val shardOf = qs.flatMap(_._2).distinct.map(t => t -> BM25.termShard(t, shards)).toMap
+    val heaps = docs.mapPartitionsWithIndex { (r, parts) =>
+      val (lo, hi) = ShardCache.span(bs, r)
+      parts.flatMap(p => ServedTopK.bestPerQid(qs.iterator.flatMap { case (qid, ts) =>
+        val es = ts.flatMap(t => p.value(shardOf(t)).get(t).map(t -> _))
+        if (es.isEmpty) Iterator.empty else h(qid, lo, hi, es).map { case (s, d) => (qid, s, d) }
+      }, k))
+    }.collect()
     ServedTopK.merge(spark, heaps, k)
   }
 
-  /** Releases the cache without blocking (see [[Wand.memoHandle]]). */
+  /** Each pinned RDD's resident bytes (memory + disk) and fill seconds. */
+  def caches: Seq[Wand.CacheStat] = {
+    val bytes = spark.sparkContext.getRDDStorageInfo.map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    pinned.toSeq.map { case (as, rdd, s) => Wand.CacheStat(as, bytes.getOrElse(rdd.id, 0L), s) }
+  }
+
+  /** Releases every pinned RDD without blocking (see [[Wand.memoHandle]]). */
   def close(): Unit =
-    if (!spark.sparkContext.isStopped) { cache.unpersist(blocking = false); () }
+    if (!spark.sparkContext.isStopped) pinned.foreach { case (_, rdd, _) => GraftRddBridge.release(rdd) }
+}
+
+private[query] object ShardCache {
+
+  /** Doc range r of `bounds`: [lo, hi), Long.MinValue / Long.MaxValue
+    * standing for an open end. */
+  def span(bounds: Array[Long], r: Int): (Long, Long) =
+    (if (r == 0) Long.MinValue else bounds(r - 1), if (r >= bounds.length) Long.MaxValue else bounds(r))
 }

@@ -11,7 +11,7 @@ import org.apache.spark.util.CollectionAccumulator
 
 import graft.analyze.CodeTokenizer
 import graft.config.EngineConfig
-import graft.index.{BlockRow, RangeSaltExpr, SegmentBuilder, SegmentRow}
+import graft.index.{BlockRow, SegmentBuilder, SegmentRow}
 
 /** Block-max WAND top-k over the compressed segment index — the
   * score-skipping serving path (north_rule). Exactness contract: results
@@ -25,44 +25,64 @@ import graft.index.{BlockRow, RangeSaltExpr, SegmentBuilder, SegmentRow}
   *    candidates (bound == threshold) are never skipped and resolve by
   *    the deterministic (score desc, docId asc) comparator.
   *
-  * Distribution (100 TB rule): serving fans out per (query, doc-range) —
-  * the ES-shard design. A [[Handle]] reads the segment rows once, at
-  * init, into its serving cache, a [[ShardCache]]: one partition per
-  * `segments/shard=S` directory (the shard every row of a term lives
-  * in), each one `term -> rows` map whose rows carry their term's df.
-  * A request reads only that cache — no parquet scan, no Catalyst plan,
-  * no df lookup job. A term request is ONE Spark job
-  * ([[Handle.topKTerms]]): its lookup stage reads the batch's terms out
-  * of only the partitions that hold them and keys each segment row per
-  * (qid, doc-range) for every range its [first_doc, last_doc] span
-  * overlaps (metadata only, no decode); its scoring stage runs exact
-  * WAND per group over its range with global corpus stats and the df
-  * the rows carry, and the local hits rank the way an ES coordinator
-  * merges shard results ([[ShardCache.topK]]). Terms absent from the
-  * index drop out in the lookup stage. Served calls are therefore
-  * EAGER — the scoring pass runs inside the call, which returns a small
-  * local frame — and the driver collect is bounded by construction.
-  * Term expansion (prefix, wildcard, regexp, fuzzy) is a single-stage
-  * walk over the same cache's (term, df) dictionary: a heap of `cap`
-  * per (task, pattern), one collect of at most tasks x patterns x cap
-  * rows, the final cap on the driver in Spark's string order. That
-  * expansion cap is [[expandCapped]], over any (term, df) RDD — the
-  * corpus query_string path caps its prefix clauses with it too.
-  * [[memoHandle]] is the one process-level memo of serving handles
-  * (this [[Handle]] and [[BM25.PhraseHandle]]).
-  * Per-task memory is the query's COMPRESSED postings within one range —
-  * never a whole hot term pinned in one task (round-1 scale-killer;
-  * bounded-decode asserted in WandSpec via accumulator).
+  * Distribution (100 TB rule): serving fans out per doc range — the
+  * ES-shard design. A [[Handle]] reads the segment rows once, at init,
+  * into its serving caches, a [[ShardCache]]: doc partitions, one per
+  * doc range, each one `term -> rows` map of the segment rows (cut at
+  * block boundaries to the range) of every term with docs in it, each
+  * row carrying its term's store-wide df; and a term-partitioned
+  * dictionary of (term, df). A request reads only those caches — no
+  * parquet scan, no Catalyst plan. A term request is ONE Spark job of
+  * ONE stage ([[Handle.topKTerms]]): every doc partition runs exact
+  * WAND per query over its own docs with global corpus stats and the
+  * df its rows carry, and the local hits rank the way an ES coordinator
+  * merges shard results ([[ShardCache.topK]]). Served calls are
+  * therefore EAGER — the scoring pass runs inside the call, which
+  * returns a small local frame — and the driver collect is bounded by
+  * construction. Term expansion (prefix, wildcard, regexp, fuzzy) is a
+  * single-stage walk over the sorted dictionary ([[expandCapped]]): a
+  * heap of `cap` per (task, pattern), one collect of at most
+  * tasks x patterns x cap rows, the final cap on the driver in Spark's
+  * string order — the corpus query_string path caps its prefix clauses
+  * with it too. [[memoHandle]] is the one process-level memo of serving
+  * handles (this [[Handle]] and [[BM25.PhraseHandle]]).
+  * A request task's memory is the query's COMPRESSED postings within
+  * one range — no request task ever decodes a whole hot term (round-1
+  * scale-killer; bounded-decode asserted in WandSpec via accumulator).
+  * The init fill of each range reads every gathered row once to cut it
+  * ([[ShardCache]]).
   */
 object Wand {
 
-  /** One segment row as the serving cache holds it, with its term's df
-    * (the sum of n_postings over all the term's rows). */
+  /** One segment row as a doc partition holds it, with its term's df
+    * (the sum of n_postings over all the term's rows in the store): cut
+    * to the blocks that may hold the partition's docs ([[within]]). */
   final case class SegRow(term: String, df: Long, salt: Int, row_seq: Int,
-                          n_postings: Long, first_doc: Long, last_doc: Long,
-                          max_u: Double, blocks: Array[BlockRow])
+                          n_postings: Long, last_doc: Long, max_u: Double, blocks: Array[BlockRow]) {
+    /** The row cut to docs [lo, hi): the blocks that may hold them —
+      * block i spans [first_doc(i), first_doc(i+1)), the last block up
+      * to last_doc — with their postings count; `max_u` stays the whole
+      * row's, an upper bound of its blocks'. None when no block does. */
+    def within(lo: Long, hi: Long): Option[SegRow] =
+      if (blocks.isEmpty || blocks(0).first_doc >= lo && last_doc < hi) Some(this)
+      else {
+        val keep = blocks.indices.filter(i => blocks(i).first_doc < hi &&
+          (if (i + 1 < blocks.length) blocks(i + 1).first_doc > lo else last_doc >= lo)).map(blocks).toArray
+        if (keep.isEmpty) None else Some(copy(n_postings = keep.map(_.n.toLong).sum, blocks = keep))
+      }
+  }
 
   final case class Hit(qid: Int, rank: Long, doc_id: Long, score: Double)
+
+  /** One resident cache of an open serving handle: its Spark storage
+    * size (memory + disk) and the seconds its fill took. */
+  final case class CacheStat(name: String, bytes: Long, fillS: Double)
+
+  /** A serving handle the memo holds ([[Handle]], [[BM25.PhraseHandle]]). */
+  trait ServingHandle extends AutoCloseable {
+    /** The handle's resident caches, as they stand. */
+    def caches: Seq[CacheStat]
+  }
 
   private val BoundInflate = 1.0 + 1e-9
 
@@ -81,14 +101,16 @@ object Wand {
   }
 
   /** The anchored regex of an ES wildcard pattern (`*` = any run incl.
-    * empty, `?` = exactly one char, everything else literal). */
+    * empty, `?` = exactly one code point, everything else literal).
+    * Literals are quoted per code point: the two halves of a surrogate
+    * pair quoted apart match nothing. */
   def wildcardRegex(pattern: String): String =
-    "^" + pattern.flatMap {
+    "^" + pattern.codePoints.toArray.map {
       case '*' => ".*"
       case '?' => "."
-      case c if c.isLetterOrDigit => c.toString
-      case c => java.util.regex.Pattern.quote(c.toString)
-    } + "$"
+      case c if Character.isLetterOrDigit(c) => Character.toString(c)
+      case c => java.util.regex.Pattern.quote(Character.toString(c))
+    }.mkString + "$"
 
   /** One (term, salt) run restricted to docs in [lo, hi): lazily-decoded
     * cursor over its blocks. */
@@ -317,15 +339,21 @@ object Wand {
     * A replaced handle is CLOSED, before its successor opens: without
     * that, every rebuild would leak a full in-memory copy of the index
     * in a long-lived process, and one that fails to open (a damaged
-    * index) would leave the stale copy pinned. Its
-    * serving cache is its own RDD — no successor shares it — and the
-    * unpersist does not block: a query still in flight on the old
-    * handle fails loudly if it misses a released block (the cache keeps
-    * no lineage, see [[ShardCache]]). */
+    * index) would leave the stale copy pinned. Its serving caches are
+    * its own RDDs — no successor shares them — and their release does
+    * not block: a query still in flight on the old handle fails loudly
+    * if it misses a released block (the caches keep no lineage, see
+    * [[ShardCache]]). */
   private val handles =
-    scala.collection.concurrent.TrieMap[(Class[_], String), (SparkSession, EngineConfig, String, AutoCloseable)]()
+    scala.collection.concurrent.TrieMap[(Class[_], String), (SparkSession, EngineConfig, String, ServingHandle)]()
 
-  private[query] def memoHandle[H <: AutoCloseable](spark: SparkSession, indexDir: String,
+  /** The resident caches of every memoized handle of `indexDir` in
+    * `spark`'s session, by name. */
+  def openCaches(spark: SparkSession, indexDir: String): Seq[CacheStat] =
+    handles.toSeq.collect { case ((_, dir), (s, _, _, h)) if dir == indexDir && (s eq spark) => h.caches }
+      .flatten.sortBy(_.name)
+
+  private[query] def memoHandle[H <: ServingHandle](spark: SparkSession, indexDir: String,
                                                     cfg: EngineConfig, dirs: Seq[String])(open: => H)
                                                    (implicit kind: ClassTag[H]): H =
     synchronized {
@@ -352,9 +380,10 @@ object Wand {
     * corpus gets MORE range tasks, never bigger ones (WandSpec asserts
     * the same bound at two corpus sizes with the same target).
     * `bounds` are the (ranges-1)-quantiles of docmap doc_id, read once
-    * (tiny); range i covers [bounds(i-1), bounds(i)). Both handles
-    * ([[Handle]], [[BM25.PhraseHandle]]) derive their ranges here, when
-    * their [[ShardCache]] opens. */
+    * (tiny), distinct, so there are `bounds.length + 1` <= `ranges`
+    * ranges; range i covers [bounds(i-1), bounds(i)). Both handles
+    * ([[Handle]], [[BM25.PhraseHandle]]) derive their doc partitions
+    * here, when their [[ShardCache]] opens. */
   private[query] def docRanges(spark: SparkSession, indexDir: String, cfg: EngineConfig,
                                maxDf: Long): (Int, Array[Long]) = {
     val ranges = math.min(cfg.serveMaxRanges.toLong, math.max(1L,
@@ -373,26 +402,32 @@ object Wand {
   /** The name of an index's serving cache RDD. */
   private[query] def cacheName(indexDir: String): String = s"graft serving cache $indexDir"
 
-  /** The expansion-cap step, over any (term, df) dictionary RDD (the
-    * served handle's serving cache, a corpus path's term-pruned df
-    * aggregation): each task builds every distinct key's match
-    * predicate once and runs it over its dictionary entries — never
-    * posting payloads, no join, no shuffle — and
-    * [[ServedTopK.capPerKeyWithDf]] keeps the first `cap` matches per
-    * key under `ord` in each task, then merges and caps again on the
-    * driver. The collect is bounded by tasks x keys x cap rows no matter
-    * how hot a pattern is against the dictionary. Keys with no match map
-    * to Nil. */
-  private[query] def expandCapped[K](dict: RDD[(String, Long)], keys: Seq[K],
-                                     matches: K => String => Boolean,
-                                     ord: Ordering[(String, Long)],
-                                     cap: Int): Map[K, Seq[(String, Long)]] = {
+  /** The expansion-cap step, over any sorted term dictionary (the
+    * served handle's, a corpus path's term-pruned df aggregation): each
+    * task runs, per distinct key, the key's `walk` over its partition —
+    * the indices of the terms the key matches, ascending, so in term
+    * order: a prefix is its binary-searched range
+    * ([[ServedTopK.TermDict.startingWith]]), a pattern filters the range
+    * of its literal run ([[ServedTopK.TermDict.matching]]) — never
+    * posting payloads, no join, no shuffle. [[ServedTopK.capPerKeyWithDf]]
+    * keeps the first `cap` matches per key in each task, in term order
+    * ([[ServedTopK.byTerm]]), where the walk stops at the partition's
+    * first `cap`, or `byDf` ([[ServedTopK.byDfThenTerm]]), where it runs
+    * to the end; then merges and caps again on the driver. The collect
+    * is bounded by tasks x keys x cap rows no matter how hot a pattern is
+    * against the dictionary. Keys with no match map to Nil. */
+  private[query] def expandCapped[K](dict: RDD[ServedTopK.TermDict], keys: Seq[K], cap: Int,
+                                     byDf: Boolean = false)
+                                    (walk: K => ServedTopK.TermDict => Iterator[Int]): Map[K, Seq[(String, Long)]] = {
     val ks = keys.distinct.toVector
     if (ks.isEmpty) return Map.empty
-    val capped = ServedTopK.capPerKeyWithDf(dict.mapPartitions { entries =>
-      val preds = ks.map(matches)
-      entries.flatMap { case (t, df) => preds.indices.iterator.filter(preds(_)(t)).map((_, t, df)) }
-    }, ord, cap)
+    val capped = ServedTopK.capPerKeyWithDf(dict.mapPartitions { ds =>
+      val walks = ks.map(walk)
+      ds.flatMap(d => ks.indices.iterator.flatMap { i =>
+        val hits = walks(i)(d)
+        (if (byDf) hits else hits.take(cap)).map(j => (i, d.terms(j), d.dfs(j)))
+      })
+    }, if (byDf) ServedTopK.byDfThenTerm else ServedTopK.byTerm, cap)
     ks.indices.map(i => ks(i) -> capped.getOrElse(i, Nil)).toMap
   }
 
@@ -400,8 +435,9 @@ object Wand {
   // scalar, so a dictionary walk matches exactly what the same filter
   // over a (term, df) frame would.
 
-  /** `col("term").startsWith(prefix)`. */
-  private[query] def startsWith(prefix: String): String => Boolean = _.startsWith(prefix)
+  /** The literal run of a wildcard pattern before its first `*` or `?`:
+    * every term its [[wildcardRegex]] matches starts with it. */
+  private[query] def wildcardLiteral(pattern: String): String = pattern.takeWhile(c => c != '*' && c != '?')
 
   /** `col("term").rlike(pattern)`: `Matcher.find`, an unanchored search. */
   private[query] def rlike(pattern: String): String => Boolean = {
@@ -424,28 +460,33 @@ object Wand {
   }
 
   /** Serving handle: corpus stats, doc-range boundaries and the serving
-    * cache are read once, at init, and serve every query batch.
+    * caches are read once, at init, and serve every query batch.
     *
-    * The serving cache is a [[ShardCache]] named [[cacheName]] over the
-    * index's segment rows — compressed blocks plus their per-row
-    * metadata: one partition per shard directory, each one
-    * `term -> rows` map. Every (term, salt) run of a term lives in its
-    * shard, so a term's df (the sum of its rows' n_postings) is summed
-    * in the partition and rides on each row. Memory contract: the cache
-    * holds the store's blocks still compressed, plus object overhead
-    * per row — the bulk of it on a vocabulary of mostly rare terms
-    * (Spark sizes the 104k-term, 7.0 MB perfbench `serve` store at
-    * 38.8 MB) — in executor storage memory.
+    * The serving caches are a [[ShardCache]] named [[cacheName]] over
+    * the index's segment rows — compressed blocks plus their per-row
+    * metadata. Its doc partitions, one per doc range, each hold the
+    * `term -> rows` maps of the rows overlapping the range, cut at block
+    * boundaries; every row carries its term's store-wide df, the sum of
+    * n_postings over all the term's rows, summed where the init gather
+    * sees them all, in the term's shard. Its dictionary holds each
+    * shard's terms sorted, with their df. Memory contract: the doc
+    * partitions hold the store's blocks still compressed, plus object
+    * overhead per row — the bulk of it on a vocabulary of mostly rare
+    * terms — in executor storage memory; with one doc range (the
+    * perfbench `serve` index) they hold each row once. [[caches]]
+    * reports the sizes.
     *
-    * Requests touch only the cache: term and expansion scoring is one
-    * Spark job ([[topKTerms]]), and the dictionary walks ([[dfOf]],
-    * the expansion batches) are single-stage jobs. Scoring fans out per
-    * doc-range, so no task ever pins a whole hot term. */
+    * Requests touch only the caches: term and expansion scoring is one
+    * Spark job of one stage ([[topKTerms]]), and the dictionary walks
+    * ([[dfOf]], the expansion batches) are single-stage jobs. Scoring
+    * fans out per doc range, so no request task holds a whole hot term. */
   final class Handle private[query] (spark: SparkSession, indexDir: String,
-                                     cfg: EngineConfig = EngineConfig.default) extends AutoCloseable {
-    private val cache = new ShardCache[SegmentRow, Array[SegRow]](spark, indexDir, cfg, cacheName(indexDir),
-      spark.read.parquet(s"$indexDir/segments"), _.as(Encoders.product[SegmentRow]).rdd)(
-      (rows, _) => segRows(rows), _(0).df)
+                                     cfg: EngineConfig = EngineConfig.default) extends ServingHandle {
+    private val cache = new ShardCache[SegmentRow, Array[SegRow]](spark, indexDir, cfg, cacheName(indexDir), "wand",
+      spark.read.parquet(s"$indexDir/segments"), _.as(Encoders.product[SegmentRow]).rdd, withDictionary = true)(
+      (rows, _) => segRows(rows), _(0).df,
+      (rows, lo, hi) => Some(rows.flatMap(_.within(lo, hi))).filter(_.nonEmpty))
+    private val dictionary = cache.dictionary.get
     val serveRanges: Int = cache.ranges
 
     /** Analyzed match queries served by [[topKTerms]] (eager, bounded). */
@@ -458,21 +499,37 @@ object Wand {
     /** Every prefix's expansion out of ONE dictionary walk: the
       * lexicographically-first `maxExpansions` index terms starting with
       * it — the ES prefix-query expansion (Lucene walks the term dict in
-      * order; prefixes are not analyzed, the caller lowercases). See
+      * order; prefixes are not analyzed, the caller lowercases), each a
+      * binary-searched range of the sorted dictionary. See
       * [[expandCapped]]; at most tasks x prefixes x maxExpansions rows
       * reach the driver. */
     def expandPrefixBatch(prefixes: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
-      ServedTopK.termsOf(expandCapped(cache.dictionary, prefixes, startsWith, ServedTopK.byTerm, maxExpansions))
+      ServedTopK.termsOf(expandCapped(dictionary, prefixes, maxExpansions)(p => _.startingWith(p)))
+
+    /** Every ES wildcard pattern's expansion (`*` any run, `?` one char;
+      * not analyzed, the caller lowercases) out of ONE dictionary walk:
+      * the lexicographically-first `maxExpansions` index terms its
+      * [[wildcardRegex]] full-matches, each pattern walking only the
+      * range of terms that start with its [[wildcardLiteral]] run. See
+      * [[expandCapped]]. */
+    def expandWildcardBatch(patterns: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
+      ServedTopK.termsOf(expandCapped(dictionary, patterns, maxExpansions) { p =>
+        val m = rlike(wildcardRegex(p)); val lit = wildcardLiteral(p)
+        _.matching(lit, m)
+      })
 
     /** Every compiled (anchored) pattern's expansion out of ONE
-      * dictionary walk — the wildcard ([[wildcardRegex]]) and regexp
-      * batches: index terms FULL-matching the pattern,
-      * lexicographic-first. Callers keep patterns inside the Java/RE2
-      * common subset (literals, classes, ., *, +, |, grouping) so the
-      * DuckDB oracle's regexp_full_match agrees. See [[expandCapped]];
-      * at most tasks x patterns x maxExpansions rows reach the driver. */
+      * dictionary walk — the regexp batch: index terms FULL-matching
+      * the pattern, lexicographic-first, over the whole dictionary.
+      * Callers keep patterns inside the Java/RE2 common subset
+      * (literals, classes, ., *, +, |, grouping) so the DuckDB oracle's
+      * regexp_full_match agrees. See [[expandCapped]]; at most tasks x
+      * patterns x maxExpansions rows reach the driver. */
     def expandRegexBatch(patterns: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
-      ServedTopK.termsOf(expandCapped(cache.dictionary, patterns, rlike, ServedTopK.byTerm, maxExpansions))
+      ServedTopK.termsOf(expandCapped(dictionary, patterns, maxExpansions) { p =>
+        val m = rlike(p)
+        _.matching("", m)
+      })
 
     /** Every (term, maxDist) input's expansion out of ONE dictionary
       * walk: index terms within CLASSIC Levenshtein distance <= maxDist
@@ -483,52 +540,50 @@ object Wand {
       * batch yields two independent expansions (see [[expandCapped]];
       * at most tasks x inputs x maxExpansions rows reach the driver). */
     def expandFuzzyBatch(inputs: Seq[(String, Int)], maxExpansions: Int): FuzzyExpansions =
-      new FuzzyExpansions(ServedTopK.termsOf(
-        expandCapped(cache.dictionary, inputs, withinDistance, ServedTopK.byDfThenTerm, maxExpansions)))
+      new FuzzyExpansions(ServedTopK.termsOf(expandCapped(dictionary, inputs, maxExpansions, byDf = true) { in =>
+        val m = withinDistance(in)
+        _.matching("", m)
+      }))
 
-    /** Per-term df for a bounded term list, out of the serving cache — no
+    /** Per-term df for a bounded term list, out of the dictionary — no
       * parquet read, no postings aggregation. df here is sum(n_postings)
       * over the term's segment rows, which equals the (term, doc)
       * postings-row count the pruned-read aggregation produced (salted
       * runs partition a term's docs disjointly) — the same df every
       * served score uses. Absent terms are absent from the map. */
-    def dfOf(terms: Seq[String]): Map[String, Long] =
-      if (terms.isEmpty) Map.empty
-      else cache.lookup(terms.toSet)((t, rows) => Iterator(t -> rows(0).df)).collect().toMap
+    def dfOf(terms: Seq[String]): Map[String, Long] = cache.dfOf(terms)
 
     /** Exact block-max WAND over per-query term lists (analyzed terms or
-      * expansions) in ONE Spark job over the serving cache
-      * ([[ShardCache.topK]]): each cached row of a batch term goes to
-      * every doc-range its [first_doc, last_doc] span overlaps (metadata
-      * only, no decode), and each (qid, range) group runs [[wandScores]]
-      * over its range with the df its rows carry. EAGER: returns a local
-      * `(qid, rank, doc_id, score)` frame in (qid, rank) order. */
+      * expansions) in ONE Spark job of ONE stage over the doc partitions
+      * ([[ShardCache.topK]]): each partition runs [[wandScores]] per
+      * query over its rows of the query's terms, bounded to its range,
+      * with the df its rows carry. A qid listed twice scores the union
+      * of its lists. EAGER: returns a local `(qid, rank, doc_id, score)`
+      * frame in (qid, rank) order. `taskPostingsAcc`, when given,
+      * receives the postings each (partition, qid) held. */
     def topKTerms(queries: Seq[(Int, Seq[String])],
                   taskPostingsAcc: CollectionAccumulator[java.lang.Long] = null): DataFrame = {
       val k = cfg.topK; val k1 = cfg.k1; val b = cfg.b
       val n = cache.n; val avgdl = cache.avgdl
-      val bounds = cache.bounds
-      cache.topK(queries)((_, rows) => rows.iterator.flatMap(r =>
-        (RangeSaltExpr.bucketOf(bounds, r.first_doc) to RangeSaltExpr.bucketOf(bounds, r.last_doc))
-          .iterator.map(_ -> r))) { (_, rid, group) =>
-        val rows = group.toArray
-        if (taskPostingsAcc != null) taskPostingsAcc.add(rows.map(_.n_postings).sum)
-        val lo = if (rid == 0) Long.MinValue else bounds(rid - 1)
-        val hi = if (rid >= bounds.length) Long.MaxValue else bounds(rid)
-        wandScores(rows, n, avgdl, k, k1, b, lo, hi).iterator
+      cache.topK(queries.groupMap(_._1)(_._2).toSeq.map { case (qid, ts) => qid -> ts.flatten }) {
+        (_, lo, hi, entries) =>
+          val rows = entries.flatMap(_._2)
+          if (taskPostingsAcc != null) taskPostingsAcc.add(rows.map(_.n_postings).sum)
+          wandScores(rows, n, avgdl, k, k1, b, lo, hi).iterator
       }
     }
 
-    /** Releases the serving cache without blocking (see [[memoHandle]]). */
+    def caches: Seq[CacheStat] = cache.caches
+
+    /** Releases the serving caches without blocking (see [[memoHandle]]). */
     def close(): Unit = cache.close()
   }
 
-  /** One serving-cache partition: a shard's segment rows gathered per
-    * term, each row carrying its term's df. */
+  /** One shard's segment rows gathered per term, each row carrying its
+    * term's df. */
   private def segRows(rows: Iterator[SegmentRow]): Map[String, Array[SegRow]] =
     rows.toArray.groupBy(_.term).map { case (t, rs) =>
       val df = rs.map(_.n_postings).sum
-      t -> rs.map(r => SegRow(t, df, r.salt, r.row_seq, r.n_postings, r.first_doc, r.last_doc, r.max_u,
-        r.blocks.toArray))
+      t -> rs.map(r => SegRow(t, df, r.salt, r.row_seq, r.n_postings, r.last_doc, r.max_u, r.blocks.toArray))
     }
 }

@@ -367,6 +367,36 @@ class MainSpec extends SparkSuite {
     assert(nan.get("avgdl").isNull && nan.get("docs").asLong === 0L, nan.toString)
   }
 
+  test("the query line reports each open cache's resident bytes and fill seconds; it parses strictly") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val cfg = graft.config.EngineConfig.default.copy(shards = 2, buildPartitions = 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft_cli_caches_").toString
+    try {
+      val docs = (0L until 60L).map(i => (i, s"cache report w${i % 7} alpha beta")).toDF("doc_id", "text")
+      graft.index.SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"), dir, cfg)
+      graft.index.SegmentBuilder.buildAll(spark, dir, cfg)
+      val n = Main.runQuery(spark, dir, Main.QueryArgs("alpha w3", None, phrase = false, slop = 0), cfg)
+        .collect().length
+      Main.runQuery(spark, dir, Main.QueryArgs("alpha beta", None, phrase = true, slop = 0), cfg).collect()
+      val line = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Main.verbLine("query",
+        Seq("hits" -> n, "caches" -> Main.cachesField(graft.query.Wand.openCaches(spark, dir))),
+        cancelled = false, 0.5, new graft.metrics.Metrics().json))
+      val keys = Seq.newBuilder[String]
+      line.fieldNames().forEachRemaining(k => { keys += k; () })
+      assert(keys.result() === Seq("op", "hits", "caches", "cancelled", "secs", "metrics"))
+      assert(line.get("hits").asInt === n && n > 0)
+      val caches = line.get("caches")
+      val names = Seq.newBuilder[String]
+      caches.fieldNames().forEachRemaining(k => { names += k; () })
+      assert(names.result() === Seq("positional", "wand", "wand_dictionary"))
+      caches.elements().forEachRemaining { c =>
+        assert(c.size === 2 && c.get("bytes").isIntegralNumber && c.get("bytes").asLong > 0, c.toString)
+        assert(c.get("fill_s").isDouble && c.get("fill_s").asDouble >= 0, c.toString)
+      }
+    } finally new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
   test("cancellation flag mechanics (CancellationTokenSource semantics)") {
     Cancellation.reset()
     assert(!Cancellation.isRequested)

@@ -88,6 +88,42 @@ class PhraseServingSpec extends SparkSuite {
     }
   }
 
+  test("doc partitions: a rare term spanning several doc ranges, partly appended without buildAll, == BM25.phraseTopK") {
+    import spark.implicits._
+    val c = EngineConfig.default.copy(shards = 2, buildPartitions = 2, topK = 5, serveTargetPostings = 32)
+    val words = Seq("alpha", "beta", "gamma", "delta")
+    // hotp in every doc; rarep in every 60th doc of the ingest and in
+    // two appended docs, next to hotp in some of them
+    def text(i: Long): String = {
+      val rare =
+        if (i % 60 == 11 || i == 305 || i == 325) (if (i % 120 == 11) " rarep hotp" else " hotp rarep") else ""
+      s"hotp ${words((i % 4).toInt)} ${words((i / 4 % 4).toInt)}$rare"
+    }
+    val base = (0L until 300L).map(i => i -> text(i))
+    val extra = (300L until 340L).map(i => i -> text(i))
+    val dir = Files.createTempDirectory("graft_phrase_docparts_").toString
+    try {
+      SegmentBuilder.ingest(spark, base.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.appendDocs(spark, extra.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.restat(spark, dir, c)
+      val h = BM25.phraseHandleFor(spark, dir, c)
+      assert(h.serveRanges > 1, "the batch must fan out over doc partitions")
+      val (_, bounds) = Wand.docRanges(spark, dir, c, (base ++ extra).size.toLong)
+      val rareDocs = (base ++ extra).collect { case (i, t) if t.contains("rarep") => i }
+      assert(rareDocs.map(RangeSaltExpr.bucketOf(bounds, _)).distinct.size >= 3,
+        "the rare term's postings must span several doc partitions")
+      val phrases = Seq(1 -> "rarep hotp", 2 -> "hotp rarep", 3 -> "rarep", 4 -> "hotp alpha",
+        5 -> "rarep zzznope", 6 -> "alpha beta hotp")
+      val corpus = (base ++ extra).toDF("doc_id", "text")
+      for (slop <- 0 to 1) {
+        val served = rows(h.topK(phrases, slop))
+        assert(served === rows(BM25.phraseTopK(spark, corpus, col("doc_id"), col("text"), phrases, c, slop)),
+          s"slop $slop")
+        assert(served.exists(r => r._1 == 2 && r._3 >= 300L), "an appended doc matches through the cache")
+      }
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
   // runs last: it damages the shared index, then repairs it
   test("duplicate (term, doc) postings from a replayed append fail loud until compaction removes them") {
     import spark.implicits._

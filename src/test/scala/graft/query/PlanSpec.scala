@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlanInfo}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -19,9 +19,9 @@ import graft.{SparkEntry, SparkSuite}
 class PlanSpec extends SparkSuite {
 
   /** What a call ran: the executed plan of every query, the number of
-    * Spark jobs, the bytes it read from files and the shuffle bytes its
-    * tasks wrote. */
-  private final class Observed(val plans: Seq[String], val jobs: Int, val fileBytes: Long,
+    * Spark jobs and of stages run, the bytes it read from files and the
+    * shuffle bytes its tasks wrote. */
+  private final class Observed(val plans: Seq[String], val jobs: Int, val stages: Int, val fileBytes: Long,
                                val shuffleBytes: Long)
 
   /** The bytes read through Hadoop file systems so far, by every thread
@@ -33,13 +33,14 @@ class PlanSpec extends SparkSuite {
     org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala.map(_.getBytesRead).sum
 
   /** Runs `f` and returns the executed plan of every query it ran, the
-    * number of Spark jobs it started, the file bytes it read and the
+    * number of Spark jobs it started and of stages it submitted (a
+    * skipped stage is never submitted), the file bytes it read and the
     * shuffle bytes its tasks wrote. Served
     * calls are eager and return a local frame, so their guards inspect
     * what the call EXECUTED, not the plan of what it returned. */
   private def observed(f: => Any): Observed = {
     val plans = new ConcurrentLinkedQueue[String]()
-    val jobs = new AtomicInteger()
+    val jobs, stages = new AtomicInteger()
     val shuffleBytes = new AtomicLong()
     val ql = new QueryExecutionListener {
       // an executed adaptive plan prints its initial plan after the
@@ -53,6 +54,7 @@ class PlanSpec extends SparkSuite {
     }
     val jl = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit = { stages.incrementAndGet(); () }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         Option(te.taskMetrics).foreach(m => shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
@@ -64,7 +66,7 @@ class PlanSpec extends SparkSuite {
       val bytes0 = fsBytesRead()
       f
       TestBus.drain(spark.sparkContext)
-      new Observed(plans.asScala.toSeq, jobs.get, fsBytesRead() - bytes0, shuffleBytes.get)
+      new Observed(plans.asScala.toSeq, jobs.get, stages.get, fsBytesRead() - bytes0, shuffleBytes.get)
     } finally {
       spark.listenerManager.unregister(ql)
       spark.sparkContext.removeSparkListener(jl)
@@ -94,11 +96,42 @@ class PlanSpec extends SparkSuite {
       assert(hits.collect().nonEmpty)
       assert(noHits.collect().isEmpty)
       assert(present.jobs == 1, s"a warm served term request ran ${present.jobs} jobs")
+      assert(present.stages == 1, s"a warm served term request ran ${present.stages} stages")
+      assert(present.shuffleBytes == 0, s"a warm served term request wrote ${present.shuffleBytes} shuffle bytes")
       assert(present.plans.isEmpty,
         s"a warm served term request ran Catalyst queries:\n${present.plans.mkString("\n")}")
       assert(present.fileBytes == 0, s"a warm served term request read ${present.fileBytes} file bytes")
       assert(none.jobs <= 1, s"an all-absent request ran ${none.jobs} jobs")
       assert(none.fileBytes == 0, s"an all-absent request read ${none.fileBytes} file bytes")
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(); ()
+    }
+  }
+
+  test("served expansion requests: prefix, wildcard, regexp and fuzzy are each 2 jobs of 1 stage, 0 file bytes") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("plan_expand_").toString
+    try {
+      val docs = (0L until 400L).map(i => (i, s"spark sparkle spork query w${i % 13} v${i % 7}"))
+        .toDF("doc_id", "text")
+      graft.index.SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"), dir, SparkEntry.IndexCfg)
+      graft.index.SegmentBuilder.buildAll(spark, dir, SparkEntry.IndexCfg)
+      val requests: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "prefix" -> (() => QueryDsl.prefixTopK(spark, dir, Seq(1 -> "spar"), cfg = SparkEntry.IndexCfg)),
+        "wildcard" -> (() => QueryDsl.wildcardTopK(spark, dir, Seq(1 -> "sp?r*"), cfg = SparkEntry.IndexCfg)),
+        "regexp" -> (() => QueryDsl.regexpTopK(spark, dir, Seq(1 -> "w1[0-2]?"), cfg = SparkEntry.IndexCfg)),
+        "fuzzy" -> (() => QueryDsl.fuzzyTopK(spark, dir, Seq(1 -> "sparc"), cfg = SparkEntry.IndexCfg)))
+      requests.foreach(_._2())
+      for ((op, request) <- requests) {
+        var hits: org.apache.spark.sql.DataFrame = null
+        val warm = observed { hits = request() }
+        assert(hits.collect().nonEmpty, op)
+        assert(warm.jobs == 2 && warm.stages == 2,
+          s"a warm $op request ran ${warm.jobs} jobs of ${warm.stages} stages")
+        assert(warm.plans.isEmpty, s"a warm $op request ran Catalyst queries:\n${warm.plans.mkString("\n")}")
+        assert(warm.fileBytes == 0, s"a warm $op request read ${warm.fileBytes} file bytes")
+      }
+      Wand.handleFor(spark, dir, SparkEntry.IndexCfg).close()
     } finally {
       new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(); ()
     }
@@ -276,6 +309,8 @@ class PlanSpec extends SparkSuite {
       val none = observed { noHits = handle.topK(absent) }
       handle.close()
       assert(present.jobs == 1, s"a warm served phrase batch ran ${present.jobs} jobs")
+      assert(present.stages == 1, s"a warm served phrase batch ran ${present.stages} stages")
+      assert(present.shuffleBytes == 0, s"a warm served phrase batch wrote ${present.shuffleBytes} shuffle bytes")
       assert(present.plans.isEmpty,
         s"a warm served phrase batch ran Catalyst queries:\n${present.plans.mkString("\n")}")
       assert(present.fileBytes == 0, s"a warm served phrase batch read ${present.fileBytes} file bytes")

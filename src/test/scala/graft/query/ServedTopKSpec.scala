@@ -124,4 +124,52 @@ class ServedTopKSpec extends SparkSuite {
         terms(dictDf.orderBy(col("df").desc, col("term")).limit(cap)))
     }
   }
+
+  test("property: sorted-dictionary walks == brute-force filter in cap order (non-ASCII, empty literal runs, df ties)") {
+    // terms over ASCII, BMP above U+E000 and supplementary code points,
+    // where UTF-16 and code-point order disagree; dfs from 1 to 3 tie
+    val symbols = Seq("a", "b", "\u00E9", "\uE000", "\uFB01", "\uD800\uDC00", "\uD83D\uDE00")
+    def levenshtein(x: String, y: String): Int = {
+      val (u, v) = (x.codePoints.toArray, y.codePoints.toArray)
+      var prev = Array.range(0, v.length + 1)
+      for (i <- 1 to u.length) {
+        val cur = new Array[Int](v.length + 1)
+        cur(0) = i
+        for (j <- 1 to v.length)
+          cur(j) = math.min(math.min(cur(j - 1), prev(j)) + 1, prev(j - 1) + (if (u(i - 1) == v(j - 1)) 0 else 1))
+        prev = cur
+      }
+      prev(v.length)
+    }
+    for (seed <- 4 to 6; cap <- Seq(2, 6)) {
+      val rnd = new scala.util.Random(seed)
+      def word(n: Int) = Seq.fill(n)(symbols(rnd.nextInt(symbols.size))).mkString
+      val dict = Seq.fill(120)(word(1 + rnd.nextInt(4))).distinct.map(t => t -> (1L + rnd.nextInt(3)))
+      val inTermOrder = dict.sortBy(_._1)(ServedTopK.termOrder)
+      def firstMatches(p: String => Boolean) = inTermOrder.collect { case (t, _) if p(t) => t }.take(cap)
+      withDictHandle(dict) { h =>
+        val prefixes = Seq("") ++ symbols ++ Seq.fill(6)(word(2)) :+ "\uD83D"
+        val byPrefix = h.expandPrefixBatch(prefixes, cap)
+        for (p <- prefixes) assert(byPrefix(p) === firstMatches(_.startsWith(p)), s"seed $seed prefix <$p>")
+        // leading * and ? give an empty literal run: a whole-dictionary walk
+        val wildcards = Seq("*", "?", "*a", "?b*", "a*", "\uD83D\uDE00*", "a?\uE000*", "\uFB01*?",
+          "\u00E9*\uD800\uDC00") ++ Seq.fill(6) {
+            val t = word(3)
+            val i = rnd.nextInt(t.length)
+            t.take(i) + (if (rnd.nextBoolean()) "*" else "?")
+          }
+        val byWildcard = h.expandWildcardBatch(wildcards, cap)
+        for (w <- wildcards) {
+          val rx = java.util.regex.Pattern.compile(Wand.wildcardRegex(w))
+          assert(byWildcard(w) === firstMatches(rx.matcher(_).find()), s"seed $seed wildcard <$w>")
+        }
+        assert(byWildcard("\uD83D\uDE00*").nonEmpty, "a supplementary literal run must match")
+        val inputs = dict.take(5).map(_._1).flatMap(t => Seq(t -> 1, t -> 2))
+        val fuzzy = h.expandFuzzyBatch(inputs, cap)
+        for ((t, d) <- inputs)
+          assert(fuzzy(t, d) === dict.filter(e => levenshtein(e._1, t) <= d)
+            .sorted(ServedTopK.byDfThenTerm).map(_._1).take(cap), s"seed $seed fuzzy <$t> d=$d")
+      }
+    }
+  }
 }

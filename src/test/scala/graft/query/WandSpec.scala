@@ -252,6 +252,109 @@ class WandSpec extends SparkSuite {
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
 
+  test("doc partitions: a single segment row spanning several doc ranges scores bit-identical to BM25.topK") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_wand_docparts_").toString
+    try {
+      // no salting: the hot term (every doc) and the rare term (every
+      // 50th doc) are each ONE segment row, cut into every doc partition
+      // their [first_doc, last_doc] span overlaps; df 600 / target 64 -> 10 ranges
+      val c = cfg.copy(shards = 2, blockSize = 8, saltTargetPostings = 1024, serveTargetPostings = 64)
+      val variants = Seq("alpha beta", "gamma alpha delta", "beta beta epsilon", "delta zeta")
+      val docs = (0L until 600L).map { i =>
+        val rare = if (i % 50 == 7) " rarew" * (1 + (i / 50 % 3).toInt) else ""
+        (i, s"hotw ${variants((i % variants.size).toInt)}$rare")
+      }
+      val df = docs.toDF("doc_id", "text")
+      SegmentBuilder.ingest(spark, df, col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      val h = Wand.handleFor(spark, dir, c)
+      assert(h.serveRanges === 10)
+      val (_, bounds) = Wand.docRanges(spark, dir, c, docs.size.toLong)
+      val seg = spark.read.parquet(s"$dir/segments").filter(col("term").isin("rarew", "hotw"))
+        .select("term", "first_doc", "last_doc").collect()
+      assert(seg.map(_.getString(0)).sorted.toSeq === Seq("hotw", "rarew"), "one segment row per term")
+      for (r <- seg) {
+        val spanned = graft.index.RangeSaltExpr.bucketOf(bounds, r.getLong(2)) -
+          graft.index.RangeSaltExpr.bucketOf(bounds, r.getLong(1))
+        assert(spanned >= 3, s"${r.getString(0)}'s row must span several doc partitions")
+      }
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq.map(r =>
+        (r.getInt(0), r.getLong(1), r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3))))
+      val queries = Seq(1 -> "rarew", 2 -> "hotw rarew", 3 -> "hotw", 4 -> "rarew zeta",
+        5 -> "zzznope rarew", 6 -> "epsilon hotw beta", 7 -> "zzznope")
+      val served = rows(h.topK(queries))
+      assert(served === rows(BM25.topK(spark, df, col("doc_id"), col("text"), queries, c)))
+      assert(served.count(_._1 == 1) === math.min(12, c.topK) && !served.exists(_._1 == 7))
+      // the rare term's df is store-wide in every partition: a
+      // partition holding one of its docs scores it like the corpus does
+      assert(h.dfOf(Seq("rarew", "hotw", "zzznope")) === Map("rarew" -> 12L, "hotw" -> 600L))
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
+  test("a memo swap closes the replaced handles without Spark's locally-checkpointed WARN") {
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    /** The WARN-or-worse messages logged while `f` runs. */
+    def warnings(f: => Any): Seq[String] = {
+      val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val capture = new AbstractAppender("graft-wand-spec", null, null, true, Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit = { got.add(e.getMessage.getFormattedMessage); () }
+      }
+      capture.start()
+      val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getConfiguration.getRootLogger
+      root.addAppender(capture, Level.WARN, null)
+      try f finally { root.removeAppender(capture.getName); capture.stop() }
+      got.toArray.toSeq.map(_.toString)
+    }
+    val checkpointWarn = "was locally checkpointed"
+    // the capture sees the WARN where Spark logs it: unpersisting a
+    // locally checkpointed RDD
+    val probe = spark.sparkContext.parallelize(1 to 4, 2).persist().localCheckpoint()
+    probe.count()
+    assert(warnings(probe.unpersist()).exists(_.contains(checkpointWarn)))
+    val dir = Files.createTempDirectory("graft_wand_warn_").toString
+    try {
+      val c = cfg.copy(shards = 2, blockSize = 8, saltTargetPostings = 64)
+      val docs = (0L until 80L).map(i => (i, if (i % 2 == 0) "alpha beta" else "gamma delta"))
+        .toDF("doc_id", "text")
+      SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      val before = (Wand.handleFor(spark, dir, c), BM25.phraseHandleFor(spark, dir, c))
+      val ck = c.copy(topK = c.topK + 1)
+      val logged = warnings {
+        assert(!(Wand.handleFor(spark, dir, ck) eq before._1))
+        assert(!(BM25.phraseHandleFor(spark, dir, ck) eq before._2))
+      }
+      assert(!logged.exists(_.contains(checkpointWarn)), logged.mkString("\n"))
+      assert(Wand.openCaches(spark, dir).map(_.name) ===
+        Seq("positional", "wand", "wand_dictionary"))
+      Wand.handleFor(spark, dir, ck).close()
+      BM25.phraseHandleFor(spark, dir, ck).close()
+      assert(!spark.sparkContext.getPersistentRDDs.values.exists(r =>
+        r.name.startsWith(Wand.cacheName(dir)) || r.name.startsWith(BM25.positionalCacheName(dir))),
+        "a closed handle releases its doc partitions and its dictionary")
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
+  test("a Sized value is cached at its given size, its object graph not walked again") {
+    import org.apache.spark.GraftRddBridge.Sized
+    val mb = 1 << 20
+    /** The memory Spark's block store books for one cached `value`. */
+    def cachedBytes(value: Int => Any): Long = {
+      val rdd = spark.sparkContext.parallelize(Seq(1), 1).map(value)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      rdd.count()
+      try spark.sparkContext.getRDDStorageInfo.filter(_.id == rdd.id).map(_.memSize).sum
+      finally org.apache.spark.GraftRddBridge.release(rdd)
+    }
+    assert(cachedBytes(_ => new Array[Byte](mb)) >= mb, "the control is walked")
+    assert(cachedBytes(_ => new Sized(new Array[Byte](mb), 100L)) < 1024)
+  }
+
   test("handle memo: one Wand and one phrase handle per untouched index; new ones after appendDocs + buildAll and after a cfg change; swapped handles serve the grown corpus") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_wand_memo_").toString
