@@ -44,7 +44,12 @@ object BM25 {
     * (idf * (tf * (k1+1))) / (tf + k1 * ((1 - b) + (b * dl) / avgdl)) */
   def weight(tf: Long, dl: Long, df: Long, n: Long, avgdl: Double,
              k1: Double = 1.2, b: Double = 0.75): Double =
-    idf(df, n) * (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + (b * dl) / avgdl))
+    weightOf(idf(df, n), tf, dl, avgdl, k1, b)
+
+  /** [[weight]] given the term's [[idf]], computed once per term by the
+    * served scorers; the same association, so the same bits. */
+  def weightOf(idf: Double, tf: Long, dl: Long, avgdl: Double, k1: Double, b: Double): Double =
+    idf * (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + (b * dl) / avgdl))
 
   /** Column form of [[idf]]. */
   private[query] def idfCol(df: Column, n: Long): Column =
@@ -554,6 +559,7 @@ object BM25 {
     val terms = ts.distinct
     if (!terms.forall(byTerm.contains)) return Iterator.empty
     val es = terms.map(byTerm)
+    val idfs = es.map(e => idf(e.df, n))
     val at = new Array[Int](es.length) // per-term cursors, only ever forward
     val termAt = ts.map(terms.indexOf(_))
     val pos = termAt.map(es(_).positions)
@@ -578,7 +584,7 @@ object BM25 {
       }
     }.map(d => foldTerms(terms.indices.map { j =>
       val e = es(j); val i = at(j)
-      terms(j) -> weight(e.tf(i), e.doclens(i), e.df, n, avgdl, k1, b)
+      terms(j) -> weightOf(idfs(j), e.tf(i), e.doclens(i), avgdl, k1, b)
     }) -> d)
   }
 

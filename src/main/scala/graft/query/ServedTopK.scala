@@ -8,17 +8,27 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** The ranking tail of index-served requests — the ES shard/coordinator
-  * shape: a bounded heap per (partition, key) on the executors, ONE
-  * bounded collect, and the final merge on the driver. A served request
-  * is small, so its latency is the fixed cost of each Spark job it runs;
-  * ranking this way adds no job to the scoring pass, where a lazy plan
-  * adds a ranking shuffle and a range sort (or a window shuffle per
-  * expansion batch).
+  * shape: a bounded heap per (partition, key) on the executors, returned
+  * as the task results of the request's ONE `SparkContext.runJob` over
+  * the resident cache, and the final merge on the driver. A served
+  * request is small, so its latency is the fixed cost of each Spark job
+  * it runs; ranking this way adds no job to the scoring pass, where a
+  * lazy plan adds a ranking shuffle and a range sort (or a window
+  * shuffle per expansion batch), and the `runJob` builds no RDD per
+  * request: an empty request job took 10.4 ms as
+  * `mapPartitionsWithIndex(…).collect()`, 7.6 ms as a `runJob` over
+  * that per-request RDD and 3.5 ms as a `runJob` straight over the
+  * resident one (perfbench `serve` index, local[4]). What stays is the
+  * caller's collect of the local frame [[merge]] returns, about 5.8 ms
+  * of Catalyst planning and SQL-execution events per request, which
+  * graft cannot remove while served calls return a `DataFrame`.
   *
-  * [[bestPerQid]] and [[merge]] are the two halves of the hit ranking
-  * that every served scoring job ends in ([[ShardCache.topK]]);
-  * [[capPerKeyWithDf]] is EAGER: it runs the RDD it is given before
-  * returning. Every driver collect is bounded by construction — at most tasks x keys x k rows — no matter how many
+  * [[bestPerQid]] and [[merge]] are the task and driver halves of the
+  * hit ranking that every served scoring job ends in
+  * ([[ShardCache.topK]]); [[capTask]] and [[capMerge]] are those of the
+  * expansion cap ([[Wand.expandCapped]]), and [[capPerKeyWithDf]] runs
+  * both over any RDD, EAGER. What the tasks return is bounded by
+  * construction — at most tasks x keys x k rows — no matter how many
   * candidates the scoring pass produces; no partition ever buffers more
   * than k rows per key. The corpus-path operators keep the lazy
   * [[BM25.rankTopK]] aggregation.
@@ -122,24 +132,34 @@ object ServedTopK {
     byKey.map { case (key, es) => key -> es.map(_._1) }
 
   /** The first `cap` `(term, df)` entries per key of `(key, term, df)`
-    * rows under `ord` (terms distinct per key): each task keeps a
-    * bounded heap of `cap` per key, the driver collects them — at most
-    * tasks x keys x cap rows — then sorts and caps again. Keys with no
-    * rows are absent. */
+    * rows under `ord` (terms distinct per key): one `runJob` in which
+    * each task keeps a bounded heap of `cap` per key ([[capTask]]), the
+    * driver gets them back — at most tasks x keys x cap rows — and
+    * [[capMerge]]s them. Keys with no rows are absent. */
   def capPerKeyWithDf(matched: RDD[(Int, String, Long)], ord: Ordering[(String, Long)],
-                      cap: Int): Map[Int, Seq[(String, Long)]] = {
-    if (cap <= 0) return Map.empty
-    val heads = matched.mapPartitions { it =>
-      // max-heap under ord: its head is the worst kept entry
-      val best = mutable.HashMap.empty[Int, mutable.PriorityQueue[(String, Long)]]
-      it.foreach { case (key, term, df) =>
-        val h = best.getOrElseUpdate(key, mutable.PriorityQueue.empty(ord))
-        if (h.size < cap) h.enqueue((term, df))
-        else if (ord.lt((term, df), h.head)) { h.dequeue(); h.enqueue((term, df)) }
-      }
-      best.iterator.flatMap { case (key, h) => h.iterator.map(e => (key, e._1, e._2)) }
-    }.collect()
-    heads.groupBy(_._1).map { case (key, rs) =>
-      key -> rs.map(r => (r._2, r._3)).sorted(ord).take(cap).toSeq }
+                      cap: Int): Map[Int, Seq[(String, Long)]] =
+    if (cap <= 0) Map.empty
+    else capMerge(matched.sparkContext.runJob(matched,
+      (it: Iterator[(Int, String, Long)]) => capTask(it, ord, cap)), ord, cap)
+
+  /** One task's half of the cap: the first `cap` entries per key of its
+    * `(key, term, df)` rows under `ord`, in no order. */
+  def capTask(rows: Iterator[(Int, String, Long)], ord: Ordering[(String, Long)],
+              cap: Int): Array[(Int, String, Long)] = {
+    // max-heap under ord: its head is the worst kept entry
+    val best = mutable.HashMap.empty[Int, mutable.PriorityQueue[(String, Long)]]
+    rows.foreach { case (key, term, df) =>
+      val h = best.getOrElseUpdate(key, mutable.PriorityQueue.empty(ord))
+      if (h.size < cap) h.enqueue((term, df))
+      else if (ord.lt((term, df), h.head)) { h.dequeue(); h.enqueue((term, df)) }
+    }
+    best.iterator.flatMap { case (key, h) => h.iterator.map(e => (key, e._1, e._2)) }.toArray
   }
+
+  /** The driver's half of the cap: every task's [[capTask]] rows merged,
+    * sorted under `ord` and capped again per key. */
+  def capMerge(heads: Array[Array[(Int, String, Long)]], ord: Ordering[(String, Long)],
+               cap: Int): Map[Int, Seq[(String, Long)]] =
+    heads.flatten.groupBy(_._1).map { case (key, rs) =>
+      key -> rs.map(r => (r._2, r._3)).sorted(ord).take(cap).toSeq }
 }

@@ -3,9 +3,9 @@ package graft.query
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
-import org.apache.spark.GraftRddBridge
+import org.apache.spark.{GraftRddBridge, TaskContext}
 import org.apache.spark.GraftRddBridge.Sized
-import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.SizeEstimator
@@ -77,7 +77,18 @@ import graft.query.ServedTopK.TermDict
   * entry exists yet to close it.
   *
   * A ranked request ([[topK]]) is ONE Spark job of ONE stage with no
-  * Catalyst plan and no file read; a dictionary walk is another. */
+  * Catalyst plan and no file read; a dictionary walk ([[dfOf]],
+  * [[Wand.expandCapped]]) is another. Each is one `SparkContext.runJob`
+  * straight over the resident RDD, its partitions picked on the driver,
+  * so a served request builds no RDD and calls no `RDD.collect`; its
+  * task function captures local vals only, never this cache. On the
+  * perfbench `serve` index (local[4]) an empty request job took 10.4 ms
+  * as `mapPartitionsWithIndex(…).collect()` over the doc partitions,
+  * 7.6 ms as a `runJob` over that per-request RDD and 3.5 ms as a
+  * `runJob` over the resident one. What stays per request is the
+  * caller's collect of the returned local frame, about 5.8 ms of
+  * Catalyst planning and SQL-execution events, which graft cannot
+  * remove while served calls return a `DataFrame`. */
 private[query] final class ShardCache[R: ClassTag, E](
     spark: SparkSession, indexDir: String, cfg: EngineConfig, name: String, label: String,
     table: DataFrame, scan: DataFrame => RDD[R], withDictionary: Boolean)
@@ -141,22 +152,26 @@ private[query] final class ShardCache[R: ClassTag, E](
   val (dictionary, ranges, bounds, docs) = try open() catch { case e: Throwable => close(); throw e }
 
   /** df of each of `terms` the store holds, out of only the dictionary
-    * partitions that hold them: one single-stage job. */
+    * partitions that hold them, picked on the driver: one single-stage
+    * `runJob` over the resident dictionary. */
   def dfOf(terms: Seq[String]): Map[String, Long] =
     if (terms.isEmpty) Map.empty
     else {
       val ts = terms.toSet
       val dict = dictionary.getOrElse(throw new UnsupportedOperationException(s"$name keeps no dictionary"))
-      PartitionPruningRDD.create(dict, ts.map(BM25.termShard(_, shards)))
-        .flatMap(d => ts.iterator.flatMap(t => d.df(t).map(t -> _))).collect().toMap
+      spark.sparkContext.runJob(dict,
+        (ds: Iterator[TermDict]) => ds.flatMap(d => ts.iterator.flatMap(t => d.df(t).map(t -> _))).toArray,
+        ts.map(BM25.termShard(_, shards)).toSeq).flatten.toMap
     }
 
   /** A served batch of per-query term lists, ranked, in ONE Spark job of
-    * ONE stage. Every doc partition runs `hits` (qid, lo, hi, entries)
-    * => (score, doc_id) once per qid that has any of its terms in the
-    * partition, over the partition's entries of those terms (absent
-    * terms yield nothing) and its range [lo, hi), and keeps a heap of k
-    * per qid ([[ServedTopK.bestPerQid]]); the driver collects at most
+    * ONE stage: one `runJob` straight over the resident doc partitions,
+    * every one of them, building no RDD. Every doc partition runs `hits`
+    * (qid, lo, hi, entries) => (score, doc_id) once per qid that has any
+    * of its terms in the partition, over the partition's entries of
+    * those terms (absent terms yield nothing) and its range [lo, hi)
+    * (the range is the task's partition id), and keeps a heap of k per
+    * qid ([[ServedTopK.bestPerQid]]); the driver gets back at most
     * partitions x qids x k rows and [[ServedTopK.merge]]s them. EAGER:
     * returns a local `(qid, rank, doc_id, score)` frame in (qid, rank)
     * order; a batch with no terms runs no job. Qids are distinct. */
@@ -166,14 +181,14 @@ private[query] final class ShardCache[R: ClassTag, E](
     if (qs.isEmpty) return ServedTopK.noHits(spark)
     val k = cfg.topK; val bs = bounds; val h = hits
     val shardOf = qs.flatMap(_._2).distinct.map(t => t -> BM25.termShard(t, shards)).toMap
-    val heaps = docs.mapPartitionsWithIndex { (r, parts) =>
-      val (lo, hi) = ShardCache.span(bs, r)
+    val heaps = spark.sparkContext.runJob(docs, (tc: TaskContext, parts: Iterator[Sized[Array[Map[String, E]]]]) => {
+      val (lo, hi) = ShardCache.span(bs, tc.partitionId())
       parts.flatMap(p => ServedTopK.bestPerQid(qs.iterator.flatMap { case (qid, ts) =>
         val es = ts.flatMap(t => p.value(shardOf(t)).get(t).map(t -> _))
         if (es.isEmpty) Iterator.empty else h(qid, lo, hi, es).map { case (s, d) => (qid, s, d) }
-      }, k))
-    }.collect()
-    ServedTopK.merge(spark, heaps, k)
+      }, k)).toArray
+    })
+    ServedTopK.merge(spark, heaps.flatten, k)
   }
 
   /** Each pinned RDD's resident bytes (memory + disk) and fill seconds. */

@@ -38,13 +38,22 @@ import graft.index.{BlockRow, SegmentBuilder, SegmentRow}
   * df its rows carry, and the local hits rank the way an ES coordinator
   * merges shard results ([[ShardCache.topK]]). Served calls are
   * therefore EAGER — the scoring pass runs inside the call, which
-  * returns a small local frame — and the driver collect is bounded by
-  * construction. Term expansion (prefix, wildcard, regexp, fuzzy) is a
-  * single-stage walk over the sorted dictionary ([[expandCapped]]): a
-  * heap of `cap` per (task, pattern), one collect of at most
-  * tasks x patterns x cap rows, the final cap on the driver in Spark's
-  * string order — the corpus query_string path caps its prefix clauses
-  * with it too. [[memoHandle]] is the one process-level memo of serving
+  * returns a small local frame — and what the driver gets back is
+  * bounded by construction. Term expansion (prefix, wildcard, regexp,
+  * fuzzy) is a single-stage walk over the sorted dictionary
+  * ([[expandCapped]]): a heap of `cap` per (task, pattern), at most
+  * tasks x patterns x cap rows back, the final cap on the driver in
+  * Spark's string order — the corpus query_string path caps its prefix
+  * clauses with it too. Every one of these jobs is one
+  * `SparkContext.runJob` straight over the resident RDD, its partitions
+  * picked on the driver: a served request builds no RDD and calls no
+  * `RDD.collect`, which took an empty request job from 10.4 ms
+  * (`mapPartitionsWithIndex(…).collect()`) to 3.5 ms on the perfbench
+  * `serve` index ([[ShardCache]]). What stays per request is the
+  * caller's collect of the returned local frame: about 5.8 ms of
+  * Catalyst planning and SQL-execution events, which graft cannot
+  * remove while served calls return a `DataFrame`.
+  * [[memoHandle]] is the one process-level memo of serving
   * handles (this [[Handle]] and [[BM25.PhraseHandle]]).
   * A request task's memory is the query's COMPRESSED postings within
   * one range — no request task ever decodes a whole hot term (round-1
@@ -281,7 +290,7 @@ object Wand {
           while (j <= endIdx) {
             val c = sorted(j)
             if (!c.exhausted && c.curDoc == pivot)
-              contribs += ((c.term, BM25.weight(c.curTf, c.curDl, c.df, n, avgdl, k1, b)))
+              contribs += ((c.term, BM25.weightOf(c.idf, c.curTf, c.curDl, avgdl, k1, b)))
             j += 1
           }
           offer(BM25.foldTerms(contribs), pivot)
@@ -403,31 +412,34 @@ object Wand {
   private[query] def cacheName(indexDir: String): String = s"graft serving cache $indexDir"
 
   /** The expansion-cap step, over any sorted term dictionary (the
-    * served handle's, a corpus path's term-pruned df aggregation): each
-    * task runs, per distinct key, the key's `walk` over its partition —
-    * the indices of the terms the key matches, ascending, so in term
-    * order: a prefix is its binary-searched range
+    * served handle's, a corpus path's term-pruned df aggregation): ONE
+    * `SparkContext.runJob` straight over `dict`, building no RDD, in
+    * which each task runs, per distinct key, the key's `walk` over its
+    * partition — the indices of the terms the key matches, ascending, so
+    * in term order: a prefix is its binary-searched range
     * ([[ServedTopK.TermDict.startingWith]]), a pattern filters the range
     * of its literal run ([[ServedTopK.TermDict.matching]]) — never
-    * posting payloads, no join, no shuffle. [[ServedTopK.capPerKeyWithDf]]
+    * posting payloads, no join, no shuffle. [[ServedTopK.capTask]]
     * keeps the first `cap` matches per key in each task, in term order
     * ([[ServedTopK.byTerm]]), where the walk stops at the partition's
     * first `cap`, or `byDf` ([[ServedTopK.byDfThenTerm]]), where it runs
-    * to the end; then merges and caps again on the driver. The collect
-    * is bounded by tasks x keys x cap rows no matter how hot a pattern is
-    * against the dictionary. Keys with no match map to Nil. */
+    * to the end; [[ServedTopK.capMerge]] merges and caps again on the
+    * driver. What the tasks return is bounded by tasks x keys x cap rows
+    * no matter how hot a pattern is against the dictionary. Keys with no
+    * match map to Nil; a `cap` of 0 runs no job. */
   private[query] def expandCapped[K](dict: RDD[ServedTopK.TermDict], keys: Seq[K], cap: Int,
                                      byDf: Boolean = false)
                                     (walk: K => ServedTopK.TermDict => Iterator[Int]): Map[K, Seq[(String, Long)]] = {
     val ks = keys.distinct.toVector
-    if (ks.isEmpty) return Map.empty
-    val capped = ServedTopK.capPerKeyWithDf(dict.mapPartitions { ds =>
+    if (ks.isEmpty || cap <= 0) return ks.map(_ -> Nil).toMap
+    val ord = if (byDf) ServedTopK.byDfThenTerm else ServedTopK.byTerm
+    val capped = ServedTopK.capMerge(dict.sparkContext.runJob(dict, (ds: Iterator[ServedTopK.TermDict]) => {
       val walks = ks.map(walk)
-      ds.flatMap(d => ks.indices.iterator.flatMap { i =>
+      ServedTopK.capTask(ds.flatMap(d => ks.indices.iterator.flatMap { i =>
         val hits = walks(i)(d)
         (if (byDf) hits else hits.take(cap)).map(j => (i, d.terms(j), d.dfs(j)))
-      })
-    }, if (byDf) ServedTopK.byDfThenTerm else ServedTopK.byTerm, cap)
+      }), ord, cap)
+    }), ord, cap)
     ks.indices.map(i => ks(i) -> capped.getOrElse(i, Nil)).toMap
   }
 
@@ -446,16 +458,18 @@ object Wand {
   }
 
   /** `abs(length(term) - length(t)) <= d && levenshtein(term, t) <= d`:
-    * lengths in code points, distance by [[UTF8String]]'s Levenshtein.
-    * The length window is a cheap pre-filter (|len diff| > d can never
-    * be within d). */
+    * lengths in code points, distance by [[UTF8String]]'s thresholded
+    * Levenshtein — what `levenshtein(l, r, d)` evaluates: -1 beyond `d`,
+    * bounded work per term where the full matrix filled every cell. The
+    * length window is a cheap pre-filter (|len diff| > d can never be
+    * within d). */
   private[query] def withinDistance(input: (String, Int)): String => Boolean = {
     val (t, d) = input
     val u = UTF8String.fromString(t)
     val len = u.numChars
     term => {
       val v = UTF8String.fromString(term)
-      math.abs(v.numChars - len) <= d && v.levenshteinDistance(u) <= d
+      math.abs(v.numChars - len) <= d && v.levenshteinDistance(u, d) >= 0
     }
   }
 
@@ -478,8 +492,10 @@ object Wand {
     *
     * Requests touch only the caches: term and expansion scoring is one
     * Spark job of one stage ([[topKTerms]]), and the dictionary walks
-    * ([[dfOf]], the expansion batches) are single-stage jobs. Scoring
-    * fans out per doc range, so no request task holds a whole hot term. */
+    * ([[dfOf]], the expansion batches) are single-stage jobs, each one
+    * `runJob` straight over the resident RDD that builds none per
+    * request. Scoring fans out per doc range, so no request task holds
+    * a whole hot term. */
   final class Handle private[query] (spark: SparkSession, indexDir: String,
                                      cfg: EngineConfig = EngineConfig.default) extends ServingHandle {
     private val cache = new ShardCache[SegmentRow, Array[SegRow]](spark, indexDir, cfg, cacheName(indexDir), "wand",
@@ -554,13 +570,15 @@ object Wand {
     def dfOf(terms: Seq[String]): Map[String, Long] = cache.dfOf(terms)
 
     /** Exact block-max WAND over per-query term lists (analyzed terms or
-      * expansions) in ONE Spark job of ONE stage over the doc partitions
+      * expansions) in ONE Spark job of ONE stage, one `runJob` straight
+      * over the resident doc partitions that builds no RDD
       * ([[ShardCache.topK]]): each partition runs [[wandScores]] per
       * query over its rows of the query's terms, bounded to its range,
       * with the df its rows carry. A qid listed twice scores the union
       * of its lists. EAGER: returns a local `(qid, rank, doc_id, score)`
-      * frame in (qid, rank) order. `taskPostingsAcc`, when given,
-      * receives the postings each (partition, qid) held. */
+      * frame in (qid, rank) order; the caller's collect of that frame
+      * still plans it (about 5.8 ms per request). `taskPostingsAcc`,
+      * when given, receives the postings each (partition, qid) held. */
     def topKTerms(queries: Seq[(Int, Seq[String])],
                   taskPostingsAcc: CollectionAccumulator[java.lang.Long] = null): DataFrame = {
       val k = cfg.topK; val k1 = cfg.k1; val b = cfg.b

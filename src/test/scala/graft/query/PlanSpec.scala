@@ -137,6 +137,37 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("warm served requests build no RDD: term, phrase batch, dfOf, prefix and fuzzy expansion") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("plan_nordd_").toString
+    try {
+      val docs = (0L until 400L).map(i => (i, s"spark sparkle spork query w${i % 13} v${i % 7}"))
+        .toDF("doc_id", "text")
+      graft.index.SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"), dir, SparkEntry.IndexCfg)
+      graft.index.SegmentBuilder.buildAll(spark, dir, SparkEntry.IndexCfg)
+      val wand = Wand.handleFor(spark, dir, SparkEntry.IndexCfg)
+      val phrase = BM25.phraseHandleFor(spark, dir, SparkEntry.IndexCfg)
+      val requests: Seq[(String, () => Any)] = Seq(
+        "term" -> (() => wand.topK(Seq(3 -> "spark query w3"))),
+        "phrase" -> (() => phrase.topK(Seq(5 -> "sparkle spork", 6 -> "query w4"))),
+        "dfOf" -> (() => wand.dfOf(Seq("spark", "w3", "zzznope"))),
+        "prefix" -> (() => QueryDsl.prefixTopK(spark, dir, Seq(1 -> "spar"), cfg = SparkEntry.IndexCfg)),
+        "fuzzy" -> (() => QueryDsl.fuzzyTopK(spark, dir, Seq(1 -> "sparc"), cfg = SparkEntry.IndexCfg)))
+      try {
+        requests.foreach(_._2())
+        for ((op, request) <- requests) {
+          // the probe RDD itself is the one id between the two reads
+          val before = spark.sparkContext.emptyRDD[Int].id
+          request()
+          val after = spark.sparkContext.emptyRDD[Int].id
+          assert(after - before == 1, s"a warm $op request built ${after - before - 1} RDDs")
+        }
+      } finally { wand.close(); phrase.close() }
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(); ()
+    }
+  }
+
   test("serving handle init writes no shuffle bytes: both caches build from the shard directories") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val dir = java.nio.file.Files.createTempDirectory("plan_init_").toString
