@@ -180,8 +180,8 @@ object Main {
   }
 
   /** `query` argument grammar:
-    * `[--phrase|--phrase-prefix|--prefix|--fuzzy|--wildcard] [--slop s]
-    * <text> [k]`.
+    * `[--phrase|--phrase-prefix|--prefix|--fuzzy|--wildcard|--qs]
+    * [--slop s] <text> [k]`, at most one mode flag.
     * Phrase mode serves ES match_phrase (ordered adjacency; slop relaxes
     * to ordered proximity) from the positional index — the capability
     * the reference gets from its ES index's full query DSL
@@ -194,29 +194,33 @@ object Main {
     * ([[graft.query.QueryDsl]]) through the same WAND handle. `--qs`
     * serves the flat Lucene query_string grammar (+must / -must_not /
     * bare should / "phrase" / prefix*) from the index — the Kibana
-    * search-bar surface, compiled onto the pruned positional read. */
-  final case class QueryArgs(text: String, k: Option[Int], phrase: Boolean, slop: Int,
-                             prefix: Boolean = false, fuzzy: Boolean = false,
-                             wildcard: Boolean = false, phrasePrefix: Boolean = false,
-                             qs: Boolean = false)
+    * search-bar surface. Phrase, phrase-prefix and `--qs` requests are
+    * served from the positional cache ([[graft.query.BM25.PhraseHandle]]),
+    * the others from the WAND handle's. */
+  final case class QueryArgs(text: String, k: Option[Int], mode: QueryMode = QueryMode.Match, slop: Int = 0)
+
+  /** The operator a `query` runs, named by its flag (none: a match). */
+  sealed abstract class QueryMode(val flag: String)
+
+  object QueryMode {
+    case object Match extends QueryMode("")
+    case object Phrase extends QueryMode("--phrase")
+    case object PhrasePrefix extends QueryMode("--phrase-prefix")
+    case object Prefix extends QueryMode("--prefix")
+    case object Fuzzy extends QueryMode("--fuzzy")
+    case object Wildcard extends QueryMode("--wildcard")
+    case object Qs extends QueryMode("--qs")
+    val byFlag: Map[String, QueryMode] =
+      Seq(Phrase, PhrasePrefix, Prefix, Fuzzy, Wildcard, Qs).map(m => m.flag -> m).toMap
+  }
 
   def parseQueryArgs(rest: List[String]): QueryArgs = {
-    var phrase = false
+    val modes = scala.collection.mutable.LinkedHashSet.empty[QueryMode]
     var slop = 0
-    var prefix = false
-    var fuzzy = false
-    var wildcard = false
-    var phrasePrefix = false
-    var qs = false
     val pos = scala.collection.mutable.ListBuffer.empty[String]
     var it = rest
     while (it.nonEmpty) it = it match {
-      case "--phrase" :: t => phrase = true; t
-      case "--phrase-prefix" :: t => phrasePrefix = true; t
-      case "--prefix" :: t => prefix = true; t
-      case "--fuzzy" :: t => fuzzy = true; t
-      case "--wildcard" :: t => wildcard = true; t
-      case "--qs" :: t => qs = true; t
+      case f :: t if QueryMode.byFlag.contains(f) => modes += QueryMode.byFlag(f); t
       case "--slop" :: v :: t => slop = v.toInt; t
       case "--slop" :: Nil =>
         throw new IllegalArgumentException("--slop needs a value")
@@ -229,34 +233,31 @@ object Main {
     require(pos.size <= 2,
       s"query takes <text> [k], got extra args: ${pos.drop(2).mkString(" ")} " +
         "(quote multi-word text)")
-    require(slop == 0 || phrase || phrasePrefix, "--slop requires --phrase/--phrase-prefix")
+    require(slop == 0 || modes.exists(Set(QueryMode.Phrase, QueryMode.PhrasePrefix)),
+      "--slop requires --phrase/--phrase-prefix")
     require(slop >= 0, s"slop must be >= 0, got $slop")
-    require(Seq(phrase, prefix, fuzzy, wildcard, phrasePrefix, qs).count(identity) <= 1,
+    require(modes.size <= 1,
       "--phrase, --phrase-prefix, --prefix, --fuzzy, --wildcard and --qs are mutually exclusive")
-    QueryArgs(pos.head, pos.lift(1).map(_.toInt), phrase, slop, prefix, fuzzy,
-      wildcard, phrasePrefix, qs)
+    QueryArgs(pos.head, pos.lift(1).map(_.toInt), modes.headOption.getOrElse(QueryMode.Match), slop)
   }
 
   /** Serve one CLI query — WAND top-k, phrase/proximity, phrase-prefix,
-    * prefix, fuzzy or wildcard — through the process-level serving
-    * handles. */
+    * prefix, fuzzy, wildcard or query_string — through the process-level
+    * serving handles. */
   def runQuery(spark: SparkSession, indexDir: String, a: QueryArgs,
                cfg: EngineConfig): DataFrame = {
+    import graft.query.{BM25, QueryDsl}
     val c = a.k.map(k => cfg.copy(topK = k)).getOrElse(cfg)
-    if (a.phrase)
-      graft.query.BM25.phraseTopKIndexed(spark, indexDir, Seq(1 -> a.text), c, a.slop)
-    else if (a.phrasePrefix)
-      graft.query.QueryDsl.phrasePrefixTopK(spark, indexDir, Seq(1 -> a.text),
-        cfg = c, slop = a.slop)
-    else if (a.prefix)
-      graft.query.QueryDsl.prefixTopK(spark, indexDir, Seq(1 -> a.text), cfg = c)
-    else if (a.fuzzy)
-      graft.query.QueryDsl.fuzzyTopK(spark, indexDir, Seq(1 -> a.text), cfg = c)
-    else if (a.wildcard)
-      graft.query.QueryDsl.wildcardTopK(spark, indexDir, Seq(1 -> a.text), cfg = c)
-    else if (a.qs)
-      graft.query.QueryDsl.queryStringTopKIndexed(spark, indexDir, Seq(1 -> a.text), cfg = c)
-    else Wand.topK(spark, indexDir, Seq(1 -> a.text), c)
+    val q = Seq(1 -> a.text)
+    a.mode match {
+      case QueryMode.Match => Wand.topK(spark, indexDir, q, c)
+      case QueryMode.Phrase => BM25.phraseTopKIndexed(spark, indexDir, q, c, a.slop)
+      case QueryMode.PhrasePrefix => QueryDsl.phrasePrefixTopK(spark, indexDir, q, cfg = c, slop = a.slop)
+      case QueryMode.Prefix => QueryDsl.prefixTopK(spark, indexDir, q, cfg = c)
+      case QueryMode.Fuzzy => QueryDsl.fuzzyTopK(spark, indexDir, q, cfg = c)
+      case QueryMode.Wildcard => QueryDsl.wildcardTopK(spark, indexDir, q, cfg = c)
+      case QueryMode.Qs => QueryDsl.queryStringTopKIndexed(spark, indexDir, q, cfg = c)
+    }
   }
 
   /** The reference's core verb, operationalized: migrate an ES-JSON
@@ -395,7 +396,8 @@ object Main {
             "compact <indexDir> [force] [shard...] | restat <indexDir> | " +
             "merge <indexDir> <outDir> | " +
             "migrate <src.ndjson> <out.parquet> [--fields a,b,c] | " +
-            "query <indexDir> [--phrase|--prefix|--fuzzy] [--slop s] <text> [k] | " +
+            "query <indexDir> [--phrase|--phrase-prefix|--prefix|--fuzzy|--wildcard|--qs] " +
+            "[--slop s] <text> [k] | " +
             "analyze <docs.parquet> | ping <indexDir>")
         sys.exit(2)
     }

@@ -30,9 +30,6 @@ final case class EngineConfig(
     // the config: corpus growth grows the fan-out, never the task.
     serveTargetPostings: Long = 1L << 16,
     serveMaxRanges: Int = 1024,
-    // tokenizer envelope (mirrored in graft.analyze.CodeTokenizer)
-    minTokenLen: Int = 2,
-    maxTokenLen: Int = 64,
     // index_options (ES parity): text fields index positions by DEFAULT
     // (match_phrase works out of the box); opting out (ES
     // `index_options: freqs`) cuts ingest cost ~25-30% and staging
@@ -57,7 +54,6 @@ final case class EngineConfig(
   // the quantile table and the per-query task count
   require(serveMaxRanges >= 1 && serveMaxRanges <= 65536,
     s"serveMaxRanges out of range: $serveMaxRanges")
-  require(minTokenLen >= 1 && maxTokenLen >= minTokenLen, "token length envelope invalid")
 }
 
 object EngineConfig {

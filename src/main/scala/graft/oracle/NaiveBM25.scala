@@ -1,7 +1,7 @@
 package graft.oracle
 
 import graft.analyze.CodeTokenizer
-import graft.query.BM25
+import graft.query.{BM25, ServedTopK}
 
 /** Independent single-machine BM25 scorer — the test stand-in for "the
   * reference query set the migration tool's Elasticsearch index would
@@ -63,6 +63,35 @@ object NaiveBM25 {
         val ws = distinctSorted.map { t =>
           BM25.weight(toks.count(_ == t).toLong, dl, dfMap(t), n, avgdl, k1, b)
         }
+        Some(Hit(id, ws.foldLeft(0.0)(_ + _)))
+      }
+    }
+    hits.sortBy(h => (-h.score, h.docId)).take(k)
+  }
+
+  /** match_phrase_prefix at slop 0: docs holding the leading analyzed
+    * terms consecutively, then one of the first `maxExpansions` corpus
+    * terms (in Spark's string order) that start with the last one;
+    * scored over the leading terms' distinct terms only, with
+    * corpus-wide stats. */
+  def phrasePrefixTopK(docs: Seq[(Long, String)], text: String, maxExpansions: Int, k: Int = 10,
+                       k1: Double = 1.2, b: Double = 0.75): Seq[Hit] = {
+    val terms = CodeTokenizer.tokenize(text).toSeq
+    val (exact, last) = (terms.init, terms.last)
+    val tokenized = docs.map { case (id, c) => (id, CodeTokenizer.tokenize(c)) }
+    val n = tokenized.size.toLong
+    val avgdl = if (n == 0) 0.0 else tokenized.map(_._2.length.toLong).sum.toDouble / n
+    val expansions = tokenized.flatMap(_._2).distinct.filter(_.startsWith(last))
+      .sorted(ServedTopK.termOrder).take(maxExpansions).toSet
+    val scored = exact.distinct.sorted(ServedTopK.termOrder)
+    val dfMap = scored.map(t => t -> tokenized.count(_._2.contains(t)).toLong).toMap
+    val hits = tokenized.flatMap { case (id, toks) =>
+      val matches = toks.indices.exists(i => i + exact.length < toks.length &&
+        toks.slice(i, i + exact.length).toSeq == exact && expansions(toks(i + exact.length)))
+      if (!matches) None
+      else {
+        val dl = toks.length.toLong
+        val ws = scored.map(t => BM25.weight(toks.count(_ == t).toLong, dl, dfMap(t), n, avgdl, k1, b))
         Some(Hit(id, ws.foldLeft(0.0)(_ + _)))
       }
     }

@@ -83,8 +83,9 @@ object BM25 {
   /** The scalar fold step: the sum from 0.0 of `(term, weight)`
     * contributions in ascending [[ServedTopK.termOrder]] — Spark's string
     * order, the order [[foldAscending]] sums in — so a served score is
-    * bit-equal to its corpus-path twin. WAND's per-doc sum and the
-    * served phrase score both fold through it. */
+    * bit-equal to its corpus-path twin. WAND's per-doc sum folds through
+    * it; the positional evaluator ([[posHits]]) sums in the same order,
+    * its terms sorted once per call. */
   private[query] def foldTerms(contribs: scala.collection.Seq[(String, Double)]): Double =
     contribs.sortBy(_._1)(ServedTopK.termOrder).foldLeft(0.0)(_ + _._2)
 
@@ -334,8 +335,9 @@ object BM25 {
     * directories from the terms' own hash (partition pruning, computed
     * driver-side via [[termShard]] — zero Spark jobs) and
     * `term IN (...)` pushed into the parquet reader (row-group stats +
-    * dictionary pruning). The indexed phrase_prefix and query_string
-    * paths read phrase postings this way. The shard count comes from
+    * dictionary pruning). Only [[graft.Bench]]'s `phrase_prune`
+    * measurement reads postings this way: every served request reads
+    * the positional cache ([[PhraseHandle]]). The shard count comes from
     * the index's OWN ingest marker, never from a caller config — a
     * silent mismatch would drop postings from the pruned read instead
     * of failing. */
@@ -485,10 +487,42 @@ object BM25 {
     out.result()
   }
 
-  /** Reusable phrase-serving handle — the match_phrase twin of
-    * [[Wand.Handle]]: corpus stats, doc-range boundaries and the
-    * positional cache are read once, at init, and serve every batch.
-    * Result contract identical to [[phraseTopK]].
+  /** One positional query over a doc partition's [[PosEntry]]s — the
+    * one shape every request the positional cache serves compiles to:
+    * match_phrase ([[PosQuery.phrase]]), match_phrase_prefix and indexed
+    * query_string ([[QueryDsl]]). A doc matches when it holds every
+    * `must` term, at least `msm` distinct `should` terms and at least one
+    * `must` or `should` term, no `mustNot` term, every required phrase
+    * and no excluded one ([[PosPhrase]]); it scores the sum of
+    * [[weight]] over the `must` and `should` terms it holds, folded in
+    * [[foldTerms]]' order — [[QueryDsl.boolScored]]'s role algebra.
+    * Terms are distinct within and across the three roles. */
+  final case class PosQuery(must: Seq[String], should: Seq[String] = Nil, mustNot: Seq[String] = Nil,
+                            msm: Int = 0, phrases: Seq[PosPhrase] = Nil) {
+    /** Every term the query reads: its roles' and its phrases'. */
+    def terms: Seq[String] = (must ++ should ++ mustNot ++ phrases.flatMap(_.offsets.flatten)).distinct
+  }
+
+  object PosQuery {
+    /** match_phrase: the phrase's distinct terms required and scored, and
+      * the phrase itself required, one term per offset. */
+    def phrase(ts: Seq[String], slop: Int): PosQuery =
+      PosQuery(ts.distinct, phrases = Seq(PosPhrase(ts.map(Seq(_)), slop)))
+  }
+
+  /** A phrase filter of a [[PosQuery]]: `offsets(o)` holds the
+    * alternative terms of phrase offset o — one for a plain phrase
+    * offset, a prefix's expansions at match_phrase_prefix's last — whose
+    * positions in a doc merge, sorted, into the offset's one position
+    * list; [[OrderedSpanMatchExpr.spans]] decides the phrase at `slop`.
+    * A `required` phrase must hit; an excluded one must not. */
+  final case class PosPhrase(offsets: Seq[Seq[String]], slop: Int, required: Boolean = true)
+
+  /** Reusable positional serving handle — the match_phrase twin of
+    * [[Wand.Handle]], which also serves match_phrase_prefix and indexed
+    * query_string: corpus stats, doc-range boundaries and the positional
+    * cache are read once, at init, and serve every batch. Result
+    * contract identical to [[phraseTopK]].
     *
     * The positional cache is a [[ShardCache]] named
     * [[positionalCacheName]] over the index's positional postings. Its
@@ -500,16 +534,14 @@ object BM25 {
     * where the init gather sees all of the term's rows, in its shard.
     * Memory contract: the store's postings and positions as flat arrays
     * plus per-term overhead, each posting held once, in executor storage
-    * memory. It keeps no dictionary: a phrase expands nothing, and
-    * the max df that sizes the doc ranges comes off the gather. [[caches]]
-    * reports the sizes.
+    * memory. It keeps no dictionary: expansions walk the WAND handle's,
+    * and the max df that sizes the doc ranges comes off the gather.
+    * [[caches]] reports the sizes.
     *
-    * [[topK]] is ONE Spark job of ONE stage over the doc partitions
-    * ([[ShardCache.topK]]), EAGER: each partition intersects the docs
-    * of each phrase's terms in its range, runs the span check per
-    * phrase offset ([[OrderedSpanMatchExpr.spans]]) and scores with the
-    * shared [[weight]] and [[foldTerms]] ([[phraseHits]]), and the hits
-    * rank into a local `(qid, rank, doc_id, score)` frame in
+    * [[serve]] is ONE Spark job of ONE stage over the doc partitions
+    * ([[ShardCache.topK]]), EAGER: each partition evaluates each
+    * [[PosQuery]] over its entries of the query's terms ([[posHits]]),
+    * and the hits rank into a local `(qid, rank, doc_id, score)` frame in
     * (qid, rank) order. A doc range holds at most about
     * `serveTargetPostings` postings of the hottest term, so no request
     * task ever holds a whole hot term.
@@ -529,14 +561,20 @@ object BM25 {
     }
     val serveRanges: Int = cache.ranges
 
-    def topK(phrases: Seq[(Int, String)], slop: Int = 0): DataFrame = {
-      val phraseOf = phrases
-        .map { case (qid, text) => (qid, CodeTokenizer.tokenize(text)) }
-        .filter(_._2.nonEmpty).toMap
+    /** Analyzed match_phrase queries, served by [[serve]]. */
+    def topK(phrases: Seq[(Int, String)], slop: Int = 0): DataFrame =
+      serve(phrases.map { case (qid, text) => qid -> CodeTokenizer.tokenize(text).toSeq }
+        .collect { case (qid, ts) if ts.nonEmpty => qid -> PosQuery.phrase(ts, slop) })
+
+    /** Per-qid positional queries (a qid listed twice keeps its last),
+      * ranked in ONE Spark job of ONE stage; a batch that reads no term
+      * runs no job. */
+    def serve(queries: Seq[(Int, PosQuery)]): DataFrame = {
+      val byQid = queries.toMap
       val k1 = cfg.k1; val b = cfg.b
       val n = cache.n; val avgdl = cache.avgdl
-      cache.topK(phraseOf.toSeq.map { case (qid, ts) => qid -> ts.toSeq }) { (qid, _, _, entries) =>
-        phraseHits(phraseOf(qid), entries.toMap, slop, n, avgdl, k1, b)
+      cache.topK(byQid.toSeq.map { case (qid, q) => qid -> q.terms }) { (qid, _, _, entries) =>
+        posHits(byQid(qid), entries.toMap, n, avgdl, k1, b)
       }
     }
 
@@ -547,45 +585,86 @@ object BM25 {
     def close(): Unit = cache.close()
   }
 
-  /** One (qid, doc partition) of a served phrase batch: `ts` the
-    * phrase's terms by offset, `byTerm` the partition's entry of each
-    * term present. The docs holding every term pass the span check over
-    * their per-offset positions ([[OrderedSpanMatchExpr.spans]]) and
-    * score as the sum of [[weight]] over the phrase's distinct terms
-    * ([[foldTerms]]) — what [[phraseScoredOver]] computes for the same
-    * docs. Returns (score, doc_id). */
-  private def phraseHits(ts: Array[String], byTerm: Map[String, PosEntry], slop: Int,
-                         n: Long, avgdl: Double, k1: Double, b: Double): Iterator[(Double, Long)] = {
-    val terms = ts.distinct
-    if (!terms.forall(byTerm.contains)) return Iterator.empty
+  /** One (qid, doc partition) of a served positional batch: `q` over
+    * `byTerm`, the partition's entry of each of its terms present.
+    * Candidates are the docs of the shortest `must` list (else the union
+    * of the `should` lists); every term keeps one forward-only cursor, so
+    * a batch costs one merge pass over its terms' doc lists. A phrase
+    * offset of one term reads its positions in place, so a plain phrase
+    * allocates per candidate doc only the span check's cursors and the
+    * hit itself; an offset with alternatives merges the positions of
+    * those a doc holds into a fresh sorted array. The scored terms'
+    * weights ([[weightOf]]) sum in [[foldTerms]]' order, sorted once per
+    * call. Returns (score, doc_id) — for a plain phrase, what
+    * [[phraseScoredOver]] computes for the same docs. */
+  private def posHits(q: PosQuery, byTerm: Map[String, PosEntry],
+                      n: Long, avgdl: Double, k1: Double, b: Double): Iterator[(Double, Long)] = {
+    val terms = q.terms.filter(byTerm.contains).toArray
     val es = terms.map(byTerm)
-    val idfs = es.map(e => idf(e.df, n))
+    val slot = terms.zipWithIndex.toMap
+    val Seq(must, should, not) = Seq(q.must, q.should, q.mustNot).map(_.flatMap(slot.get).toArray)
+    // required phrases first; an excluded one missing a term never hits
+    val checks = q.phrases.map(p => new PhraseCheck(p.offsets.map(_.flatMap(slot.get).toArray).toArray, p))
+      .filter(c => c.phrase.required || c.alts.forall(_.nonEmpty)).sortBy(!_.phrase.required).toArray
+    if (must.length < q.must.length || should.length < q.msm || must.isEmpty && should.isEmpty ||
+        checks.exists(c => c.phrase.required && c.alts.exists(_.isEmpty))) return Iterator.empty
     val at = new Array[Int](es.length) // per-term cursors, only ever forward
-    val termAt = ts.map(terms.indexOf(_))
-    val pos = termAt.map(es(_).positions)
-    val from, until = new Array[Int](ts.length)
-    es.minBy(_.docs.length).docs.iterator.filter { d =>
-      var all = true
-      var j = 0
-      while (all && j < es.length) {
-        val ds = es(j).docs
-        while (at(j) < ds.length && ds(at(j)) < d) at(j) += 1
-        all = at(j) < ds.length && ds(at(j)) == d
-        j += 1
-      }
-      all && {
-        var o = 0
-        while (o < ts.length) {
-          val e = es(termAt(o)); val i = at(termAt(o))
-          from(o) = e.posOff(i); until(o) = e.posOff(i + 1)
-          o += 1
+    def has(j: Int, d: Long): Boolean = {
+      val ds = es(j).docs
+      while (at(j) < ds.length && ds(at(j)) < d) at(j) += 1
+      at(j) < ds.length && ds(at(j)) == d
+    }
+    def hits(c: PhraseCheck, d: Long): Boolean = {
+      var o = 0
+      while (o < c.alts.length) {
+        val alts = c.alts(o)
+        if (alts.length == 1) { // one term: its positions in place
+          val j = alts(0)
+          if (!has(j, d)) return false
+          c.pos(o) = es(j).positions; c.from(o) = es(j).posOff(at(j)); c.until(o) = es(j).posOff(at(j) + 1)
+        } else { // alternatives: the positions of those the doc holds, merged
+          val ps = alts.filter(has(_, d))
+            .flatMap(j => es(j).positions.slice(es(j).posOff(at(j)), es(j).posOff(at(j) + 1)))
+          java.util.Arrays.sort(ps)
+          c.pos(o) = ps; c.from(o) = 0; c.until(o) = ps.length
         }
-        OrderedSpanMatchExpr.spans(pos, from, until, slop)
+        o += 1
       }
-    }.map(d => foldTerms(terms.indices.map { j =>
-      val e = es(j); val i = at(j)
-      terms(j) -> weightOf(idfs(j), e.tf(i), e.doclens(i), avgdl, k1, b)
-    }) -> d)
+      OrderedSpanMatchExpr.spans(c.pos, c.from, c.until, c.phrase.slop)
+    }
+    // the scored terms in fold order, each with its idf
+    val scored = (q.must ++ q.should).flatMap(slot.get).sortBy(terms(_))(ServedTopK.termOrder).toArray
+    val idfs = scored.map(j => idf(es(j).df, n))
+    val candidates =
+      if (must.nonEmpty) es(must.minBy(es(_).docs.length)).docs else should.flatMap(es(_).docs).distinct.sorted
+    candidates.iterator.filter { d =>
+      var ok = true; var got = 0; var i = 0
+      while (ok && i < must.length) { ok = has(must(i), d); i += 1 }
+      i = 0
+      while (i < should.length) { if (has(should(i), d)) got += 1; i += 1 }
+      ok &&= got >= q.msm
+      i = 0
+      while (ok && i < not.length) { ok = !has(not(i), d); i += 1 }
+      i = 0
+      while (ok && i < checks.length) { ok = hits(checks(i), d) == checks(i).phrase.required; i += 1 }
+      ok
+    }.map { d =>
+      var s = 0.0; var i = 0
+      while (i < scored.length) {
+        val j = scored(i)
+        if (has(j, d)) s += weightOf(idfs(i), es(j).tf(at(j)), es(j).doclens(at(j)), avgdl, k1, b)
+        i += 1
+      }
+      s -> d
+    }
+  }
+
+  /** One [[PosPhrase]] of a [[posHits]] call: `alts(o)` the cursor slots
+    * of offset o's alternatives the partition holds, and the span inputs
+    * [[OrderedSpanMatchExpr.spans]] reads, refilled per doc. */
+  private final class PhraseCheck(val alts: Array[Array[Int]], val phrase: PosPhrase) {
+    val pos = new Array[Array[Int]](alts.length)
+    val from, until = new Array[Int](alts.length)
   }
 
   /** Phrase candidate sets from positional postings, ALL phrases in one

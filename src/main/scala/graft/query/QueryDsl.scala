@@ -102,39 +102,32 @@ object QueryDsl {
     BM25.rankTopK(boolScored(docs, idCol, contentCol, q, cfg), cfg.topK)
   }
 
-  /** The bool role algebra WITHOUT the final ranking: one bounded stats
-    * job ([[BM25.statsAndDf]]) + [[roleScored]] over the corpus
-    * postings. `roleRows` carries (qid, term, role, n_must, n_filter,
-    * n_msm) — driver rows, so callers (query_string) can feed
-    * data-dependent rows such as prefix expansions resolved from the
-    * term dictionary; df for expansions resolved elsewhere can be
-    * supplied via `statsKnown` to skip the stats job. */
+  /** The bool role algebra WITHOUT the final ranking, over the corpus
+    * postings: one bounded stats job ([[BM25.statsAndDf]]), then role
+    * rows (absent terms drop here, exactly like an inner join with the
+    * full docFreq table) weighed onto the postings and ONE
+    * groupBy(qid, doc) computing the score fold and the per-role match
+    * counters the candidate decision needs. `roleRows` carries
+    * (qid, term, role, n_must, n_filter, n_msm) — driver rows, so
+    * callers (corpus query_string) can feed data-dependent rows such as
+    * prefix expansions resolved from the term dictionary; df for
+    * expansions resolved elsewhere can be supplied via `statsKnown` to
+    * skip the stats job. The served twin of this algebra is
+    * [[BM25.PosQuery]]. */
   private[query] def boolScored(docs: DataFrame, idCol: Column,
                                 contentCol: Column,
                                 roleRows: Seq[(Int, String, String, Int, Int, Int)],
                                 cfg: EngineConfig,
                                 statsKnown: Option[(Long, Double, Map[String, Long])] = None)
       : DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
     val (n, avgdl, dfMap) = statsKnown.getOrElse(
       BM25.statsAndDf(docs, idCol, contentCol, roleRows.map(_._2).distinct))
-    roleScored(Postings.build(docs, idCol, contentCol), roleRows, n, avgdl, dfMap, cfg)
-  }
-
-  /** The single role-algebra aggregation: role rows (absent terms drop
-    * here, exactly like an inner join with the full docFreq table)
-    * weighed onto a postings frame — the corpus postings for bool and
-    * query_string, the pruned segment postings for indexed
-    * query_string — and ONE groupBy(qid, doc) computing the score fold
-    * and the per-role match counters the candidate decision needs. */
-  private def roleScored(post: DataFrame, roleRows: Seq[(Int, String, String, Int, Int, Int)],
-                         n: Long, avgdl: Double, dfMap: Map[String, Long],
-                         cfg: EngineConfig): DataFrame = {
-    val spark = post.sparkSession
-    import spark.implicits._
     val q = roleRows.flatMap { case (qid, t, role, nm, nf, msm) =>
       dfMap.get(t).map(df => (qid, t, role, nm, nf, msm, df))
     }.toDF("qid", "term", "role", "n_must", "n_filter", "n_msm", "df")
-    BM25.weigh(post, q, n, avgdl, cfg)
+    BM25.weigh(Postings.build(docs, idCol, contentCol), q, n, avgdl, cfg)
       .groupBy("qid", "doc_id")
       .agg(
         // collect_list drops the when()'s nulls: only must/should rows
@@ -625,11 +618,13 @@ object QueryDsl {
     * same way), the leading tokens match exactly, and a doc qualifies
     * iff the exact tokens are consecutive and ANY expansion follows at
     * the next position (slop relaxes to ordered proximity, same
-    * contract as match_phrase). Candidates come from the same pruned
-    * positional read as phrase serving, with ONE extra pre-aggregation:
-    * the expansions' position lists merge per (query, doc) into a
-    * single last-offset list, so [[OrderedSpanMatchExpr]]'s
-    * one-list-per-offset contract holds unchanged.
+    * contract as match_phrase). Two Spark jobs, no Catalyst query, no
+    * file read: the WAND handle's dictionary walk expands every query's
+    * prefix, then the positional handle serves one [[BM25.PosQuery]] per
+    * query ([[BM25.PhraseHandle.serve]]) — the exact leading terms
+    * required, and one phrase whose last offset holds the expansions,
+    * their positions merged per doc into the one list
+    * [[OrderedSpanMatchExpr]] reads per offset.
     *
     * Scoring contract (documented deviation): qualifying docs score
     * BM25 over the EXACT leading terms only — deterministic and
@@ -641,8 +636,6 @@ object QueryDsl {
                        maxExpansions: Int = MaxExpansions,
                        cfg: EngineConfig = EngineConfig.default,
                        slop: Int = 0): DataFrame = {
-    import spark.implicits._
-    val handle = Wand.handleFor(spark, indexDir, cfg)
     val tokenized = queries.map { case (qid, text) =>
       val ts = CodeTokenizer.tokenize(text).toSeq
       require(ts.size >= 2,
@@ -650,45 +643,13 @@ object QueryDsl {
           "a single-term prefix query is prefixTopK")
       (qid, ts)
     }
-    // one metadata job expands every query's last-token prefix
-    val expMap = handle.expandPrefixBatch(tokenized.map(_._2.last), maxExpansions)
-    val analyzed = tokenized.flatMap { case (qid, ts) =>
-      val exps = expMap(ts.last)
-      if (exps.isEmpty) None else Some((qid, ts.init, exps))
+    // one dictionary walk expands every query's last-token prefix
+    val exp = Wand.handleFor(spark, indexDir, cfg).expandPrefixBatch(tokenized.map(_._2.last), maxExpansions)
+    val qs = tokenized.collect { case (qid, ts) if exp(ts.last).nonEmpty =>
+      val phrase = BM25.PosPhrase(ts.init.map(Seq(_)) :+ exp(ts.last), slop)
+      qid -> BM25.PosQuery(ts.init.distinct, phrases = Seq(phrase))
     }
-    if (analyzed.isEmpty) return ServedTopK.noHits(spark)
-    val (n, avgdl) = graft.index.SegmentBuilder.readStats(spark, indexDir)
-    val allTerms = analyzed.flatMap { case (_, ex, es) => ex ++ es }.distinct
-    val posPost = BM25.prunedPositionalPostings(spark, indexDir, allTerms)
-    // (qid, term, off, m): exact tokens at offsets 0..m-2, EVERY
-    // expansion at offset m-1
-    val q = analyzed.flatMap { case (qid, exact, exps) =>
-      val m = exact.size + 1
-      exact.zipWithIndex.map { case (t, off) => (qid, t, off, m) } ++
-        exps.map(e => (qid, e, m - 1, m))
-    }.toDF("qid", "term", "off", "m")
-    // stage 1: merge position lists per (query, doc, offset) — several
-    // expansion terms may occupy the last offset; exact offsets are
-    // single-term so the merge is the identity there — then the span step
-    val stage1 = posPost.join(broadcast(q), "term")
-      .groupBy("qid", "doc_id", "off")
-      .agg(sort_array(flatten(collect_list(col("positions")))).as("positions"),
-        first(col("m")).as("m"))
-    val cand = BM25.phraseSpans(stage1, Seq("qid"), slop).select("qid", "doc_id")
-    val exactTerms = analyzed.flatMap(_._2).distinct
-    // per-term df from the handle's serving cache —
-    // same values the pruned-read aggregation produced (sum of
-    // n_postings over a term's runs == its postings-row count), without
-    // re-reading postings parquet for a metadata quantity
-    val dfMap = handle.dfOf(exactTerms)
-    val sq = analyzed.flatMap { case (qid, exact, _) =>
-      exact.distinct.map(t => (qid, t, dfMap.getOrElse(t, 0L)))
-    }.toDF("qid", "term", "df")
-    val grouped = BM25.weigh(posPost, sq, n, avgdl, cfg,
-        _.join(cand, Seq("qid", "doc_id"), "left_semi"))
-      .groupBy("qid", "doc_id")
-      .agg(BM25.foldAscending(struct(col("term"), col("w"))).as("score"))
-    BM25.rankTopK(grouped, cfg.topK)
+    if (qs.isEmpty) ServedTopK.noHits(spark) else BM25.phraseHandleFor(spark, indexDir, cfg).serve(qs)
   }
 
   /** Driver-side analysis shared by the match-family operators. */
@@ -848,40 +809,33 @@ object QueryDsl {
     BM25.rankTopK(qsConstrain(scored, posPost, phrases), cfg.topK)
   }
 
-  /** query_string served from the SEGMENT INDEX — the operational
-    * (CLI) path: expansions resolve against the handle's cached term
-    * dictionary, role-term postings come from the three-level pruned
-    * positional read (shard dir -> thash row-group stats -> exact
-    * term), per-term df and the BM25 stats come from the same pruned
-    * read + persisted index stats, and the role aggregation / phrase
-    * constraints are the exact same fold as the corpus path — spec
-    * pins rank AND score identity between the two. */
+  /** query_string served from the index — the operational (CLI) path,
+    * rank- and score-identical to [[queryStringTopK]]: each query
+    * compiles to one [[BM25.PosQuery]] — its [[qsRoleRows]] roles and
+    * its [[qsPhrases]] as required or excluded phrases — served by the
+    * positional handle ([[BM25.PhraseHandle.serve]]) in one Spark job, no
+    * Catalyst query and no file read. The WAND handle opens only to
+    * expand: a batch with a prefix clause walks its term dictionary
+    * first, one more job. */
   def queryStringTopKIndexed(spark: SparkSession, indexDir: String,
                              queries: Seq[(Int, String)],
                              maxExpansions: Int = MaxExpansions,
                              cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val h = Wand.handleFor(spark, indexDir, cfg)
     val parsed = queries.map { case (qid, s) => qid -> parseQueryString(s) }
     val prefixClauses = qsPrefixClauses(parsed)
-    val expMap = h.expandPrefixBatch(prefixClauses.map(_._2), maxExpansions)
+    val expMap =
+      if (prefixClauses.isEmpty) Map.empty[String, Seq[String]]
+      else Wand.handleFor(spark, indexDir, cfg).expandPrefixBatch(prefixClauses.map(_._2), maxExpansions)
     val expRows = prefixClauses.flatMap { case (qid, p, role) =>
       expMap(p).map(t => (qid, t, role))
     }
-    val roleRows = qsRoleRows(parsed, expRows)
     val phrases = qsPhrases(parsed)
-    val allTerms = (qsTermRows(parsed).map(_._2) ++ expRows.map(_._2) ++
-      phrases.flatMap(_._3)).distinct
-    if (allTerms.isEmpty) return ServedTopK.noHits(spark)
-    val (n, avgdl) = graft.index.SegmentBuilder.readStats(spark, indexDir)
-    val posPost = BM25.prunedPositionalPostings(spark, indexDir, allTerms)
-    // per-term df from the handle's serving cache (same values
-    // the pruned-read aggregation produced; no extra postings branch in
-    // the serving plan)
-    val scored = roleScored(posPost, roleRows, n, avgdl, h.dfOf(roleRows.map(_._2).distinct), cfg)
-    val constrained =
-      if (phrases.isEmpty) scored
-      else qsConstrain(scored, posPost.select("term", "doc_id", "positions"), phrases)
-    BM25.rankTopK(constrained, cfg.topK)
+    val qs = qsRoleRows(parsed, expRows).groupBy(_._1).toSeq.map { case (qid, rows) =>
+      def role(r: String) = rows.collect { case (_, t, `r`, _, _, _) => t }
+      qid -> BM25.PosQuery(role("must"), role("should"), role("must_not"), rows.head._6,
+        phrases.collect { case (`qid`, r, ts) => BM25.PosPhrase(ts.map(Seq(_)), 0, required = r != "must_not") })
+    }
+    if (qs.isEmpty) ServedTopK.noHits(spark) else BM25.phraseHandleFor(spark, indexDir, cfg).serve(qs)
   }
 
   /** Literal role rows of a parsed query_string batch: terms analyze;
@@ -938,8 +892,8 @@ object QueryDsl {
   /** Phrase adjacency constraints over a (term, doc_id, positions)
     * postings source: required phrases must ALL match (count of
     * distinct matched pids == the query's required count), exclusion
-    * phrases anti-join — shared verbatim by the corpus and indexed
-    * query_string paths. */
+    * phrases anti-join — the corpus query_string path's; the indexed
+    * path decides the same phrases per doc ([[BM25.PosPhrase]]). */
   private def qsConstrain(scored: DataFrame, posPost: DataFrame,
                           phrases: Seq[(Int, String, Seq[String])]): DataFrame = {
     val spark = scored.sparkSession

@@ -3,7 +3,6 @@ package graft.query
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -26,11 +25,10 @@ import org.apache.spark.sql.types.StructType
   * [[bestPerQid]] and [[merge]] are the task and driver halves of the
   * hit ranking that every served scoring job ends in
   * ([[ShardCache.topK]]); [[capTask]] and [[capMerge]] are those of the
-  * expansion cap ([[Wand.expandCapped]]), and [[capPerKeyWithDf]] runs
-  * both over any RDD, EAGER. What the tasks return is bounded by
-  * construction — at most tasks x keys x k rows — no matter how many
-  * candidates the scoring pass produces; no partition ever buffers more
-  * than k rows per key. The corpus-path operators keep the lazy
+  * expansion cap ([[Wand.expandCapped]]). What the tasks return is
+  * bounded by construction — at most tasks x keys x k rows — no matter
+  * how many candidates the scoring pass produces; no partition ever
+  * buffers more than k rows per key. The corpus-path operators keep the lazy
   * [[BM25.rankTopK]] aggregation.
   */
 object ServedTopK {
@@ -130,17 +128,6 @@ object ServedTopK {
   /** Expansions without their df. */
   def termsOf[K](byKey: Map[K, Seq[(String, Long)]]): Map[K, Seq[String]] =
     byKey.map { case (key, es) => key -> es.map(_._1) }
-
-  /** The first `cap` `(term, df)` entries per key of `(key, term, df)`
-    * rows under `ord` (terms distinct per key): one `runJob` in which
-    * each task keeps a bounded heap of `cap` per key ([[capTask]]), the
-    * driver gets them back — at most tasks x keys x cap rows — and
-    * [[capMerge]]s them. Keys with no rows are absent. */
-  def capPerKeyWithDf(matched: RDD[(Int, String, Long)], ord: Ordering[(String, Long)],
-                      cap: Int): Map[Int, Seq[(String, Long)]] =
-    if (cap <= 0) Map.empty
-    else capMerge(matched.sparkContext.runJob(matched,
-      (it: Iterator[(Int, String, Long)]) => capTask(it, ord, cap)), ord, cap)
 
   /** One task's half of the cap: the first `cap` entries per key of its
     * `(key, term, df)` rows under `ord`, in no order. */

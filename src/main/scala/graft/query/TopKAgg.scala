@@ -9,11 +9,38 @@ import org.apache.spark.sql.functions.udaf
   * cannot codegen nested/private classes. */
 final case class ScoredDoc(score: Double, doc_id: Long)
 
-/** Bounded top-k by (score desc, doc_id asc) as a typed Aggregator —
-  * the TakeOrdered-per-key plan. The buffer is a sorted Vector truncated
-  * at k, so map-side partial aggregation keeps at most k entries per
-  * (partition, key) and the shuffle carries k rows per partition per key
-  * instead of the full candidate set. This replaces the
+/** The bounded best-k Aggregator, written once: the buffer is a Vector
+  * sorted best-first under `better` and truncated at k, so map-side
+  * partial aggregation keeps at most k entries per (partition, key) and
+  * the shuffle carries k rows per partition per key instead of the full
+  * candidate set. [[better]] must be a strict TOTAL order on the inputs
+  * one key can see, so merge order cannot change the result. The
+  * encoder is derived on use: the served heaps build one of these per
+  * task and never encode. */
+abstract class BestK[T](k: Int, encoder: () => Encoder[Seq[T]])
+    extends Aggregator[T, Seq[T], Seq[T]] {
+
+  /** a strictly better than b. */
+  def better(a: T, b: T): Boolean
+
+  private def insert(buf: Seq[T], x: T): Seq[T] =
+    if (buf.size >= k && !better(x, buf.last)) buf
+    else {
+      val i = buf.indexWhere(e => better(x, e))
+      val withX = if (i < 0) buf :+ x else (buf.take(i) :+ x) ++ buf.drop(i)
+      if (withX.size > k) withX.take(k) else withX
+    }
+
+  override def zero: Seq[T] = Vector.empty
+  override def reduce(buf: Seq[T], x: T): Seq[T] = insert(buf, x)
+  override def merge(a: Seq[T], b: Seq[T]): Seq[T] = b.foldLeft(a)(insert)
+  override def finish(r: Seq[T]): Seq[T] = r
+  override def bufferEncoder: Encoder[Seq[T]] = encoder()
+  override def outputEncoder: Encoder[Seq[T]] = encoder()
+}
+
+/** Bounded top-k by (score desc, doc_id asc) — the TakeOrderedAndProject
+  * plan per key. This replaces the
   * `Window.partitionBy(qid).orderBy(score)` + row_number pattern, which
   * sorts EVERY candidate of a hot query inside one task — the 100 TB
   * scale-killer named in round 1.
@@ -22,26 +49,8 @@ final case class ScoredDoc(score: Double, doc_id: Long)
   * doubles compared exactly), so merge order cannot change the result —
   * rank-identity with the window form is asserted in Bm25Spec/PlanSpec.
   */
-final class TopKByScore(k: Int)
-    extends Aggregator[ScoredDoc, Seq[ScoredDoc], Seq[ScoredDoc]] {
-
-  import TopKByScore.better
-
-  private def insert(buf: Seq[ScoredDoc], x: ScoredDoc): Seq[ScoredDoc] =
-    if (buf.size >= k && !better(x, buf.last)) buf
-    else {
-      val i = buf.indexWhere(e => better(x, e))
-      val withX = if (i < 0) buf :+ x else (buf.take(i) :+ x) ++ buf.drop(i)
-      if (withX.size > k) withX.take(k) else withX
-    }
-
-  override def zero: Seq[ScoredDoc] = Vector.empty
-  override def reduce(buf: Seq[ScoredDoc], x: ScoredDoc): Seq[ScoredDoc] = insert(buf, x)
-  override def merge(a: Seq[ScoredDoc], b: Seq[ScoredDoc]): Seq[ScoredDoc] =
-    b.foldLeft(a)(insert)
-  override def finish(r: Seq[ScoredDoc]): Seq[ScoredDoc] = r
-  override def bufferEncoder: Encoder[Seq[ScoredDoc]] = ExpressionEncoder()
-  override def outputEncoder: Encoder[Seq[ScoredDoc]] = ExpressionEncoder()
+final class TopKByScore(k: Int) extends BestK[ScoredDoc](k, () => ExpressionEncoder()) {
+  def better(a: ScoredDoc, b: ScoredDoc): Boolean = TopKByScore.better(a, b)
 }
 
 object TopKByScore {
@@ -70,33 +79,15 @@ object TopKAgg {
 /** One (composite key, count) bucket. Top-level for encoder codegen. */
 final case class KeyedBucket(key: String, cnt: Long)
 
-/** Bounded min-k by key asc — [[TopKByScore]]'s discipline pointed at
-  * lexicographic bucket pagination (ES composite aggregation): the
-  * buffer keeps the k SMALLEST keys, so map-side partials and the
-  * shuffle carry k buckets per partition per group no matter how many
-  * buckets exist — the property composite agg exists for. Keys within
-  * one group are distinct by construction (they are groupBy outputs),
-  * so key-asc alone is a total order. */
-final class MinKByKey(k: Int)
-    extends Aggregator[KeyedBucket, Seq[KeyedBucket], Seq[KeyedBucket]] {
-
-  @inline private def better(a: KeyedBucket, b: KeyedBucket): Boolean = a.key < b.key
-
-  private def insert(buf: Seq[KeyedBucket], x: KeyedBucket): Seq[KeyedBucket] =
-    if (buf.size >= k && !better(x, buf.last)) buf
-    else {
-      val i = buf.indexWhere(e => better(x, e))
-      val withX = if (i < 0) buf :+ x else (buf.take(i) :+ x) ++ buf.drop(i)
-      if (withX.size > k) withX.take(k) else withX
-    }
-
-  override def zero: Seq[KeyedBucket] = Vector.empty
-  override def reduce(buf: Seq[KeyedBucket], x: KeyedBucket): Seq[KeyedBucket] = insert(buf, x)
-  override def merge(a: Seq[KeyedBucket], b: Seq[KeyedBucket]): Seq[KeyedBucket] =
-    b.foldLeft(a)(insert)
-  override def finish(r: Seq[KeyedBucket]): Seq[KeyedBucket] = r
-  override def bufferEncoder: Encoder[Seq[KeyedBucket]] = ExpressionEncoder()
-  override def outputEncoder: Encoder[Seq[KeyedBucket]] = ExpressionEncoder()
+/** Bounded min-k by key asc — [[BestK]] pointed at lexicographic
+  * bucket pagination (ES composite aggregation): the buffer keeps the k
+  * SMALLEST keys, so map-side partials and the shuffle carry k buckets
+  * per partition per group no matter how many buckets exist — the
+  * property composite agg exists for. Keys within one group are
+  * distinct by construction (they are groupBy outputs), so key-asc
+  * alone is a total order. */
+final class MinKByKey(k: Int) extends BestK[KeyedBucket](k, () => ExpressionEncoder()) {
+  def better(a: KeyedBucket, b: KeyedBucket): Boolean = a.key < b.key
 }
 
 object MinKAgg {

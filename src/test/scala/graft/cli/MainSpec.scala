@@ -199,13 +199,13 @@ class MainSpec extends SparkSuite {
 
   test("query CLI grammar: --phrase/--slop parse; bad combinations fail loud") {
     assert(Main.parseQueryArgs(List("hello world")) ===
-      Main.QueryArgs("hello world", None, phrase = false, slop = 0))
+      Main.QueryArgs("hello world", None))
     assert(Main.parseQueryArgs(List("hello world", "25")) ===
-      Main.QueryArgs("hello world", Some(25), phrase = false, slop = 0))
+      Main.QueryArgs("hello world", Some(25)))
     assert(Main.parseQueryArgs(List("--phrase", "spark fast", "5")) ===
-      Main.QueryArgs("spark fast", Some(5), phrase = true, slop = 0))
+      Main.QueryArgs("spark fast", Some(5), Main.QueryMode.Phrase))
     assert(Main.parseQueryArgs(List("--phrase", "--slop", "2", "a b")) ===
-      Main.QueryArgs("a b", None, phrase = true, slop = 2))
+      Main.QueryArgs("a b", None, Main.QueryMode.Phrase, slop = 2))
     assertThrows[IllegalArgumentException](
       Main.parseQueryArgs(List("--slop", "2", "a b"))) // slop needs phrase
     assertThrows[IllegalArgumentException](
@@ -216,21 +216,21 @@ class MainSpec extends SparkSuite {
     assertThrows[IllegalArgumentException](
       Main.parseQueryArgs(List("spark", "2", "query")))
     assert(Main.parseQueryArgs(List("--prefix", "spa")) ===
-      Main.QueryArgs("spa", None, phrase = false, slop = 0, prefix = true))
+      Main.QueryArgs("spa", None, Main.QueryMode.Prefix))
     assert(Main.parseQueryArgs(List("--fuzzy", "spork", "5")) ===
-      Main.QueryArgs("spork", Some(5), phrase = false, slop = 0, fuzzy = true))
+      Main.QueryArgs("spork", Some(5), Main.QueryMode.Fuzzy))
     assertThrows[IllegalArgumentException](
       Main.parseQueryArgs(List("--phrase", "--prefix", "x"))) // modes are exclusive
     assertThrows[IllegalArgumentException](
       Main.parseQueryArgs(List("--prefix", "--fuzzy", "x")))
     assert(Main.parseQueryArgs(List("--wildcard", "cli*se")) ===
-      Main.QueryArgs("cli*se", None, phrase = false, slop = 0, wildcard = true))
+      Main.QueryArgs("cli*se", None, Main.QueryMode.Wildcard))
     assert(Main.parseQueryArgs(List("--phrase-prefix", "--slop", "1", "a b")) ===
-      Main.QueryArgs("a b", None, phrase = false, slop = 1, phrasePrefix = true))
+      Main.QueryArgs("a b", None, Main.QueryMode.PhrasePrefix, slop = 1))
     assertThrows[IllegalArgumentException](
       Main.parseQueryArgs(List("--wildcard", "--prefix", "x")))
     assert(Main.parseQueryArgs(List("--qs", "+a -b")) ===
-      Main.QueryArgs("+a -b", None, phrase = false, slop = 0, qs = true))
+      Main.QueryArgs("+a -b", None, Main.QueryMode.Qs))
     assertThrows[IllegalArgumentException](
       Main.parseQueryArgs(List("--qs", "--phrase", "x")))
   }
@@ -250,51 +250,47 @@ class MainSpec extends SparkSuite {
       graft.index.SegmentBuilder.buildAll(spark, dir, cfg)
       // exact adjacency finds the doc; reversed order does not
       val hit = Main.runQuery(spark, dir,
-        Main.QueryArgs("alpha beta", None, phrase = true, slop = 0), cfg).collect()
+        Main.QueryArgs("alpha beta", None, Main.QueryMode.Phrase), cfg).collect()
       assert(hit.length === 1 && hit.head.getLong(2) === 980001L)
       assert(Main.runQuery(spark, dir,
-        Main.QueryArgs("beta alpha", None, phrase = true, slop = 0), cfg).collect()
+        Main.QueryArgs("beta alpha", None, Main.QueryMode.Phrase), cfg).collect()
         .isEmpty, "match_phrase at slop 0 must be order-sensitive")
       // slop relaxes to ordered proximity: alpha .. gamma at distance 2
       assert(Main.runQuery(spark, dir,
-        Main.QueryArgs("alpha gamma", None, phrase = true, slop = 1), cfg).collect()
+        Main.QueryArgs("alpha gamma", None, Main.QueryMode.Phrase, slop = 1), cfg).collect()
         .map(_.getLong(2)).toSeq === Seq(980001L))
       // non-phrase path still serves WAND with a k override
       val wand = Main.runQuery(spark, dir,
-        Main.QueryArgs("cliphrase", Some(3), phrase = false, slop = 0), cfg).collect()
+        Main.QueryArgs("cliphrase", Some(3)), cfg).collect()
       assert(wand.length === 1 && wand.head.getLong(2) === 980001L)
       // prefix mode expands the term dictionary and serves through WAND
       val pref = Main.runQuery(spark, dir,
-        Main.QueryArgs("cliphr", None, phrase = false, slop = 0, prefix = true), cfg)
+        Main.QueryArgs("cliphr", None, Main.QueryMode.Prefix), cfg)
         .collect()
       assert(pref.length === 1 && pref.head.getLong(2) === 980001L)
       // fuzzy mode: one deletion from 'cliphrase' still finds the doc
       val fuzz = Main.runQuery(spark, dir,
-        Main.QueryArgs("cliphras", None, phrase = false, slop = 0, fuzzy = true), cfg)
+        Main.QueryArgs("cliphras", None, Main.QueryMode.Fuzzy), cfg)
         .collect()
       assert(fuzz.length === 1 && fuzz.head.getLong(2) === 980001L)
       // wildcard mode: infix gap over the term dictionary
       val wild = Main.runQuery(spark, dir,
-        Main.QueryArgs("cli*rase", None, phrase = false, slop = 0, wildcard = true), cfg)
+        Main.QueryArgs("cli*rase", None, Main.QueryMode.Wildcard), cfg)
         .collect()
       assert(wild.length === 1 && wild.head.getLong(2) === 980001L)
       // phrase-prefix mode: exact lead + expanded last token, adjacent
       val pp = Main.runQuery(spark, dir,
-        Main.QueryArgs("alpha bet", None, phrase = false, slop = 0,
-          phrasePrefix = true), cfg).collect()
+        Main.QueryArgs("alpha bet", None, Main.QueryMode.PhrasePrefix), cfg).collect()
       assert(pp.length === 1 && pp.head.getLong(2) === 980001L)
       assert(Main.runQuery(spark, dir,
-        Main.QueryArgs("beta alp", None, phrase = false, slop = 0,
-          phrasePrefix = true), cfg).collect().isEmpty,
+        Main.QueryArgs("beta alp", None, Main.QueryMode.PhrasePrefix), cfg).collect().isEmpty,
         "match_phrase_prefix is order-sensitive")
       // query_string mode: must + must_not + phrase from the index
       val qsHit = Main.runQuery(spark, dir,
-        Main.QueryArgs("+cliphrase \"alpha beta\"", None, phrase = false, slop = 0,
-          qs = true), cfg).collect()
+        Main.QueryArgs("+cliphrase \"alpha beta\"", None, Main.QueryMode.Qs), cfg).collect()
       assert(qsHit.length === 1 && qsHit.head.getLong(2) === 980001L)
       assert(Main.runQuery(spark, dir,
-        Main.QueryArgs("+cliphrase -needle", None, phrase = false, slop = 0,
-          qs = true), cfg).collect().isEmpty,
+        Main.QueryArgs("+cliphrase -needle", None, Main.QueryMode.Qs), cfg).collect().isEmpty,
         "query_string must_not excludes through the indexed path")
     } finally new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
@@ -376,9 +372,9 @@ class MainSpec extends SparkSuite {
       val docs = (0L until 60L).map(i => (i, s"cache report w${i % 7} alpha beta")).toDF("doc_id", "text")
       graft.index.SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"), dir, cfg)
       graft.index.SegmentBuilder.buildAll(spark, dir, cfg)
-      val n = Main.runQuery(spark, dir, Main.QueryArgs("alpha w3", None, phrase = false, slop = 0), cfg)
+      val n = Main.runQuery(spark, dir, Main.QueryArgs("alpha w3", None), cfg)
         .collect().length
-      Main.runQuery(spark, dir, Main.QueryArgs("alpha beta", None, phrase = true, slop = 0), cfg).collect()
+      Main.runQuery(spark, dir, Main.QueryArgs("alpha beta", None, Main.QueryMode.Phrase), cfg).collect()
       val line = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Main.verbLine("query",
         Seq("hits" -> n, "caches" -> Main.cachesField(graft.query.Wand.openCaches(spark, dir))),
         cancelled = false, 0.5, new graft.metrics.Metrics().json))

@@ -108,7 +108,8 @@ class PlanSpec extends SparkSuite {
     }
   }
 
-  test("served expansion requests: prefix, wildcard, regexp and fuzzy are each 2 jobs of 1 stage, 0 file bytes") {
+  test("served expansion requests: prefix, wildcard, regexp, fuzzy, phrase_prefix and indexed query_string " +
+      "are each 2 jobs of 1 stage, 0 file bytes; a query_string batch without a prefix is 1 job, no WAND cache") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("plan_expand_").toString
     try {
@@ -116,11 +117,29 @@ class PlanSpec extends SparkSuite {
         .toDF("doc_id", "text")
       graft.index.SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"), dir, SparkEntry.IndexCfg)
       graft.index.SegmentBuilder.buildAll(spark, dir, SparkEntry.IndexCfg)
+      // before anything opens the WAND handle of this index
+      val noPrefix = () => QueryDsl.queryStringTopKIndexed(spark, dir,
+        Seq(1 -> "+sparkle \"spark sparkle\" -w3 v4"), cfg = SparkEntry.IndexCfg)
+      noPrefix()
+      var qsHits: org.apache.spark.sql.DataFrame = null
+      val qsWarm = observed { qsHits = noPrefix() }
+      assert(qsHits.collect().nonEmpty)
+      assert(qsWarm.jobs == 1 && qsWarm.stages == 1,
+        s"a warm query_string batch without a prefix ran ${qsWarm.jobs} jobs of ${qsWarm.stages} stages")
+      assert(qsWarm.plans.isEmpty, s"it ran Catalyst queries:\n${qsWarm.plans.mkString("\n")}")
+      assert(qsWarm.fileBytes == 0, s"it read ${qsWarm.fileBytes} file bytes")
+      val open = Wand.openCaches(spark, dir).map(_.name)
+      assert(!open.exists(_.startsWith("wand")) && open.contains("positional"),
+        s"a query_string batch without a prefix opened ${open.mkString(", ")}")
       val requests: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
         "prefix" -> (() => QueryDsl.prefixTopK(spark, dir, Seq(1 -> "spar"), cfg = SparkEntry.IndexCfg)),
         "wildcard" -> (() => QueryDsl.wildcardTopK(spark, dir, Seq(1 -> "sp?r*"), cfg = SparkEntry.IndexCfg)),
         "regexp" -> (() => QueryDsl.regexpTopK(spark, dir, Seq(1 -> "w1[0-2]?"), cfg = SparkEntry.IndexCfg)),
-        "fuzzy" -> (() => QueryDsl.fuzzyTopK(spark, dir, Seq(1 -> "sparc"), cfg = SparkEntry.IndexCfg)))
+        "fuzzy" -> (() => QueryDsl.fuzzyTopK(spark, dir, Seq(1 -> "sparc"), cfg = SparkEntry.IndexCfg)),
+        "phrase_prefix" -> (() => QueryDsl.phrasePrefixTopK(spark, dir, Seq(1 -> "spark sp"),
+          cfg = SparkEntry.IndexCfg)),
+        "query_string" -> (() => QueryDsl.queryStringTopKIndexed(spark, dir,
+          Seq(1 -> "+\"sparkle spork\" w1* -v3"), cfg = SparkEntry.IndexCfg)))
       requests.foreach(_._2())
       for ((op, request) <- requests) {
         var hits: org.apache.spark.sql.DataFrame = null
@@ -132,12 +151,13 @@ class PlanSpec extends SparkSuite {
         assert(warm.fileBytes == 0, s"a warm $op request read ${warm.fileBytes} file bytes")
       }
       Wand.handleFor(spark, dir, SparkEntry.IndexCfg).close()
+      BM25.phraseHandleFor(spark, dir, SparkEntry.IndexCfg).close()
     } finally {
       new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(); ()
     }
   }
 
-  test("warm served requests build no RDD: term, phrase batch, dfOf, prefix and fuzzy expansion") {
+  test("warm served requests build no RDD: term, phrase batch, dfOf, prefix, fuzzy, phrase_prefix and query_string") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("plan_nordd_").toString
     try {
@@ -152,7 +172,11 @@ class PlanSpec extends SparkSuite {
         "phrase" -> (() => phrase.topK(Seq(5 -> "sparkle spork", 6 -> "query w4"))),
         "dfOf" -> (() => wand.dfOf(Seq("spark", "w3", "zzznope"))),
         "prefix" -> (() => QueryDsl.prefixTopK(spark, dir, Seq(1 -> "spar"), cfg = SparkEntry.IndexCfg)),
-        "fuzzy" -> (() => QueryDsl.fuzzyTopK(spark, dir, Seq(1 -> "sparc"), cfg = SparkEntry.IndexCfg)))
+        "fuzzy" -> (() => QueryDsl.fuzzyTopK(spark, dir, Seq(1 -> "sparc"), cfg = SparkEntry.IndexCfg)),
+        "phrase_prefix" -> (() => QueryDsl.phrasePrefixTopK(spark, dir, Seq(1 -> "spark sp"),
+          cfg = SparkEntry.IndexCfg)),
+        "query_string" -> (() => QueryDsl.queryStringTopKIndexed(spark, dir,
+          Seq(1 -> "+\"sparkle spork\" w1* -v3"), cfg = SparkEntry.IndexCfg)))
       try {
         requests.foreach(_._2())
         for ((op, request) <- requests) {

@@ -118,9 +118,13 @@ class ServedTopKSpec extends SparkSuite {
       // the per-task cap and the driver merge across several partitions
       val keyed = dict.flatMap { case (t, df) => Seq((0, t, df), (1, t, df)) }
         .toDS().repartition(5)
-      assert(ServedTopK.termsOf(ServedTopK.capPerKeyWithDf(keyed.rdd, ServedTopK.byTerm, cap))(0) ===
+      def capPerKeyWithDf(rows: org.apache.spark.rdd.RDD[(Int, String, Long)], ord: Ordering[(String, Long)],
+                          cap: Int): Map[Int, Seq[(String, Long)]] =
+        ServedTopK.capMerge(spark.sparkContext.runJob(rows,
+          (it: Iterator[(Int, String, Long)]) => ServedTopK.capTask(it, ord, cap)), ord, cap)
+      assert(ServedTopK.termsOf(capPerKeyWithDf(keyed.rdd, ServedTopK.byTerm, cap))(0) ===
         sparkOrder.take(cap))
-      assert(ServedTopK.termsOf(ServedTopK.capPerKeyWithDf(keyed.rdd, ServedTopK.byDfThenTerm, cap))(1) ===
+      assert(ServedTopK.termsOf(capPerKeyWithDf(keyed.rdd, ServedTopK.byDfThenTerm, cap))(1) ===
         terms(dictDf.orderBy(col("df").desc, col("term")).limit(cap)))
     }
   }
