@@ -29,8 +29,9 @@ import graft.index.{Postings, SegmentBuilder}
   *    order ([[foldTerms]] is its scalar twin on the served paths);
   *  - span: [[phraseSpans]] decides phrase adjacency over joined
   *    (keys…, doc_id, off, m, positions) rows;
-  *  - expansion cap: [[Wand.expandCapped]] caps term expansions over
-  *    any sorted (term, df) dictionary.
+  *  - expansion cap: [[Wand.capped]] caps a term expansion over the
+  *    served sorted (term, df) dictionary, [[Wand.expandCapped]] the
+  *    corpus query_string path's prefix expansions.
   */
 object BM25 {
 
@@ -534,8 +535,7 @@ object BM25 {
     * where the init gather sees all of the term's rows, in its shard.
     * Memory contract: the store's postings and positions as flat arrays
     * plus per-term overhead, each posting held once, in executor storage
-    * memory. It keeps no dictionary: expansions walk the WAND handle's,
-    * and the max df that sizes the doc ranges comes off the gather.
+    * memory. It keeps no dictionary: expansions walk the WAND handle's.
     * [[caches]] reports the sizes.
     *
     * [[serve]] is ONE Spark job of ONE stage over the doc partitions

@@ -65,10 +65,13 @@ object QueryDsl {
       if (nMust + nFilter > 0) 0 else 1)
   }
 
-  /** ES fuzziness AUTO (public docs): exact for length <= 2, one edit
-    * for 3..5, two edits above. */
-  def autoFuzziness(term: String): Int =
-    if (term.length <= 2) 0 else if (term.length <= 5) 1 else 2
+  /** ES fuzziness AUTO (public docs; `Fuzziness.asDistance` counts code
+    * points): exact for length <= 2, one edit for 3..5, two edits
+    * above. */
+  def autoFuzziness(term: String): Int = {
+    val len = term.codePointCount(0, term.length)
+    if (len <= 2) 0 else if (len <= 5) 1 else 2
+  }
 
   /** Default expansion cap for prefix/fuzzy (Lucene's
     * max_expansions default is 50). */
@@ -151,64 +154,53 @@ object QueryDsl {
 
   /** Prefix top-k served from the segment index: each query's prefix
     * (lowercased — ES prefix queries are not analyzed) expands to the
-    * lexicographically-first `maxExpansions` matching index terms via
-    * the handle's serving cache ([[Wand.Handle.expandPrefixBatch]]
-    * — a dictionary walk, never posting payloads), and the
-    * expanded disjunction serves through the SAME exact block-max WAND
-    * path as a match query (ES rewrite=scoring_boolean: each expanded
-    * term scores with its own df). An empty expansion yields zero hits
+    * lexicographically-first `maxExpansions` matching index terms of
+    * the handle's term dictionary ([[Wand.PrefixOf]] — a dictionary
+    * walk, never posting payloads), and the expanded disjunction serves
+    * through the SAME exact block-max WAND path as a match query (ES
+    * rewrite=scoring_boolean: each expanded term scores with its own
+    * df), expansion and scoring in ONE Spark job
+    * ([[Wand.Handle.topKExpanded]]). An empty expansion yields zero hits
     * for that qid. */
   def prefixTopK(spark: SparkSession, indexDir: String,
                  queries: Seq[(Int, String)],
                  maxExpansions: Int = MaxExpansions,
-                 cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val h = Wand.handleFor(spark, indexDir, cfg)
-    // one metadata job expands the whole batch (formerly one collect
-    // round-trip per query — pure fixed cost at serving time)
-    val qp = queries.map { case (qid, p) =>
-      qid -> p.trim.toLowerCase(java.util.Locale.ROOT) }
-    val exp = h.expandPrefixBatch(qp.map(_._2), maxExpansions)
-    h.topKTerms(qp.map { case (qid, p) => qid -> exp(p) })
-  }
+                 cfg: EngineConfig = EngineConfig.default): DataFrame =
+    Wand.handleFor(spark, indexDir, cfg).topKExpanded(
+      queries.map { case (qid, p) => qid -> Wand.PrefixOf(p.trim.toLowerCase(java.util.Locale.ROOT)) },
+      maxExpansions)
 
   /** Fuzzy top-k served from the segment index: the query term (single
     * term, lowercased — ES fuzzy queries are not analyzed) expands to
     * index terms within AUTO Levenshtein distance
     * ([[autoFuzziness]]; classic distance on both engine and oracle),
-    * highest-df-first capped at `maxExpansions`
-    * ([[Wand.Handle.expandFuzzyBatch]]), served through exact WAND with each
-    * expansion's own df. */
+    * highest-df-first capped at `maxExpansions` ([[Wand.FuzzyOf]]),
+    * served through exact WAND with each expansion's own df, expansion
+    * and scoring in ONE Spark job ([[Wand.Handle.topKExpanded]]). */
   def fuzzyTopK(spark: SparkSession, indexDir: String,
                 queries: Seq[(Int, String)],
                 maxExpansions: Int = MaxExpansions,
-                cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val h = Wand.handleFor(spark, indexDir, cfg)
-    // one metadata job expands the whole batch (the prefix discipline)
-    val qt = queries.map { case (qid, t0) =>
+                cfg: EngineConfig = EngineConfig.default): DataFrame =
+    Wand.handleFor(spark, indexDir, cfg).topKExpanded(queries.map { case (qid, t0) =>
       val t = t0.trim.toLowerCase(java.util.Locale.ROOT)
-      (qid, t, autoFuzziness(t))
-    }
-    val exp = h.expandFuzzyBatch(qt.map { case (_, t, d) => (t, d) }, maxExpansions)
-    h.topKTerms(qt.map { case (qid, t, d) => qid -> exp(t, d) })
-  }
+      qid -> Wand.FuzzyOf(t, autoFuzziness(t))
+    }, maxExpansions)
 
   /** Wildcard top-k served from the segment index: the pattern (`*` =
     * any sequence, `?` = one char; lowercased — ES wildcard queries are
     * not analyzed) expands against the cached term dictionary
-    * ([[Wand.Handle.expandWildcardBatch]], lexicographic-first
-    * `maxExpansions`) and the expansion serves through the same exact
-    * block-max WAND as match/prefix (rewrite=scoring_boolean: each term
-    * scores with its own df). */
+    * ([[Wand.WildcardOf]], lexicographic-first `maxExpansions`) and the
+    * expansion serves through the same exact block-max WAND as
+    * match/prefix (rewrite=scoring_boolean: each term scores with its
+    * own df), expansion and scoring in ONE Spark job
+    * ([[Wand.Handle.topKExpanded]]). */
   def wildcardTopK(spark: SparkSession, indexDir: String,
                    queries: Seq[(Int, String)],
                    maxExpansions: Int = MaxExpansions,
-                   cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val h = Wand.handleFor(spark, indexDir, cfg)
-    // one metadata job expands the whole batch
-    val qp = queries.map { case (qid, p) => (qid, p.trim.toLowerCase(java.util.Locale.ROOT)) }
-    val exp = h.expandWildcardBatch(qp.map(_._2), maxExpansions)
-    h.topKTerms(qp.map { case (qid, p) => qid -> exp(p) })
-  }
+                   cfg: EngineConfig = EngineConfig.default): DataFrame =
+    Wand.handleFor(spark, indexDir, cfg).topKExpanded(
+      queries.map { case (qid, p) => qid -> Wand.WildcardOf(p.trim.toLowerCase(java.util.Locale.ROOT)) },
+      maxExpansions)
 
   /** ES search_after — deep pagination without deep sorting. The cursor
     * is the LAST hit of the previous page in the total order
@@ -788,7 +780,7 @@ object QueryDsl {
           .filter(prefixes.map(p => col("term").startsWith(p)).reduce(_ || _)) // pruned BEFORE the df agg
           .groupBy("term").agg(count(lit(1)).as("df"))
           .rdd.mapPartitions(rs => Iterator(ServedTopK.TermDict(rs.map(r => (r.getString(0), r.getLong(1)))))),
-        prefixes, maxExpansions)(p => _.startingWith(p))
+        prefixes, maxExpansions)
     }
     val (n, avgdl, dfLit) = Await.result(statsF, Duration.Inf)
     val expMap = Await.result(expF, Duration.Inf)
@@ -1007,27 +999,27 @@ object QueryDsl {
   /** ES regexp query served from the segment index: the pattern is
     * anchored full-term (the Lucene contract — `ta.le` matches `table`,
     * not `stables`), expands against the cached term dictionary
-    * ([[Wand.Handle.expandRegexBatch]], lexicographic-first `maxExpansions`)
-    * and serves through the same exact WAND as prefix/wildcard. The
-    * expansion scans the handle's whole sorted term dictionary (terms
-    * and df, never postings), the same cost class Lucene documents for
-    * leading-wildcard patterns.
+    * ([[Wand.RegexpOf]], lexicographic-first `maxExpansions`) and
+    * serves through the same exact WAND as prefix/wildcard, expansion
+    * and scoring in ONE Spark job ([[Wand.Handle.topKExpanded]]). The
+    * expansion walks the range of the pattern's leading literal run
+    * ([[Wand.regexLiteral]]) of the handle's sorted term dictionary
+    * (terms and df, never postings); a pattern without one (a leading
+    * class, `.` or group, or any `|`) walks all of it, the cost class
+    * Lucene documents for leading-wildcard patterns.
     * Oracle parity holds on the regex subset both Java and RE2 agree on
     * (literals, classes, ., *, +, |, grouping — no backrefs or
     * lookaround). */
   def regexpTopK(spark: SparkSession, indexDir: String,
                  queries: Seq[(Int, String)],
                  maxExpansions: Int = MaxExpansions,
-                 cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val h = Wand.handleFor(spark, indexDir, cfg)
+                 cfg: EngineConfig = EngineConfig.default): DataFrame =
     // patterns match VERBATIM against the (lowercase) term dictionary —
     // lowercasing a regex is not semantics-preserving (\D would become
-    // \d), so unlike prefix/wildcard the pattern is the caller's; one
-    // metadata job expands the whole batch (anchored full-term)
-    val qp = queries.map { case (qid, p) => (qid, "^(?:" + p.trim + ")$") }
-    val exp = h.expandRegexBatch(qp.map(_._2), maxExpansions)
-    h.topKTerms(qp.map { case (qid, rx) => qid -> exp(rx) })
-  }
+    // \d), so unlike prefix/wildcard the pattern is the caller's,
+    // anchored full-term
+    Wand.handleFor(spark, indexDir, cfg).topKExpanded(
+      queries.map { case (qid, p) => qid -> Wand.RegexpOf("^(?:" + p.trim + ")$") }, maxExpansions)
 
   /** ES range aggregation over a query's matching docs: every SPECIFIED
     * range is an independent bucket — from inclusive, to exclusive,

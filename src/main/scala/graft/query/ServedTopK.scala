@@ -24,12 +24,18 @@ import org.apache.spark.sql.types.StructType
   *
   * [[bestPerQid]] and [[merge]] are the task and driver halves of the
   * hit ranking that every served scoring job ends in
-  * ([[ShardCache.topK]]); [[capTask]] and [[capMerge]] are those of the
-  * expansion cap ([[Wand.expandCapped]]). What the tasks return is
-  * bounded by construction — at most tasks x keys x k rows — no matter
-  * how many candidates the scoring pass produces; no partition ever
-  * buffers more than k rows per key. The corpus-path operators keep the lazy
-  * [[BM25.rankTopK]] aggregation.
+  * ([[ShardCache.topKOf]]); [[capTask]] and [[capMerge]] are those of
+  * the corpus query_string path's expansion cap ([[Wand.expandCapped]]).
+  * What the tasks return is bounded by construction — at most tasks x
+  * keys x k rows — no matter how many candidates the scoring pass
+  * produces; no partition ever buffers more than k rows per key. The
+  * corpus-path operators keep the lazy [[BM25.rankTopK]] aggregation.
+  *
+  * [[TermDict]] is the sorted term dictionary and its walks: every doc
+  * partition of the WAND handle's cache holds the whole store's one, so
+  * a served expansion request expands its patterns inside its one
+  * scoring job, each capped the same way in every partition
+  * ([[Wand.capped]]) — no per-task cap and no driver merge.
   */
 object ServedTopK {
 
@@ -85,13 +91,13 @@ object ServedTopK {
     private def lift(c: Char): Int = if (c >= 0xE000) c - 0x800 else c + 0x2000
   }
 
-  /** One partition of a term dictionary: its distinct terms in
+  /** A term dictionary, or one partition of one: its distinct terms in
     * [[termOrder]] with a parallel df array. Under [[termOrder]] the
     * terms that start with a string form one contiguous run (it is a
     * lexicographic order over a total order of UTF-16 units), so a
     * prefix is a binary-searched range. */
   final class TermDict(val terms: Array[String], val dfs: Array[Long]) extends Serializable {
-    /** `term`'s df, when the partition holds it. */
+    /** `term`'s df, when the dictionary holds it. */
     def df(term: String): Option[Long] = {
       val i = java.util.Arrays.binarySearch(terms, term, termOrder)
       if (i >= 0) Some(dfs(i)) else None
@@ -104,9 +110,83 @@ object ServedTopK {
     }
 
     /** The indices of the terms starting with `literal` that `matches`,
-      * in order: "" walks the whole partition. */
+      * in order: "" walks the whole dictionary. */
     def matching(literal: String, matches: String => Boolean): Iterator[Int] =
       startingWith(literal).filter(j => matches(terms(j)))
+
+    /** The index past the run of terms that start with `prefix`, where
+      * `terms(from - 1)` does: a galloping search from `from`. */
+    private def runEnd(prefix: String, from: Int): Int = {
+      var lo = from; var hi = from; var step = 1
+      while (hi < terms.length && terms(hi).startsWith(prefix)) { lo = hi + 1; hi = lo + step; step <<= 1 }
+      hi = math.min(hi, terms.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (terms(mid).startsWith(prefix)) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
+    /** The indices of the terms within Levenshtein distance `d` of
+      * `term`, in order: exactly what [[Wand.withinDistance]] accepts.
+      * Both strings are compared as `UTF8String` holds them, one unit
+      * per code point and a lone surrogate as `?`. One DP row per code
+      * point of a term, over the code points of `term`; a term reuses
+      * the rows of the common prefix it shares with the previous one,
+      * and once a row's minimum exceeds `d` — no extension can come back
+      * within `d`, since row minima never fall — the walk jumps past
+      * every term with that prefix ([[runEnd]]). A prefix that ends in a
+      * high surrogate is not jumped: a following low one changes its
+      * last code point. */
+    def withinDistance(term: String, d: Int): Iterator[Int] = {
+      val p = new Array[Int](term.length)
+      val m = TermDict.utf8CodePoints(term, p, null)
+      var rows = Array(Array.range(0, m + 1))
+      var mins = Array(0)
+      // this term's and the previous term's code points; `ends(i)` is
+      // the char offset past this term's first i code points
+      var cur, prev = new Array[Int](16)
+      var ends = new Array[Int](17)
+      var valid = 0 // rows 0..valid hold the previous term's prefix
+      val hits = Array.newBuilder[Int]
+      var j = 0
+      while (j < terms.length) {
+        val t = terms(j)
+        if (cur.length < t.length) cur = new Array[Int](t.length)
+        if (ends.length <= t.length) ends = new Array[Int](t.length + 1)
+        val len = TermDict.utf8CodePoints(t, cur, ends)
+        if (rows.length <= len) {
+          rows = rows ++ Array.fill(len + 1 - rows.length)(new Array[Int](m + 1))
+          mins = java.util.Arrays.copyOf(mins, len + 1)
+        }
+        var i = 0
+        while (i < math.min(len, valid) && cur(i) == prev(i)) i += 1
+        var out = mins(i) > d
+        while (!out && i < len) {
+          val up = rows(i); val row = rows(i + 1); val c = cur(i)
+          row(0) = i + 1
+          var mn = i + 1
+          var k = 1
+          while (k <= m) {
+            val v = math.min(math.min(row(k - 1), up(k)) + 1, up(k - 1) + (if (p(k - 1) == c) 0 else 1))
+            row(k) = v
+            if (v < mn) mn = v
+            k += 1
+          }
+          i += 1
+          mins(i) = mn
+          out = mn > d
+        }
+        valid = i
+        val swap = prev; prev = cur; cur = swap
+        if (!out) {
+          if (rows(len)(m) <= d) hits += j
+          j += 1
+        } else if (ends(i) > 0 && Character.isHighSurrogate(t.charAt(ends(i) - 1))) j += 1
+        else j = runEnd(t.substring(0, ends(i)), j + 1)
+      }
+      hits.result().iterator
+    }
   }
 
   object TermDict {
@@ -114,6 +194,50 @@ object ServedTopK {
     def apply(entries: Iterator[(String, Long)]): TermDict = {
       val sorted = entries.toArray.sortBy(_._1)(termOrder)
       new TermDict(sorted.map(_._1), sorted.map(_._2))
+    }
+
+    /** The one dictionary of sorted, disjoint `runs`: balanced two-way
+      * merges, no sort. */
+    def merge(runs: Seq[TermDict]): TermDict =
+      if (runs.isEmpty) empty
+      else if (runs.size == 1) runs.head
+      else {
+        val (l, r) = runs.splitAt(runs.size / 2)
+        val (a, b) = (merge(l), merge(r))
+        val n = a.terms.length + b.terms.length
+        val terms = new Array[String](n); val dfs = new Array[Long](n)
+        var i = 0; var j = 0; var o = 0
+        while (o < n) {
+          if (j == b.terms.length || i < a.terms.length && termOrder.compare(a.terms(i), b.terms(j)) < 0) {
+            terms(o) = a.terms(i); dfs(o) = a.dfs(i); i += 1
+          } else {
+            terms(o) = b.terms(j); dfs(o) = b.dfs(j); j += 1
+          }
+          o += 1
+        }
+        new TermDict(terms, dfs)
+      }
+
+    /** No terms: the dictionary of a cache that keeps none. */
+    val empty: TermDict = new TermDict(Array.empty, Array.empty)
+
+    /** How many code points `s` has as `UTF8String.fromString`
+      * encodes it, a lone surrogate as `?`: they fill `cps`, at least
+      * `s.length` long; `ends`, when given, gets the char offset past
+      * each prefix of them. */
+    private[ServedTopK] def utf8CodePoints(s: String, cps: Array[Int], ends: Array[Int]): Int = {
+      var i = 0; var n = 0
+      while (i < s.length) {
+        val c = s.charAt(i)
+        if (Character.isHighSurrogate(c) && i + 1 < s.length && Character.isLowSurrogate(s.charAt(i + 1))) {
+          cps(n) = Character.toCodePoint(c, s.charAt(i + 1)); i += 2
+        } else {
+          cps(n) = if (Character.isSurrogate(c)) '?' else c; i += 1
+        }
+        n += 1
+        if (ends != null) ends(n) = i
+      }
+      n
     }
   }
 

@@ -27,30 +27,34 @@ import graft.index.{BlockRow, SegmentBuilder, SegmentRow}
   *
   * Distribution (100 TB rule): serving fans out per doc range — the
   * ES-shard design. A [[Handle]] reads the segment rows once, at init,
-  * into its serving caches, a [[ShardCache]]: doc partitions, one per
-  * doc range, each one `term -> rows` map of the segment rows (cut at
-  * block boundaries to the range) of every term with docs in it, each
-  * row carrying its term's store-wide df; and a term-partitioned
-  * dictionary of (term, df). A request reads only those caches — no
-  * parquet scan, no Catalyst plan. A term request is ONE Spark job of
-  * ONE stage ([[Handle.topKTerms]]): every doc partition runs exact
-  * WAND per query over its own docs with global corpus stats and the
-  * df its rows carry, and the local hits rank the way an ES coordinator
-  * merges shard results ([[ShardCache.topK]]). Served calls are
-  * therefore EAGER — the scoring pass runs inside the call, which
-  * returns a small local frame — and what the driver gets back is
-  * bounded by construction. Term expansion (prefix, wildcard, regexp,
-  * fuzzy) is a single-stage walk over the sorted dictionary
-  * ([[expandCapped]]): a heap of `cap` per (task, pattern), at most
-  * tasks x patterns x cap rows back, the final cap on the driver in
-  * Spark's string order — the corpus query_string path caps its prefix
-  * clauses with it too. Every one of these jobs is one
-  * `SparkContext.runJob` straight over the resident RDD, its partitions
-  * picked on the driver: a served request builds no RDD and calls no
-  * `RDD.collect`, which took an empty request job from 10.4 ms
-  * (`mapPartitionsWithIndex(…).collect()`) to 3.5 ms on the perfbench
-  * `serve` index ([[ShardCache]]). What stays per request is the
-  * caller's collect of the returned local frame: about 5.8 ms of
+  * into its serving cache, a [[ShardCache]]: doc partitions, one per
+  * doc range, each one `term -> rows` map per shard of the segment rows
+  * (cut at block boundaries to the range) of every term with docs in
+  * it, each row carrying its term's store-wide df, plus the store's
+  * whole sorted term dictionary of (term, df). A request reads only
+  * that cache — no parquet scan, no Catalyst plan. A term request is
+  * ONE Spark job of ONE stage ([[Handle.topKTerms]]): every doc
+  * partition runs exact WAND per query over its own docs with global
+  * corpus stats and the df its rows carry, and the local hits rank the
+  * way an ES coordinator merges shard results ([[ShardCache.topK]]).
+  * A prefix, wildcard, regexp or fuzzy request is one too
+  * ([[Handle.topKExpanded]]): as ES rewrites a multi-term query on each
+  * shard inside the request that scores it, every doc partition expands
+  * the pattern over the dictionary it holds ([[Expansion]], [[capped]])
+  * — the same capped list in every partition — and scores it in the
+  * same task. Served calls are therefore EAGER — the scoring pass runs
+  * inside the call, which returns a small local frame — and what the
+  * driver gets back is bounded by construction. The standalone
+  * expansion batches and [[Handle.dfOf]] (phrase_prefix and the indexed
+  * query_string expand this way) are one job of one task over doc
+  * partition 0; [[expandCapped]] is left for the corpus query_string
+  * path, whose dictionary is an RDD of its own. Every one of these jobs
+  * is one `SparkContext.runJob` straight over the resident RDD, its
+  * partitions picked on the driver: a served request builds no RDD and
+  * calls no `RDD.collect`, which took an empty request job from
+  * 10.4 ms (`mapPartitionsWithIndex(…).collect()`) to 3.5 ms on the
+  * perfbench `serve` index ([[ShardCache]]). What stays per request is
+  * the caller's collect of the returned local frame: about 5.8 ms of
   * Catalyst planning and SQL-execution events, which graft cannot
   * remove while served calls return a `DataFrame`.
   * [[memoHandle]] is the one process-level memo of serving
@@ -122,8 +126,9 @@ object Wand {
     }.mkString + "$"
 
   /** One (term, salt) run restricted to docs in [lo, hi): lazily-decoded
-    * cursor over its blocks. */
-  private final class Cursor(val term: String, val idf: Double, val df: Long,
+    * cursor over its blocks; `ord` breaks ties between cursors on one
+    * doc. */
+  private final class Cursor(val ord: Int, val term: String, val idf: Double, val df: Long,
                              rows: Array[SegRow], hi: Long = Long.MaxValue) {
     // flatten blocks across row_seq order; skip metadata per block
     private val blocks: Array[BlockRow] = rows.sortBy(_.row_seq).flatMap(_.blocks)
@@ -223,14 +228,46 @@ object Wand {
                  n: Long, avgdl: Double, k: Int, k1: Double, b: Double,
                  lo: Long = Long.MinValue,
                  hi: Long = Long.MaxValue): Seq[(Double, Long)] = {
-    val cursors: Array[Cursor] = rows.groupBy(r => (r.term, r.salt)).map {
-      case ((term, _), rs) =>
+    val cursors: Array[Cursor] = rows.groupBy(r => (r.term, r.salt)).values.zipWithIndex.map {
+      case (rs, i) =>
         val df = rs(0).df
-        new Cursor(term, BM25.idf(df, n), df, rs, hi)
+        new Cursor(i, rs(0).term, BM25.idf(df, n), df, rs, hi)
     }.toArray
     if (lo != Long.MinValue) cursors.foreach(_.nextGEQ(lo))
-    val active = mutable.ArrayBuffer[Cursor](cursors.filter(!_.exhausted): _*)
-    if (active.isEmpty) return Seq.empty
+    // the live cursors in (curDoc, ord) order; a step moves only the
+    // first few, which `reinsert` puts back in place, where re-sorting
+    // every cursor on every step cost most of a many-term request
+    def before(a: Cursor, b: Cursor): Boolean = a.curDoc < b.curDoc || a.curDoc == b.curDoc && a.ord < b.ord
+    val sorted = cursors.filter(!_.exhausted).sortWith(before)
+    var live = sorted.length
+    if (live == 0) return Seq.empty
+    val moved = new Array[Cursor](live)
+    /** Puts the moved `sorted(0 until m)` back in order, dropping the
+      * exhausted. */
+    def reinsert(m: Int): Unit = {
+      var t = 0
+      var i = 0
+      while (i < m) {
+        val c = sorted(i)
+        if (!c.exhausted) {
+          var j = t
+          while (j > 0 && before(c, moved(j - 1))) { moved(j) = moved(j - 1); j -= 1 }
+          moved(j) = c
+          t += 1
+        }
+        i += 1
+      }
+      // merge moved(0 until t) with the untouched sorted(m until live),
+      // front to back: the write index never passes the read index
+      var a = 0; var r = m; var w = 0
+      while (a < t) {
+        if (r < live && before(sorted(r), moved(a))) { sorted(w) = sorted(r); r += 1 }
+        else { sorted(w) = moved(a); a += 1 }
+        w += 1
+      }
+      while (r < live) { sorted(w) = sorted(r); r += 1; w += 1 }
+      live = w
+    }
 
     // k-best by (score desc, docId asc); head of the set = current worst
     val worstFirst: Ordering[(Double, Long)] =
@@ -245,13 +282,12 @@ object Wand {
       }
     }
 
-    while (active.nonEmpty) {
-      val sorted = active.sortBy(_.curDoc)
+    while (live > 0) {
       // pivot: first prefix whose summed run-UBs could reach theta
       var acc = 0.0
       var pIdx = -1
       var i = 0
-      while (i < sorted.length && pIdx == -1) {
+      while (i < live && pIdx == -1) {
         acc += sorted(i).ub
         if (acc >= theta) pIdx = i
         i += 1
@@ -261,7 +297,7 @@ object Wand {
       // extend to every cursor positioned exactly at the pivot — they all
       // contribute to its score and must be covered by any skip bound
       var endIdx = pIdx
-      while (endIdx + 1 < sorted.length && sorted(endIdx + 1).curDoc == pivot) endIdx += 1
+      while (endIdx + 1 < live && sorted(endIdx + 1).curDoc == pivot) endIdx += 1
 
       if (sorted.head.curDoc == pivot) {
         // block-max refinement before decoding/scoring
@@ -278,7 +314,7 @@ object Wand {
             if (nb < d) d = nb
             j += 1
           }
-          if (endIdx + 1 < sorted.length && sorted(endIdx + 1).curDoc < d)
+          if (endIdx + 1 < live && sorted(endIdx + 1).curDoc < d)
             d = sorted(endIdx + 1).curDoc
           val target = math.max(pivot + 1, d)
           j = 0
@@ -300,10 +336,11 @@ object Wand {
             j += 1
           }
         }
+        reinsert(endIdx + 1)
       } else {
-        sorted.head.nextGEQ(pivot)
+        sorted(0).nextGEQ(pivot)
+        reinsert(1)
       }
-      active.filterInPlace(!_.exhausted)
     }
     finishScores(heap, k)
   }
@@ -411,36 +448,30 @@ object Wand {
   /** The name of an index's serving cache RDD. */
   private[query] def cacheName(indexDir: String): String = s"graft serving cache $indexDir"
 
-  /** The expansion-cap step, over any sorted term dictionary (the
-    * served handle's, a corpus path's term-pruned df aggregation): ONE
-    * `SparkContext.runJob` straight over `dict`, building no RDD, in
-    * which each task runs, per distinct key, the key's `walk` over its
-    * partition — the indices of the terms the key matches, ascending, so
-    * in term order: a prefix is its binary-searched range
-    * ([[ServedTopK.TermDict.startingWith]]), a pattern filters the range
-    * of its literal run ([[ServedTopK.TermDict.matching]]) — never
-    * posting payloads, no join, no shuffle. [[ServedTopK.capTask]]
-    * keeps the first `cap` matches per key in each task, in term order
-    * ([[ServedTopK.byTerm]]), where the walk stops at the partition's
-    * first `cap`, or `byDf` ([[ServedTopK.byDfThenTerm]]), where it runs
-    * to the end; [[ServedTopK.capMerge]] merges and caps again on the
-    * driver. What the tasks return is bounded by tasks x keys x cap rows
-    * no matter how hot a pattern is against the dictionary. Keys with no
-    * match map to Nil; a `cap` of 0 runs no job. */
-  private[query] def expandCapped[K](dict: RDD[ServedTopK.TermDict], keys: Seq[K], cap: Int,
-                                     byDf: Boolean = false)
-                                    (walk: K => ServedTopK.TermDict => Iterator[Int]): Map[K, Seq[(String, Long)]] = {
-    val ks = keys.distinct.toVector
-    if (ks.isEmpty || cap <= 0) return ks.map(_ -> Nil).toMap
-    val ord = if (byDf) ServedTopK.byDfThenTerm else ServedTopK.byTerm
-    val capped = ServedTopK.capMerge(dict.sparkContext.runJob(dict, (ds: Iterator[ServedTopK.TermDict]) => {
-      val walks = ks.map(walk)
-      ServedTopK.capTask(ds.flatMap(d => ks.indices.iterator.flatMap { i =>
-        val hits = walks(i)(d)
-        (if (byDf) hits else hits.take(cap)).map(j => (i, d.terms(j), d.dfs(j)))
-      }), ord, cap)
-    }), ord, cap)
-    ks.indices.map(i => ks(i) -> capped.getOrElse(i, Nil)).toMap
+  /** The prefix-expansion cap over a term dictionary that is an RDD of
+    * sorted partitions — the corpus query_string path's term-pruned df
+    * aggregation; served requests expand over the dictionary each doc
+    * partition holds ([[capped]]). ONE `SparkContext.runJob` straight
+    * over `dict`, building no RDD, in which each task walks, per
+    * distinct prefix, the binary-searched range of its partition's
+    * terms that start with it ([[ServedTopK.TermDict.startingWith]]),
+    * stopping at the first `cap` — never posting payloads, no join, no
+    * shuffle. [[ServedTopK.capTask]] keeps them per prefix, and
+    * [[ServedTopK.capMerge]] merges and caps again on the driver, in
+    * term order ([[ServedTopK.byTerm]]). What the tasks return is bounded
+    * by tasks x prefixes x cap rows no matter how hot a prefix is against
+    * the dictionary. Prefixes with no match map to Nil; a `cap` of 0 runs
+    * no job. */
+  private[query] def expandCapped(dict: RDD[ServedTopK.TermDict], prefixes: Seq[String],
+                                  cap: Int): Map[String, Seq[(String, Long)]] = {
+    val ps = prefixes.distinct.toVector
+    if (ps.isEmpty || cap <= 0) return ps.map(_ -> Nil).toMap
+    val ord = ServedTopK.byTerm
+    val capped = ServedTopK.capMerge(dict.sparkContext.runJob(dict, (ds: Iterator[ServedTopK.TermDict]) =>
+      ServedTopK.capTask(ds.flatMap(d => ps.indices.iterator.flatMap { i =>
+        d.startingWith(ps(i)).take(cap).map(j => (i, d.terms(j), d.dfs(j)))
+      }), ord, cap)), ord, cap)
+    ps.indices.map(i => ps(i) -> capped.getOrElse(i, Nil)).toMap
   }
 
   // The expansion predicates, each Spark's own column predicate as a
@@ -451,6 +482,32 @@ object Wand {
     * every term its [[wildcardRegex]] matches starts with it. */
   private[query] def wildcardLiteral(pattern: String): String = pattern.takeWhile(c => c != '*' && c != '?')
 
+  /** The literal run every term an anchored regexp matches starts with:
+    * the letters and digits after its leading `^` and any `(?:` that
+    * open there, less the last one when `?`, `*`, `+` or `{` follows
+    * it, since a quantifier may drop or repeat it. "" — the whole
+    * dictionary — for a pattern with `|`, one that does not start with
+    * `^` (`rlike` searches anywhere), and one whose leading groups do
+    * not all close at its very end, unquantified, with no other `(` or
+    * `)` in it. */
+  private[query] def regexLiteral(pattern: String): String = {
+    if (!pattern.startsWith("^") || pattern.contains('|')) return ""
+    var i = 1
+    while (pattern.startsWith("(?:", i)) i += 3
+    val groups = (i - 1) / 3
+    val closes = ")" * groups
+    if (groups > 0 && !(pattern.count(_ == '(') == groups && pattern.count(_ == ')') == groups &&
+        (pattern.endsWith(closes) || pattern.endsWith(closes + "$")))) return ""
+    val start = i
+    var last = i
+    while (i < pattern.length && Character.isLetterOrDigit(pattern.codePointAt(i))) {
+      last = i
+      i += Character.charCount(pattern.codePointAt(i))
+    }
+    if (i < pattern.length && "?*+{".indexOf(pattern.charAt(i)) >= 0) pattern.substring(start, last)
+    else pattern.substring(start, i)
+  }
+
   /** `col("term").rlike(pattern)`: `Matcher.find`, an unanchored search. */
   private[query] def rlike(pattern: String): String => Boolean = {
     val p = java.util.regex.Pattern.compile(pattern)
@@ -459,10 +516,10 @@ object Wand {
 
   /** `abs(length(term) - length(t)) <= d && levenshtein(term, t) <= d`:
     * lengths in code points, distance by [[UTF8String]]'s thresholded
-    * Levenshtein — what `levenshtein(l, r, d)` evaluates: -1 beyond `d`,
-    * bounded work per term where the full matrix filled every cell. The
-    * length window is a cheap pre-filter (|len diff| > d can never be
-    * within d). */
+    * Levenshtein — what `levenshtein(l, r, d)` evaluates: -1 beyond `d`.
+    * The reference of the fuzzy walk
+    * ([[ServedTopK.TermDict.withinDistance]]), which must accept exactly
+    * the terms this does. */
   private[query] def withinDistance(input: (String, Int)): String => Boolean = {
     val (t, d) = input
     val u = UTF8String.fromString(t)
@@ -473,36 +530,86 @@ object Wand {
     }
   }
 
+  /** One term-expansion pattern of a served request: the terms of a
+    * sorted [[ServedTopK.TermDict]] it matches, as Spark's own column
+    * predicate would over a (term, df) frame, and the order its cap
+    * keeps them in. */
+  sealed trait Expansion extends Serializable {
+    /** The indices of the terms it matches, ascending. */
+    def walk(d: ServedTopK.TermDict): Iterator[Int]
+    /** The cap keeps the highest df first, ties term-asc; else the
+      * first terms in term order. */
+    def byDf: Boolean = false
+  }
+
+  /** ES prefix (not analyzed): the binary-searched range of terms that
+    * start with it. */
+  final case class PrefixOf(prefix: String) extends Expansion {
+    def walk(d: ServedTopK.TermDict): Iterator[Int] = d.startingWith(prefix)
+  }
+
+  /** ES wildcard (`*` any run, `?` one code point; not analyzed): its
+    * [[wildcardRegex]] over the range of its [[wildcardLiteral]] run. */
+  final case class WildcardOf(pattern: String) extends Expansion {
+    def walk(d: ServedTopK.TermDict): Iterator[Int] =
+      d.matching(wildcardLiteral(pattern), rlike(wildcardRegex(pattern)))
+  }
+
+  /** A regexp, matched as `rlike` does, over the range of its
+    * [[regexLiteral]] run. */
+  final case class RegexpOf(pattern: String) extends Expansion {
+    def walk(d: ServedTopK.TermDict): Iterator[Int] = d.matching(regexLiteral(pattern), rlike(pattern))
+  }
+
+  /** ES fuzzy at `maxDist` classic Levenshtein edits
+    * ([[ServedTopK.TermDict.withinDistance]]), highest df first — ES
+    * fuzzy's top_terms_blended_freqs; ES counts a transposition as 1, a
+    * documented deviation (SURVEY §12). */
+  final case class FuzzyOf(term: String, maxDist: Int) extends Expansion {
+    def walk(d: ServedTopK.TermDict): Iterator[Int] = d.withinDistance(term, maxDist)
+    override def byDf: Boolean = true
+  }
+
+  /** `e`'s first `cap` terms over the whole dictionary `d`, with their
+    * df, in cap order ([[ServedTopK.byTerm]], where the walk stops at
+    * the `cap`-th match, or [[ServedTopK.byDfThenTerm]]): what
+    * `orderBy(...).limit(cap)` over the matching (term, df) rows returns.
+    * Every task that holds the same dictionary computes the same list. */
+  private[query] def capped(d: ServedTopK.TermDict, e: Expansion, cap: Int): Seq[(String, Long)] = {
+    val hits = e.walk(d).map(j => (d.terms(j), d.dfs(j)))
+    if (e.byDf) hits.toArray.sorted(ServedTopK.byDfThenTerm).take(cap).toSeq else hits.take(cap).toSeq
+  }
+
   /** Serving handle: corpus stats, doc-range boundaries and the serving
-    * caches are read once, at init, and serve every query batch.
+    * cache are read once, at init, and serve every query batch.
     *
-    * The serving caches are a [[ShardCache]] named [[cacheName]] over
-    * the index's segment rows — compressed blocks plus their per-row
+    * The serving cache is a [[ShardCache]] named [[cacheName]] over the
+    * index's segment rows — compressed blocks plus their per-row
     * metadata. Its doc partitions, one per doc range, each hold the
     * `term -> rows` maps of the rows overlapping the range, cut at block
     * boundaries; every row carries its term's store-wide df, the sum of
     * n_postings over all the term's rows, summed where the init gather
-    * sees them all, in the term's shard. Its dictionary holds each
-    * shard's terms sorted, with their df. Memory contract: the doc
-    * partitions hold the store's blocks still compressed, plus object
-    * overhead per row — the bulk of it on a vocabulary of mostly rare
-    * terms — in executor storage memory; with one doc range (the
-    * perfbench `serve` index) they hold each row once. [[caches]]
-    * reports the sizes.
+    * sees them all, in the term's shard. Each doc partition also holds
+    * the store's whole term dictionary, sorted, with its dfs. Memory
+    * contract: the doc partitions hold the store's blocks still
+    * compressed, plus object overhead per row — the bulk of it on a
+    * vocabulary of mostly rare terms — in executor storage memory; with
+    * one doc range (the perfbench `serve` index) they hold each row
+    * once. R doc ranges hold R copies of the dictionary's term array
+    * and dfs; with R = 1, one copy. [[caches]] reports the size.
     *
-    * Requests touch only the caches: term and expansion scoring is one
-    * Spark job of one stage ([[topKTerms]]), and the dictionary walks
-    * ([[dfOf]], the expansion batches) are single-stage jobs, each one
-    * `runJob` straight over the resident RDD that builds none per
-    * request. Scoring fans out per doc range, so no request task holds
-    * a whole hot term. */
+    * Requests touch only the cache: term scoring ([[topKTerms]]) and
+    * expansion plus scoring ([[topKExpanded]]) are each one Spark job of
+    * one stage, and the dictionary-only calls ([[dfOf]], the expansion
+    * batches) one job of one task, each one `runJob` straight over the
+    * resident RDD that builds none per request. Scoring fans out per doc
+    * range, so no request task holds a whole hot term. */
   final class Handle private[query] (spark: SparkSession, indexDir: String,
                                      cfg: EngineConfig = EngineConfig.default) extends ServingHandle {
     private val cache = new ShardCache[SegmentRow, Array[SegRow]](spark, indexDir, cfg, cacheName(indexDir), "wand",
       spark.read.parquet(s"$indexDir/segments"), _.as(Encoders.product[SegmentRow]).rdd, withDictionary = true)(
       (rows, _) => segRows(rows), _(0).df,
       (rows, lo, hi) => Some(rows.flatMap(_.within(lo, hi))).filter(_.nonEmpty))
-    private val dictionary = cache.dictionary.get
     val serveRanges: Int = cache.ranges
 
     /** Analyzed match queries served by [[topKTerms]] (eager, bounded). */
@@ -512,61 +619,57 @@ object Wand {
         queries.map { case (qid, t) => qid -> CodeTokenizer.queryTerms(t) },
         taskPostingsAcc)
 
-    /** Every prefix's expansion out of ONE dictionary walk: the
-      * lexicographically-first `maxExpansions` index terms starting with
-      * it — the ES prefix-query expansion (Lucene walks the term dict in
-      * order; prefixes are not analyzed, the caller lowercases), each a
-      * binary-searched range of the sorted dictionary. See
-      * [[expandCapped]]; at most tasks x prefixes x maxExpansions rows
-      * reach the driver. */
+    /** Every prefix's expansion: the lexicographically-first
+      * `maxExpansions` index terms starting with it — the ES
+      * prefix-query expansion (Lucene walks the term dict in order;
+      * prefixes are not analyzed, the caller lowercases). See
+      * [[expandBatch]]. */
     def expandPrefixBatch(prefixes: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
-      ServedTopK.termsOf(expandCapped(dictionary, prefixes, maxExpansions)(p => _.startingWith(p)))
+      expandBatch(prefixes, maxExpansions)(PrefixOf)
 
     /** Every ES wildcard pattern's expansion (`*` any run, `?` one char;
-      * not analyzed, the caller lowercases) out of ONE dictionary walk:
-      * the lexicographically-first `maxExpansions` index terms its
-      * [[wildcardRegex]] full-matches, each pattern walking only the
-      * range of terms that start with its [[wildcardLiteral]] run. See
-      * [[expandCapped]]. */
+      * not analyzed, the caller lowercases): the lexicographically-first
+      * `maxExpansions` index terms its [[wildcardRegex]] full-matches.
+      * See [[expandBatch]]. */
     def expandWildcardBatch(patterns: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
-      ServedTopK.termsOf(expandCapped(dictionary, patterns, maxExpansions) { p =>
-        val m = rlike(wildcardRegex(p)); val lit = wildcardLiteral(p)
-        _.matching(lit, m)
-      })
+      expandBatch(patterns, maxExpansions)(WildcardOf)
 
-    /** Every compiled (anchored) pattern's expansion out of ONE
-      * dictionary walk — the regexp batch: index terms FULL-matching
-      * the pattern, lexicographic-first, over the whole dictionary.
-      * Callers keep patterns inside the Java/RE2 common subset
-      * (literals, classes, ., *, +, |, grouping) so the DuckDB oracle's
-      * regexp_full_match agrees. See [[expandCapped]]; at most tasks x
-      * patterns x maxExpansions rows reach the driver. */
+    /** Every compiled (anchored) pattern's expansion — the regexp batch:
+      * index terms the pattern matches, lexicographic-first. Callers
+      * keep patterns inside the Java/RE2 common subset (literals,
+      * classes, ., *, +, |, grouping) so the DuckDB oracle's
+      * regexp_full_match agrees. See [[expandBatch]]. */
     def expandRegexBatch(patterns: Seq[String], maxExpansions: Int): Map[String, Seq[String]] =
-      ServedTopK.termsOf(expandCapped(dictionary, patterns, maxExpansions) { p =>
-        val m = rlike(p)
-        _.matching("", m)
-      })
+      expandBatch(patterns, maxExpansions)(RegexpOf)
 
-    /** Every (term, maxDist) input's expansion out of ONE dictionary
-      * walk: index terms within CLASSIC Levenshtein distance <= maxDist
-      * ([[withinDistance]]), highest-df first, ties term-asc (ES fuzzy's
-      * top_terms_blended_freqs; ES counts a transposition as 1 —
-      * documented deviation, SURVEY §12), capped and keyed per
-      * (term, maxDist) pair: one term expanded at two distances in one
-      * batch yields two independent expansions (see [[expandCapped]];
-      * at most tasks x inputs x maxExpansions rows reach the driver). */
+    /** Every (term, maxDist) input's expansion: index terms within
+      * CLASSIC Levenshtein distance <= maxDist, highest-df first, ties
+      * term-asc ([[FuzzyOf]]), capped and keyed per (term, maxDist)
+      * pair: one term expanded at two distances in one batch yields two
+      * independent expansions. See [[expandBatch]]. */
     def expandFuzzyBatch(inputs: Seq[(String, Int)], maxExpansions: Int): FuzzyExpansions =
-      new FuzzyExpansions(ServedTopK.termsOf(expandCapped(dictionary, inputs, maxExpansions, byDf = true) { in =>
-        val m = withinDistance(in)
-        _.matching("", m)
-      }))
+      new FuzzyExpansions(expandBatch(inputs, maxExpansions) { case (t, d) => FuzzyOf(t, d) })
+
+    /** Every key's expansion ([[capped]]) out of ONE single-task job over
+      * the dictionary doc partition 0 holds ([[ShardCache.onDictionary]]):
+      * phrase_prefix and the indexed query_string expand this way, and a
+      * served expansion request expands inside its scoring job instead
+      * ([[topKExpanded]]). Keys with no match map to Nil; a batch with no
+      * key, or a cap of 0, runs no job. */
+    private def expandBatch[K](keys: Seq[K], cap: Int)(of: K => Expansion): Map[K, Seq[String]] = {
+      val ks = keys.distinct
+      if (ks.isEmpty || cap <= 0) return ks.map(_ -> Seq.empty[String]).toMap
+      val es = ks.map(of)
+      ks.zip(cache.onDictionary(d => es.map(capped(d, _, cap).map(_._1)))).toMap
+    }
 
     /** Per-term df for a bounded term list, out of the dictionary — no
-      * parquet read, no postings aggregation. df here is sum(n_postings)
-      * over the term's segment rows, which equals the (term, doc)
-      * postings-row count the pruned-read aggregation produced (salted
-      * runs partition a term's docs disjointly) — the same df every
-      * served score uses. Absent terms are absent from the map. */
+      * parquet read, no postings aggregation: one single-task job
+      * ([[ShardCache.dfOf]]). df here is sum(n_postings) over the term's
+      * segment rows, which equals the (term, doc) postings-row count the
+      * pruned-read aggregation produced (salted runs partition a term's
+      * docs disjointly) — the same df every served score uses. Absent
+      * terms are absent from the map. */
     def dfOf(terms: Seq[String]): Map[String, Long] = cache.dfOf(terms)
 
     /** Exact block-max WAND over per-query term lists (analyzed terms or
@@ -580,14 +683,38 @@ object Wand {
       * still plans it (about 5.8 ms per request). `taskPostingsAcc`,
       * when given, receives the postings each (partition, qid) held. */
     def topKTerms(queries: Seq[(Int, Seq[String])],
-                  taskPostingsAcc: CollectionAccumulator[java.lang.Long] = null): DataFrame = {
+                  taskPostingsAcc: CollectionAccumulator[java.lang.Long] = null): DataFrame =
+      cache.topK(queries.groupMap(_._1)(_._2).toSeq.map { case (qid, ts) => qid -> ts.flatten })(
+        scorer(taskPostingsAcc))
+
+    /** Prefix, wildcard, regexp and fuzzy requests, expanded AND scored
+      * in ONE Spark job of ONE stage ([[ShardCache.topKOf]]): each doc
+      * partition expands every pattern over the whole dictionary it
+      * holds ([[capped]] — the same capped list in every partition, so
+      * hits are what [[topKTerms]] returns for the expansions) and scores
+      * the expansion as [[topKTerms]] does (rewrite=scoring_boolean:
+      * each term with its own df). A qid listed twice scores the union
+      * of its expansions; an empty expansion yields no hits; an empty
+      * batch or a cap of 0 runs no job. */
+    def topKExpanded(queries: Seq[(Int, Expansion)], maxExpansions: Int): DataFrame = {
+      if (queries.isEmpty || maxExpansions <= 0) return ServedTopK.noHits(spark)
+      val cap = maxExpansions
+      cache.topKOf { d =>
+        val terms = queries.map(_._2).distinct.map(e => e -> capped(d, e, cap).map(_._1)).toMap
+        queries.groupMap(_._1)(q => terms(q._2)).toSeq.map { case (qid, ts) => qid -> ts.flatten.distinct }
+      }(scorer(null))
+    }
+
+    /** One (qid, doc partition)'s WAND: [[wandScores]] over the
+      * partition's rows of the query's terms, bounded to its range. */
+    private def scorer(taskPostingsAcc: CollectionAccumulator[java.lang.Long])
+        : (Int, Long, Long, Array[(String, Array[SegRow])]) => Iterator[(Double, Long)] = {
       val k = cfg.topK; val k1 = cfg.k1; val b = cfg.b
       val n = cache.n; val avgdl = cache.avgdl
-      cache.topK(queries.groupMap(_._1)(_._2).toSeq.map { case (qid, ts) => qid -> ts.flatten }) {
-        (_, lo, hi, entries) =>
-          val rows = entries.flatMap(_._2)
-          if (taskPostingsAcc != null) taskPostingsAcc.add(rows.map(_.n_postings).sum)
-          wandScores(rows, n, avgdl, k, k1, b, lo, hi).iterator
+      (_, lo, hi, entries) => {
+        val rows = entries.flatMap(_._2)
+        if (taskPostingsAcc != null) taskPostingsAcc.add(rows.map(_.n_postings).sum)
+        wandScores(rows, n, avgdl, k, k1, b, lo, hi).iterator
       }
     }
 

@@ -108,8 +108,9 @@ class PlanSpec extends SparkSuite {
     }
   }
 
-  test("served expansion requests: prefix, wildcard, regexp, fuzzy, phrase_prefix and indexed query_string " +
-      "are each 2 jobs of 1 stage, 0 file bytes; a query_string batch without a prefix is 1 job, no WAND cache") {
+  test("served expansion requests: prefix, wildcard, regexp and fuzzy are each 1 job of 1 stage, phrase_prefix " +
+      "and indexed query_string 2, 0 file bytes, no RDD built; a query_string batch without a prefix is 1 job, " +
+      "no WAND cache") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("plan_expand_").toString
     try {
@@ -131,24 +132,30 @@ class PlanSpec extends SparkSuite {
       val open = Wand.openCaches(spark, dir).map(_.name)
       assert(!open.exists(_.startsWith("wand")) && open.contains("positional"),
         s"a query_string batch without a prefix opened ${open.mkString(", ")}")
-      val requests: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "prefix" -> (() => QueryDsl.prefixTopK(spark, dir, Seq(1 -> "spar"), cfg = SparkEntry.IndexCfg)),
-        "wildcard" -> (() => QueryDsl.wildcardTopK(spark, dir, Seq(1 -> "sp?r*"), cfg = SparkEntry.IndexCfg)),
-        "regexp" -> (() => QueryDsl.regexpTopK(spark, dir, Seq(1 -> "w1[0-2]?"), cfg = SparkEntry.IndexCfg)),
-        "fuzzy" -> (() => QueryDsl.fuzzyTopK(spark, dir, Seq(1 -> "sparc"), cfg = SparkEntry.IndexCfg)),
-        "phrase_prefix" -> (() => QueryDsl.phrasePrefixTopK(spark, dir, Seq(1 -> "spark sp"),
+      // (request, its jobs): an expansion request expands and scores in
+      // one job; phrase_prefix and query_string expand in a job of their own
+      val requests: Seq[(String, Int, () => org.apache.spark.sql.DataFrame)] = Seq(
+        ("prefix", 1, () => QueryDsl.prefixTopK(spark, dir, Seq(1 -> "spar"), cfg = SparkEntry.IndexCfg)),
+        ("wildcard", 1, () => QueryDsl.wildcardTopK(spark, dir, Seq(1 -> "sp?r*"), cfg = SparkEntry.IndexCfg)),
+        ("regexp", 1, () => QueryDsl.regexpTopK(spark, dir, Seq(1 -> "w1[0-2]?"), cfg = SparkEntry.IndexCfg)),
+        ("fuzzy", 1, () => QueryDsl.fuzzyTopK(spark, dir, Seq(1 -> "sparc"), cfg = SparkEntry.IndexCfg)),
+        ("phrase_prefix", 2, () => QueryDsl.phrasePrefixTopK(spark, dir, Seq(1 -> "spark sp"),
           cfg = SparkEntry.IndexCfg)),
-        "query_string" -> (() => QueryDsl.queryStringTopKIndexed(spark, dir,
+        ("query_string", 2, () => QueryDsl.queryStringTopKIndexed(spark, dir,
           Seq(1 -> "+\"sparkle spork\" w1* -v3"), cfg = SparkEntry.IndexCfg)))
-      requests.foreach(_._2())
-      for ((op, request) <- requests) {
+      requests.foreach(_._3())
+      for ((op, jobs, request) <- requests) {
         var hits: org.apache.spark.sql.DataFrame = null
+        // the probe RDD itself is the one id between the two reads
+        val rdd0 = spark.sparkContext.emptyRDD[Int].id
         val warm = observed { hits = request() }
+        val rdds = spark.sparkContext.emptyRDD[Int].id - rdd0 - 1
         assert(hits.collect().nonEmpty, op)
-        assert(warm.jobs == 2 && warm.stages == 2,
-          s"a warm $op request ran ${warm.jobs} jobs of ${warm.stages} stages")
+        assert(warm.jobs == jobs && warm.stages == jobs,
+          s"a warm $op request ran ${warm.jobs} jobs of ${warm.stages} stages, not $jobs of $jobs")
         assert(warm.plans.isEmpty, s"a warm $op request ran Catalyst queries:\n${warm.plans.mkString("\n")}")
         assert(warm.fileBytes == 0, s"a warm $op request read ${warm.fileBytes} file bytes")
+        assert(rdds == 0, s"a warm $op request built $rdds RDDs")
       }
       Wand.handleFor(spark, dir, SparkEntry.IndexCfg).close()
       BM25.phraseHandleFor(spark, dir, SparkEntry.IndexCfg).close()

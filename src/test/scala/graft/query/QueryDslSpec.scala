@@ -94,6 +94,14 @@ class QueryDslSpec extends SparkSuite {
     assert(autoFuzziness("abcdef") === 2)
   }
 
+  test("fuzzy: AUTO fuzziness counts code points, not UTF-16 units") {
+    val sup = "\uD801\uDC00" // one supplementary-plane code point, two units
+    assert(autoFuzziness(sup * 2) === 0)
+    assert(autoFuzziness(sup * 3) === 1)
+    assert(autoFuzziness(sup * 5) === 1)
+    assert(autoFuzziness(sup * 6) === 2)
+  }
+
   test("fuzzy: classic-Levenshtein expansion at AUTO distance, served exactly") {
     val r = hits(fuzzyTopK(spark, fuzzyIdx, Seq(1 -> "spark"), cfg = cfg))
     // d=1 neighbors of 'spark' in the corpus: spark, spork, stark —

@@ -331,7 +331,7 @@ class WandSpec extends SparkSuite {
       }
       assert(!logged.exists(_.contains(checkpointWarn)), logged.mkString("\n"))
       assert(Wand.openCaches(spark, dir).map(_.name) ===
-        Seq("positional", "wand", "wand_dictionary"))
+        Seq("positional", "wand"))
       Wand.handleFor(spark, dir, ck).close()
       BM25.phraseHandleFor(spark, dir, ck).close()
       assert(!spark.sparkContext.getPersistentRDDs.values.exists(r =>
