@@ -203,7 +203,7 @@ object OracleSql {
 
   /** Standard BM25 weight expression over aliases p (postings), d (dfp),
     * s (stats) — the exact shape ftBm25 uses (association mirrored in
-    * BM25.weightCol). */
+    * BM25.weight). */
   private def wExpr: String = {
     val (k1, b) = (cfg.k1, cfg.b)
     s"""ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5)) * (p.tf * ($k1 + 1.0)) /

@@ -60,11 +60,4 @@ object Postings {
   /** Document frequency per term: (term, df). */
   def docFreq(postings: DataFrame): DataFrame =
     postings.groupBy("term").agg(count(lit(1)).as("df"))
-
-  /** Corpus stats (N, avgdl) — tiny; collected once and broadcast by
-    * value into scoring expressions. */
-  def corpusStats(doclens: DataFrame): (Long, Double) = {
-    val row = doclens.agg(count(lit(1)).as("n"), avg(col("doclen")).as("avgdl")).head()
-    (row.getLong(0), row.getDouble(1))
-  }
 }

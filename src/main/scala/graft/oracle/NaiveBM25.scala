@@ -97,4 +97,47 @@ object NaiveBM25 {
     }
     hits.sortBy(h => (-h.score, h.docId)).take(k)
   }
+
+  /** One ES bool query, brute force over every doc — the reference for
+    * bool, match (OR: `should` alone; AND: `must`), match_phrase and
+    * query_string alike. Roles hold analyzed, distinct terms. A doc
+    * matches when it holds every `must` and `filter` term, no `mustNot`
+    * term, at least `msm` distinct `should` terms (by default 0 when
+    * there is a must or filter term, else 1) and at least one must,
+    * filter or should term, and when each phrase (terms, slop, required)
+    * occurs in it if and only if it is required. A phrase occurs when
+    * its terms sit at increasing positions, in order, spanning at most
+    * (m - 1) + slop positions past the first. A match scores BM25 over
+    * the must and should terms it holds, summed in ascending term order,
+    * with corpus-wide stats; a filter term scores nothing. */
+  def boolTopK(docs: Seq[(Long, String)], must: Seq[String] = Nil, should: Seq[String] = Nil,
+               filter: Seq[String] = Nil, mustNot: Seq[String] = Nil, msm: Option[Int] = None,
+               phrases: Seq[(Seq[String], Int, Boolean)] = Nil, k: Int = 10,
+               k1: Double = 1.2, b: Double = 0.75): Seq[Hit] = {
+    val tokenized = docs.map { case (id, c) => (id, CodeTokenizer.tokenize(c)) }
+    val n = tokenized.size.toLong
+    val avgdl = if (n == 0) 0.0 else tokenized.map(_._2.length.toLong).sum.toDouble / n
+    val minShould = msm.getOrElse(if (must.nonEmpty || filter.nonEmpty) 0 else 1)
+    val scored = (must ++ should).distinct.sorted(ServedTopK.termOrder)
+    val dfMap = scored.map(t => t -> tokenized.count(_._2.contains(t)).toLong).toMap
+    def occurs(toks: Array[String], ts: Seq[String], slop: Int): Boolean = {
+      // offset j at a position after `prev`, below start + m + slop
+      def from(j: Int, prev: Int, end: Int): Boolean = j == ts.length ||
+        (prev + 1 until math.min(toks.length, end)).exists(p => toks(p) == ts(j) && from(j + 1, p, end))
+      ts.nonEmpty && toks.indices.exists(s => toks(s) == ts.head && from(1, s, s + ts.length + slop))
+    }
+    val hits = tokenized.flatMap { case (id, toks) =>
+      val has = toks.toSet
+      val matches = must.forall(has) && filter.forall(has) && !mustNot.exists(has) &&
+        should.count(has) >= minShould && (must ++ filter ++ should).exists(has) &&
+        phrases.forall { case (ts, slop, required) => occurs(toks, ts, slop) == required }
+      if (!matches) None
+      else {
+        val dl = toks.length.toLong
+        val ws = scored.filter(has).map(t => BM25.weight(toks.count(_ == t).toLong, dl, dfMap(t), n, avgdl, k1, b))
+        Some(Hit(id, ws.foldLeft(0.0)(_ + _)))
+      }
+    }
+    hits.sortBy(h => (-h.score, h.docId)).take(k)
+  }
 }

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.analyze.CodeTokenizer
@@ -16,105 +17,61 @@ import graft.index.{Postings, SegmentBuilder}
   *
   * Rank identity discipline (SURVEY.md §7.4 risk 1): the scalar formula
   * below is written once and mirrored OPERATION-FOR-OPERATION in the
-  * Column form and the DuckDB oracle SQL, and per-document scores are
-  * summed in ascending term order in all implementations, so equal
-  * inputs produce bit-equal doubles everywhere.
+  * DuckDB oracle SQL, and per-document scores are summed in ascending
+  * term order in all implementations, so equal inputs produce bit-equal
+  * doubles everywhere.
   *
-  * Every Column-path ranking in `graft.query` is built from four steps,
-  * each defined once in this object or in [[Wand]]:
-  *  - weigh: [[weigh]] joins a broadcast (qid, term, …, df) literal onto
-  *    a postings frame and adds the weight `w` ([[matchPipeline]] is
-  *    the corpus match preamble over it);
-  *  - fold: [[foldAscending]] sums per-doc weights in ascending key
-  *    order ([[foldTerms]] is its scalar twin on the served paths);
-  *  - span: [[phraseSpans]] decides phrase adjacency over joined
-  *    (keys…, doc_id, off, m, positions) rows;
-  *  - expansion cap: [[Wand.capped]] caps a term expansion over the
-  *    served sorted (term, df) dictionary, [[Wand.expandCapped]] the
-  *    corpus query_string path's prefix expansions.
+  * What a ranked text query means is defined once: it compiles to a
+  * [[PosQuery]], and [[posHits]] evaluates it over one partition's
+  * [[PosEntry]]s with global statistics — ES's `dfs_query_then_fetch`
+  * shape, global term stats first, then per-shard scoring. Two sources
+  * feed it the entries:
+  *  - the corpus: [[corpusHits]] runs one [[statsAndDf]] job, then one
+  *    narrow pass in which every docs partition gathers its query terms'
+  *    positional postings ([[positionalEntries]]) and evaluates; the
+  *    lazy [[rankTopK]] ranks the rows;
+  *  - the index: [[PhraseHandle.serve]] evaluates over the positional
+  *    cache's doc partitions, and [[Wand]]'s block-max WAND serves term
+  *    disjunctions with the same fold ([[foldTerms]]); [[ServedTopK]]
+  *    ranks both.
+  * Term expansions are capped by [[Wand.capped]] over the served
+  * dictionary and by [[Wand.expandCapped]] on the corpus query_string
+  * path. [[foldAscending]] is left only for the folds that are not a
+  * score over terms: dis_max's over fields, has_child's over children.
   */
 object BM25 {
 
   /** idf = ln(1 + (N - df + 0.5) / (df + 0.5)).
-    * StrictMath.log, because Catalyst's Log expression evaluates via
-    * StrictMath — keeps the oracle bit-identical to the Column path. */
+    * StrictMath.log: its bits do not depend on the JIT's intrinsics, so
+    * every evaluator and every JVM computes the same idf. */
   def idf(df: Long, n: Long): Double =
     StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
-  /** Per-(term, doc) weight. Association mirrors the Column/SQL forms:
+  /** Per-(term, doc) weight. Association mirrors the SQL form:
     * (idf * (tf * (k1+1))) / (tf + k1 * ((1 - b) + (b * dl) / avgdl)) */
   def weight(tf: Long, dl: Long, df: Long, n: Long, avgdl: Double,
              k1: Double = 1.2, b: Double = 0.75): Double =
     weightOf(idf(df, n), tf, dl, avgdl, k1, b)
 
   /** [[weight]] given the term's [[idf]], computed once per term by the
-    * served scorers; the same association, so the same bits. */
+    * evaluators; the same association, so the same bits. */
   def weightOf(idf: Double, tf: Long, dl: Long, avgdl: Double, k1: Double, b: Double): Double =
     idf * (tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + (b * dl) / avgdl))
 
-  /** Column form of [[idf]]. */
-  private[query] def idfCol(df: Column, n: Long): Column =
-    log(lit(1.0) + (lit(n.toDouble) - df + lit(0.5)) / (df + lit(0.5)))
-
-  /** Column form of [[weight]] given tf/dl/df columns and scalar stats. */
-  def weightCol(tf: Column, dl: Column, df: Column, n: Long, avgdl: Double,
-                k1: Double, b: Double): Column =
-    idfCol(df, n) * (tf * lit(k1 + 1.0)) /
-      (tf + lit(k1) * (lit(1.0 - b) + (lit(b) * dl) / lit(avgdl)))
-
-  /** The weigh step: the driver-resolved query literal `q` — one row per
-    * (qid, term, …, df), absent terms already dropped — broadcast-joined
-    * onto a postings frame (term, doc_id, tf, doclen, …), with the
-    * per-(term, doc) weight `w` added. `restrict` narrows the joined
-    * rows before they are weighed (a window or candidate semi-join, a
-    * source-doc filter), so only surviving rows pay for a weight. */
-  private[query] def weigh(post: DataFrame, q: DataFrame, n: Long, avgdl: Double,
-                           cfg: EngineConfig,
-                           restrict: DataFrame => DataFrame = identity): DataFrame =
-    restrict(post.join(broadcast(q), "term"))
-      .withColumn("w", weightCol(col("tf"), col("doclen"), col("df"), n, avgdl, cfg.k1, cfg.b))
-
-  /** The fold step: the sum of the second field of the group's `entry`
-    * structs, taken in ascending order of the first field (the term, for
-    * a score) — the deterministic association every score shares. Null
-    * entries (a `when` without `otherwise`) drop out of the fold. */
+  /** The Column fold: the sum of the second field of the group's `entry`
+    * structs, taken in ascending order of the first field — dis_max's
+    * per-field scores in field order, has_child's child scores in doc
+    * order. Null entries (a `when` without `otherwise`) drop out. */
   private[query] def foldAscending(entry: Column): Column =
     SumStructFieldExpr.sumField(sort_array(collect_list(entry)), 1, 2)
 
   /** The scalar fold step: the sum from 0.0 of `(term, weight)`
     * contributions in ascending [[ServedTopK.termOrder]] — Spark's string
-    * order, the order [[foldAscending]] sums in — so a served score is
-    * bit-equal to its corpus-path twin. WAND's per-doc sum folds through
-    * it; the positional evaluator ([[posHits]]) sums in the same order,
-    * its terms sorted once per call. */
+    * order — the order every score sums in. WAND's per-doc sum folds
+    * through it; the positional evaluator ([[posHits]]) sums in the same
+    * order, its terms sorted once per call. */
   private[query] def foldTerms(contribs: scala.collection.Seq[(String, Double)]): Double =
     contribs.sortBy(_._1)(ServedTopK.termOrder).foldLeft(0.0)(_ + _._2)
-
-  /** The (qid, term, n_terms, df) literal of analyzed match queries;
-    * terms absent from `dfMap` drop, exactly like an inner join with a
-    * docFreq table. */
-  private[query] def termTable(spark: SparkSession, analyzed: Seq[(Int, Seq[String])],
-                               dfMap: Map[String, Long]): DataFrame = {
-    import spark.implicits._
-    analyzed.flatMap { case (qid, ts) =>
-      ts.flatMap(t => dfMap.get(t).map(df => (qid, t, ts.size, df)))
-    }.toDF("qid", "term", "n_terms", "df")
-  }
-
-  /** The corpus match preamble: ONE bounded stats job ([[statsAndDf]],
-    * skipped when `statsKnown` carries it) and the single corpus
-    * postings pass, weighed against the queries' [[termTable]]. Output:
-    * the weighted (term, doc_id, …, qid, n_terms, df, w) rows that
-    * [[scored]] folds. */
-  private[query] def matchPipeline(docs: DataFrame, idCol: Column, contentCol: Column,
-                                   analyzed: Seq[(Int, Seq[String])], cfg: EngineConfig,
-                                   statsKnown: Option[(Long, Double, Map[String, Long])] = None)
-      : DataFrame = {
-    val (n, avgdl, dfMap) = statsKnown.getOrElse(
-      statsAndDf(docs, idCol, contentCol, analyzed.flatMap(_._2).distinct))
-    weigh(Postings.build(docs, idCol, contentCol), termTable(docs.sparkSession, analyzed, dfMap),
-      n, avgdl, cfg)
-  }
 
   /** Term-count threshold above which [[statsAndDf]] splits into two
     * passes: one `array_contains` aggregate column per term is the
@@ -209,10 +166,11 @@ object BM25 {
     }
   }
 
-  /** Top-k BM25 per query over the uncompressed postings — the
-    * declarative scoring path: [[matchPipeline]] (one bounded stats job,
-    * then ONE corpus pass joining the postings against the broadcast
-    * (qid, term, df) literal table) and one shuffle for the per-doc sum.
+  /** Top-k BM25 per query over the corpus: each query's analyzed terms
+    * as one [[PosQuery]] — a disjunction (`should`, at least one term:
+    * ES `match`), or with `conjunctive` a conjunction (`must`: ES
+    * `match` with operator=and) — evaluated by [[corpusHits]] and ranked
+    * by [[rankTopK]].
     *
     * Output: (qid int, rank long, doc_id long, score double) where score
     * is summed in ascending term order (deterministic doubles) and rank
@@ -222,57 +180,69 @@ object BM25 {
            queries: Seq[(Int, String)], cfg: EngineConfig = EngineConfig.default,
            conjunctive: Boolean = false,
            statsKnown: Option[(Long, Double, Map[String, Long])] = None): DataFrame = {
-    val analyzed = queries.map { case (qid, text) => qid -> CodeTokenizer.queryTerms(text) }
-    if (analyzed.forall(_._2.isEmpty)) return ServedTopK.noHits(spark)
-    scoreAndRank(matchPipeline(docs, idCol, contentCol, analyzed, cfg, statsKnown),
-      cfg.topK, conjunctive)
+    val qs = matchQueries(queries, conjunctive)
+    if (qs.isEmpty) ServedTopK.noHits(spark)
+    else rankTopK(corpusHits(docs, idCol, contentCol, qs, cfg, statsKnown), cfg.topK)
   }
+
+  /** Analyzed match queries as [[PosQuery]]s — a disjunction, or with
+    * `conjunctive` a conjunction, of each query's distinct terms; a
+    * query with no term after analysis drops. */
+  private[query] def matchQueries(queries: Seq[(Int, String)], conjunctive: Boolean = false)
+      : Seq[(Int, PosQuery)] =
+    queries.map { case (qid, text) => qid -> CodeTokenizer.queryTerms(text) }.collect {
+      case (qid, ts) if ts.nonEmpty => qid -> (if (conjunctive) PosQuery(ts) else PosQuery(Nil, ts, msm = 1))
+    }
 
   /** Phrase top-k (ES match_phrase semantics at slop 0: the analyzed
     * phrase tokens must occur consecutively in order; slop > 0 relaxes
     * to ORDERED proximity with total slack <= slop — see
     * [[OrderedSpanMatchExpr]] for the exact contract). Qualifying docs
     * are scored with corpus-wide BM25 stats over the phrase's distinct
-    * terms.
-    *
-    * Adjacency comes from POSITIONAL postings: candidates are an m-way
-    * positional intersection over the query's terms only, and the SAME
-    * positional build (persisted for the call) also supplies the
-    * scoring postings and term df — TWO corpus tokenize passes total
-    * (positional postings + the doclen/stats pass, which must see
-    * zero-token docs the postings cannot carry), pruned to the phrase
-    * terms by the broadcast query join, never a per-phrase-length
-    * corpus rescan and never a source-text recheck of candidates (the
-    * round-2 design rescanned candidate text once per distinct phrase
-    * length; at 100 TB candidate text is the thing you cannot re-read).
-    *
-    * Shape (one aggregation, not a job chain): per-term df is collected
-    * to the driver first (bounded by the QUERY's distinct terms — tiny
-    * by construction), then [[phraseScoredOver]] computes the candidate
-    * decision and the BM25 score in ONE aggregation. The r3 design
-    * chained candidates agg -> df agg -> semi-join -> score agg ->
-    * checkpoint; those four extra fixed-cost jobs were the latency, not
-    * the corpus work. The <= queries x topK result materializes eagerly
-    * so the cache can be released before returning. */
+    * terms: each phrase is one [[PosQuery.phrase]], evaluated by
+    * [[corpusHits]] — one stats job and one positional corpus pass for
+    * all phrases, whatever their lengths — and ranked by [[rankTopK]]. */
   def phraseTopK(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                  phrases: Seq[(Int, String)],
                  cfg: EngineConfig = EngineConfig.default,
                  slop: Int = 0): DataFrame = {
-    val analyzed = phrases
-      .map { case (qid, text) => (qid, CodeTokenizer.tokenize(text).toSeq) }
-      .filter(_._2.nonEmpty)
-    if (analyzed.isEmpty) return ServedTopK.noHits(spark)
-    val (n, avgdl) = Postings.corpusStats(Postings.doclens(docs, idCol, contentCol))
-    val posPost = Postings.buildPositional(docs, idCol, contentCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // df restricted to the QUERY's terms before the collect — an
-      // unfiltered groupBy-collect over the full build would pull the
-      // whole corpus vocabulary onto the driver
-      val dfMap = postingsDf(posPost.filter(col("term").isInCollection(analyzed.flatMap(_._2).distinct)))
-      rankTopK(phraseScoredOver(posPost, n, avgdl, analyzed, cfg, slop, dfMap), cfg.topK)
-        .localCheckpoint(eager = true)
-    } finally { posPost.unpersist(); () }
+    val qs = phrases.map { case (qid, text) => qid -> CodeTokenizer.tokenize(text).toSeq }
+      .collect { case (qid, ts) if ts.nonEmpty => qid -> PosQuery.phrase(ts, slop) }
+    if (qs.isEmpty) ServedTopK.noHits(spark)
+    else rankTopK(corpusHits(docs, idCol, contentCol, qs, cfg), cfg.topK)
+  }
+
+  /** The corpus evaluator: the unranked, lazy `(qid, doc_id, score)`
+    * hits of each per-qid [[PosQuery]] over the docs — the corpus twin of
+    * [[PhraseHandle.serve]], with the same [[posHits]].
+    *
+    * One bounded stats job ([[statsAndDf]] over the queries' terms,
+    * skipped when `statsKnown` carries N, avgdl and the df of every
+    * term; a term it does not hold counts as absent), then one narrow
+    * pass with no shuffle: each docs partition tokenizes its docs into
+    * positional postings ([[Postings.buildPositional]]), keeps the query
+    * terms' rows, gathers them per term as the positional cache does
+    * ([[positionalEntries]]), swaps each entry's partition df for the
+    * global one and runs [[posHits]] per qid. Every doc's postings sit
+    * in its own partition, so the per-doc fold needs no shuffle; N and
+    * avgdl count zero-token docs, which hold no postings. */
+  def corpusHits(docs: DataFrame, idCol: Column, contentCol: Column, queries: Seq[(Int, PosQuery)],
+                 cfg: EngineConfig = EngineConfig.default,
+                 statsKnown: Option[(Long, Double, Map[String, Long])] = None): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val terms = queries.flatMap(_._2.terms).distinct
+    val (n, avgdl, dfMap) = statsKnown.getOrElse(statsAndDf(docs, idCol, contentCol, terms))
+    val df = terms.flatMap(t => dfMap.get(t).map(t -> _)).toMap
+    val k1 = cfg.k1; val b = cfg.b
+    Postings.buildPositional(docs, idCol, contentCol).filter(col("term").isInCollection(df.keys))
+      .mapPartitions { rows =>
+        val entries = positionalEntries(rows.map(r => InternalRow(UTF8String.fromString(r.getString(0)),
+            r.getLong(1), r.getLong(2), r.getLong(3), ArrayData.toArrayData(r.getSeq[Int](4).toArray))),
+          "a docs partition").map { case (t, e) => t -> e.copy(df = df(t)) }
+        queries.iterator.flatMap { case (qid, q) =>
+          posHits(q, entries, n, avgdl, k1, b).map { case (s, d) => (qid, d, s) } }
+      }.toDF("qid", "doc_id", "score")
   }
 
   /** Phrase top-k served from a PERSISTED index ([[graft.index.SegmentBuilder]]
@@ -369,41 +339,13 @@ object BM25 {
     all
   }
 
-  /** Per-term df of a term-pruned postings frame (one row per
-    * (term, doc)), collected: bounded by the terms it was pruned to. */
-  private def postingsDf(post: DataFrame): Map[String, Long] =
-    post.groupBy("term").agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  /** The one-aggregation phrase pass given resolved per-term df (see
-    * [[phraseTopK]] for the shape rationale): the unranked
-    * (qid, doc_id, score) phrase matches, which [[phraseTopK]] ranks.
-    * The score fold rides the span step's aggregation. */
-  private def phraseScoredOver(posPost: DataFrame, n: Long, avgdl: Double,
-                               analyzed: Seq[(Int, Seq[String])],
-                               cfg: EngineConfig, slop: Int,
-                               dfMap: Map[String, Long]): DataFrame = {
-    val spark = posPost.sparkSession
-    import spark.implicits._
-    // score_me marks the FIRST offset of each distinct term: scoring
-    // sums one weight per distinct term even when the phrase repeats a
-    // term at several offsets
-    val q = analyzed.flatMap { case (qid, ts) =>
-      val seen = scala.collection.mutable.Set[String]()
-      ts.zipWithIndex.map { case (t, off) =>
-        (qid, t, off, ts.length, seen.add(t), dfMap.getOrElse(t, 0L))
-      }
-    }.toDF("qid", "term", "off", "m", "score_me", "df")
-    phraseSpans(weigh(posPost, q, n, avgdl, cfg), Seq("qid"), slop,
-      foldAscending(when(col("score_me"), struct(col("term"), col("w")))).as("score"))
-  }
-
   /** One term's positional postings in one doc partition, as the
     * positional cache holds them: flat primitive arrays sorted by doc —
     * `docs(i)` has doclen `doclens(i)` and positions
     * `positions(posOff(i) until posOff(i + 1))`, as many as its tf
-    * ([[tf]]) — plus the term's df, its postings-row count in the whole
-    * store (what [[postingsDf]] counts), which a cut keeps. */
+    * ([[tf]]) — plus the term's df: its postings-row count in the whole
+    * store (or, in [[corpusHits]], the whole corpus), which a cut
+    * keeps. */
   final case class PosEntry(df: Long, docs: Array[Long], doclens: Array[Int],
                             posOff: Array[Int], positions: Array[Int]) {
     /** The tf of `docs(i)`: its position count. */
@@ -441,14 +383,14 @@ object BM25 {
   private[query] def positionalCacheName(indexDir: String): String =
     s"graft positional cache $indexDir"
 
-  /** One shard's positional entries: postings rows
-    * `(term, doc_id, doclen, tf, positions)` in any order, gathered per
-    * term into one [[PosEntry]] per term, sorted by doc, its df the
+  /** One shard's (or one docs partition's) positional entries: postings
+    * rows `(term, doc_id, doclen, tf, positions)` in any order, gathered
+    * per term into one [[PosEntry]] per term, sorted by doc, its df the
     * term's row count. A repeated (term, doc) row — a replayed append's
-    * postings that no compaction has deduplicated yet — fails loud:
-    * served df and matches would silently differ from the deduplicated
-    * store's. So does a row whose tf is not its position count, which
-    * the entry would not keep. */
+    * postings that no compaction has deduplicated yet, or a doc id a
+    * corpus holds twice — fails loud: df and matches would silently
+    * differ from the deduplicated store's. So does a row whose tf is not
+    * its position count, which the entry would not keep. */
   private def positionalEntries(rows: Iterator[InternalRow], where: String): Map[String, PosEntry] = {
     final class TermRows {
       val docs = new mutable.ArrayBuilder.ofLong
@@ -479,7 +421,7 @@ object BM25 {
       while (i < sorted.length) {
         if (sorted(i - 1) == sorted(i))
           throw new IllegalStateException(s"$where holds duplicate postings rows for " +
-            s"(term <$t>, doc ${sorted(i)}), a replayed append: compactShards removes them")
+            s"(term <$t>, doc ${sorted(i)}): a doc id held twice, or a replayed append, which compactShards removes")
         i += 1
       }
       val e = PosEntry(docs.length, docs, b.doclens.result(), b.posOff.result(), b.positions.result())
@@ -488,20 +430,25 @@ object BM25 {
     out.result()
   }
 
-  /** One positional query over a doc partition's [[PosEntry]]s — the
-    * one shape every request the positional cache serves compiles to:
-    * match_phrase ([[PosQuery.phrase]]), match_phrase_prefix and indexed
-    * query_string ([[QueryDsl]]). A doc matches when it holds every
-    * `must` term, at least `msm` distinct `should` terms and at least one
-    * `must` or `should` term, no `mustNot` term, every required phrase
-    * and no excluded one ([[PosPhrase]]); it scores the sum of
-    * [[weight]] over the `must` and `should` terms it holds, folded in
-    * [[foldTerms]]' order — [[QueryDsl.boolScored]]'s role algebra.
-    * Terms are distinct within and across the three roles. */
+  /** One ranked text query, the shape every one compiles to — match
+    * (OR and AND), match_phrase ([[PosQuery.phrase]]),
+    * match_phrase_prefix, bool, query_string, more_like_this and the
+    * corpus operators built on match — and that [[posHits]] evaluates,
+    * over the corpus ([[corpusHits]]) or the positional cache
+    * ([[PhraseHandle.serve]]). ES bool roles: a doc matches when it
+    * holds every `must` and every `filter` term, at least `msm` distinct
+    * `should` terms and at least one `must`, `filter` or `should` term,
+    * no `mustNot` term, every required phrase and no excluded one
+    * ([[PosPhrase]]); it scores the sum of [[weight]] over the `must`
+    * and `should` terms it holds, folded in [[foldTerms]]' order — a
+    * `filter` term is required but scores nothing, so a doc matched by
+    * filters alone scores 0.0. Terms are distinct within and across the
+    * four roles. */
   final case class PosQuery(must: Seq[String], should: Seq[String] = Nil, mustNot: Seq[String] = Nil,
-                            msm: Int = 0, phrases: Seq[PosPhrase] = Nil) {
+                            msm: Int = 0, phrases: Seq[PosPhrase] = Nil, filter: Seq[String] = Nil) {
     /** Every term the query reads: its roles' and its phrases'. */
-    def terms: Seq[String] = (must ++ should ++ mustNot ++ phrases.flatMap(_.offsets.flatten)).distinct
+    def terms: Seq[String] =
+      (must ++ should ++ mustNot ++ filter ++ phrases.flatMap(_.offsets.flatten)).distinct
   }
 
   object PosQuery {
@@ -585,28 +532,31 @@ object BM25 {
     def close(): Unit = cache.close()
   }
 
-  /** One (qid, doc partition) of a served positional batch: `q` over
-    * `byTerm`, the partition's entry of each of its terms present.
-    * Candidates are the docs of the shortest `must` list (else the union
-    * of the `should` lists); every term keeps one forward-only cursor, so
-    * a batch costs one merge pass over its terms' doc lists. A phrase
+  /** One (qid, partition) of a positional batch, served or corpus: `q`
+    * over `byTerm`, the partition's entry of each of its terms present,
+    * each carrying its global df. Candidates are the docs of the shortest
+    * `must` or `filter` list (else the union of the `should` lists); an
+    * absent `must` or `filter` term empties the qid. Every term keeps one
+    * forward-only cursor, so a batch costs one merge pass over its terms'
+    * doc lists. A phrase
     * offset of one term reads its positions in place, so a plain phrase
     * allocates per candidate doc only the span check's cursors and the
     * hit itself; an offset with alternatives merges the positions of
     * those a doc holds into a fresh sorted array. The scored terms'
     * weights ([[weightOf]]) sum in [[foldTerms]]' order, sorted once per
-    * call. Returns (score, doc_id) — for a plain phrase, what
-    * [[phraseScoredOver]] computes for the same docs. */
+    * call. Returns (score, doc_id), in doc order. */
   private def posHits(q: PosQuery, byTerm: Map[String, PosEntry],
                       n: Long, avgdl: Double, k1: Double, b: Double): Iterator[(Double, Long)] = {
     val terms = q.terms.filter(byTerm.contains).toArray
     val es = terms.map(byTerm)
     val slot = terms.zipWithIndex.toMap
-    val Seq(must, should, not) = Seq(q.must, q.should, q.mustNot).map(_.flatMap(slot.get).toArray)
+    // must and filter terms are both required: one list of cursor slots
+    val Seq(required, should, not) = Seq(q.must ++ q.filter, q.should, q.mustNot).map(_.flatMap(slot.get).toArray)
     // required phrases first; an excluded one missing a term never hits
     val checks = q.phrases.map(p => new PhraseCheck(p.offsets.map(_.flatMap(slot.get).toArray).toArray, p))
       .filter(c => c.phrase.required || c.alts.forall(_.nonEmpty)).sortBy(!_.phrase.required).toArray
-    if (must.length < q.must.length || should.length < q.msm || must.isEmpty && should.isEmpty ||
+    if (required.length < q.must.length + q.filter.length || should.length < q.msm ||
+        required.isEmpty && should.isEmpty ||
         checks.exists(c => c.phrase.required && c.alts.exists(_.isEmpty))) return Iterator.empty
     val at = new Array[Int](es.length) // per-term cursors, only ever forward
     def has(j: Int, d: Long): Boolean = {
@@ -636,10 +586,11 @@ object BM25 {
     val scored = (q.must ++ q.should).flatMap(slot.get).sortBy(terms(_))(ServedTopK.termOrder).toArray
     val idfs = scored.map(j => idf(es(j).df, n))
     val candidates =
-      if (must.nonEmpty) es(must.minBy(es(_).docs.length)).docs else should.flatMap(es(_).docs).distinct.sorted
+      if (required.nonEmpty) es(required.minBy(es(_).docs.length)).docs
+      else should.flatMap(es(_).docs).distinct.sorted
     candidates.iterator.filter { d =>
       var ok = true; var got = 0; var i = 0
-      while (ok && i < must.length) { ok = has(must(i), d); i += 1 }
+      while (ok && i < required.length) { ok = has(required(i), d); i += 1 }
       i = 0
       while (i < should.length) { if (has(should(i), d)) got += 1; i += 1 }
       ok &&= got >= q.msm
@@ -665,81 +616,6 @@ object BM25 {
   private final class PhraseCheck(val alts: Array[Array[Int]], val phrase: PosPhrase) {
     val pos = new Array[Array[Int]](alts.length)
     val from, until = new Array[Int](alts.length)
-  }
-
-  /** Phrase candidate sets from positional postings, ALL phrases in one
-    * corpus pass: the (qid, phrase-offset, term) table broadcasts
-    * against the positional postings (term-pruned scan), each candidate
-    * (qid, doc) gathers its per-offset position lists, and
-    * [[OrderedSpanMatchExpr]] decides the match in one sweep. Duplicate
-    * phrase terms are handled exactly (one position list per OFFSET).
-    * Output: (qid, doc_id). */
-  def phraseCandidates(docs: DataFrame, idCol: Column, contentCol: Column,
-                       analyzed: Seq[(Int, Seq[String])],
-                       slop: Int = 0): DataFrame =
-    phraseCandidatesFrom(Postings.buildPositional(docs, idCol, contentCol),
-      analyzed, slop)
-
-  /** As [[phraseCandidates]], over an already-built positional postings
-    * frame: the [[phraseOffsets]] literal broadcast onto it, then the
-    * span step. */
-  def phraseCandidatesFrom(posPost: DataFrame,
-                           analyzed: Seq[(Int, Seq[String])],
-                           slop: Int = 0): DataFrame =
-    phraseSpans(posPost.join(broadcast(phraseOffsets(posPost.sparkSession, analyzed)), "term"),
-      Seq("qid"), slop).select(col("qid"), col("doc_id"))
-
-  /** The (qid, term, off, m) literal of analyzed phrases: one row per
-    * phrase OFFSET (a repeated term gets one row per occurrence), m the
-    * phrase length. */
-  private[query] def phraseOffsets(spark: SparkSession,
-                                   analyzed: Seq[(Int, Seq[String])]): DataFrame = {
-    import spark.implicits._
-    analyzed.flatMap { case (qid, ts) =>
-      ts.zipWithIndex.map { case (t, off) => (qid, t, off, ts.length) }
-    }.toDF("qid", "term", "off", "m")
-  }
-
-  /** The span step — the one phrase decision: joined rows
-    * (keys…, doc_id, off, m, positions), one per (phrase offset, doc),
-    * group per (keys…, doc_id); a group matches when every offset is
-    * present (a doc missing any term cannot match) and
-    * [[OrderedSpanMatchExpr]] accepts the offset-ordered position lists
-    * at `slop`. `extra` aggregates (a score fold, a role) ride the same
-    * aggregation. */
-  private[query] def phraseSpans(joined: DataFrame, keys: Seq[String], slop: Int,
-                                 extra: Column*): DataFrame =
-    joined.groupBy((keys :+ "doc_id").map(col): _*)
-      .agg(count(lit(1)).as("got"), first(col("m")).as("m") +:
-        sort_array(collect_list(struct(col("off"), col("positions")))).as("lists") +: extra: _*)
-      .filter(col("got") === col("m"))
-      .filter(OrderedSpanMatchExpr.matches(
-        transform(col("lists"), x => x.getField("positions")), lit(slop)))
-
-  /** Sum per-(qid, doc) weights in ascending term order, rank, take k.
-    * Input needs columns (qid, doc_id, term, w) and, when `conjunctive`,
-    * n_terms (docs must match every analyzed term — ES bool/must
-    * semantics; OR/`match` semantics otherwise).
-    *
-    * Ranking is a bounded [[TopKByScore]] aggregation per qid (map-side
-    * partial top-k heaps, k rows per partition per qid on the shuffle) —
-    * NOT a per-qid window, which would sort every candidate of a hot
-    * query inside one task (round-1 scale-killer; guarded in PlanSpec). */
-  def scoreAndRank(weighted: DataFrame, k: Int, conjunctive: Boolean = false): DataFrame =
-    rankTopK(scored(weighted, conjunctive), k)
-
-  /** The pre-rank scored set (qid, doc_id, score[, matched, n_terms]) —
-    * the distributed aggregation scoreAndRank ranks, exposed so cursor
-    * paths (search_after) can restrict it before the bounded top-k. */
-  def scored(weighted: DataFrame, conjunctive: Boolean = false): DataFrame = {
-    val grouped = weighted
-      .groupBy("qid", "doc_id")
-      .agg(
-        foldAscending(struct(col("term"), col("w"))).as("score"),
-        count(lit(1)).as("matched"),
-        first(col("n_terms"), ignoreNulls = true).as("n_terms"))
-    if (conjunctive) grouped.filter(col("matched") === col("n_terms"))
-    else grouped
   }
 
   /** Rank (qid, doc_id, score) rows: bounded per-qid top-k aggregation

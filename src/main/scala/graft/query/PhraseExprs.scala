@@ -48,8 +48,10 @@ object OrderedSpanMatchExpr {
     * `pos(j)(from(j) until until(j))`, ascending, in phrase-offset
     * order; true iff strictly increasing picks p_0 < ... < p_{m-1}, one
     * from each list, have slack (p_{m-1} - p_0) - (m - 1) <= slop (see
-    * the class doc for the sweep). The expression and the served
-    * phrase path ([[BM25.PhraseHandle]]) both decide through it. */
+    * the class doc for the sweep). The expression (the
+    * `graft_phrase_match` SQL function) and the positional evaluator
+    * behind every phrase, corpus or served ([[BM25.PosPhrase]]), both
+    * decide through it. */
   def spans(pos: Array[Array[Int]], from: Array[Int], until: Array[Int], slop: Int): Boolean = {
     val m = pos.length
     if (m == 0) return false
@@ -78,13 +80,6 @@ object OrderedSpanMatchExpr {
       s += 1
     }
     false
-  }
-
-  /** lists: array&lt;array&lt;int&gt;&gt; in phrase order; slop: int. */
-  def matches(lists: Column, slop: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.toColumn(OrderedSpanMatchExpr(
-      GraftColumnBridge.toExpression(lists), GraftColumnBridge.toExpression(slop)))
   }
 }
 

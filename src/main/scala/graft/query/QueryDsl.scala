@@ -15,14 +15,17 @@ import graft.index.Postings
   * Spark-first over the same postings pipeline and the same exact WAND
   * serving path as match/match_phrase.
   *
-  * Rank-identity discipline is inherited from [[BM25]]: every scoring
-  * path here is composed from the shared steps — [[BM25.weigh]] (or its
-  * corpus preamble [[BM25.matchPipeline]]), [[BM25.foldAscending]],
-  * [[BM25.phraseSpans]] and [[Wand.expandCapped]] — and writes none of
-  * them itself, so engine and DuckDB oracle produce bit-equal doubles.
-  * Where a clause does not score (bool filter/must_not), the oracle adds
-  * +0.0 in place of the skipped weight — adding 0.0 to a finite double
-  * is exact, so the two fold shapes stay bit-equal.
+  * Rank identity is inherited from [[BM25]]: every ranked text operator
+  * here compiles its query to a [[BM25.PosQuery]] and takes its scores
+  * from the one evaluator — [[BM25.corpusHits]] over the corpus,
+  * [[BM25.PhraseHandle.serve]] or [[Wand.Handle]] over an index — and
+  * writes no scoring of its own; what it adds (a filter, a boost, a
+  * field max, a rollup) is Column post-processing of the evaluator's
+  * `(qid, doc_id, score)` rows before [[BM25.rankTopK]]. So engine and
+  * DuckDB oracle produce bit-equal doubles. Where a clause does not
+  * score (bool filter/must_not), the oracle adds +0.0 in place of the
+  * skipped weight — adding 0.0 to a finite double is exact, so the two
+  * fold shapes stay bit-equal.
   */
 object QueryDsl {
 
@@ -42,9 +45,9 @@ object QueryDsl {
     *
     * Documented deviation (ADVICE r05): a bool query with ONLY must_not
     * clauses returns empty, where ES matches all non-excluded docs —
-    * candidates here come from the postings join, and a postings-driven
-    * candidate model cannot express match-all. Add a should/filter
-    * clause to anchor the candidate set. */
+    * candidates here come from the query terms' postings, and a
+    * postings-driven candidate model cannot express match-all. Add a
+    * should/filter clause to anchor the candidate set. */
   final case class BoolQuery(qid: Int, must: Seq[String] = Nil,
                              should: Seq[String] = Nil,
                              filter: Seq[String] = Nil,
@@ -63,6 +66,12 @@ object QueryDsl {
     /** Effective minimum_should_match: explicit, else the ES default. */
     def msm: Int = minimumShouldMatch.getOrElse(
       if (nMust + nFilter > 0) 0 else 1)
+    /** The query as the evaluator's [[BM25.PosQuery]]. */
+    def posQuery: BM25.PosQuery = {
+      val roled = analyzed
+      def role(r: String) = roled.collect { case (t, `r`) => t }
+      BM25.PosQuery(role("must"), role("should"), role("must_not"), msm, filter = role("filter"))
+    }
   }
 
   /** ES fuzziness AUTO (public docs; `Fuzziness.asDistance` counts code
@@ -85,72 +94,20 @@ object QueryDsl {
   val MltMinDf = 5
   val MltMaxTerms = 25
 
-  /** Bool top-k over the corpus — one postings pass, one aggregation:
-    * the broadcast (qid, term, role) table joins the postings, a single
-    * groupBy(qid, doc) computes the score fold (must+should weights,
-    * ascending term order) AND the per-role match counters the
-    * candidate decision needs. No per-role job chain, no self-joins —
-    * the role algebra rides the aggregate, so at 100 TB a bool query
-    * costs exactly what a match query costs: one pruned postings join +
-    * one shuffle.
+  /** Bool top-k over the corpus: each query compiles to one
+    * [[BM25.PosQuery]] ([[BoolQuery.posQuery]]), which
+    * [[BM25.corpusHits]] evaluates — one bounded stats job, then one
+    * corpus pass deciding the role algebra and folding the score per
+    * doc, with no shuffle before the ranking. At 100 TB a bool query
+    * costs what a match query costs.
     *
     * Output contract identical to [[BM25.topK]] (qid, rank, doc_id,
     * score; ties doc_id-asc). */
   def boolTopK(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                queries: Seq[BoolQuery],
-               cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val q = queries.flatMap { bq =>
-      bq.analyzed.map { case (t, role) => (bq.qid, t, role, bq.nMust, bq.nFilter, bq.msm) }
-    }
-    BM25.rankTopK(boolScored(docs, idCol, contentCol, q, cfg), cfg.topK)
-  }
-
-  /** The bool role algebra WITHOUT the final ranking, over the corpus
-    * postings: one bounded stats job ([[BM25.statsAndDf]]), then role
-    * rows (absent terms drop here, exactly like an inner join with the
-    * full docFreq table) weighed onto the postings and ONE
-    * groupBy(qid, doc) computing the score fold and the per-role match
-    * counters the candidate decision needs. `roleRows` carries
-    * (qid, term, role, n_must, n_filter, n_msm) — driver rows, so
-    * callers (corpus query_string) can feed data-dependent rows such as
-    * prefix expansions resolved from the term dictionary; df for
-    * expansions resolved elsewhere can be supplied via `statsKnown` to
-    * skip the stats job. The served twin of this algebra is
-    * [[BM25.PosQuery]]. */
-  private[query] def boolScored(docs: DataFrame, idCol: Column,
-                                contentCol: Column,
-                                roleRows: Seq[(Int, String, String, Int, Int, Int)],
-                                cfg: EngineConfig,
-                                statsKnown: Option[(Long, Double, Map[String, Long])] = None)
-      : DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val (n, avgdl, dfMap) = statsKnown.getOrElse(
-      BM25.statsAndDf(docs, idCol, contentCol, roleRows.map(_._2).distinct))
-    val q = roleRows.flatMap { case (qid, t, role, nm, nf, msm) =>
-      dfMap.get(t).map(df => (qid, t, role, nm, nf, msm, df))
-    }.toDF("qid", "term", "role", "n_must", "n_filter", "n_msm", "df")
-    BM25.weigh(Postings.build(docs, idCol, contentCol), q, n, avgdl, cfg)
-      .groupBy("qid", "doc_id")
-      .agg(
-        // collect_list drops the when()'s nulls: only must/should rows
-        // enter the fold, ascending term order — the oracle's
-        // CASE-zero form is bit-equal (+0.0 is exact)
-        BM25.foldAscending(when(col("role").isin("must", "should"),
-          struct(col("term"), col("w")))).as("score"),
-        count(when(col("role") === "must", 1)).as("must_got"),
-        count(when(col("role") === "filter", 1)).as("filter_got"),
-        count(when(col("role") === "must_not", 1)).as("not_got"),
-        count(when(col("role") === "should", 1)).as("should_got"),
-        first(col("n_must")).as("n_must"),
-        first(col("n_filter")).as("n_filter"),
-        first(col("n_msm")).as("n_msm"))
-      .filter(col("must_got") === col("n_must") &&
-        col("filter_got") === col("n_filter") &&
-        col("not_got") === 0 &&
-        col("should_got") >= col("n_msm"))
-      .select("qid", "doc_id", "score")
-  }
+               cfg: EngineConfig = EngineConfig.default): DataFrame =
+    BM25.rankTopK(BM25.corpusHits(docs, idCol, contentCol, queries.map(q => q.qid -> q.posQuery), cfg),
+      cfg.topK)
 
   /** Prefix top-k served from the segment index: each query's prefix
     * (lowercased — ES prefix queries are not analyzed) expands to the
@@ -212,18 +169,16 @@ object QueryDsl {
     * offset materialization (the thing ES forbids past 10k for the same
     * reason: page depth must not buy O(depth) memory). Queries without
     * a cursor entry yield no rows (a page-1 caller uses [[BM25.topK]]).
-    * Scoring is bit-identical to page 1's pipeline (same term-ascending
-    * fold), so cursor equality on the double score is exact. */
+    * Scoring is page 1's evaluator ([[BM25.corpusHits]]), so cursor
+    * equality on the double score is exact. */
   def searchAfterTopK(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                       queries: Seq[(Int, String)], cursors: Seq[(Int, Double, Long)],
                       cfg: EngineConfig = EngineConfig.default,
                       statsKnown: Option[(Long, Double, Map[String, Long])] = None)
       : DataFrame = {
     import spark.implicits._
-    val weighted =
-      BM25.matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg, statsKnown)
     val cur = cursors.toDF("qid", "c_score", "c_doc")
-    val after = BM25.scored(weighted).join(broadcast(cur), "qid")
+    val after = matchHits(docs, idCol, contentCol, queries, cfg, statsKnown).join(broadcast(cur), "qid")
       .filter(col("score") < col("c_score") ||
         (col("score") === col("c_score") && col("doc_id") > col("c_doc")))
       .select("qid", "doc_id", "score")
@@ -255,11 +210,10 @@ object QueryDsl {
     * (per-field postings, df, avgdl — exactly how ES scores each field
     * as a separate sub-query), and a doc's combined score is the MAX
     * over its per-field scores (best_fields, tie_breaker=0). One
-    * postings pass per field — same asymptotics as ES, which runs one
-    * term query per (field, term) — then a single union + max
-    * aggregation; no field count-dependent join chain. Per-field folds
-    * are term-ascending (bit-equal to the oracle); max of finite
-    * doubles is exact. */
+    * evaluator pass per field ([[BM25.corpusHits]]) — same asymptotics
+    * as ES, which runs one term query per (field, term) — then a single
+    * union + max aggregation; no field count-dependent join chain. Max
+    * of finite doubles is exact. */
   def multiMatchTopK(spark: SparkSession, docs: DataFrame, idCol: Column,
                      fields: Seq[Column], queries: Seq[(Int, String)],
                      cfg: EngineConfig = EngineConfig.default,
@@ -272,12 +226,12 @@ object QueryDsl {
     // score before best_fields combines — one exact IEEE multiply per
     // field, identity when the boost is 1.0 (x * 1.0 == x)
     val bs = if (boosts.isEmpty) fields.map(_ => 1.0) else boosts
-    // one stats job for ALL fields (statsAndDfMulti), then one postings
-    // pass per field inside the single ranking action
+    // one stats job for ALL fields (statsAndDfMulti), then one
+    // evaluator pass per field inside the single ranking action
     val stats = BM25.statsAndDfMulti(docs, idCol, fields,
       analyzed.flatMap(_._2).distinct)
     val perField = fields.zip(bs).zip(stats).map { case ((fcol, boost), st) =>
-      BM25.scored(BM25.matchPipeline(docs, idCol, fcol, analyzed, cfg, Some(st)))
+      matchHits(docs, idCol, fcol, queries, cfg, Some(st))
         .select(col("qid"), col("doc_id"), (col("score") * lit(boost)).as("score"))
     }
     val best = perField.reduce(_ unionByName _)
@@ -398,21 +352,21 @@ object QueryDsl {
     * bool-with-range/term-filter-context staple ("search within
     * lang + size window"). Filter context NEVER changes scores (ES
     * computes BM25 from index-wide stats regardless of filters), so
-    * scoring is [[BM25.topK]]'s pipeline verbatim with the candidate
-    * postings semi-joined against the docs passing the predicate
-    * before aggregation. The predicate side is a column-pruned,
+    * scoring is [[BM25.topK]]'s evaluator verbatim, its hits semi-joined
+    * against the docs passing the predicate before the ranking. The
+    * predicate side is a column-pruned,
     * filter-pushed scan of the docs table (the parquet reader sees
     * lang/n_chars constraints); ES's equivalent is a corpus-sized
     * filter bitset — same asymptotics, declaratively. */
   def filteredTopK(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                    queries: Seq[(Int, String)], predicate: Column,
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val weighted = BM25.matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg)
     // filter context never changes scores (BM25 stays corpus-wide), so
-    // the predicate restricts candidates with a semi-join of the
-    // column-pruned, filter-pushed docs scan onto the weighted rows
+    // the predicate restricts the hits with a semi-join of the
+    // column-pruned, filter-pushed docs scan
     val allowed = docs.filter(predicate).select(idCol.as("doc_id"))
-    BM25.scoreAndRank(weighted.join(allowed, Seq("doc_id"), "left_semi"), cfg.topK)
+    BM25.rankTopK(matchHits(docs, idCol, contentCol, queries, cfg).join(allowed, Seq("doc_id"), "left_semi"),
+      cfg.topK)
   }
 
   /** ES terms aggregation (facets) over a query's matching docs: every
@@ -648,6 +602,15 @@ object QueryDsl {
   private def analyzedQueries(queries: Seq[(Int, String)]): Seq[(Int, Seq[String])] =
     queries.map { case (qid, text) => qid -> CodeTokenizer.queryTerms(text) }
 
+  /** The unranked `(qid, doc_id, score)` hits of match queries (a
+    * disjunction of each query's analyzed terms) over the corpus field
+    * `contentCol`: the evaluator rows the match-family operators
+    * post-process before ranking. */
+  private def matchHits(docs: DataFrame, idCol: Column, contentCol: Column, queries: Seq[(Int, String)],
+                        cfg: EngineConfig,
+                        statsKnown: Option[(Long, Double, Map[String, Long])] = None): DataFrame =
+    BM25.corpusHits(docs, idCol, contentCol, BM25.matchQueries(queries), cfg, statsKnown)
+
   /** One row per (query, matching doc) for match-any semantics — the
     * filter-context/aggregation preamble. ONE corpus scan testing each
     * doc's kept-token array directly against every query's term set
@@ -741,15 +704,13 @@ object QueryDsl {
     out.toSeq
   }
 
-  /** Lucene/ES query_string (flat grammar) over the corpus: compiles
-    * [[parseQueryString]]'s clauses onto the bool role algebra — one
-    * postings pass + one aggregation for scoring and role counters —
-    * with phrase clauses enforced as positional adjacency constraints
-    * on the SAME candidate machinery as match_phrase (a second bounded
-    * aggregation over the query-term positional postings), and prefix
-    * clauses expanded against the corpus term dictionary
-    * (lexicographic-first cap, one bounded metadata job for ALL prefix
-    * clauses together). Scoring: must/should terms and phrase member
+  /** Lucene/ES query_string (flat grammar) over the corpus: each query
+    * compiles ([[qsQueries]]) to one [[BM25.PosQuery]] — its
+    * [[parseQueryString]] clauses' roles, its quoted phrases required or
+    * excluded, and its prefix clauses expanded against the corpus term
+    * dictionary (lexicographic-first cap, one bounded metadata job for
+    * ALL prefix clauses together) — which [[BM25.corpusHits]] evaluates
+    * in one corpus pass. Scoring: must/should terms and phrase member
     * terms fold term-ascending exactly like bool; expansions score with
     * their own df (scoring_boolean). minimum_should_match follows the
     * Lucene default: 1 when the query has no required clause, else 0. */
@@ -758,9 +719,7 @@ object QueryDsl {
                       maxExpansions: Int = MaxExpansions,
                       cfg: EngineConfig = EngineConfig.default): DataFrame = {
     val parsed = queries.map { case (qid, s) => qid -> parseQueryString(s) }
-    val prefixClauses = qsPrefixClauses(parsed)
-    val phrases = qsPhrases(parsed)
-    val literalTerms = (qsTermRows(parsed).map(_._2) ++ phrases.flatMap(_._3)).distinct
+    val literalTerms = (qsTermRows(parsed).map(_._2) ++ qsPhrases(parsed).flatMap(_._3)).distinct
     // the bounded stats job ((n, avgdl) + literal-term df) and the
     // prefix-expansion aggregation are independent — submit them from
     // two driver threads so their stages overlap (guide §2.6)
@@ -774,7 +733,7 @@ object QueryDsl {
     // aggregation for ALL prefix clauses together — never a
     // full-vocabulary shuffle
     val expF = Future {
-      val prefixes = prefixClauses.map(_._2).distinct
+      val prefixes = qsPrefixClauses(parsed).map(_._2).distinct
       if (prefixes.isEmpty) Map.empty[String, Seq[(String, Long)]]
       else Wand.expandCapped(Postings.build(docs, idCol, contentCol)
           .filter(prefixes.map(p => col("term").startsWith(p)).reduce(_ || _)) // pruned BEFORE the df agg
@@ -784,49 +743,29 @@ object QueryDsl {
     }
     val (n, avgdl, dfLit) = Await.result(statsF, Duration.Inf)
     val expMap = Await.result(expF, Duration.Inf)
-    val expRows = prefixClauses.flatMap { case (qid, p, role) =>
-      expMap(p).map { case (t, _) => (qid, t, role) } }
-    val dfExp = expMap.values.flatten.toMap
-    val roleRows = qsRoleRows(parsed, expRows)
-    // NOTE (measured, not kept): sharing ONE persisted pruned
-    // positional frame between the scoring and constraint aggregations
-    // (the phraseTopK discipline) was tried and is SLOWER here —
-    // persist + eager materialization serialize what the two-subtree
-    // action runs as concurrent stages; see OPTIMIZATION_r06.md.
-    val scored = boolScored(docs, idCol, contentCol, roleRows, cfg,
-      statsKnown = Some((n, avgdl, dfLit ++ dfExp)))
-    if (phrases.isEmpty) return BM25.rankTopK(scored, cfg.topK)
-    val posPost = Postings.buildPositional(docs, idCol, contentCol)
-      .select("term", "doc_id", "positions")
-    BM25.rankTopK(qsConstrain(scored, posPost, phrases), cfg.topK)
+    val qs = qsQueries(parsed, expMap.map { case (p, es) => p -> es.map(_._1) })
+    if (qs.isEmpty) ServedTopK.noHits(spark)
+    else BM25.rankTopK(BM25.corpusHits(docs, idCol, contentCol, qs, cfg,
+      statsKnown = Some((n, avgdl, dfLit ++ expMap.values.flatten))), cfg.topK)
   }
 
   /** query_string served from the index — the operational (CLI) path,
     * rank- and score-identical to [[queryStringTopK]]: each query
-    * compiles to one [[BM25.PosQuery]] — its [[qsRoleRows]] roles and
-    * its [[qsPhrases]] as required or excluded phrases — served by the
-    * positional handle ([[BM25.PhraseHandle.serve]]) in one Spark job, no
-    * Catalyst query and no file read. The WAND handle opens only to
-    * expand: a batch with a prefix clause walks its term dictionary
+    * compiles ([[qsQueries]]) to the same [[BM25.PosQuery]], served by
+    * the positional handle ([[BM25.PhraseHandle.serve]]) in one Spark
+    * job, no Catalyst query and no file read. The WAND handle opens only
+    * to expand: a batch with a prefix clause walks its term dictionary
     * first, one more job. */
   def queryStringTopKIndexed(spark: SparkSession, indexDir: String,
                              queries: Seq[(Int, String)],
                              maxExpansions: Int = MaxExpansions,
                              cfg: EngineConfig = EngineConfig.default): DataFrame = {
     val parsed = queries.map { case (qid, s) => qid -> parseQueryString(s) }
-    val prefixClauses = qsPrefixClauses(parsed)
+    val prefixes = qsPrefixClauses(parsed).map(_._2)
     val expMap =
-      if (prefixClauses.isEmpty) Map.empty[String, Seq[String]]
-      else Wand.handleFor(spark, indexDir, cfg).expandPrefixBatch(prefixClauses.map(_._2), maxExpansions)
-    val expRows = prefixClauses.flatMap { case (qid, p, role) =>
-      expMap(p).map(t => (qid, t, role))
-    }
-    val phrases = qsPhrases(parsed)
-    val qs = qsRoleRows(parsed, expRows).groupBy(_._1).toSeq.map { case (qid, rows) =>
-      def role(r: String) = rows.collect { case (_, t, `r`, _, _, _) => t }
-      qid -> BM25.PosQuery(role("must"), role("should"), role("must_not"), rows.head._6,
-        phrases.collect { case (`qid`, r, ts) => BM25.PosPhrase(ts.map(Seq(_)), 0, required = r != "must_not") })
-    }
+      if (prefixes.isEmpty) Map.empty[String, Seq[String]]
+      else Wand.handleFor(spark, indexDir, cfg).expandPrefixBatch(prefixes, maxExpansions)
+    val qs = qsQueries(parsed, expMap)
     if (qs.isEmpty) ServedTopK.noHits(spark) else BM25.phraseHandleFor(spark, indexDir, cfg).serve(qs)
   }
 
@@ -857,64 +796,30 @@ object QueryDsl {
       }
     }.filter(_._3.nonEmpty)
 
-  /** Role rows (literals + expansions) with the per-query must counter
-    * and the Lucene default minimum_should_match. A (qid, term) landing
-    * in two roles (a bare term repeated inside a required phrase, a
-    * prefix expansion colliding with a literal) resolves by role
-    * precedence must_not > must > should — the Lucene effective
-    * semantics — instead of aborting the batch (ADVICE r05: the
-    * collision is data-dependent via expansions, so a corpus change
-    * could start crashing a previously-working query). Queries without
-    * collisions produce exactly the former rows. */
-  private def qsRoleRows(parsed: Seq[(Int, Seq[QsClause])],
-                         expRows: Seq[(Int, String, String)])
-      : Seq[(Int, String, String, Int, Int, Int)] = {
+  /** Each parsed query_string query as one [[BM25.PosQuery]] — the one
+    * compile of the corpus and the indexed path: its analyzed terms, its
+    * required phrases' members (as musts) and its prefix clauses'
+    * `expansions` in their roles, minimum_should_match 1 when it has no
+    * must term, else 0, and its quoted phrases, required or excluded, at
+    * slop 0. A (qid, term) landing in two roles (a bare term repeated
+    * inside a required phrase, a prefix expansion colliding with a
+    * literal) resolves by role precedence must_not > must > should — the
+    * Lucene effective semantics — instead of aborting the batch (ADVICE
+    * r05: the collision is data-dependent via expansions, so a corpus
+    * change could start crashing a previously-working query). A query
+    * with no role term drops. */
+  private def qsQueries(parsed: Seq[(Int, Seq[QsClause])], expansions: Map[String, Seq[String]])
+      : Seq[(Int, BM25.PosQuery)] = {
     val prec = Map("must_not" -> 0, "must" -> 1, "should" -> 2)
-    val allRows = (qsTermRows(parsed) ++ expRows).distinct
-      .groupBy { case (qid, t, _) => (qid, t) }
-      .map { case ((qid, t), rs) => (qid, t, rs.map(_._3).minBy(prec)) }
-      .toSeq.sortBy { case (qid, t, _) => (qid, t) }
-    val nMust = allRows.filter(_._3 == "must").groupBy(_._1).view.mapValues(_.size).toMap
-    allRows.map { case (qid, t, role) =>
-      val m = nMust.getOrElse(qid, 0)
-      (qid, t, role, m, 0, if (m > 0) 0 else 1)
+    val expRows = qsPrefixClauses(parsed).flatMap { case (qid, p, role) => expansions(p).map(t => (qid, t, role)) }
+    val phrases = qsPhrases(parsed)
+    (qsTermRows(parsed) ++ expRows).groupBy(_._1).toSeq.map { case (qid, rows) =>
+      val roles = rows.groupBy(_._2).map { case (t, rs) => t -> rs.map(_._3).minBy(prec) }.toSeq
+      def role(r: String) = roles.collect { case (t, `r`) => t }
+      val must = role("must")
+      qid -> BM25.PosQuery(must, role("should"), role("must_not"), if (must.nonEmpty) 0 else 1,
+        phrases.collect { case (`qid`, r, ts) => BM25.PosPhrase(ts.map(Seq(_)), 0, required = r != "must_not") })
     }
-  }
-
-  /** Phrase adjacency constraints over a (term, doc_id, positions)
-    * postings source: required phrases must ALL match (count of
-    * distinct matched pids == the query's required count), exclusion
-    * phrases anti-join — the corpus query_string path's; the indexed
-    * path decides the same phrases per doc ([[BM25.PosPhrase]]). */
-  private def qsConstrain(scored: DataFrame, posPost: DataFrame,
-                          phrases: Seq[(Int, String, Seq[String])]): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val pq = phrases.zipWithIndex.flatMap { case ((qid, role, ts), pid) =>
-      ts.zipWithIndex.map { case (t, off) => (qid, pid, role, t, off, ts.size) }
-    }.toDF("qid", "pid", "role", "term", "off", "m")
-    val phraseHit = BM25.phraseSpans(posPost.join(broadcast(pq), "term"), Seq("qid", "pid"), 0,
-        first(col("role")).as("role"))
-      .select("qid", "pid", "role", "doc_id")
-    val reqPerQid = phrases.zipWithIndex
-      .filter(_._1._2 != "must_not")
-      .groupBy(_._1._1).view.mapValues(_.size).toSeq
-      .map { case (qid, n) => (qid, n) }.toDF("qid", "n_req")
-    // required-match count and exclusion flag out of ONE aggregation
-    // over the phrase hits (the former two-branch shape evaluated the
-    // positional-postings subtree once per branch): req_got counts
-    // distinct non-exclusion pids (countDistinct drops the when-null),
-    // excl is non-null iff any exclusion phrase hit
-    val flags = phraseHit.groupBy("qid", "doc_id")
-      .agg(
-        countDistinct(when(col("role") =!= "must_not", col("pid"))).as("req_got"),
-        max(when(col("role") === "must_not", 1)).as("excl"))
-    scored
-      .join(broadcast(reqPerQid), Seq("qid"), "left")
-      .join(flags, Seq("qid", "doc_id"), "left")
-      .filter(coalesce(col("req_got"), lit(0L)) === coalesce(col("n_req"), lit(0)))
-      .filter(col("excl").isNull)
-      .select("qid", "doc_id", "score")
   }
 
   /** ES dis_max over per-field match sub-queries with a non-zero
@@ -924,23 +829,19 @@ object QueryDsl {
     * best + tb * (sum - best). The sum folds in FIELD order (a sorted
     * bounded fold like every score fold here), so the combined double
     * is bit-equal to the oracle's `sum(score ORDER BY fld)` form. Same
-    * asymptotics as multi_match: one postings pass per field, one
+    * asymptotics as multi_match: one evaluator pass per field, one
     * union + one aggregation. */
   def disMaxTopK(spark: SparkSession, docs: DataFrame, idCol: Column,
                  fields: Seq[Column], queries: Seq[(Int, String)],
                  tieBreaker: Double,
                  cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    import spark.implicits._
     require(fields.nonEmpty, "dis_max needs >= 1 field")
-    val analyzed = analyzedQueries(queries)
-    // one stats job for ALL fields, one postings pass per field in the
+    // one stats job for ALL fields, one evaluator pass per field in the
     // single ranking action (the multi_match discipline)
     val stats = BM25.statsAndDfMulti(docs, idCol, fields,
-      analyzed.flatMap(_._2).distinct)
+      analyzedQueries(queries).flatMap(_._2).distinct)
     val perField = fields.zip(stats).zipWithIndex.map { case ((fcol, st), fi) =>
-      BM25.scored(BM25.matchPipeline(docs, idCol, fcol, analyzed, cfg, Some(st)))
-        .select(col("qid"), col("doc_id"), col("score"))
-        .withColumn("fld", lit(fi))
+      matchHits(docs, idCol, fcol, queries, cfg, Some(st)).withColumn("fld", lit(fi))
     }
     val comb = perField.reduce(_ unionByName _)
       .groupBy("qid", "doc_id")
@@ -956,17 +857,14 @@ object QueryDsl {
     * score, and any doc ALSO matching the negative query keeps its rank
     * eligibility but has its score multiplied by `negativeBoost` (the
     * ES demote-don't-exclude contract — the whole point over must_not).
-    * The negative side is a match-any membership probe: the scored set
-    * is already partitioned by (qid, doc_id) from its aggregation, so
-    * the demotion join adds one shuffle of the (qid, doc_id) negative
-    * id set and nothing else; multiplication by the boost literal is
-    * the same IEEE op on both engine and oracle. */
+    * The positive side is the match evaluator's hits; the negative side
+    * is a match-any membership probe, joined onto them; multiplication
+    * by the boost literal is the same IEEE op on both engine and
+    * oracle. */
   def boostingTopK(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                    queries: Seq[(Int, String, String)], negativeBoost: Double,
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    import spark.implicits._
-    val qpos = queries.map { case (qid, p, _) => qid -> CodeTokenizer.queryTerms(p) }
-    val scored = BM25.scored(BM25.matchPipeline(docs, idCol, contentCol, qpos, cfg))
+    val scored = matchHits(docs, idCol, contentCol, queries.map { case (qid, p, _) => qid -> p }, cfg)
     // negative side: a direct per-doc token-set membership probe — one
     // corpus scan, no postings explode and no (qid, doc_id) distinct
     // shuffle (guide §2.4)
@@ -1057,7 +955,7 @@ object QueryDsl {
 
   /** ES top_hits sub-aggregation — terms buckets with the top
     * `hitsPerBucket` scoring docs INSIDE each bucket (the "best example
-    * per category" shape). Scoring is the shared match pipeline; the
+    * per category" shape). Scoring is the match evaluator; the
     * per-bucket ranking is a window partitioned by (qid, bucket) —
     * parallel across buckets, never a global sort; ES runs the same
     * shape as one priority queue per bucket.
@@ -1067,9 +965,8 @@ object QueryDsl {
                  queries: Seq[(Int, String)], bucketCol: Column,
                  hitsPerBucket: Int = 2,
                  cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val scored =
-      BM25.scored(BM25.matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg))
-    scored.join(docs.select(idCol.as("doc_id"), bucketCol.as("bucket")), "doc_id")
+    matchHits(docs, idCol, contentCol, queries, cfg)
+      .join(docs.select(idCol.as("doc_id"), bucketCol.as("bucket")), "doc_id")
       .withColumn("hit_rank", row_number().over(
         Window.partitionBy("qid", "bucket")
           .orderBy(col("score").desc, col("doc_id"))).cast("long"))
@@ -1108,21 +1005,32 @@ object QueryDsl {
 
   /** ES _explain analogue: the per-term BM25 breakdown for each query's
     * TOP-RANKED doc — (term, tf, df, doclen, idf, weight) rows, the
-    * flattened form of the explanation tree ES returns. The ranking is
-    * the shared match pipeline; the breakdown join touches only the
-    * <= one (qid, doc) winner per query (an explicit broadcast back
-    * onto the weighted rows — a point lookup at any scale, the same
-    * fetch discipline as highlight). */
+    * flattened form of the explanation tree ES returns. The winner is
+    * the match evaluator's rank-1 hit; its breakdown — <= one doc per
+    * query, read back through an id-pushed postings build (a point read
+    * at any scale, the same fetch discipline as highlight) — is computed
+    * on the driver with the scalar [[BM25.idf]] and [[BM25.weight]], the
+    * operations the evaluator scores with. */
   def explainTop1(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                   queries: Seq[(Int, String)],
                   cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val analyzed = analyzedQueries(queries)
-    val stats = BM25.statsAndDf(docs, idCol, contentCol, analyzed.flatMap(_._2).distinct)
-    val weighted = BM25.matchPipeline(docs, idCol, contentCol, analyzed, cfg, Some(stats))
-    val top1 = BM25.rankTopK(BM25.scored(weighted), 1).select("qid", "doc_id")
-    weighted.join(broadcast(top1), Seq("qid", "doc_id"))
-      .withColumn("idf", BM25.idfCol(col("df"), stats._1))
-      .select("qid", "doc_id", "term", "tf", "df", "doclen", "idf", "w")
+    import spark.implicits._
+    val analyzed = analyzedQueries(queries).toMap
+    val stats @ (n, avgdl, dfMap) =
+      BM25.statsAndDf(docs, idCol, contentCol, analyzed.values.flatten.toSeq.distinct)
+    val top1 = BM25.rankTopK(matchHits(docs, idCol, contentCol, queries, cfg, Some(stats)), 1)
+      .collect().map(r => r.getInt(0) -> r.getLong(2))
+    // (doc, term) -> (tf, doclen) of the winners' query terms
+    val post = if (top1.isEmpty) Map.empty[(Long, String), (Long, Long)] else
+      Postings.build(docs.filter(idCol.isInCollection(top1.map(_._2).distinct)), idCol, contentCol)
+        .filter(col("term").isInCollection(top1.flatMap(w => analyzed(w._1)).distinct))
+        .collect().map(r => (r.getLong(1), r.getString(0)) -> (r.getLong(3), r.getLong(2))).toMap
+    top1.toSeq.flatMap { case (qid, doc) =>
+      analyzed(qid).flatMap(t => post.get((doc, t)).map { case (tf, dl) =>
+        val df = dfMap(t)
+        (qid, doc, t, tf, df, dl, BM25.idf(df, n), BM25.weight(tf, dl, df, n, avgdl, cfg.k1, cfg.b))
+      })
+    }.toDF("qid", "doc_id", "term", "tf", "df", "doclen", "idf", "w")
       .orderBy("qid", "term")
   }
 
@@ -1188,13 +1096,14 @@ object QueryDsl {
   /** ES rescore API (total mode, the default): the top `windowSize`
     * hits of the match query — and ONLY those — are re-scored as
     * query_weight * original + rescore_query_weight * secondary, where
-    * the secondary query is a match_phrase whose score is the shared
-    * member-term BM25 fold for docs where the phrase occurs adjacently
-    * (0.0 otherwise — adding rw * 0.0 is exact). Every rescore-side
-    * computation is restricted to the window FIRST (a broadcast of
-    * <= queries x windowSize ids onto the positional postings), so the
-    * rescore cost is bounded by the window at any corpus size — the ES
-    * contract that makes expensive queries affordable as rescorers.
+    * the secondary query is a match_phrase ([[BM25.PosQuery.phrase]] at
+    * slop 0) scoring its member terms for docs where the phrase occurs
+    * adjacently (0.0 otherwise — adding rw * 0.0 is exact). The
+    * secondary evaluator pass reads ONLY the window docs (their ids push
+    * into the docs scan as an In() filter) with the base query's global
+    * stats, so the rescore cost is bounded by the window at any corpus
+    * size — the ES contract that makes expensive queries affordable as
+    * rescorers.
     *
     * Output contract identical to [[BM25.topK]], with one documented
     * deviation from ES: the result holds the window only, so with
@@ -1206,49 +1115,26 @@ object QueryDsl {
                   queryWeight: Double = 1.0, rescoreWeight: Double = 1.0,
                   cfg: EngineConfig = EngineConfig.default): DataFrame = {
     import spark.implicits._
-    val baseAnalyzed = queries.map { case (qid, text, _) =>
-      qid -> CodeTokenizer.queryTerms(text) }
-    val phrases = queries.map { case (qid, _, ph) =>
-      (qid, CodeTokenizer.tokenize(ph).toSeq)
-    }.filter(_._2.nonEmpty)
-    val phraseTerms = phrases.flatMap(_._2).distinct
+    val base = BM25.matchQueries(queries.map { case (qid, text, _) => qid -> text })
+    val phrases = queries.map { case (qid, _, ph) => qid -> CodeTokenizer.tokenize(ph).toSeq }
+      .collect { case (qid, ts) if ts.nonEmpty => qid -> BM25.PosQuery.phrase(ts, 0) }
+    if (base.isEmpty) return ServedTopK.noHits(spark)
     // ONE stats job covers the base terms AND the rescorer's phrase
     // terms (df stays corpus-level — ES rescorers score with index
     // stats), so the secondary side never re-derives df
-    val allTerms = (baseAnalyzed.flatMap(_._2) ++ phraseTerms).distinct
-    if (allTerms.isEmpty) return ServedTopK.noHits(spark)
-    val stats @ (n, avgdl, dfMap) = BM25.statsAndDf(docs, idCol, contentCol, allTerms)
-    val weighted = BM25.matchPipeline(docs, idCol, contentCol, baseAnalyzed, cfg, Some(stats))
+    val stats = BM25.statsAndDf(docs, idCol, contentCol, (base ++ phrases).flatMap(_._2.terms).distinct)
     // the window is <= queries x windowSize rows — collect it once (the
-    // search_after cursor discipline). The former shape kept it as a
-    // plan subtree referenced from THREE broadcasts plus the final
-    // join, re-running the whole base scoring pipeline per reference.
-    val winRows = BM25.rankTopK(BM25.scored(weighted), windowSize)
+    // search_after cursor discipline)
+    val winRows = BM25.rankTopK(BM25.corpusHits(docs, idCol, contentCol, base, cfg, Some(stats)), windowSize)
       .select("qid", "doc_id", "score").collect()
     if (winRows.isEmpty) return ServedTopK.noHits(spark)
     val window = winRows.map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
       .toDF("qid", "doc_id", "score")
-    val winPairs = winRows.map(r => (r.getInt(0), r.getLong(1))).toSeq
-      .toDF("qid", "doc_id")
-    val winIdList = winRows.map(_.getLong(1)).distinct.toSeq
-    // every rescore-side computation runs over ONLY the window docs —
-    // the id list pushes into the docs scan as an In() filter, so the
-    // positional build tokenizes <= queries x windowSize docs at any
-    // corpus size (the ES window-boundedness contract, now also the
-    // plan's scan boundedness). Scores are unchanged: tf/doclen/
-    // positions are per-doc quantities and df/stats stay corpus-level.
-    val winDocs = docs.filter(idCol.isInCollection(winIdList))
-    val posPost = Postings.buildPositional(winDocs, idCol, contentCol)
-      .select("term", "doc_id", "doclen", "tf", "positions")
-    // the window semi-join runs BEFORE the span step and the weights
-    val adj = BM25.phraseSpans(posPost.join(broadcast(BM25.phraseOffsets(spark, phrases)), "term")
-        .join(broadcast(winPairs), Seq("qid", "doc_id"), "left_semi"), Seq("qid"), 0)
-      .select("qid", "doc_id")
-    val phraseQ = BM25.termTable(spark, phrases.map { case (qid, ts) => qid -> ts.distinct }, dfMap)
-    val w2 = BM25.weigh(posPost, phraseQ, n, avgdl, cfg,
-      _.join(broadcast(winPairs), Seq("qid", "doc_id"), "left_semi"))
-    val sec = BM25.scored(w2)
-      .join(adj, Seq("qid", "doc_id"), "left_semi")
+    // the secondary pass tokenizes <= queries x windowSize docs at any
+    // corpus size; a window doc of another qid that holds the phrase
+    // drops in the left join below
+    val winDocs = docs.filter(idCol.isInCollection(winRows.map(_.getLong(1)).distinct.toSeq))
+    val sec = BM25.corpusHits(winDocs, idCol, contentCol, phrases, cfg, Some(stats))
       .withColumnRenamed("score", "sec_score")
     val rescored = window.join(sec, Seq("qid", "doc_id"), "left")
       .select(col("qid"), col("doc_id"),
@@ -1295,7 +1181,7 @@ object QueryDsl {
     * match scores — parent key = `parentCol`, children = the docs
     * themselves, combined per the ES score_mode ("max", "sum", or
     * "avg"; "none" is a plain semi-join — use filteredTopK). The child
-    * scoring is the shared match pipeline; the parent rollup is ONE
+    * scoring is the match evaluator; the parent rollup is ONE
     * groupBy on (qid, parent) — max/sum of finite doubles are exact
     * (sum folds in child doc_id order for bit-stable association), avg
     * divides the ordered sum by the exact child count.
@@ -1305,11 +1191,9 @@ object QueryDsl {
   def hasChildTopK(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
                    parentCol: Column, queries: Seq[(Int, String)], scoreMode: String,
                    cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    import spark.implicits._
     require(Set("max", "sum", "avg")(scoreMode), s"unsupported score_mode <$scoreMode>")
-    val scored =
-      BM25.scored(BM25.matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg))
-        .join(docs.select(idCol.as("doc_id"), parentCol.as("parent")), "doc_id")
+    val scored = matchHits(docs, idCol, contentCol, queries, cfg)
+      .join(docs.select(idCol.as("doc_id"), parentCol.as("parent")), "doc_id")
     val childSum = BM25.foldAscending(struct(col("doc_id"), col("score")))
     val rolled = scored.groupBy("qid", "parent").agg(
       (scoreMode match {
@@ -1336,8 +1220,7 @@ object QueryDsl {
                         contentCol: Column, queries: Seq[(Int, String)],
                         fieldCol: Column, factor: Double,
                         cfg: EngineConfig = EngineConfig.default): DataFrame = {
-    val boosted =
-      BM25.scored(BM25.matchPipeline(docs, idCol, contentCol, analyzedQueries(queries), cfg))
+    val boosted = matchHits(docs, idCol, contentCol, queries, cfg)
       .join(docs.select(idCol.as("doc_id"), fieldCol.cast("double").as("fv")), "doc_id")
       .select(col("qid"), col("doc_id"),
         (col("score") * log(lit(1.0) + lit(factor) * col("fv"))).as("score"))
@@ -1377,7 +1260,7 @@ object QueryDsl {
     * reads the doc's term vector — here a pushed-down id filter), the
     * selection window partitions by qid (per-partition data = one doc's
     * vocabulary — bounded by doclen, never corpus-sized), and the
-    * scoring join broadcasts <= queries x MltMaxTerms selected terms. */
+    * evaluator pass reads <= queries x MltMaxTerms selected terms. */
   def mltTopK(spark: SparkSession, docs: DataFrame, idCol: Column, contentCol: Column,
               queries: Seq[(Int, Long)],
               cfg: EngineConfig = EngineConfig.default): DataFrame = {
@@ -1400,25 +1283,20 @@ object QueryDsl {
     val (n, avgdl, dfMap) = BM25.statsAndDf(docs, idCol, contentCol, candTerms)
     // 3. driver-side per-query selection — top MltMaxTerms by
     //    (interest desc, term asc), interest = tf * the scalar
-    //    [[BM25.idf]] (StrictMath.log, bit-equal to the Column form), over the
-    //    already-bounded candidate rows; replaces a per-qid window over
-    //    a broadcast-joined frame with identical ordering
+    //    [[BM25.idf]], over the already-bounded candidate rows
     val byDoc = srcVec.groupBy(_._1)
     val selected = queries.flatMap { case (qid, src) =>
-      byDoc.getOrElse(src, Array.empty[(Long, String, Long)]).iterator
-        .flatMap { case (_, t, tf) =>
-          dfMap.get(t).filter(_ >= MltMinDf).map(df => (t, df, tf * BM25.idf(df, n)))
-        }.toSeq
-        .sortBy { case (t, _, interest) => (interest, t) }(
+      val ts = byDoc.getOrElse(src, Array.empty[(Long, String, Long)]).toSeq
+        .flatMap { case (_, t, tf) => dfMap.get(t).filter(_ >= MltMinDf).map(df => t -> tf * BM25.idf(df, n)) }
+        .sortBy { case (t, interest) => (interest, t) }(
           Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, Ordering.String))
-        .take(MltMaxTerms)
-        .map { case (t, df, _) => (qid, t, src, df) }
-    }.toDF("qid", "term", "src_doc", "df")
-    // 4. one corpus pass scores the selected disjunction
-    val grouped = BM25.weigh(Postings.build(docs, idCol, contentCol), selected, n, avgdl, cfg,
-        _.filter(col("doc_id") =!= col("src_doc")))
-      .groupBy("qid", "doc_id")
-      .agg(BM25.foldAscending(struct(col("term"), col("w"))).as("score"))
-    BM25.rankTopK(grouped, cfg.topK)
+        .take(MltMaxTerms).map(_._1)
+      if (ts.isEmpty) None else Some(qid -> BM25.PosQuery(Nil, ts, msm = 1))
+    }
+    // 4. one evaluator pass scores each selected disjunction; the
+    //    source doc drops from its own hits
+    BM25.rankTopK(BM25.corpusHits(docs, idCol, contentCol, selected, cfg, Some((n, avgdl, dfMap)))
+      .join(broadcast(queries.toDF("qid", "src_doc")), "qid")
+      .filter(col("doc_id") =!= col("src_doc")).drop("src_doc"), cfg.topK)
   }
 }

@@ -29,7 +29,9 @@ import org.apache.spark.sql.types.StructType
   * What the tasks return is bounded by construction — at most tasks x
   * keys x k rows — no matter how many candidates the scoring pass
   * produces; no partition ever buffers more than k rows per key. The
-  * corpus-path operators keep the lazy [[BM25.rankTopK]] aggregation.
+  * corpus evaluator ([[BM25.corpusHits]]) returns its hits as a lazy
+  * frame instead, which [[BM25.rankTopK]] ranks: the same comparator,
+  * so the same hits rank the same way on both paths.
   *
   * [[TermDict]] is the sorted term dictionary and its walks: every doc
   * partition of the WAND handle's cache holds the whole store's one, so
@@ -248,10 +250,6 @@ object ServedTopK {
   /** Fuzzy expansion order: `orderBy(col("df").desc, col("term"))`. */
   val byDfThenTerm: Ordering[(String, Long)] =
     Ordering.Tuple2(Ordering.Long.reverse, termOrder).on[(String, Long)](e => (e._2, e._1))
-
-  /** Expansions without their df. */
-  def termsOf[K](byKey: Map[K, Seq[(String, Long)]]): Map[K, Seq[String]] =
-    byKey.map { case (key, es) => key -> es.map(_._1) }
 
   /** One task's half of the cap: the first `cap` entries per key of its
     * `(key, term, df)` rows under `ord`, in no order. */

@@ -217,11 +217,12 @@ class PlanSpec extends SparkSuite {
     }
   }
 
-  test("declarative BM25 broadcasts query terms and prunes the docs scan") {
+  test("corpus BM25 filters postings to the query terms and prunes the docs scan") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val plan = BM25.topK(spark, docs, col("doc_id"), col("text"), SparkEntry.FtQuerySet)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), "postings x query-terms must broadcast")
+    assert("\\.term (IN|INSET) ".r.findFirstIn(plan).isDefined,
+      s"the corpus postings must be filtered to the query terms before the evaluator:\n$plan")
     assert(plan.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
       "docs scan must prune to the two used columns")
   }
@@ -342,13 +343,6 @@ class PlanSpec extends SparkSuite {
         s"the exact term filter must remain in the plan:\n$scanPlan")
       assert(!scanPlan.toLowerCase.contains("tokenize"),
         s"a served phrase query must never tokenize the corpus:\n$scanPlan")
-      // the whole candidate derivation stays on the ONE pruned scan
-      val candPlan = BM25.phraseCandidatesFrom(pruned, analyzed)
-        .queryExecution.executedPlan.toString
-      val scans = "FileScan parquet".r.findAllMatchIn(candPlan).size
-      assert(scans == 1, s"candidates = one pruned postings scan, got $scans:\n$candPlan")
-      assert(!candPlan.toLowerCase.contains("tokenize"),
-        s"no corpus tokenize in indexed candidates:\n$candPlan")
     } finally {
       new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(); ()
     }
@@ -427,13 +421,16 @@ class PlanSpec extends SparkSuite {
       .map { case (q, t) => (q, CodeTokenizer.tokenize(t).toSeq) }
       .filter(_._2.nonEmpty)
     assert(analyzed.map(_._2.length).distinct.size > 1, "fixture must mix phrase lengths")
-    val plan = BM25.phraseCandidates(docs, col("doc_id"), col("text"), analyzed)
+    val plan = BM25.phraseTopK(spark, docs, col("doc_id"), col("text"), SparkEntry.PhraseQuerySet)
       .queryExecution.executedPlan.toString
     val scans = "FileScan parquet".r.findAllMatchIn(plan).size
     assert(scans == 1,
-      s"positional candidates must be ONE corpus pass (was one per distinct length, " +
+      s"the positional evaluator must read the corpus in ONE pass (was one per distinct length, " +
         s"and one source recheck before that), got $scans:\n$plan")
-    assert(plan.contains("BroadcastExchange") || plan.contains("BroadcastHashJoin"),
-      "the (qid, offset, term) query table must broadcast against the postings")
+    // the tree prints parents first: below the partial ranking aggregate
+    // (the last one printed) the evaluator pass must not shuffle
+    val belowRank = plan.substring(plan.lastIndexOf("ObjectHashAggregate"))
+    assert(belowRank.contains("FileScan parquet") && !belowRank.contains("Exchange"),
+      s"no shuffle between the corpus scan and the ranking aggregate:\n$plan")
   }
 }

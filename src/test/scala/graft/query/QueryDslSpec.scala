@@ -735,16 +735,23 @@ class QueryDslSpec extends SparkSuite {
     assert(rByDoc(2L) === baseByDoc(2L), "reversed-order doc is not")
   }
 
-  test("rescore plan: secondary scoring is window-restricted (semi-joins present, no cartesian)") {
-    val d = df(1L -> "alpha beta gamma", 2L -> "alpha gamma beta")
-    val plan = rescoreTopK(spark, d, col("doc_id"), col("text"),
-      Seq((1, "alpha", "beta gamma")), windowSize = 2)
-      .queryExecution.executedPlan.toString
-    // window doc-set semi, per-query window semi, adjacency semi — the
-    // restrictions that keep rescore cost window-bounded at any corpus
-    assert("LeftSemi".r.findAllIn(plan).size >= 3,
-      "the secondary pipeline must semi-join the window before weighting")
-    assert(!plan.contains("CartesianProduct"))
+  test("rescore plan: window ids push into the secondary scan, no cartesian") {
+    val dir = Files.createTempDirectory("graft_rescore_plan_").toString
+    try {
+      df(1L -> "alpha beta gamma", 2L -> "alpha gamma beta", 3L -> "alpha", 4L -> "delta")
+        .write.mode("overwrite").parquet(dir)
+      val plan = rescoreTopK(spark, spark.read.parquet(dir), col("doc_id"), col("text"),
+        Seq((1, "alpha", "beta gamma")), windowSize = 2)
+        .queryExecution.executedPlan.toString
+      // the base pass ran (and was collected) at the call: the one scan
+      // left is the secondary's, and the window's ids reach its reader —
+      // the restriction that keeps rescore cost window-bounded at any
+      // corpus size
+      assert("FileScan parquet".r.findAllIn(plan).size == 1, plan)
+      assert("PushedFilters: \\[[^\\]]*In\\(doc_id, ".r.findFirstIn(plan).isDefined,
+        s"the window ids must push into the secondary docs scan:\n$plan")
+      assert(!plan.contains("CartesianProduct"))
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
 
   test("term suggest: distance then popularity then term; input excluded; garble empty") {

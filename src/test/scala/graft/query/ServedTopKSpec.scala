@@ -122,9 +122,9 @@ class ServedTopKSpec extends SparkSuite {
                           cap: Int): Map[Int, Seq[(String, Long)]] =
         ServedTopK.capMerge(spark.sparkContext.runJob(rows,
           (it: Iterator[(Int, String, Long)]) => ServedTopK.capTask(it, ord, cap)), ord, cap)
-      assert(ServedTopK.termsOf(capPerKeyWithDf(keyed.rdd, ServedTopK.byTerm, cap))(0) ===
+      assert(capPerKeyWithDf(keyed.rdd, ServedTopK.byTerm, cap)(0).map(_._1) ===
         sparkOrder.take(cap))
-      assert(ServedTopK.termsOf(capPerKeyWithDf(keyed.rdd, ServedTopK.byDfThenTerm, cap))(1) ===
+      assert(capPerKeyWithDf(keyed.rdd, ServedTopK.byDfThenTerm, cap)(1).map(_._1) ===
         terms(dictDf.orderBy(col("df").desc, col("term")).limit(cap)))
     }
   }
