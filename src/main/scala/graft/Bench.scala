@@ -317,8 +317,8 @@ object Bench {
 
     // 1b. serving throughput: repeated WAND top-10 batches against the
     // prebuilt compressed index, and repeated PHRASE batches against
-    // the same index's positional postings (queries/sec each), both
-    // through their reusable serving handles (the documented
+    // the same index (queries/sec each), both through its one reusable
+    // serving handle and that handle's phrase view (the documented
     // measurement condition: stats/metadata cached across batches)
     val (qps, phraseQps, lifecycle, pruneBytes)
         : (Double, Double, Seq[(String, Double)], (Long, Long)) =

@@ -194,9 +194,8 @@ object Main {
     * ([[graft.query.QueryDsl]]) through the same WAND handle. `--qs`
     * serves the flat Lucene query_string grammar (+must / -must_not /
     * bare should / "phrase" / prefix*) from the index — the Kibana
-    * search-bar surface. Phrase, phrase-prefix and `--qs` requests are
-    * served from the positional cache ([[graft.query.BM25.PhraseHandle]]),
-    * the others from the WAND handle's. */
+    * search-bar surface. Every mode is served from the index's one
+    * serving cache ([[graft.query.Wand.Handle]]). */
   final case class QueryArgs(text: String, k: Option[Int], mode: QueryMode = QueryMode.Match, slop: Int = 0)
 
   /** The operator a `query` runs, named by its flag (none: a match). */

@@ -9,8 +9,10 @@ import org.apache.spark.util.LongAccumulator
 import graft.config.EngineConfig
 
 /** One posting as it leaves the salted shuffle (sorted by term, salt,
-  * docId inside each build partition). */
-final case class PostingRec(term: String, salt: Int, doc_id: Long, tf: Long, doclen: Long)
+  * docId inside each build partition); `positions` is empty in a
+  * freqs-only index. */
+final case class PostingRec(term: String, salt: Int, doc_id: Long, tf: Long, doclen: Long,
+                            positions: Array[Int])
 
 /** salt = floor(bucket(doc) * nsalts / Q): doc's quantile bucket
   * (binary search over the Q-1 ascending corpus splits) scaled to the
@@ -72,9 +74,13 @@ object RangeSaltExpr {
   }
 }
 
-/** One compressed block (parquet-embedded struct). */
+/** One compressed block (parquet-embedded struct); `positions` is the
+  * block's VByte position-gap stream ([[Codec.Block]]), empty in a
+  * freqs-only index. */
 final case class BlockRow(first_doc: Long, n: Int, deltas: Array[Byte],
-                          tfs: Array[Byte], dls: Array[Byte], max_u: Double)
+                          tfs: Array[Byte], dls: Array[Byte], max_u: Double, positions: Array[Byte]) {
+  def block: Codec.Block = Codec.Block(first_doc, n, deltas, tfs, dls, max_u, positions)
+}
 
 /** One segment row = up to `blocksPerRow` blocks of one (term, salt) run.
   * `row_seq` orders rows within the run; `n_postings`/`max_u` are
@@ -87,6 +93,30 @@ final case class ShardManifest(shard: Int, status: String, postings: Long,
                                segRows: Long, bytes: Long, seconds: Double,
                                lineage: String)
 
+/** The header line of an index's ingest marker, `v<layout> pos=<bool>
+  * shards=<n>`: the layout it was written under, whether its postings
+  * carry positions and its term-hash shard count. The one parser of it
+  * ([[IngestMarker.read]]) serves [[SegmentBuilder.ingestDone]],
+  * [[SegmentBuilder.indexShards]] and serving's open checks. */
+final case class IngestMarker(layout: Int, positions: Boolean, shards: Int) {
+  def header: String = s"v$layout pos=$positions shards=$shards\n"
+}
+
+object IngestMarker {
+  private val Header = "v(\\d+) pos=(true|false) shards=(\\d+)".r
+
+  /** The marker of `indexDir`, None without one; a header this parser
+    * cannot read (a pre-v2 layout) reads as layout 0. */
+  def read(indexDir: String): Option[IngestMarker] = {
+    val p = Paths.get(indexDir, "_ingested")
+    if (!Files.exists(p)) None
+    else Some(Files.readString(p).linesIterator.nextOption().getOrElse("") match {
+      case Header(v, pos, sh) => IngestMarker(v.toInt, pos.toBoolean, sh.toInt)
+      case _ => IngestMarker(0, positions = false, 0)
+    })
+  }
+}
+
 /** Distributed inverted-index build with per-partition checkpointing —
   * the engine half the reference delegates to the Elasticsearch server.
   *
@@ -94,10 +124,11 @@ final case class ShardManifest(shard: Int, status: String, postings: Long,
   * {{{
   *   docmap/              (doc_id, sha, doclen [, meta…])   – identity + invariant
   *   stats/               (n, avgdl)                         – broadcast scoring stats
-  *   postings/shard=S/    (term, doc_id, tf, doclen)         – stage-0 output,
-  *                         partitioned by shard = pmod(xxhash64(term), shards)
+  *   postings/shard=S/    (term, doc_id, tf, doclen[, positions]) – stage-0
+  *                         output, partitioned by shard = pmod(xxhash64(term), shards)
   *                         so each shard build prunes to its own files
-  *   segments/shard=S/    SegmentRow parquet                 – stage-1 output
+  *   segments/shard=S/    SegmentRow parquet                 – stage-1 output, the
+  *                         one table serving reads (positions ride in the blocks)
   *   manifest/shard_S.json                                   – checkpoint + metrics
   * }}}
   *
@@ -230,8 +261,7 @@ object SegmentBuilder {
     // treat the partial postings dir as a finished ingest (resume gates
     // on this marker, never on stats existence alone).
     IndexIo.commitFile(marker,
-      s"v$LayoutVersion pos=${cfg.storePositions} shards=${cfg.shards}\n" +
-        lineage(spark, indexDir, cfg))
+      IngestMarker(LayoutVersion, cfg.storePositions, cfg.shards).header + lineage(spark, indexDir, cfg))
   }
 
   /** The staged table `(doc_id, sha, doclen, pairs)` of [[ingest]] and
@@ -244,8 +274,8 @@ object SegmentBuilder {
     * ride along with tf — ES indexes positions for text fields by
     * default (match_phrase works out of the box), so the Spark index
     * stores them too, and phrase/proximity queries become index reads
-    * instead of corpus re-tokenizes. Segment/codec layers are
-    * position-free; they column-prune positions away at their scan. */
+    * instead of corpus re-tokenizes. The segment build carries them
+    * into its blocks (layout v4), where serving reads them. */
   private def stagedRows(docs: DataFrame, id: Column, contentCol: Column,
                          cfg: EngineConfig): DataFrame = {
     val spread =
@@ -292,13 +322,13 @@ object SegmentBuilder {
   }
 
   /** On-disk layout version, written into the ingest marker: v2 added
-    * positional postings; v3 adds the thash column + hash-clustered
-    * postings files (serving prunes on it). An index ingested under a
-    * different layout must fully re-ingest — resume would otherwise
-    * serve a layout the readers don't expect (e.g. phrase queries
-    * finding no positions, or a pruned read filtering a column the
-    * files lack). */
-  val LayoutVersion = 3
+    * positional postings; v3 added the thash column + hash-clustered
+    * postings files; v4 carries positions in the segment blocks, the
+    * one table serving reads. An index ingested under a different
+    * layout must fully re-ingest — resume would otherwise serve a
+    * layout the readers don't expect (e.g. phrase queries finding no
+    * positions in the blocks). */
+  val LayoutVersion = 4
 
   /** Incremental append (streaming-style / micro-batch): docmap
     * identity rows plus postings for `docs`, written in the store's
@@ -517,25 +547,34 @@ object SegmentBuilder {
     * shard-count flip must re-ingest — the postings partitioning is
     * hash-of-term mod shards, so readers prune by it). */
   def ingestDone(indexDir: String, cfg: EngineConfig = EngineConfig.default): Boolean =
-    Files.exists(Paths.get(indexDir, "_ingested")) &&
-      Files.exists(Paths.get(indexDir, "qsplits")) &&
-      Files.readString(Paths.get(indexDir, "_ingested"))
-        .startsWith(s"v$LayoutVersion pos=${cfg.storePositions} shards=${cfg.shards}\n")
+    Files.exists(Paths.get(indexDir, "qsplits")) &&
+      IngestMarker.read(indexDir).contains(IngestMarker(LayoutVersion, cfg.storePositions, cfg.shards))
+
+  /** The ingest marker of an index this layout can read: fails loud —
+    * before any Spark job — on a missing marker ("ingest first") and on
+    * another layout ("re-ingest"). */
+  def marker(indexDir: String): IngestMarker = {
+    val m = IngestMarker.read(indexDir).getOrElse(
+      throw new IllegalArgumentException(s"$indexDir has no ingest marker — ingest first"))
+    require(m.layout == LayoutVersion,
+      s"$indexDir was ingested under layout v${m.layout}, this build reads v$LayoutVersion — re-ingest")
+    m
+  }
+
+  /** The marker of an index serving can open: [[marker]]'s checks, plus
+    * a built segment table ("run build" — serving reads nothing else). */
+  def servingMarker(indexDir: String): IngestMarker = {
+    val m = marker(indexDir)
+    require(Files.isDirectory(Paths.get(indexDir, "segments")),
+      s"$indexDir has no segments — run build (buildAll) before serving it")
+    m
+  }
 
   /** The shard count this index was WRITTEN with, from the ingest
     * marker — serving must prune by the on-disk value, never by a
     * caller-supplied config that may disagree (a silent mismatch would
     * drop postings from pruned reads instead of failing). */
-  def indexShards(indexDir: String): Int = {
-    val marker = Paths.get(indexDir, "_ingested")
-    require(Files.exists(marker), s"$indexDir has no ingest marker — ingest first")
-    val head = Files.readString(marker).linesIterator.next()
-    "shards=(\\d+)".r.findFirstMatchIn(head) match {
-      case Some(m) => m.group(1).toInt
-      case None => throw new IllegalArgumentException(
-        s"$indexDir ingest marker has no shard count (pre-v2 layout) — re-ingest")
-    }
-  }
+  def indexShards(indexDir: String): Int = marker(indexDir).shards
 
   /** Doc-space CDF resolution for range salting. */
   val QuantileBuckets = 1024
@@ -612,6 +651,10 @@ object SegmentBuilder {
     val (_, avgdl) = readStats(spark, indexDir)
     val post = spark.read.parquet(s"$indexDir/postings")
       .filter(col("shard") === shard) // partition-pruned scan
+    // a freqs-only store has no positions column: its blocks hold none
+    val positions =
+      if (post.columns.contains("positions")) col("positions")
+      else typedLit(Array.empty[Int]).as("positions")
 
     // hot-term detection: df + doc-span per term (map-side-combined
     // agg), keep only the few terms needing >1 salt — broadcastable by
@@ -650,7 +693,7 @@ object SegmentBuilder {
           .otherwise(rangePiece * col("hsalts") +
             pmod(xxhash64(col("doc_id")), col("hsalts")).cast("int")))
       .select(col("term"), col("salt"), col("doc_id"),
-        col("tf").cast("long").as("tf"), col("doclen").cast("long").as("doclen"))
+        col("tf").cast("long").as("tf"), col("doclen").cast("long").as("doclen"), positions)
 
     val postingsAcc = spark.sparkContext.longAccumulator(s"postings_$shard")
     val bytesAcc = spark.sparkContext.longAccumulator(s"bytes_$shard")
@@ -671,7 +714,9 @@ object SegmentBuilder {
   }
 
   /** Iterator-to-iterator run encoder: never materializes a run; at most
-    * one segment row (<= blockSize*blocksPerRow postings) is in flight. */
+    * one segment row (<= blockSize*blocksPerRow postings) is in flight.
+    * A (term, doc) pair seen twice — a replayed append's postings that
+    * no compaction has removed — fails loud, naming the pair. */
   def encodeRuns(rows: Iterator[PostingRec], blockSize: Int, blocksPerRow: Int,
                  k1: Double, b: Double, avgdl: Double,
                  postingsAcc: LongAccumulator = null,
@@ -684,24 +729,29 @@ object SegmentBuilder {
         val term = it.head.term
         val salt = it.head.salt
         val run = new Iterator[Codec.Posting] {
+          private var prev = Long.MinValue
           def hasNext: Boolean =
             it.hasNext && it.head.term == term && it.head.salt == salt
           def next(): Codec.Posting = {
             val r = it.next()
-            Codec.Posting(r.doc_id, r.tf, r.doclen)
+            if (r.doc_id == prev)
+              throw new IllegalStateException(s"duplicate postings rows for (term <$term>, doc ${r.doc_id}): " +
+                "a replayed append's, and compactShards removes them")
+            prev = r.doc_id
+            Codec.Posting(r.doc_id, r.tf, r.doclen, r.positions)
           }
         }
         Codec.encodeRun(run, blockSize, k1, b, avgdl)
           .grouped(blocksPerRow).zipWithIndex.map { case (blocks, seq) =>
             val n = blocks.map(_.n.toLong).sum
             val bytes = blocks.map(bl =>
-              bl.deltas.length + bl.tfs.length + bl.dls.length).sum.toLong
+              bl.deltas.length + bl.tfs.length + bl.dls.length + bl.positions.length).sum.toLong
             if (postingsAcc != null) postingsAcc.add(n)
             if (bytesAcc != null) bytesAcc.add(bytes)
             if (segRowsAcc != null) segRowsAcc.add(1)
             SegmentRow(term, salt, seq, n,
               blocks.head.firstDoc, lastDoc(blocks.last), blocks.map(_.maxU).max,
-              blocks.map(bl => BlockRow(bl.firstDoc, bl.n, bl.deltas, bl.tfs, bl.dls, bl.maxU)))
+              blocks.map(bl => BlockRow(bl.firstDoc, bl.n, bl.deltas, bl.tfs, bl.dls, bl.maxU, bl.positions)))
           }
       }
     }

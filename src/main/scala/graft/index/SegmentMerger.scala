@@ -9,15 +9,16 @@ import graft.config.EngineConfig
 
 /** Segment consolidation (SURVEY.md §7.1 step 5): k-way merge the
   * salted runs of each term back into one docId-ordered run and
-  * re-encode — fewer cursors per query term, denser blocks.
+  * re-encode, positions included — denser blocks, and a merged index
+  * serves every request kind without the postings table.
   *
   * Scale guard (DEFAULT-ON): a term whose runs total more than
   * `maxRunPostings` (default 8x the build's saltTargetPostings; pass a
   * non-positive value to inherit that default, `Long.MaxValue` to
   * disable) keeps its salted runs — forcing a monster posting list
   * through one task would recreate exactly the skew the salting
-  * defused; the query layer treats multiple runs as extra WAND
-  * cursors, so both layouts answer identically (tested).
+  * defused; the serving gather merges a term's runs into one entry,
+  * so both layouts answer identically (tested).
   */
 object SegmentMerger {
 
@@ -47,12 +48,10 @@ object SegmentMerger {
         else if (total > cap) rows.iterator
         else {
           val runs = bySalt.values.toSeq.map { rs =>
-            rs.sortBy(_.row_seq).iterator.flatMap(_.blocks).flatMap(bl =>
-              Codec.decodeBlock(Codec.Block(bl.first_doc, bl.n, bl.deltas,
-                bl.tfs, bl.dls, bl.max_u)))
+            rs.sortBy(_.row_seq).iterator.flatMap(_.blocks).flatMap(bl => Codec.decodeBlock(bl.block))
           }
           val merged = Codec.mergeRuns(runs).map(p =>
-            PostingRec(term, 0, p.docId, p.tf, p.dl))
+            PostingRec(term, 0, p.docId, p.tf, p.dl, p.positions))
           SegmentBuilder.encodeRuns(merged, blockSize,
             SegmentBuilder.BlocksPerRow, k1, b, avgdl)
         }
@@ -63,9 +62,9 @@ object SegmentMerger {
   /** Merge every shard into `outDir` (stats/docmap are shared via copy
     * of the tiny tables so the merged index is self-contained). The
     * shards are the source index's own ([[SegmentBuilder.indexShards]]),
-    * and the header line of its ingest marker (layout, positions,
-    * shard count) is committed last, so the merged index is servable:
-    * serving prunes by the marker's shard count. */
+    * and the header line of its ingest marker ([[IngestMarker]]) is
+    * committed last, so the merged index is servable: serving prunes by
+    * the marker's shard count. */
   def mergeAll(spark: SparkSession, indexDir: String, outDir: String,
                cfg: EngineConfig = EngineConfig.default,
                maxRunPostings: Long = -1L): Unit = {
@@ -80,7 +79,6 @@ object SegmentMerger {
     // survive consolidation
     spark.read.parquet(s"$indexDir/docmap")
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docmap")
-    IndexIo.commitFile(marker,
-      Files.readString(Paths.get(indexDir, "_ingested")).linesIterator.next() + "\n")
+    IndexIo.commitFile(marker, SegmentBuilder.marker(indexDir).header)
   }
 }

@@ -3,13 +3,10 @@ package graft.query
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 import graft.analyze.CodeTokenizer
 import graft.config.EngineConfig
-import graft.index.{Postings, SegmentBuilder}
+import graft.index.{Codec, IngestMarker, Postings, SegmentBuilder}
 
 /** Okapi BM25 (k1=1.2, b=0.75 — the ES 7.x default similarity the
   * reference's index would use; public knowledge) with Lucene-style
@@ -30,10 +27,11 @@ import graft.index.{Postings, SegmentBuilder}
   *    narrow pass in which every docs partition gathers its query terms'
   *    positional postings ([[positionalEntries]]) and evaluates; the
   *    lazy [[rankTopK]] ranks the rows;
-  *  - the index: [[PhraseHandle.serve]] evaluates over the positional
-  *    cache's doc partitions, and [[Wand]]'s block-max WAND serves term
-  *    disjunctions with the same fold ([[foldTerms]]); [[ServedTopK]]
-  *    ranks both.
+  *  - the index: the one serving cache of a [[Wand.Handle]] holds one
+  *    decoded entry per term and doc range; [[PhraseHandle.serve]]
+  *    evaluates over it, and [[Wand]]'s block-max WAND serves term
+  *    disjunctions over the same entries, summing a doc's weights in the
+  *    same term order; [[ServedTopK]] ranks both.
   * Term expansions are capped by [[Wand.capped]] over the served
   * dictionary and by [[Wand.expandCapped]] on the corpus query_string
   * path. [[foldAscending]] is left only for the folds that are not a
@@ -65,15 +63,7 @@ object BM25 {
   private[query] def foldAscending(entry: Column): Column =
     SumStructFieldExpr.sumField(sort_array(collect_list(entry)), 1, 2)
 
-  /** The scalar fold step: the sum from 0.0 of `(term, weight)`
-    * contributions in ascending [[ServedTopK.termOrder]] — Spark's string
-    * order — the order every score sums in. WAND's per-doc sum folds
-    * through it; the positional evaluator ([[posHits]]) sums in the same
-    * order, its terms sorted once per call. */
-  private[query] def foldTerms(contribs: scala.collection.Seq[(String, Double)]): Double =
-    contribs.sortBy(_._1)(ServedTopK.termOrder).foldLeft(0.0)(_ + _._2)
-
-  /** Term-count threshold above which [[statsAndDf]] splits into two
+  /** Term-count threshold above which the stats job splits into two
     * passes: one `array_contains` aggregate column per term is the
     * single-pass shape, but past a few dozen terms (prefix/fuzzy
     * expansions, MLT candidate vocabularies) the per-doc term probing
@@ -81,87 +71,65 @@ object BM25 {
   private val StatsSinglePassMaxTerms = 24
 
   /** ONE bounded stats job computing the BM25 scoring constants
-    * (N, avgdl) and per-term document frequency for a bounded term set.
-    * Replaces the former three-subtree shape — a doclens-only corpus
-    * tokenize for the stats plus a FULL-VOCABULARY docFreq aggregation
-    * whose shuffle existed only to be inner-joined down to the query's
-    * handful of terms (guide §1.2 step 1 / §2.3 "aggregate before you
-    * shuffle": df for k query terms never needs the whole term space
-    * shuffled; at 100 TB the vocabulary aggregation is corpus-sized).
+    * (N, avgdl) and per-term document frequency for a bounded term set:
+    * [[statsAndDfMulti]] over the one field. Replaces the former
+    * three-subtree shape — a doclens-only corpus tokenize for the stats
+    * plus a FULL-VOCABULARY docFreq aggregation whose shuffle existed
+    * only to be inner-joined down to the query's handful of terms (guide
+    * §1.2 step 1 / §2.3 "aggregate before you shuffle": df for k query
+    * terms never needs the whole term space shuffled; at 100 TB the
+    * vocabulary aggregation is corpus-sized). */
+  def statsAndDf(docs: DataFrame, idCol: Column, contentCol: Column,
+                 terms: Seq[String]): (Long, Double, Map[String, Long]) =
+    statsAndDfMulti(docs, idCol, Seq(contentCol), terms).head
+
+  /** Every field's BM25 constants (n, avgdl, df) out of ONE corpus scan,
+    * each field tokenized once inside the same projection — the one
+    * stats builder, a single field its one-element case
+    * ([[statsAndDf]]), a multi_match/dis_max preamble the many-field one.
     *
     * Exactness: n and avgdl are the same count/avg over the same
     * tokenized rows (the doclen sum is an integer < 2^53, so the double
     * sum is exact and order-independent); df(t) = number of docs whose
     * kept-token array contains t, which is by construction the number
-    * of postings rows for t. Terms absent from the corpus are absent
-    * from the map — the former inner join with docFreq dropped them
-    * identically. Above [[StatsSinglePassMaxTerms]] the df side runs as
-    * a term-pruned postings aggregation (still never full-vocabulary);
-    * the values are identical either way. */
-  def statsAndDf(docs: DataFrame, idCol: Column, contentCol: Column,
-                 terms: Seq[String]): (Long, Double, Map[String, Long]) = {
-    val ts = terms.distinct
-    val tok = Postings.tokenized(docs, idCol, contentCol)
-    if (ts.size <= StatsSinglePassMaxTerms) {
-      val aggs = count(lit(1)).as("n") +: avg(col("doclen")).as("avgdl") +:
-        ts.map(t => count(when(array_contains(col("tokens"), t), 1)))
-      val row = tok.agg(aggs.head, aggs.tail: _*).head()
-      val n = row.getLong(0)
-      val avgdl = if (row.isNullAt(1)) 0.0 else row.getDouble(1)
-      val dfMap = ts.zipWithIndex.flatMap { case (t, i) =>
-        val c = row.getLong(2 + i)
-        if (c > 0) Some(t -> c) else None
-      }.toMap
-      (n, avgdl, dfMap)
-    } else {
-      // the stats aggregate and the term-pruned df aggregate are
-      // independent jobs — submit them from two driver threads so the
-      // second backfills the first's straggler tail (guide §2.6)
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val statsF = Future {
-        tok.agg(count(lit(1)).as("n"), avg(col("doclen")).as("avgdl")).head()
-      }
-      val dfF = Future {
-        Postings.build(docs, idCol, contentCol)
-          .filter(col("term").isInCollection(ts))
-          .groupBy("term").agg(count(lit(1)).as("df"))
-          .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
-      }
-      val r = Await.result(statsF, Duration.Inf)
-      val n = r.getLong(0)
-      val avgdl = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
-      (n, avgdl, Await.result(dfF, Duration.Inf))
-    }
-  }
-
-  /** Multi-field twin of [[statsAndDf]]: every field's (n, avgdl, df)
-    * comes out of ONE corpus scan (each field tokenized once inside the
-    * same projection) instead of one stats job per field — the
-    * multi_match/dis_max preamble. Values are identical to calling
-    * [[statsAndDf]] per field (same counts, same exact integer sums). */
+    * of postings rows for t. Terms absent from a field are absent from
+    * its map. Above [[StatsSinglePassMaxTerms]] terms the df side runs
+    * as a term-pruned postings aggregation per field (still never
+    * full-vocabulary), submitted next to the stats aggregate from its
+    * own driver thread so it backfills the other's straggler tail
+    * (guide §2.6); the values are identical either way. */
   def statsAndDfMulti(docs: DataFrame, idCol: Column, fields: Seq[Column],
                       terms: Seq[String]): Seq[(Long, Double, Map[String, Long])] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
     val ts = terms.distinct
-    if (ts.size > StatsSinglePassMaxTerms || fields.size == 1)
-      return fields.map(f => statsAndDf(docs, idCol, f, ts))
+    val onePass = ts.size <= StatsSinglePassMaxTerms
     val tok = docs.select(fields.zipWithIndex.map { case (f, i) =>
       CodeTokenizer.tokensColFast(f).as(s"tokens_$i") }: _*)
+    // per field: avg(doclen), then (one pass) one df count per term
+    val width = if (onePass) 1 + ts.size else 1
     val aggs: Seq[Column] = count(lit(1)).as("n") +:
       fields.indices.flatMap { i =>
         avg(size(col(s"tokens_$i")).cast("long")) +:
-          ts.map(t => count(when(array_contains(col(s"tokens_$i"), t), 1)))
+          (if (onePass) ts.map(t => count(when(array_contains(col(s"tokens_$i"), t), 1))) else Nil)
       }
+    val dfs = Future(if (onePass) Nil else fields.map(f =>
+      Postings.build(docs, idCol, f).filter(col("term").isInCollection(ts))
+        .groupBy("term").agg(count(lit(1)).as("df"))
+        .collect().map(x => x.getString(0) -> x.getLong(1)).toMap))
     val row = tok.agg(aggs.head, aggs.tail: _*).head()
     val n = row.getLong(0)
+    val pruned = Await.result(dfs, Duration.Inf)
     fields.indices.map { i =>
-      val base = 1 + i * (1 + ts.size)
+      val base = 1 + i * width
       val avgdl = if (row.isNullAt(base)) 0.0 else row.getDouble(base)
-      val dfMap = ts.zipWithIndex.flatMap { case (t, j) =>
-        val c = row.getLong(base + 1 + j)
-        if (c > 0) Some(t -> c) else None
-      }.toMap
+      val dfMap =
+        if (!onePass) pruned(i)
+        else ts.zipWithIndex.flatMap { case (t, j) =>
+          val c = row.getLong(base + 1 + j)
+          if (c > 0) Some(t -> c) else None
+        }.toMap
       (n, avgdl, dfMap)
     }
   }
@@ -221,11 +189,12 @@ object BM25 {
     * term; a term it does not hold counts as absent), then one narrow
     * pass with no shuffle: each docs partition tokenizes its docs into
     * positional postings ([[Postings.buildPositional]]), keeps the query
-    * terms' rows, gathers them per term as the positional cache does
-    * ([[positionalEntries]]), swaps each entry's partition df for the
-    * global one and runs [[posHits]] per qid. Every doc's postings sit
-    * in its own partition, so the per-doc fold needs no shuffle; N and
-    * avgdl count zero-token docs, which hold no postings. */
+    * terms' rows, reads them typed, positions a primitive array
+    * ([[CorpusPosting]]), gathers them per term ([[positionalEntries]]),
+    * swaps each entry's partition df for the global one and runs
+    * [[posHits]] per qid. Every doc's postings sit in its own partition,
+    * so the per-doc fold needs no shuffle; N and avgdl count zero-token
+    * docs, which hold no postings. */
   def corpusHits(docs: DataFrame, idCol: Column, contentCol: Column, queries: Seq[(Int, PosQuery)],
                  cfg: EngineConfig = EngineConfig.default,
                  statsKnown: Option[(Long, Double, Map[String, Long])] = None): DataFrame = {
@@ -236,28 +205,27 @@ object BM25 {
     val df = terms.flatMap(t => dfMap.get(t).map(t -> _)).toMap
     val k1 = cfg.k1; val b = cfg.b
     Postings.buildPositional(docs, idCol, contentCol).filter(col("term").isInCollection(df.keys))
+      .as[CorpusPosting]
       .mapPartitions { rows =>
-        val entries = positionalEntries(rows.map(r => InternalRow(UTF8String.fromString(r.getString(0)),
-            r.getLong(1), r.getLong(2), r.getLong(3), ArrayData.toArrayData(r.getSeq[Int](4).toArray))),
-          "a docs partition").map { case (t, e) => t -> e.copy(df = df(t)) }
+        val entries = positionalEntries(rows, df)
         queries.iterator.flatMap { case (qid, q) =>
           posHits(q, entries, n, avgdl, k1, b).map { case (s, d) => (qid, d, s) } }
       }.toDF("qid", "doc_id", "score")
   }
 
   /** Phrase top-k served from a PERSISTED index ([[graft.index.SegmentBuilder]]
-    * layout v2+): positions live in the shard-partitioned postings store
-    * — built ONCE at ingest, exactly like ES indexes positions for text
-    * fields by default (match_phrase never re-reads source text) — and
-    * the index's [[PhraseHandle]] (from [[phraseHandleFor]]) holds them
-    * in its executor-resident positional cache, so a phrase batch is ONE
+    * layout v4): positions are tokenized ONCE at ingest, exactly like ES
+    * indexes positions for text fields by default (match_phrase never
+    * re-reads source text), and ride in the segment blocks `buildAll`
+    * encodes; the index's [[PhraseHandle]] (from [[phraseHandleFor]])
+    * reads them from the one serving cache, so a phrase batch is ONE
     * Spark job over that cache, never a corpus tokenize and never a
     * parquet read. Corpus stats come from the index's stats table
     * (computed over ALL docs at ingest, including zero-token docs the
     * postings cannot carry). Same result contract as [[phraseTopK]];
     * eager and bounded like [[PhraseHandle.topK]], which serves it. The
     * first call on an index (or after it changed) pays the cache build,
-    * a read of the whole postings store. */
+    * a read of the whole segment store. */
   def phraseTopKIndexed(spark: SparkSession, indexDir: String,
                         phrases: Seq[(Int, String)],
                         cfg: EngineConfig = EngineConfig.default,
@@ -268,22 +236,27 @@ object BM25 {
     // path would turn "nothing to do" into an exception
     if (phrases.forall { case (_, t) => CodeTokenizer.tokenize(t).isEmpty })
       return ServedTopK.noHits(spark)
-    // served through the process-level handle memo (the match_phrase
-    // twin of Wand.handleFor): the positional cache must amortize across
-    // calls, not recur per query
+    // served through the process-level handle memo: the serving cache
+    // must amortize across calls, not recur per query
     phraseHandleFor(spark, indexDir, cfg).topK(phrases, slop)
   }
 
-  /** The process-level [[PhraseHandle]] of an index, from the handle
-    * memo [[Wand.memoHandle]], signed over what phrase serving reads —
-    * postings + stats: an append/compaction/restat lands new files and
-    * swaps the handle (closing the old one, which releases its
-    * positional cache), an untouched index reuses it with zero
-    * metadata jobs. */
+  /** The [[PhraseHandle]] view of the index's process-level
+    * [[Wand.Handle]] ([[Wand.handleFor]]: one handle and one cache per
+    * index, signed over segments + stats). A freqs-only index fails loud
+    * before any Spark job: its blocks hold no positions. */
   def phraseHandleFor(spark: SparkSession, indexDir: String,
-                      cfg: EngineConfig = EngineConfig.default): PhraseHandle =
-    Wand.memoHandle(spark, indexDir, cfg, Seq("postings", "stats"))(
-      new PhraseHandle(spark, indexDir, cfg))
+                      cfg: EngineConfig = EngineConfig.default): PhraseHandle = {
+    requirePositions(SegmentBuilder.marker(indexDir), indexDir)
+    Wand.handleFor(spark, indexDir, cfg).phrase
+  }
+
+  /** Fails loud when `m`, the marker of `indexDir`, says its postings
+    * carry no positions (ES index_options: freqs): a phrase cannot be
+    * matched there. */
+  private[query] def requirePositions(m: IngestMarker, indexDir: String): Unit =
+    require(m.positions, s"$indexDir was ingested without positions (index_options freqs): " +
+      "phrase queries need positions — re-ingest with storePositions")
 
   /** The shard a term's postings land in — the DRIVER-SIDE twin of the
     * ingest writer's `pmod(xxhash64(term), shards)` (same XXH64 core,
@@ -308,7 +281,7 @@ object BM25 {
     * `term IN (...)` pushed into the parquet reader (row-group stats +
     * dictionary pruning). Only [[graft.Bench]]'s `phrase_prune`
     * measurement reads postings this way: every served request reads
-    * the positional cache ([[PhraseHandle]]). The shard count comes from
+    * the serving cache ([[Wand.Handle]]). The shard count comes from
     * the index's OWN ingest marker, never from a caller config — a
     * silent mismatch would drop postings from the pruned read instead
     * of failing. */
@@ -339,20 +312,25 @@ object BM25 {
     all
   }
 
-  /** One term's positional postings in one doc partition, as the
-    * positional cache holds them: flat primitive arrays sorted by doc —
-    * `docs(i)` has doclen `doclens(i)` and positions
-    * `positions(posOff(i) until posOff(i + 1))`, as many as its tf
-    * ([[tf]]) — plus the term's df: its postings-row count in the whole
-    * store (or, in [[corpusHits]], the whole corpus), which a cut
-    * keeps. */
+  /** One term's postings in one doc partition, as the serving cache and
+    * the corpus evaluator hold them: flat primitive arrays sorted by doc
+    * — `docs(i)` has doclen `doclens(i)` and tf [[tf]] `posOff(i + 1) -
+    * posOff(i)`, its positions `positions(posOff(i) until posOff(i + 1))`
+    * (none at all — `positions` empty — in a freqs-only index) — plus
+    * the term's df: its postings count in the whole store (or, in
+    * [[corpusHits]], the whole corpus), which a cut keeps. A served
+    * entry also holds `blockMax`: the max of the BM25 tf/length partial
+    * [[Codec.u]] over each run of `blockSize` postings, under the
+    * serving stats and config ([[withBlockMax]]), the WAND block bounds. */
   final case class PosEntry(df: Long, docs: Array[Long], doclens: Array[Int],
-                            posOff: Array[Int], positions: Array[Int]) {
-    /** The tf of `docs(i)`: its position count. */
+                            posOff: Array[Int], positions: Array[Int],
+                            blockMax: Array[Double] = Array.emptyDoubleArray) {
+    /** The tf of `docs(i)`. */
     def tf(i: Int): Int = posOff(i + 1) - posOff(i)
 
-    /** The postings of docs [lo, hi), positions rebased; None when the
-      * range holds none of the entry's docs. */
+    /** The postings of docs [lo, hi), positions rebased, no block
+      * maxima; the entry itself when it holds no other doc, None when
+      * it holds none of them. */
     def within(lo: Long, hi: Long): Option[PosEntry] = {
       def cut(b: Long) = { val i = java.util.Arrays.binarySearch(docs, b); if (i >= 0) i else -i - 1 }
       val from = if (lo == Long.MinValue) 0 else cut(lo)
@@ -366,67 +344,91 @@ object BM25 {
       }
     }
 
-    /** The same postings in the order of `sorted`, the entry's docs
-      * sorted (and distinct): row i moves to the slot of its doc. */
-    def permuted(sorted: Array[Long]): PosEntry = {
-      val to = docs.map(java.util.Arrays.binarySearch(sorted, _))
-      val dl, len = new Array[Int](docs.length)
-      for (i <- docs.indices) { dl(to(i)) = doclens(i); len(to(i)) = tf(i) }
-      val off = len.scanLeft(0)(_ + _)
-      val pos = new Array[Int](positions.length)
-      for (i <- docs.indices) System.arraycopy(positions, posOff(i), pos, off(to(i)), len(to(i)))
-      PosEntry(df, sorted, dl, off, pos)
+    /** The entry with its `blockMax`: per run of `blockSize` postings, the
+      * max [[Codec.u]] under `k1`, `b` and `avgdl`. */
+    def withBlockMax(blockSize: Int, k1: Double, b: Double, avgdl: Double): PosEntry = {
+      val m = new Array[Double]((docs.length + blockSize - 1) / blockSize)
+      var i = 0
+      while (i < docs.length) {
+        val u = Codec.u(tf(i), doclens(i), k1, b, avgdl)
+        if (u > m(i / blockSize)) m(i / blockSize) = u
+        i += 1
+      }
+      copy(blockMax = m)
     }
   }
 
-  /** The name of an index's positional cache RDD. */
-  private[query] def positionalCacheName(indexDir: String): String =
-    s"graft positional cache $indexDir"
-
-  /** One shard's (or one docs partition's) positional entries: postings
-    * rows `(term, doc_id, doclen, tf, positions)` in any order, gathered
-    * per term into one [[PosEntry]] per term, sorted by doc, its df the
-    * term's row count. A repeated (term, doc) row — a replayed append's
-    * postings that no compaction has deduplicated yet, or a doc id a
-    * corpus holds twice — fails loud: df and matches would silently
-    * differ from the deduplicated store's. So does a row whose tf is not
-    * its position count, which the entry would not keep. */
-  private def positionalEntries(rows: Iterator[InternalRow], where: String): Map[String, PosEntry] = {
-    final class TermRows {
-      val docs = new mutable.ArrayBuilder.ofLong
-      val doclens, posOff, positions = new mutable.ArrayBuilder.ofInt
+  object PosEntry {
+    /** Gathers one term's postings, in any doc order, into one
+      * doc-sorted [[PosEntry]]. */
+    final class Builder {
+      private val docs = new mutable.ArrayBuilder.ofLong
+      private val doclens, posOff, positions = new mutable.ArrayBuilder.ofInt
+      private var off = 0
+      private var last = Long.MinValue
+      private var inOrder = true
       posOff += 0
+
+      /** A posting of `doc` with tf `tf` and positions `ps(from until
+        * from + tf)`, or none when `ps` is empty. */
+      def add(doc: Long, doclen: Long, tf: Int, ps: Array[Int], from: Int): Unit = {
+        if (doc <= last) inOrder = false
+        last = doc
+        docs += doc
+        doclens += Math.toIntExact(doclen)
+        if (ps.nonEmpty) positions.addAll(ps, from, tf)
+        off += tf
+        posOff += off
+      }
+
+      /** The entry, df `df`; a doc added twice fails loud, naming `where`. */
+      def result(df: Long, where: => String): PosEntry = {
+        val e = PosEntry(df, docs.result(), doclens.result(), posOff.result(), positions.result())
+        if (inOrder) e
+        else {
+          val sorted = e.docs.clone()
+          java.util.Arrays.sort(sorted)
+          var i = 1
+          while (i < sorted.length) {
+            if (sorted(i - 1) == sorted(i))
+              throw new IllegalStateException(s"$where holds duplicate postings rows for doc ${sorted(i)}: " +
+                "a doc id held twice, or a replayed append, which compactShards removes")
+            i += 1
+          }
+          // row i moves to the slot of its doc
+          val to = e.docs.map(java.util.Arrays.binarySearch(sorted, _))
+          val dl, len = new Array[Int](sorted.length)
+          for (i <- to.indices) { dl(to(i)) = e.doclens(i); len(to(i)) = e.tf(i) }
+          val off = len.scanLeft(0)(_ + _)
+          val pos = new Array[Int](e.positions.length)
+          if (pos.nonEmpty) for (i <- to.indices) System.arraycopy(e.positions, e.posOff(i), pos, off(to(i)), len(to(i)))
+          PosEntry(df, sorted, dl, off, pos)
+        }
+      }
     }
-    val byTerm = new java.util.HashMap[UTF8String, TermRows]()
+  }
+
+  /** One positional postings row of a corpus, typed: its positions a
+    * primitive array, decoded straight from the row, never boxed. */
+  final case class CorpusPosting(term: String, doc_id: Long, doclen: Long, tf: Long, positions: Array[Int])
+
+  /** One docs partition's positional entries: its postings rows in any
+    * order, gathered per term into one [[PosEntry]] per term, sorted by
+    * doc, its df the term's global one from `df`. A repeated (term, doc) row — a
+    * doc id the corpus holds twice — fails loud: df and matches would
+    * silently differ from the deduplicated corpus'. So does a row whose
+    * tf is not its position count, which the entry would not keep. */
+  private def positionalEntries(rows: Iterator[CorpusPosting], df: Map[String, Long]): Map[String, PosEntry] = {
+    val byTerm = new java.util.HashMap[String, PosEntry.Builder]()
     rows.foreach { r =>
-      val t = r.getUTF8String(0)
-      var b = byTerm.get(t)
-      if (b == null) { b = new TermRows; byTerm.put(t.clone(), b) }
-      b.docs += r.getLong(1)
-      b.doclens += Math.toIntExact(r.getLong(2))
-      val ps = r.getArray(4)
-      if (r.getLong(3) != ps.numElements())
-        throw new IllegalStateException(s"$where holds a postings row for (term <$t>, doc ${r.getLong(1)}) " +
-          s"with tf ${r.getLong(3)} but ${ps.numElements()} positions")
-      var i = 0
-      while (i < ps.numElements()) { b.positions += ps.getInt(i); i += 1 }
-      b.posOff += b.positions.length
+      if (r.tf != r.positions.length)
+        throw new IllegalStateException(s"a docs partition holds a postings row for (term <${r.term}>, " +
+          s"doc ${r.doc_id}) with tf ${r.tf} but ${r.positions.length} positions")
+      byTerm.computeIfAbsent(r.term, _ => new PosEntry.Builder)
+        .add(r.doc_id, r.doclen, r.positions.length, r.positions, 0)
     }
     val out = Map.newBuilder[String, PosEntry]
-    byTerm.forEach { (t, b) =>
-      val docs = b.docs.result()
-      val sorted = docs.clone()
-      java.util.Arrays.sort(sorted)
-      var i = 1
-      while (i < sorted.length) {
-        if (sorted(i - 1) == sorted(i))
-          throw new IllegalStateException(s"$where holds duplicate postings rows for " +
-            s"(term <$t>, doc ${sorted(i)}): a doc id held twice, or a replayed append, which compactShards removes")
-        i += 1
-      }
-      val e = PosEntry(docs.length, docs, b.doclens.result(), b.posOff.result(), b.positions.result())
-      out += t.toString -> (if (java.util.Arrays.equals(docs, sorted)) e else e.permuted(sorted))
-    }
+    byTerm.forEach { (t, b) => out += t -> b.result(df(t), s"a docs partition's term <$t>") }
     out.result()
   }
 
@@ -434,13 +436,15 @@ object BM25 {
     * (OR and AND), match_phrase ([[PosQuery.phrase]]),
     * match_phrase_prefix, bool, query_string, more_like_this and the
     * corpus operators built on match — and that [[posHits]] evaluates,
-    * over the corpus ([[corpusHits]]) or the positional cache
+    * over the corpus ([[corpusHits]]) or the serving cache
     * ([[PhraseHandle.serve]]). ES bool roles: a doc matches when it
     * holds every `must` and every `filter` term, at least `msm` distinct
     * `should` terms and at least one `must`, `filter` or `should` term,
     * no `mustNot` term, every required phrase and no excluded one
     * ([[PosPhrase]]); it scores the sum of [[weight]] over the `must`
-    * and `should` terms it holds, folded in [[foldTerms]]' order — a
+    * and `should` terms it holds, summed from 0.0 in ascending
+    * [[ServedTopK.termOrder]] (Spark's string order, the order every
+    * score sums in) — a
     * `filter` term is required but scores nothing, so a doc matched by
     * filters alone scores 0.0. Terms are distinct within and across the
     * four roles. */
@@ -466,47 +470,31 @@ object BM25 {
     * A `required` phrase must hit; an excluded one must not. */
   final case class PosPhrase(offsets: Seq[Seq[String]], slop: Int, required: Boolean = true)
 
-  /** Reusable positional serving handle — the match_phrase twin of
-    * [[Wand.Handle]], which also serves match_phrase_prefix and indexed
-    * query_string: corpus stats, doc-range boundaries and the positional
-    * cache are read once, at init, and serve every batch. Result
+  /** The positional view of an index's [[Wand.Handle]] — match_phrase
+    * requests over the handle's one serving cache, whose entries carry
+    * the positions the segment blocks hold ([[ShardCache]]). One per
+    * handle ([[Wand.Handle.phrase]], from [[phraseHandleFor]]); it
+    * opens nothing of its own, and closing it closes the handle. Result
     * contract identical to [[phraseTopK]].
     *
-    * The positional cache is a [[ShardCache]] named
-    * [[positionalCacheName]] over the index's positional postings. Its
-    * doc partitions, one per doc range, each hold the postings of their
-    * docs, gathered per term and sorted by doc: per shard, one
-    * `term -> [[PosEntry]]` map, one object per term, never one per
-    * posting. Each entry's df is its term's postings-row count in the
-    * whole store — appends no `buildAll` has encoded included — counted
-    * where the init gather sees all of the term's rows, in its shard.
-    * Memory contract: the store's postings and positions as flat arrays
-    * plus per-term overhead, each posting held once, in executor storage
-    * memory. It keeps no dictionary: expansions walk the WAND handle's.
-    * [[caches]] reports the sizes.
+    * [[serve]] is ONE Spark job of ONE stage over the doc partitions,
+    * EAGER: each partition evaluates each [[PosQuery]] over its entries
+    * of the query's terms ([[posHits]]), and the hits rank into a local
+    * `(qid, rank, doc_id, score)` frame in (qid, rank) order. A doc range
+    * holds at most about `serveTargetPostings` postings of the hottest
+    * term, so no request task ever holds a whole hot term.
     *
-    * [[serve]] is ONE Spark job of ONE stage over the doc partitions
-    * ([[ShardCache.topK]]), EAGER: each partition evaluates each
-    * [[PosQuery]] over its entries of the query's terms ([[posHits]]),
-    * and the hits rank into a local `(qid, rank, doc_id, score)` frame in
-    * (qid, rank) order. A doc range holds at most about
-    * `serveTargetPostings` postings of the hottest term, so no request
-    * task ever holds a whole hot term.
-    *
-    * Staleness contract (same as [[Wand.Handle]]): the handle reflects
-    * the index state at construction; [[phraseHandleFor]] swaps it after
-    * [[graft.index.SegmentBuilder.appendDocs]] / a rebuild. */
-  final class PhraseHandle private[query] (spark: SparkSession, indexDir: String,
-                                           cfg: EngineConfig = EngineConfig.default)
-      extends Wand.ServingHandle {
-    private val cache = {
-      val dir = indexDir
-      new ShardCache[InternalRow, PosEntry](spark, indexDir, cfg, positionalCacheName(indexDir), "positional",
-        positionalPostings(spark, indexDir),
-        _.select("term", "doc_id", "doclen", "tf", "positions").queryExecution.toRdd, withDictionary = false)(
-        (rows, s) => positionalEntries(rows, s"$dir/postings/shard=$s"), _.df, _.within(_, _))
-    }
-    val serveRanges: Int = cache.ranges
+    * Staleness contract (the handle's): it reflects what `buildAll`
+    * encoded when the handle opened — appends no `buildAll` has encoded
+    * are not served — and every term's df is sum(n_postings) over its
+    * segment rows, the df term requests score with. */
+  final class PhraseHandle private[query] (wand: Wand.Handle) extends AutoCloseable {
+    /** An unshared view over a handle of its own (the memo's is
+      * [[phraseHandleFor]]'s). */
+    private[query] def this(spark: SparkSession, indexDir: String, cfg: EngineConfig) =
+      this(new Wand.Handle(spark, indexDir, cfg))
+
+    val serveRanges: Int = wand.serveRanges
 
     /** Analyzed match_phrase queries, served by [[serve]]. */
     def topK(phrases: Seq[(Int, String)], slop: Int = 0): DataFrame =
@@ -516,20 +504,12 @@ object BM25 {
     /** Per-qid positional queries (a qid listed twice keeps its last),
       * ranked in ONE Spark job of ONE stage; a batch that reads no term
       * runs no job. */
-    def serve(queries: Seq[(Int, PosQuery)]): DataFrame = {
-      val byQid = queries.toMap
-      val k1 = cfg.k1; val b = cfg.b
-      val n = cache.n; val avgdl = cache.avgdl
-      cache.topK(byQid.toSeq.map { case (qid, q) => qid -> q.terms }) { (qid, _, _, entries) =>
-        posHits(byQid(qid), entries.toMap, n, avgdl, k1, b)
-      }
-    }
+    def serve(queries: Seq[(Int, PosQuery)]): DataFrame = wand.posTopK(queries)
 
-    def caches: Seq[Wand.CacheStat] = cache.caches
+    def caches: Seq[Wand.CacheStat] = wand.caches
 
-    /** Releases the positional cache without blocking (see
-      * [[Wand.memoHandle]]). */
-    def close(): Unit = cache.close()
+    /** Closes the handle it views (see [[Wand.handleFor]]). */
+    def close(): Unit = wand.close()
   }
 
   /** One (qid, partition) of a positional batch, served or corpus: `q`
@@ -543,9 +523,9 @@ object BM25 {
     * allocates per candidate doc only the span check's cursors and the
     * hit itself; an offset with alternatives merges the positions of
     * those a doc holds into a fresh sorted array. The scored terms'
-    * weights ([[weightOf]]) sum in [[foldTerms]]' order, sorted once per
-    * call. Returns (score, doc_id), in doc order. */
-  private def posHits(q: PosQuery, byTerm: Map[String, PosEntry],
+    * weights ([[weightOf]]) sum in [[ServedTopK.termOrder]], sorted once
+    * per call. Returns (score, doc_id), in doc order. */
+  private[query] def posHits(q: PosQuery, byTerm: Map[String, PosEntry],
                       n: Long, avgdl: Double, k1: Double, b: Double): Iterator[(Double, Long)] = {
     val terms = q.terms.filter(byTerm.contains).toArray
     val es = terms.map(byTerm)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.analyze.CodeTokenizer
 import graft.config.EngineConfig
-import graft.index.Postings
+import graft.index.{Postings, SegmentBuilder}
 
 /** The rest of the ES query DSL the reference's NEST client can issue
   * against its index (ElasticSearchPostgreSQLMigrationTool.csproj:32 —
@@ -564,13 +564,14 @@ object QueryDsl {
     * same way), the leading tokens match exactly, and a doc qualifies
     * iff the exact tokens are consecutive and ANY expansion follows at
     * the next position (slop relaxes to ordered proximity, same
-    * contract as match_phrase). Two Spark jobs, no Catalyst query, no
-    * file read: the WAND handle's dictionary walk expands every query's
-    * prefix, then the positional handle serves one [[BM25.PosQuery]] per
-    * query ([[BM25.PhraseHandle.serve]]) — the exact leading terms
-    * required, and one phrase whose last offset holds the expansions,
-    * their positions merged per doc into the one list
-    * [[OrderedSpanMatchExpr]] reads per offset.
+    * contract as match_phrase). ONE Spark job, no Catalyst query, no
+    * file read: every doc partition of the index's serving cache expands
+    * each query's prefix over the dictionary it holds ([[Wand.capped]])
+    * and evaluates one [[BM25.PosQuery]] per query in the same task
+    * ([[Wand.Handle.posTopKOf]]) — the exact leading terms required, and
+    * one phrase whose last offset holds the expansions, their positions
+    * merged per doc into the one list [[OrderedSpanMatchExpr]] reads per
+    * offset.
     *
     * Scoring contract (documented deviation): qualifying docs score
     * BM25 over the EXACT leading terms only — deterministic and
@@ -589,13 +590,16 @@ object QueryDsl {
           "a single-term prefix query is prefixTopK")
       (qid, ts)
     }
-    // one dictionary walk expands every query's last-token prefix
-    val exp = Wand.handleFor(spark, indexDir, cfg).expandPrefixBatch(tokenized.map(_._2.last), maxExpansions)
-    val qs = tokenized.collect { case (qid, ts) if exp(ts.last).nonEmpty =>
-      val phrase = BM25.PosPhrase(ts.init.map(Seq(_)) :+ exp(ts.last), slop)
-      qid -> BM25.PosQuery(ts.init.distinct, phrases = Seq(phrase))
+    if (tokenized.isEmpty || maxExpansions <= 0) return ServedTopK.noHits(spark)
+    val cap = maxExpansions
+    BM25.requirePositions(SegmentBuilder.marker(indexDir), indexDir)
+    Wand.handleFor(spark, indexDir, cfg).posTopKOf { d =>
+      tokenized.flatMap { case (qid, ts) =>
+        val exp = Wand.capped(d, Wand.PrefixOf(ts.last), cap).map(_._1)
+        if (exp.isEmpty) None
+        else Some(qid -> BM25.PosQuery(ts.init.distinct, phrases = Seq(BM25.PosPhrase(ts.init.map(Seq(_)) :+ exp, slop))))
+      }
     }
-    if (qs.isEmpty) ServedTopK.noHits(spark) else BM25.phraseHandleFor(spark, indexDir, cfg).serve(qs)
   }
 
   /** Driver-side analysis shared by the match-family operators. */
@@ -751,22 +755,24 @@ object QueryDsl {
 
   /** query_string served from the index — the operational (CLI) path,
     * rank- and score-identical to [[queryStringTopK]]: each query
-    * compiles ([[qsQueries]]) to the same [[BM25.PosQuery]], served by
-    * the positional handle ([[BM25.PhraseHandle.serve]]) in one Spark
-    * job, no Catalyst query and no file read. The WAND handle opens only
-    * to expand: a batch with a prefix clause walks its term dictionary
-    * first, one more job. */
+    * compiles ([[qsQueries]]) to the same [[BM25.PosQuery]], its prefix
+    * clauses expanded over the dictionary every doc partition of the
+    * index's serving cache holds ([[Wand.capped]]), and evaluated there
+    * in the same task ([[Wand.Handle.posTopKOf]]): ONE Spark job, no
+    * Catalyst query and no file read. */
   def queryStringTopKIndexed(spark: SparkSession, indexDir: String,
                              queries: Seq[(Int, String)],
                              maxExpansions: Int = MaxExpansions,
                              cfg: EngineConfig = EngineConfig.default): DataFrame = {
     val parsed = queries.map { case (qid, s) => qid -> parseQueryString(s) }
-    val prefixes = qsPrefixClauses(parsed).map(_._2)
-    val expMap =
-      if (prefixes.isEmpty) Map.empty[String, Seq[String]]
-      else Wand.handleFor(spark, indexDir, cfg).expandPrefixBatch(prefixes, maxExpansions)
-    val qs = qsQueries(parsed, expMap)
-    if (qs.isEmpty) ServedTopK.noHits(spark) else BM25.phraseHandleFor(spark, indexDir, cfg).serve(qs)
+    val prefixes = qsPrefixClauses(parsed).map(_._2).distinct
+    val cap = maxExpansions
+    // a batch with no term and no prefix compiles to no query: no job
+    if (qsTermRows(parsed).isEmpty && prefixes.isEmpty) return ServedTopK.noHits(spark)
+    if (qsPhrases(parsed).nonEmpty) BM25.requirePositions(SegmentBuilder.marker(indexDir), indexDir)
+    Wand.handleFor(spark, indexDir, cfg).posTopKOf { d =>
+      qsQueries(parsed, prefixes.map(p => p -> Wand.capped(d, Wand.PrefixOf(p), cap).map(_._1)).toMap)
+    }
   }
 
   /** Literal role rows of a parsed query_string batch: terms analyze;

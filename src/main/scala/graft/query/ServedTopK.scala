@@ -34,7 +34,7 @@ import org.apache.spark.sql.types.StructType
   * so the same hits rank the same way on both paths.
   *
   * [[TermDict]] is the sorted term dictionary and its walks: every doc
-  * partition of the WAND handle's cache holds the whole store's one, so
+  * partition of the index's serving cache holds the whole store's one, so
   * a served expansion request expands its patterns inside its one
   * scoring job, each capped the same way in every partition
   * ([[Wand.capped]]) — no per-task cap and no driver merge.
@@ -201,8 +201,7 @@ object ServedTopK {
     /** The one dictionary of sorted, disjoint `runs`: balanced two-way
       * merges, no sort. */
     def merge(runs: Seq[TermDict]): TermDict =
-      if (runs.isEmpty) empty
-      else if (runs.size == 1) runs.head
+      if (runs.size <= 1) runs.headOption.getOrElse(new TermDict(Array.empty, Array.empty))
       else {
         val (l, r) = runs.splitAt(runs.size / 2)
         val (a, b) = (merge(l), merge(r))
@@ -219,9 +218,6 @@ object ServedTopK {
         }
         new TermDict(terms, dfs)
       }
-
-    /** No terms: the dictionary of a cache that keeps none. */
-    val empty: TermDict = new TermDict(Array.empty, Array.empty)
 
     /** How many code points `s` has as `UTF8String.fromString`
       * encodes it, a lone surrogate as `?`: they fill `cps`, at least

@@ -385,7 +385,7 @@ class MainSpec extends SparkSuite {
       val caches = line.get("caches")
       val names = Seq.newBuilder[String]
       caches.fieldNames().forEachRemaining(k => { names += k; () })
-      assert(names.result() === Seq("positional", "wand"))
+      assert(names.result() === Seq("wand"))
       caches.elements().forEachRemaining { c =>
         assert(c.size === 2 && c.get("bytes").isIntegralNumber && c.get("bytes").asLong > 0, c.toString)
         assert(c.get("fill_s").isDouble && c.get("fill_s").asDouble >= 0, c.toString)

@@ -63,4 +63,57 @@ class CodecSpec extends AnyFunSuite {
       }
     }
   }
+
+  /** Positional runs: tf 1–50, position gaps up to 2^20. */
+  private val positionalGen: Gen[List[Posting]] = for {
+    n <- Gen.choose(1, 300)
+    gaps <- Gen.listOfN(n, Gen.choose(1L, 100000L))
+    tfs <- Gen.listOfN(n, Gen.choose(1, 50))
+    dls <- Gen.listOfN(n, Gen.choose(50L, 5000L))
+    seeds <- Gen.listOfN(n, Gen.long)
+  } yield {
+    val docs = gaps.scanLeft(0L)(_ + _).tail
+    docs.indices.map { i =>
+      val r = new scala.util.Random(seeds(i))
+      val pos = Array.fill(tfs(i))(1 + r.nextInt(1 << 20)).scanLeft(-1)(_ + _).tail
+      Posting(docs(i), tfs(i).toLong, dls(i), pos)
+    }.toList
+  }
+
+  private def flat(ps: Seq[Posting]) = ps.map(p => (p.docId, p.tf, p.dl, p.positions.toSeq))
+
+  test("property: positions round-trip through blocks of 1, of exactly blockSize, and a partial tail") {
+    for (ps <- samples(positionalGen, 40); blockSize <- Seq(1, 8, ps.size)) {
+      val blocks = Codec.encodeRun(ps.iterator, blockSize, 1.2, 0.75, 40.0).toList
+      if (blockSize == ps.size) assert(blocks.size === 1 && blocks.head.n === blockSize)
+      assert(blocks.forall(_.positions.nonEmpty))
+      assert(flat(blocks.flatMap(Codec.decodeBlock)) === flat(ps))
+      // the flat decode is the same postings, positions in posting order
+      val d = blocks.map(Codec.decodeFlat)
+      assert(d.flatMap(_.positions.toSeq) === ps.flatMap(_.positions.toSeq))
+    }
+    // a freqs-only run writes empty position streams
+    val freqs = Codec.encodeRun(Iterator(Posting(1, 3, 10), Posting(4, 1, 7)), 1, 1.2, 0.75, 40.0).toList
+    assert(freqs.forall(_.positions.isEmpty))
+    assert(Codec.decodeBlock(freqs.head).head.positions.isEmpty)
+    // a posting whose positions do not match its tf fails loud
+    assertThrows[IllegalArgumentException](
+      Codec.encodeRun(Iterator(Posting(1, 2, 10, Array(3))), 8, 1.2, 0.75, 40.0).toList)
+  }
+
+  test("merge of disjoint salted runs == direct encode of the union, positions included") {
+    for (ps <- samples(positionalGen, 30)) {
+      val bySalt = ps.groupBy(p => (p.docId % 3).toInt).values.toSeq
+      val merged = Codec.mergeRuns(bySalt.map(_.iterator)).toList
+      assert(flat(merged) === flat(ps))
+      val a = Codec.encodeRun(merged.iterator, 16, 1.2, 0.75, 40.0).toList
+      val b = Codec.encodeRun(ps.iterator, 16, 1.2, 0.75, 40.0).toList
+      assert(a.size === b.size)
+      a.zip(b).foreach { case (x, y) =>
+        assert(x.firstDoc === y.firstDoc && x.n === y.n && x.maxU === y.maxU)
+        assert(x.deltas.toSeq === y.deltas.toSeq && x.tfs.toSeq === y.tfs.toSeq && x.dls.toSeq === y.dls.toSeq)
+        assert(x.positions.toSeq === y.positions.toSeq)
+      }
+    }
+  }
 }

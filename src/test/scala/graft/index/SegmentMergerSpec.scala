@@ -69,4 +69,28 @@ class SegmentMergerSpec extends SparkSuite {
       new Directory(new java.io.File(out)).deleteRecursively()
     }
   }
+
+  test("merged index, which has no postings table, serves match_phrase bit-identical to BM25.phraseTopK") {
+    val dir = Files.createTempDirectory("graft_merge_phrase_").toString
+    val out = Files.createTempDirectory("graft_merge_phrase_out_").toString
+    try {
+      val docs = spark.read.parquet(docsPath)
+      SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"), dir, cfg)
+      SegmentBuilder.buildAll(spark, dir, cfg)
+      SegmentMerger.mergeAll(spark, dir, out, cfg)
+      assert(!Files.exists(java.nio.file.Paths.get(out, "postings")))
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+        (r.getInt(0), r.getLong(1), r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3))))
+      for ((phrases, slop) <- Seq(SparkEntry.PhraseQuerySet -> 0,
+          SparkEntry.PhraseSlopQuerySet -> SparkEntry.PhraseSlop)) {
+        val served = rows(graft.query.BM25.phraseTopKIndexed(spark, out, phrases, cfg, slop))
+        assert(served.nonEmpty)
+        assert(served === rows(graft.query.BM25.phraseTopK(spark, docs, col("doc_id"), col("text"),
+          phrases, cfg, slop)), s"slop $slop")
+      }
+    } finally {
+      new Directory(new java.io.File(dir)).deleteRecursively()
+      new Directory(new java.io.File(out)).deleteRecursively()
+    }
+  }
 }

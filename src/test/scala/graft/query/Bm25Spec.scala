@@ -85,6 +85,7 @@ class Bm25Spec extends SparkSuite {
     try {
       graft.index.SegmentBuilder.ingest(spark, docsDf, col("doc_id"), col("text"),
         dir, SparkEntry.IndexCfg)
+      graft.index.SegmentBuilder.buildAll(spark, dir, SparkEntry.IndexCfg)
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
           .sortBy(t => (t._1, t._2)).toSeq

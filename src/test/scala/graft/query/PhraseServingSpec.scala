@@ -10,9 +10,9 @@ import graft.config.EngineConfig
 import graft.index.{RangeSaltExpr, SegmentBuilder}
 
 /** Differential check of served phrase requests ([[BM25.PhraseHandle]]
-  * over its positional cache): bit-equal (rank, doc_id, score) to the
-  * corpus path [[BM25.phraseTopK]] on one small index built to hit the
-  * edges — repeated-term phrases, slop 0/1/2, absent terms, a term in
+  * over the index's serving cache): bit-equal (rank, doc_id, score) to
+  * the corpus path [[BM25.phraseTopK]] on one small index built to hit
+  * the edges — repeated-term phrases, slop 0/1/2, absent terms, a term in
   * every doc, a k-th score tie, doc ranges > 1 splitting candidates,
   * an empty shard, and appended postings files no compaction merged. */
 class PhraseServingSpec extends SparkSuite {
@@ -54,6 +54,7 @@ class PhraseServingSpec extends SparkSuite {
     SegmentBuilder.ingest(spark, base.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, cfg)
     SegmentBuilder.appendDocs(spark, extra.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, cfg)
     SegmentBuilder.restat(spark, dir, cfg)
+    SegmentBuilder.buildAll(spark, dir, cfg)
     dir
   }
 
@@ -88,7 +89,7 @@ class PhraseServingSpec extends SparkSuite {
     }
   }
 
-  test("doc partitions: a rare term spanning several doc ranges, partly appended without buildAll, == BM25.phraseTopK") {
+  test("doc partitions: a rare term spanning several doc ranges, partly appended, == BM25.phraseTopK") {
     import spark.implicits._
     val c = EngineConfig.default.copy(shards = 2, buildPartitions = 2, topK = 5, serveTargetPostings = 32)
     val words = Seq("alpha", "beta", "gamma", "delta")
@@ -106,6 +107,7 @@ class PhraseServingSpec extends SparkSuite {
       SegmentBuilder.ingest(spark, base.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
       SegmentBuilder.appendDocs(spark, extra.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
       SegmentBuilder.restat(spark, dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
       val h = BM25.phraseHandleFor(spark, dir, c)
       assert(h.serveRanges > 1, "the batch must fan out over doc partitions")
       val (_, bounds) = Wand.docRanges(spark, dir, c, (base ++ extra).size.toLong)
@@ -133,11 +135,10 @@ class PhraseServingSpec extends SparkSuite {
     // the appendDocs crash window: postings landed twice, docmap once
     spark.read.parquet(part).filter(col("doc_id") === 7L)
       .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(part)
-    val e = intercept[Exception](BM25.phraseTopKIndexed(spark, dir, Seq(1 -> s"$a $b"), cfg))
+    val e = intercept[Exception](SegmentBuilder.buildAll(spark, dir, cfg))
     assert(e.getMessage.contains("duplicate postings rows"), e.getMessage)
-    assert(!spark.sparkContext.getPersistentRDDs.values.exists(_.name == BM25.positionalCacheName(dir)),
-      "neither the replaced handle nor the one that failed to open may keep a cache")
     assert(SegmentBuilder.compactShard(spark, dir, sh, cfg))
+    SegmentBuilder.buildAll(spark, dir, cfg)
     assert(rows(BM25.phraseTopKIndexed(spark, dir, phrases, cfg)) ===
       rows(BM25.phraseTopK(spark, (base ++ extra).toDF("doc_id", "text"), col("doc_id"), col("text"),
         phrases, cfg)))

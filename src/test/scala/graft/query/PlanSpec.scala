@@ -108,9 +108,8 @@ class PlanSpec extends SparkSuite {
     }
   }
 
-  test("served expansion requests: prefix, wildcard, regexp and fuzzy are each 1 job of 1 stage, phrase_prefix " +
-      "and indexed query_string 2, 0 file bytes, no RDD built; a query_string batch without a prefix is 1 job, " +
-      "no WAND cache") {
+  test("served expansion requests: prefix, wildcard, regexp, fuzzy, phrase_prefix and indexed query_string are " +
+      "each 1 job of 1 stage, 0 file bytes, no RDD built, over the one serving cache") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("plan_expand_").toString
     try {
@@ -118,7 +117,6 @@ class PlanSpec extends SparkSuite {
         .toDF("doc_id", "text")
       graft.index.SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"), dir, SparkEntry.IndexCfg)
       graft.index.SegmentBuilder.buildAll(spark, dir, SparkEntry.IndexCfg)
-      // before anything opens the WAND handle of this index
       val noPrefix = () => QueryDsl.queryStringTopKIndexed(spark, dir,
         Seq(1 -> "+sparkle \"spark sparkle\" -w3 v4"), cfg = SparkEntry.IndexCfg)
       noPrefix()
@@ -129,19 +127,15 @@ class PlanSpec extends SparkSuite {
         s"a warm query_string batch without a prefix ran ${qsWarm.jobs} jobs of ${qsWarm.stages} stages")
       assert(qsWarm.plans.isEmpty, s"it ran Catalyst queries:\n${qsWarm.plans.mkString("\n")}")
       assert(qsWarm.fileBytes == 0, s"it read ${qsWarm.fileBytes} file bytes")
-      val open = Wand.openCaches(spark, dir).map(_.name)
-      assert(!open.exists(_.startsWith("wand")) && open.contains("positional"),
-        s"a query_string batch without a prefix opened ${open.mkString(", ")}")
-      // (request, its jobs): an expansion request expands and scores in
-      // one job; phrase_prefix and query_string expand in a job of their own
+      // (request, its jobs): every request expands and scores in one job
       val requests: Seq[(String, Int, () => org.apache.spark.sql.DataFrame)] = Seq(
         ("prefix", 1, () => QueryDsl.prefixTopK(spark, dir, Seq(1 -> "spar"), cfg = SparkEntry.IndexCfg)),
         ("wildcard", 1, () => QueryDsl.wildcardTopK(spark, dir, Seq(1 -> "sp?r*"), cfg = SparkEntry.IndexCfg)),
         ("regexp", 1, () => QueryDsl.regexpTopK(spark, dir, Seq(1 -> "w1[0-2]?"), cfg = SparkEntry.IndexCfg)),
         ("fuzzy", 1, () => QueryDsl.fuzzyTopK(spark, dir, Seq(1 -> "sparc"), cfg = SparkEntry.IndexCfg)),
-        ("phrase_prefix", 2, () => QueryDsl.phrasePrefixTopK(spark, dir, Seq(1 -> "spark sp"),
+        ("phrase_prefix", 1, () => QueryDsl.phrasePrefixTopK(spark, dir, Seq(1 -> "spark sp"),
           cfg = SparkEntry.IndexCfg)),
-        ("query_string", 2, () => QueryDsl.queryStringTopKIndexed(spark, dir,
+        ("query_string", 1, () => QueryDsl.queryStringTopKIndexed(spark, dir,
           Seq(1 -> "+\"sparkle spork\" w1* -v3"), cfg = SparkEntry.IndexCfg)))
       requests.foreach(_._3())
       for ((op, jobs, request) <- requests) {
@@ -157,8 +151,8 @@ class PlanSpec extends SparkSuite {
         assert(warm.fileBytes == 0, s"a warm $op request read ${warm.fileBytes} file bytes")
         assert(rdds == 0, s"a warm $op request built $rdds RDDs")
       }
+      assert(Wand.openCaches(spark, dir).map(_.name) === Seq("wand"))
       Wand.handleFor(spark, dir, SparkEntry.IndexCfg).close()
-      BM25.phraseHandleFor(spark, dir, SparkEntry.IndexCfg).close()
     } finally {
       new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively(); ()
     }
@@ -225,6 +219,16 @@ class PlanSpec extends SparkSuite {
       s"the corpus postings must be filtered to the query terms before the evaluator:\n$plan")
     assert(plan.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
       "docs scan must prune to the two used columns")
+  }
+
+  test("corpus evaluator reads typed postings rows: no boxed positions in the executed plan") {
+    import spark.implicits._
+    val docs = (0L until 200L).map(i => (i, s"spark fast query w${i % 13} v${i % 7}")).toDF("doc_id", "text")
+    val hits = BM25.topK(spark, docs, col("doc_id"), col("text"), Seq(1 -> "spark w3", 2 -> "query v4"))
+    val plan = hits.queryExecution.executedPlan.toString
+    assert(!plan.contains("Integer.valueOf") && !plan.contains("mapobjects"),
+      s"the evaluator must decode positions as a primitive array, never box them:\n$plan")
+    assert(hits.collect().nonEmpty)
   }
 
   test("postings construction plans with no shuffle exchange") {
@@ -354,6 +358,7 @@ class PlanSpec extends SparkSuite {
     try {
       graft.index.SegmentBuilder.ingest(spark, docs, col("doc_id"), col("text"),
         dir, SparkEntry.IndexCfg)
+      graft.index.SegmentBuilder.buildAll(spark, dir, SparkEntry.IndexCfg)
       val handle = new BM25.PhraseHandle(spark, dir, SparkEntry.IndexCfg)
       val absent = Seq(7 -> "zzznope qqqabsent")
       handle.topK(SparkEntry.PhraseQuerySet)

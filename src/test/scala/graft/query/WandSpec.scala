@@ -330,12 +330,10 @@ class WandSpec extends SparkSuite {
         assert(!(BM25.phraseHandleFor(spark, dir, ck) eq before._2))
       }
       assert(!logged.exists(_.contains(checkpointWarn)), logged.mkString("\n"))
-      assert(Wand.openCaches(spark, dir).map(_.name) ===
-        Seq("positional", "wand"))
+      assert(Wand.openCaches(spark, dir).map(_.name) === Seq("wand"))
       Wand.handleFor(spark, dir, ck).close()
       BM25.phraseHandleFor(spark, dir, ck).close()
-      assert(!spark.sparkContext.getPersistentRDDs.values.exists(r =>
-        r.name.startsWith(Wand.cacheName(dir)) || r.name.startsWith(BM25.positionalCacheName(dir))),
+      assert(!spark.sparkContext.getPersistentRDDs.values.exists(r => r.name.startsWith(Wand.cacheName(dir))),
         "a closed handle releases its doc partitions and its dictionary")
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
@@ -418,18 +416,15 @@ class WandSpec extends SparkSuite {
       SegmentBuilder.buildAll(spark, dir, c)
       def named(name: String) = spark.sparkContext.getPersistentRDDs.values.count(_.name == name)
       def caches = named(Wand.cacheName(dir))
-      def positional = named(BM25.positionalCacheName(dir))
       val h1 = Wand.handleFor(spark, dir, c)
       val p1 = BM25.phraseHandleFor(spark, dir, c)
       assert(caches === 1)
-      assert(positional === 1)
       SegmentBuilder.appendDocs(spark, more.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
       SegmentBuilder.buildAll(spark, dir, c)
       val h2 = Wand.handleFor(spark, dir, c)
       val p2 = BM25.phraseHandleFor(spark, dir, c)
       assert(!(h2 eq h1) && !(p2 eq p1), "appendDocs + buildAll swaps the handles")
       assert(caches === 1, "the replaced handle's serving cache must be released")
-      assert(positional === 1, "the replaced phrase handle's positional cache must be released")
       val omega = h2.topK(Seq(1 -> "omega")).collect().map(_.getLong(2)).toSet
       assert(omega.nonEmpty && omega.subsetOf(more.map(_._1).toSet))
       val omegaAlpha = p2.topK(Seq(1 -> "omega alpha")).collect().map(_.getLong(2)).toSet
@@ -451,6 +446,66 @@ class WandSpec extends SparkSuite {
       assertThrows[Exception](Wand.handleFor(spark, dir, c))
       assert(!spark.sparkContext.getPersistentRDDs.values.exists(_.name == Wand.cacheName(dir)),
         "a handle that failed to open must not leave its serving cache pinned")
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
+  test("block-max bounds follow the serving config: built under b = 0, served under b = 0.75, WAND == BM25.topK") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_wand_bounds_").toString
+    try {
+      // under b = 0 every tf-1 posting has the same partial, so a bound
+      // kept from the build would sit below the serving weight of every
+      // doc shorter than avgdl: the short 'xterm' docs up front would
+      // fill the heap above it and hide the shortest one, doc 200
+      val docs = (0L until 201L).map { i =>
+        i -> (if (i < 20) "xterm filler" else if (i < 200) Seq.fill(40)("pad").mkString(" ") else "xterm")
+      }
+      val built = cfg.copy(shards = 2, blockSize = 8, saltTargetPostings = 1024, b = 0.0)
+      val served = built.copy(b = 0.75)
+      val df = docs.toDF("doc_id", "text")
+      SegmentBuilder.ingest(spark, df, col("doc_id"), col("text"), dir, built)
+      SegmentBuilder.buildAll(spark, dir, built)
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq.map(r =>
+        (r.getInt(0), r.getLong(1), r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3))))
+      val queries = Seq(1 -> "xterm", 2 -> "xterm pad")
+      val wand = rows(Wand.topK(spark, dir, queries, served))
+      assert(wand === rows(BM25.topK(spark, df, col("doc_id"), col("text"), queries, served)))
+      assert(wand.head._3 === 200L, "the shortest xterm doc ranks first under the serving b")
+    } finally new Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
+  test("one serving cache per index: every request kind reads it, and only segments and stats sign it") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_wand_one_").toString
+    try {
+      val c = cfg.copy(shards = 2, blockSize = 8, saltTargetPostings = 64)
+      val docs = (0L until 300L).map(i => (i, s"spark sparkle spork query w${i % 13} v${i % 7}"))
+      SegmentBuilder.ingest(spark, docs.toDF("doc_id", "text"), col("doc_id"), col("text"), dir, c)
+      SegmentBuilder.buildAll(spark, dir, c)
+      val h = Wand.handleFor(spark, dir, c)
+      val requests: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+        "term" -> (() => Wand.topK(spark, dir, Seq(1 -> "spark w3"), c)),
+        "phrase" -> (() => BM25.phraseTopKIndexed(spark, dir, Seq(1 -> "sparkle spork"), c)),
+        "phrase_prefix" -> (() => QueryDsl.phrasePrefixTopK(spark, dir, Seq(1 -> "spark sp"), cfg = c)),
+        "query_string" -> (() => QueryDsl.queryStringTopKIndexed(spark, dir, Seq(1 -> "+\"sparkle spork\" w1*"),
+          cfg = c)),
+        "prefix" -> (() => QueryDsl.prefixTopK(spark, dir, Seq(1 -> "spar"), cfg = c)),
+        "wildcard" -> (() => QueryDsl.wildcardTopK(spark, dir, Seq(1 -> "sp?r*"), cfg = c)),
+        "regexp" -> (() => QueryDsl.regexpTopK(spark, dir, Seq(1 -> "w1[0-2]?"), cfg = c)),
+        "fuzzy" -> (() => QueryDsl.fuzzyTopK(spark, dir, Seq(1 -> "sparc"), cfg = c)))
+      for ((op, request) <- requests; _ <- 1 to 2) assert(request().collect().nonEmpty, op)
+      assert(Wand.handleFor(spark, dir, c) eq h, "every request kind is served by the one handle")
+      assert(Wand.openCaches(spark, dir).map(_.name) === Seq("wand"))
+      assert(spark.sparkContext.getPersistentRDDs.values.count(_.name == Wand.cacheName(dir)) === 1)
+      // an append changes postings and docmap, which serving does not
+      // read: the handle stays until buildAll encodes the append
+      SegmentBuilder.appendDocs(spark, Seq((900L, "omega spark")).toDF("doc_id", "text"),
+        col("doc_id"), col("text"), dir, c)
+      assert(Wand.handleFor(spark, dir, c) eq h, "an append alone must not swap the handle")
+      SegmentBuilder.buildAll(spark, dir, c)
+      assert(!(Wand.handleFor(spark, dir, c) eq h), "buildAll swaps it")
+      assert(Wand.topK(spark, dir, Seq(1 -> "omega"), c).collect().map(_.getLong(2)).toSeq === Seq(900L))
+      Wand.handleFor(spark, dir, c).close()
     } finally new Directory(new java.io.File(dir)).deleteRecursively()
   }
 }
